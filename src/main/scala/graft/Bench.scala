@@ -92,8 +92,9 @@ object Bench {
     catch { case e: Exception => System.err.println(s"[bench] artifact write failed: $e") }
   }
 
-  /** The scaling workload: full cold-start replay (scan → LWW shuffle →
-    * bucketed write → commit) of a pre-generated parquet changelog.
+  /** The scaling workload: full cold-start replay (scan → key shuffle →
+    * in-task LWW fold + bucket write → commit) of a pre-generated parquet
+    * changelog.
     * Returns (rows, sec); the throwaway table is deleted AFTER timing so the
     * multi-round bench (up to ~20 replays) does not fill /tmp.
     */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{ConvBloom, FileStats, LakeTable, Snapshot}
+import graft.table.{FileStats, FileStatsTracker, LakeTable, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.ScanBridge
@@ -16,9 +16,11 @@ import org.apache.spark.util.CollectionAccumulator
   * files) → in-task fold → emit. No exchange at any table size; the unit of
   * parallelism is the bucket, which is exactly how the table scales.
   *
-  * The fold applies the same associative (ts, seq)-max rule as
-  * [[Lww.latestByKeyAgg]] (winner per (conv_id, turn_idx); nulls lowest;
-  * ties keep the incumbent — unreachable, seq is unique).
+  * [[wins]] is the engine's one LWW rule on every write path (replay, COW
+  * merge, compaction) and delta-folding read: winner per (conv_id,
+  * turn_idx) = max by (ts, seq); nulls lowest; ties keep the incumbent —
+  * unreachable, seq is unique. The rule is associative, so any fold order
+  * (batch before target, base before deltas) yields the same winners.
   */
 object BucketLocal {
 
@@ -212,6 +214,72 @@ object BucketLocal {
     }
   }
 
+  /** Report a partition's (= bucket's) write-side stats for compaction and
+    * rebucket output, once: (bucket, stats, rows, tombstones). Compaction
+    * rewrites are the LONG-LIVED majority of a mature table's files; without
+    * stats they were never skippable and their row counts cost driver footer
+    * reads per maintenance pass.
+    */
+  private def report(st: FileStatsTracker,
+      acc: CollectionAccumulator[(Int, FileStats, Long, Long)]): Unit =
+    st.stats.foreach(s => acc.add((org.apache.spark.TaskContext.getPartitionId(), s,
+      st.rows, st.tombstones)))
+
+  private[operators] def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
+    new java.util.Comparator[InternalRow] {
+      override def compare(a: InternalRow, b: InternalRow): Int = {
+        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
+        if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
+      }
+    }
+
+  /** The shared in-task tail of every clustered rewrite (compaction's hash
+    * path, rebucket, SQL overwrite): buffer the partition, CLUSTER by
+    * (conv_id, turn_idx), track its [[FileStatsTracker]] stats, tag rows with
+    * the bucket id (= partition id). `copyRows = false` only when the input
+    * rows are already safe copies (e.g. a hash fold's map values).
+    */
+  private def clusterStatsTag(rows: Iterator[InternalRow], copyRows: Boolean,
+      schema: StructType, textIndex: Boolean,
+      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]])
+      : Iterator[InternalRow] = {
+    val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
+    rows.foreach(r => buf += (if (copyRows) r.copy() else r))
+    val arr = buf.toArray
+    val (convI, turnI, _, _) = keyIdx(schema)
+    java.util.Arrays.sort(arr, keyComparator(convI, turnI))
+    statsAcc.foreach { acc =>
+      val st = new FileStatsTracker(schema, textIndex)
+      arr.foreach(st.track)
+      report(st, acc)
+    }
+    val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](org.apache.spark.TaskContext.getPartitionId()))
+    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+    arr.iterator.map(r => joined(r, bucketRow): InternalRow)
+  }
+
+  /** Rebucket write support: `state` arrives already repartitioned by the
+    * NEW bucket function, so partition id == new bucket id (the same
+    * alignment every apply path uses). Each partition is clustered by key
+    * in-task (the layout compaction emits), tracked by the same
+    * [[graft.table.FileStatsTracker]] as every other write — so rebucket
+    * needs no driver footer reads AND its long-lived files carry
+    * [[graft.table.FileStats]] — and tagged with the bucket column from the
+    * partition id.
+    */
+  def clusterTagAndTrack(spark: SparkSession, state: DataFrame, schema: StructType,
+      statsAcc: CollectionAccumulator[(Int, FileStats, Long, Long)]): DataFrame = {
+    val tagged = ScanBridge.toInternalRdd(state).mapPartitions { rows =>
+      // rows reuse upstream buffers → copy
+      clusterStatsTag(rows, copyRows = true, schema, textIndex = false, Some(statsAcc))
+    }
+    val outSchema = StructType(schema.fields :+
+      org.apache.spark.sql.types.StructField("bucket",
+        org.apache.spark.sql.types.IntegerType, nullable = false))
+    ScanBridge.internalDf(spark, tagged, outSchema)
+  }
+
   /** One bucket-local compaction pass: fold deltas (when present), drop
     * tombstones older than the watermark, CLUSTER the bucket's rows by
     * (conv_id, turn_idx), tag rows with the bucket id (= partition id, the
@@ -228,125 +296,6 @@ object BucketLocal {
     * the SAME bound the delta fold and the COW merge already have (a bucket
     * is the rewrite unit, sized to the executor via numBuckets).
     */
-  /** Per-partition (= per-bucket) write-side stats for compaction output:
-    * key bounds + conv bloom (+ opt-in token bloom over whitespace-split
-    * `text`) + row count, reported through a CollectionAccumulator exactly
-    * like the COW merge's TaskWriteStats. Compaction rewrites are the
-    * LONG-LIVED majority of a mature table's files; without this they were
-    * stat-less (never skippable) and their row counts cost driver footer
-    * reads per maintenance pass.
-    */
-  private final class CompactStats(convI: Int, turnI: Int, textI: Int,
-      textIndex: Boolean, opI: Int, tsI: Int) {
-    private var n = 0L
-    private var nTomb = 0L
-    private var minConv: UTF8String = null
-    private var maxConv: UTF8String = null
-    private var minTurn = Int.MaxValue
-    private var maxTurn = Int.MinValue
-    private var minTs = Long.MaxValue
-    private var maxTs = Long.MinValue
-    private val convBloom = ConvBloom.empty()
-    private val tokBloom = if (textIndex) ConvBloom.empty() else null
-    private var reported = false
-
-    def observe(r: InternalRow): Unit = {
-      n += 1
-      if (!r.isNullAt(opI) &&
-        r.getUTF8String(opI).toString == Model.OpDelete) nTomb += 1
-      val c = r.getUTF8String(convI)
-      // clone on update only (rare after the first rows): the scan reuses
-      // its row buffer, so held extrema must own their bytes
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-      val t = r.getInt(turnI)
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      if (!r.isNullAt(tsI)) {
-        val ts = r.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-      ConvBloom.add(convBloom, c)
-      if (textIndex && !r.isNullAt(textI)) {
-        val toks = r.getUTF8String(textI).toString.split("\\s+")
-        var i = 0
-        while (i < toks.length) {
-          if (toks(i).nonEmpty) ConvBloom.add(tokBloom, UTF8String.fromString(toks(i)))
-          i += 1
-        }
-      }
-    }
-
-    def report(acc: CollectionAccumulator[(Int, FileStats, Long, Long)]): Unit =
-      if (n > 0 && !reported) {
-        reported = true
-        acc.add((org.apache.spark.TaskContext.getPartitionId(),
-          FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-            ConvBloom.seal(convBloom),
-            if (textIndex) ConvBloom.seal(tokBloom) else None,
-            if (minTs == Long.MaxValue) None else Some(minTs),
-            if (maxTs == Long.MinValue) None else Some(maxTs)), n, nTomb))
-      }
-  }
-
-  private def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
-    new java.util.Comparator[InternalRow] {
-      override def compare(a: InternalRow, b: InternalRow): Int = {
-        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
-        if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
-      }
-    }
-
-  /** The shared in-task tail of every clustered rewrite (compaction's hash
-    * path, rebucket, SQL overwrite): buffer the partition, CLUSTER by
-    * (conv_id, turn_idx), observe write-side [[CompactStats]], tag rows with
-    * the bucket id (= partition id). `copyRows = false` only when the input
-    * rows are already safe copies (e.g. a hash fold's map values).
-    */
-  private def clusterStatsTag(rows: Iterator[InternalRow], copyRows: Boolean,
-      convI: Int, turnI: Int, tsI: Int, opI: Int, textI: Int, textIndex: Boolean,
-      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]])
-      : Iterator[InternalRow] = {
-    val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
-    rows.foreach(r => buf += (if (copyRows) r.copy() else r))
-    val arr = buf.toArray
-    java.util.Arrays.sort(arr, keyComparator(convI, turnI))
-    statsAcc.foreach { acc =>
-      val st = new CompactStats(convI, turnI, textI, textIndex, opI, tsI)
-      arr.foreach(st.observe)
-      st.report(acc)
-    }
-    val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.TaskContext.getPartitionId()))
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    arr.iterator.map(r => joined(r, bucketRow): InternalRow)
-  }
-
-  /** Rebucket write support: `state` arrives already repartitioned by the
-    * NEW bucket function, so partition id == new bucket id (the same
-    * alignment every apply path uses). Each partition is clustered by key
-    * in-task (the layout compaction emits), observed through the SAME
-    * write-side stats accumulator as the COW/MOR/compaction writes — so
-    * rebucket needs no driver footer reads AND its long-lived files carry
-    * [[graft.table.FileStats]] (they previously had none and were never
-    * skippable) — and tagged with the bucket column from the partition id.
-    */
-  def clusterTagAndTrack(spark: SparkSession, state: DataFrame, schema: StructType,
-      statsAcc: CollectionAccumulator[(Int, FileStats, Long, Long)]): DataFrame = {
-    val (convI, turnI, tsI, _) = keyIdx(schema)
-    val opI = schema.fieldIndex("op")
-    val tagged = ScanBridge.toInternalRdd(state).mapPartitions { rows =>
-      // rows reuse upstream buffers → copy
-      clusterStatsTag(rows, copyRows = true, convI, turnI, tsI, opI,
-        textI = -1, textIndex = false, Some(statsAcc))
-    }
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, tagged, outSchema)
-  }
-
   def compactRows(spark: SparkSession, table: LakeTable, snap: Snapshot,
       watermarkMicros: Long, spill: Boolean = false,
       buckets: Option[Set[Int]] = None,
@@ -355,7 +304,6 @@ object BucketLocal {
     val schema = snap.schema
     val (convI, turnI, tsI, seqI) = keyIdx(schema)
     val opI = schema.fieldIndex("op")
-    val textI = if (textIndex) schema.fieldIndex("text") else -1
     val fold = snap.morDeltas
     val deleteOp = UTF8String.fromString(Model.OpDelete)
     // a null-ts tombstone has UNKNOWN event time — it must never expire
@@ -376,14 +324,15 @@ object BucketLocal {
       statsAcc match {
         case None => rows
         case Some(acc) =>
-          val st = new CompactStats(convI, turnI, textI, textIndex, opI, tsI)
+          val st = new FileStatsTracker(schema, textIndex)
+          var reported = false
           new Iterator[InternalRow] {
             override def hasNext: Boolean = {
               val h = rows.hasNext
-              if (!h) st.report(acc)
+              if (!h && !reported) { reported = true; report(st, acc) }
               h
             }
-            override def next(): InternalRow = { val r = rows.next(); st.observe(r); r }
+            override def next(): InternalRow = { val r = rows.next(); st.track(r); r }
           }
       }
     val compacted = if (spill) {
@@ -410,7 +359,7 @@ object BucketLocal {
         // fold-path rows are already safe copies (map values); raw-scan rows
         // reuse the reader's buffer and must be copied to be held for the sort
         clusterStatsTag(resolved.filter(r => !expired(r)), copyRows = !fold,
-          convI, turnI, tsI, opI, textI, textIndex, statsAcc)
+          schema, textIndex, statsAcc)
       }
     val outSchema = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("bucket",

@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * version per key into Redis, pass 2 re-reads everything and keeps rows whose
   * version equals the stored max) with a single distributed pass.
   *
-  * Two physical strategies, same semantics:
+  * Three physical strategies, same semantics:
   *
-  *   - [[latestByKeyAgg]] (DEFAULT, used by the engine): hash aggregation with
-  *     `max_by(struct(*), struct(ts, seq))`. Catalyst plans this as
+  *   - [[latestByKeyAgg]] (the DataFrame default, used by the SQL gate
+  *     queries): `max_by(struct(*), struct(ts, seq))`. Catalyst plans this as
   *     partial agg (map-side combine) → shuffle on key → final agg. Skewed
   *     hot conversations are absorbed by the PARTIAL aggregation: each input
   *     partition pre-collapses its duplicates before the shuffle, so the
@@ -32,6 +32,9 @@ import org.apache.spark.sql.functions._
   *   - [[latestByKeySalted]]: the window variant made skew-proof with an
   *     explicit two-level salt, for when row_number semantics are required
   *     at scale (e.g. rank > 1 history queries).
+  *
+  * The table write paths (replay, COW/MOR apply, compaction) use none of
+  * these: they fold each bucket in its own task with [[BucketLocal.wins]].
   */
 object Lww {
   import Model.{KeyCols, VersionCols}

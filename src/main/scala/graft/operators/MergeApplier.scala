@@ -1,15 +1,13 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{LakeTable, ManifestRef, Snapshot}
+import graft.table.{BucketFileWriter, ForkFreeLocalFileSystem, LakeTable, ManifestRef, Snapshot, WrittenFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ScanBridge
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.graftbridge.{ScanBridge, WriteBridge}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.CollectionAccumulator
 
 /** The engine core: apply one micro-batch of change events to a LakeTable as
   * an exactly-once, key-partitioned MERGE.
@@ -23,12 +21,13 @@ import org.apache.spark.util.CollectionAccumulator
   * {{{
   *   batch ─ repartition(N, key) ──────────┐   partition i == bucket i
   *                                         ├─ zipPartitions: in-task LWW fold
-  *   target ─ bucket-aligned parquet scan ─┘   ─ write touched buckets ─ atomic commit(batchId)
+  *   target ─ bucket-aligned parquet scan ─┘   + write of the bucket's file ─ atomic commit(batchId)
   * }}}
   *
   * ONE exchange total (the batch's); the table side never shuffles — its
   * bucket files are read directly by the task owning that bucket
   * (ScanBridge.bucketFilesRdd), and untouched buckets' tasks open no file.
+  * Cold start (full replay) is the same job against an empty target.
   *
   * Correctness properties (tested in MergeSpec/StreamSpec):
   *   - idempotent: a replayed batchId is a no-op (ledger check before work)
@@ -40,10 +39,10 @@ import org.apache.spark.util.CollectionAccumulator
   *     files read back with nulls
   *
   * Scale notes (10^10 rows, 1000 executors):
-  *   - within-batch dedup is `max_by` hash agg → map-side partial combine, so
-  *     hot conversations collapse before the shuffle (no salting needed here)
-  *   - the merge union re-shuffles only touched buckets' rows; write
-  *     amplification is bounded by (touched buckets / total buckets)
+  *   - there is NO map-side combine: the exchange ships every raw batch
+  *     event, and within-batch duplicates collapse in the reducer's fold
+  *   - only the batch shuffles; write amplification is bounded by
+  *     (touched buckets / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
   *     an event-time watermark
   */
@@ -57,96 +56,62 @@ object MergeApplier {
       upserts: Long,
       deletes: Long)
 
-  /** One task attempt's write-side stats, deduplicated by partition id on
-    * the driver: batch rows seen, batch deletes, rows written, and the
-    * WRITTEN rows' key bounds — which become the commit's per-file
-    * [[graft.table.FileStats]] (file skipping for point lookups) with zero
-    * added I/O: the task already had every written row in hand.
+  /** What one fold/write task hands the driver: its bucket's new file, plus
+    * the raw batch rows and deletes it folded (the hot path's metrics).
     */
-  private final case class TaskWriteStats(pid: Int, rows: Long, dels: Long,
-      written: Long, range: Option[graft.table.FileStats])
+  private final case class BucketMerge(file: WrittenFile, batchRows: Long, batchDeletes: Long)
 
-  /** In-task LWW merge of one bucket: fold the batch partition's rows and
-    * the bucket's stored rows into a per-key winner map under the SAME rule
-    * as [[Lww.latestByKeyAgg]] — winner = max by (ts, seq), nulls lowest;
-    * (ts, seq) ties keep the incumbent, which is unreachable in practice
-    * because seq is unique per changelog. Emits winners (tombstones
-    * included) tagged with the bucket id = partition id.
+  /** In-task LWW merge of one bucket, written from the task: fold the batch
+    * partition's rows and the bucket's stored rows through
+    * [[BucketLocal.foldWinnersMap]] (the engine's one LWW kernel: winner =
+    * max by (ts, seq), nulls lowest, ties keep the incumbent), then write
+    * the winners — tombstones included — in (conv_id, turn_idx) order as
+    * the bucket's one new file. Bucket id = partition id.
     *
     * Memory: the map holds one row per distinct key of (batch ∪ bucket) —
     * exactly the bucket's post-merge contents, which the COW contract sizes
-    * to fit an executor anyway (a bucket IS the rewrite unit). Rows are
-    * copied only when stored; losers are never copied.
+    * to fit an executor anyway (a bucket IS the rewrite unit).
     */
-  private def mergeBucket(convI: Int, turnI: Int, tsI: Int, seqI: Int, opI: Int,
-      statsAcc: CollectionAccumulator[TaskWriteStats])(
-      batch: Iterator[InternalRow], target: Iterator[InternalRow]): Iterator[InternalRow] = {
+  private def mergeBucket(writers: WriteBridge.TaskWriterFactory, dir: String)(
+      batch: Iterator[InternalRow], target: Iterator[InternalRow]): Iterator[BucketMerge] = {
     if (!batch.hasNext) return Iterator.empty // untouched bucket: no file opened
+    val schema = writers.schema
+    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
+    val opI = schema.fieldIndex("op")
     val deleteOp = UTF8String.fromString(Model.OpDelete)
-    val winners = new java.util.HashMap[(UTF8String, Int), InternalRow]()
-    // fold() probes with a transient key view; copies row + key only on store
-    def fold(r: InternalRow): Unit = {
-      val cur = winners.get((r.getUTF8String(convI), r.getInt(turnI)))
-      if (cur == null || BucketLocal.wins(r, cur, tsI, seqI)) {
-        val c = r.copy()
-        winners.put((c.getUTF8String(convI), c.getInt(turnI)), c)
-      }
-    }
     var nRows = 0L
     var nDel = 0L
-    while (batch.hasNext) {
-      val r = batch.next()
+    val counted = batch.map { r =>
       nRows += 1
       if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) nDel += 1
-      fold(r)
+      r
     }
-    val partitionId = org.apache.spark.TaskContext.getPartitionId()
-    while (target.hasNext) fold(target.next())
-    // One (partitionId, rows, dels, winners) entry per task ATTEMPT; the
-    // driver collapses duplicates by partition id, so a retried / recomputed
-    // / speculated task (which re-reads the same deterministic partition and
-    // produces the identical counts) cannot inflate the metrics — unlike raw
-    // LongAccumulators, which double-count on any transformation
-    // re-execution. `winners` = rows this bucket writes, so commit lineage
-    // needs no post-write parquet footer reads on the hot path.
-    // key stats over the WRITTEN rows (winner keys are safe copies): bounds
-    // + conv bloom become the commit's per-file FileStats — free, the map
-    // is in hand
-    var minConv: UTF8String = null; var maxConv: UTF8String = null
-    var minTurn = Int.MaxValue; var maxTurn = Int.MinValue
-    val bloom = graft.table.ConvBloom.empty()
-    val keys = winners.keySet().iterator()
-    while (keys.hasNext) {
-      val (c, t) = keys.next()
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      graft.table.ConvBloom.add(bloom, c)
-    }
-    // event-time bounds over the written rows (micros; null-ts rows excluded
-    // — sound, a null ts satisfies no ts predicate): time-windowed scans
-    // skip files exactly like key lookups skip on the conv bounds
-    var minTs = Long.MaxValue; var maxTs = Long.MinValue
-    val vals = winners.values().iterator()
-    while (vals.hasNext) {
-      val r = vals.next()
-      if (!r.isNullAt(tsI)) {
-        val ts = r.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-    }
-    val tsLo = if (minTs == Long.MaxValue) None else Some(minTs)
-    val tsHi = if (maxTs == Long.MinValue) None else Some(maxTs)
-    val range = if (winners.isEmpty) None
-      else Some(graft.table.FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-        graft.table.ConvBloom.seal(bloom), None, tsLo, tsHi))
-    statsAcc.add(TaskWriteStats(partitionId, nRows, nDel, winners.size.toLong, range))
-    val bucketRow = new GenericInternalRow(Array[Any](partitionId))
-    val joined = new JoinedRow
-    import scala.jdk.CollectionConverters._
-    winners.values().iterator().asScala.map(r => joined(r, bucketRow))
+    val winners = BucketLocal.foldWinnersMap(counted ++ target, convI, turnI, tsI, seqI)
+      .values().toArray(new Array[InternalRow](0))
+    java.util.Arrays.sort(winners, BucketLocal.keyComparator(convI, turnI))
+    Iterator(BucketMerge(writeBucket(writers, dir, winners.iterator), nRows, nDel))
+  }
+
+  /** Test seam: runs inside a fold/write task right after it opened its
+    * bucket's file, with the bucket id. Specs throw here to fail one task
+    * mid-write. No-op in production.
+    */
+  private[graft] var afterBucketFileOpen: Int => Unit = _ => ()
+
+  /** Write this task's rows as its bucket's (= partition's) one file; a
+    * failure deletes the partial file before the task fails. Files of a
+    * failed job's other tasks are never referenced; vacuum sweeps them.
+    */
+  private def writeBucket(writers: WriteBridge.TaskWriterFactory, dir: String,
+      rows: Iterator[InternalRow]): WrittenFile = {
+    val tc = org.apache.spark.TaskContext.get()
+    val w = new BucketFileWriter(writers, dir, tc.partitionId(), tc.partitionId(),
+      tc.taskAttemptId())
+    try {
+      afterBucketFileOpen(w.bucket)
+      rows.foreach(w.write)
+      w.commit()
+    } catch { case e: Throwable => w.abort(); throw e }
   }
 
   private def deleteDir(p: java.nio.file.Path): Unit =
@@ -248,119 +213,56 @@ object MergeApplier {
     val (aligned, mergedSchema) = evolve(table, batch)
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
-    val keyCols = Model.KeyCols.map(col)
 
-    // Shuffle-alignment trick: `bucket = pmod(hash(conv_id, turn_idx), N)`
-    // uses the SAME murmur3 as Spark's hashpartitioning, so an explicit
-    // repartition(N, key) (a) satisfies the LWW groupBy's clustering
-    // requirement -- Catalyst inserts NO second exchange for the agg -- and
-    // (b) leaves every output partition holding exactly one bucket, so the
-    // bucketed write needs no further shuffle. One exchange per pass, total.
-    def lwwByBucket(df: DataFrame): DataFrame =
-      Lww.latestByKeyAgg(df.repartition(table.numBuckets, keyCols: _*))
-
-    var batchRows = 0L
-    var nDeletes = 0L
-    var touchedCount = 0
-    var statsWinners: Map[Int, Long] = Map.empty
-    var keyRanges: Map[Int, graft.table.FileStats] = Map.empty
-
-    val coldObs = new org.apache.spark.sql.Observation("cold-stats")
-    snap match {
-      case None =>
-        // Cold start: no target to merge -- single pass, no persist, no
-        // probe; stats piggyback on the write via observe() (zero extra jobs
-        // -- an extra post-write scan was pure serial overhead in the
-        // measured replay).
-        lwwByBucket(aligned)
-          .observe(coldObs,
-            count(when(col("op") === Model.OpDelete, 1)).as("dels"))
-          .withColumn("bucket", table.bucketCol)
-          .write.mode("overwrite") // overwrite self-cleans a crashed attempt
-          .partitionBy("bucket")
-          .parquet(outDir.toString)
-      case Some(s) =>
-        // BUCKET-LOCAL MERGE — one job, one exchange (the batch's), ZERO
-        // table-side shuffle, no probe job:
-        //
-        //   batch ─ repartition(N, key) ──┐ partition i == bucket i (same
-        //                                 ├─ zipPartitions: in-task LWW fold
-        //   target ─ bucket-aligned scan ─┘ (bucket i's files, read in task i)
-        //
-        // The target scan is ScanBridge.bucketFilesRdd: partition i reads
-        // ONLY bucket i's data files through Spark's parquet reader function
-        // (schema clipping = additive-evolution nulls), lazily — a partition
-        // whose batch side is empty opens no file, which is the old probe's
-        // file pruning for free, decided per task instead of via a separate
-        // driver-side probe job. The in-task fold applies the same
-        // associative (ts, seq)-max rule as Lww.latestByKeyAgg over a
-        // hash map keyed by (conv_id, turn_idx); target buckets are already
-        // key-unique in steady state (and MOR deltas fold correctly because
-        // the rule is associative). Tombstones participate and are RETAINED,
-        // so a later stale insert still loses.
-        //
-        // Alignment invariant (pinned by MergeSpec "partition id equals
-        // bucket id"): repartition's HashPartitioning uses the same murmur3
-        // (seed 42) as the table's bucketCol, so partition i holds exactly
-        // bucket i's batch rows and the in-task bucket tag is the partition
-        // id. Stats ride on a per-partition accumulator deduplicated by
-        // partition id on the driver — exact even under task retry, stage
-        // recompute, or speculation (a re-executed task re-emits the same
-        // deterministic counts, which collapse).
-        val statsAcc = spark.sparkContext
-          .collectionAccumulator[TaskWriteStats]("graft.batchStats")
-        val batchRdd = ScanBridge.toInternalRdd(
-          aligned.repartition(table.numBuckets, keyCols: _*))
-        val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema,
-          BucketLocal.bucketArray(table, s))
-        val tsI = mergedSchema.fieldIndex("ts")
-        val seqI = mergedSchema.fieldIndex("seq")
-        val opI = mergedSchema.fieldIndex("op")
-        val convI = mergedSchema.fieldIndex("conv_id")
-        val turnI = mergedSchema.fieldIndex("turn_idx")
-        val merged = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false)(
-          mergeBucket(convI, turnI, tsI, seqI, opI, statsAcc))
-        val outSchema = StructType(mergedSchema.fields :+
-          StructField("bucket", org.apache.spark.sql.types.IntegerType, nullable = false))
-        ScanBridge.internalDf(spark, merged, outSchema)
-          .write.mode("overwrite")
-          .partitionBy("bucket")
-          .parquet(outDir.toString)
-        import scala.jdk.CollectionConverters._
-        val perPartition = statsAcc.value.asScala.groupBy(_.pid).values.map(_.head)
-        batchRows = perPartition.map(_.rows).sum
-        nDeletes = perPartition.map(_.dels).sum
-        statsWinners = perPartition.map(s => s.pid -> s.written).toMap
-        keyRanges = perPartition.flatMap(s => s.range.map(r => s.pid -> r)).toMap
-        if (batchRows == 0) {
-          // Idle trigger: nothing arrived. Emptiness detection piggybacks on
-          // the merge job itself — an empty batch side makes every mergeBucket
-          // task a no-op (no table file opened, no row written), so the job
-          // costs one empty task wave. The former up-front `batch.isEmpty`
-          // probe spent a separate Spark job on EVERY batch to spare only the
-          // idle ones. Drop the empty output dir rather than commit an orphan
-          // version; replay of an empty batch is trivially idempotent.
-          deleteDir(outDir)
-          return Some(ApplyResult(skipped = false, s.version, 0, 0, 0, 0))
-        }
+    // BUCKET-LOCAL MERGE — one job, one exchange (the batch's), ZERO
+    // table-side shuffle, no probe job; a cold start is the same job against
+    // an empty target:
+    //
+    //   batch ─ repartition(N, key) ──┐ partition i == bucket i
+    //                                 ├─ zipPartitions: in-task LWW fold
+    //   target ─ bucket-aligned scan ─┘ + write of bucket i's one new file
+    //
+    // The target scan is ScanBridge.bucketFilesRdd: partition i reads ONLY
+    // bucket i's data files through Spark's parquet reader function (schema
+    // clipping = additive-evolution nulls), lazily — a partition whose batch
+    // side is empty opens no file and writes none. MOR deltas fold correctly
+    // because the LWW rule is associative. Tombstones participate and are
+    // RETAINED, so a later stale insert still loses.
+    //
+    // Alignment invariant (pinned by MergeSpec "partition id equals bucket
+    // id"): repartition's HashPartitioning uses the same murmur3 (seed 42)
+    // as the table's bucketCol, so partition i holds exactly bucket i's
+    // batch rows and the task's bucket is its partition id.
+    //
+    // Each task returns its file's manifest entry and counts; collect()
+    // carries successful attempts only, so retries and speculation cannot
+    // inflate them, and the commit needs no listing and no footer reads.
+    val files = snap.map(BucketLocal.bucketArray(table, _))
+      .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)]))
+    val batchRdd = ScanBridge.toInternalRdd(
+      aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*))
+    val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema, files)
+    val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
+    val merged = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false)(
+      mergeBucket(writers, outDir.toString)).collect()
+    if (merged.isEmpty) {
+      // Idle trigger (or an empty first batch): every task saw an empty
+      // batch side, opened no file and wrote nothing, so the job cost one
+      // empty task wave and left no directory. Commit no orphan version;
+      // replay of an empty batch is trivially idempotent.
+      return Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
     }
     val tMeta = System.nanoTime()
+    // every touched bucket emits >=1 winner (tombstones retained), so the
+    // written bucket set IS the touched set. Cold start reports what it
+    // wrote (winners, tombstones); the hot path its raw batch rows.
+    val newBucketFiles = merged.map(m => m.file.bucket -> Seq(m.file.entry)).toMap
+    val newRows = merged.map(m => m.file.bucket -> m.file.rows).toMap
+    val touchedCount = merged.length
+    val (batchRows, nDeletes) =
+      if (snap.isEmpty) (newRows.values.sum, merged.map(_.file.tombstones).sum)
+      else (merged.map(_.batchRows).sum, merged.map(_.batchDeletes).sum)
 
-    // key bounds from the merge fold ride into the manifest (file skipping
-    // for point lookups); cold start has no per-partition stats — its base
-    // files carry no bounds, which only disables skipping, never correctness
-    val newBucketFiles = table.attachStats(table.listBucketFiles(outDir), keyRanges)
-    if (snap.isEmpty && newBucketFiles.isEmpty) {
-      // Empty FIRST batch on a cold table: same no-orphan-version contract as
-      // the hot path's idle-trigger handling — commit nothing.
-      deleteDir(outDir)
-      return Some(ApplyResult(skipped = false, 0, 0, 0, 0, 0))
-    }
-    if (snap.nonEmpty) {
-      // every touched bucket emits >=1 winner (tombstones retained), so the
-      // written bucket set IS the touched set
-      touchedCount = newBucketFiles.size
-    }
     // Manifest-list commit: ONE new manifest file for the touched buckets;
     // prior refs keep their (untouched) buckets via mask subtraction — no
     // file list is ever rewritten, so commit metadata I/O is O(touched),
@@ -374,18 +276,6 @@ object MergeApplier {
       .map(m => m.copy(buckets = m.buckets -- mine))
       .filter(_.buckets.nonEmpty) :+ myRef
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
-    // Hot path: per-bucket written rows are the merge fold's winner counts —
-    // no re-opening of just-written parquet footers per micro-batch (driver
-    // I/O off the tail's critical path). Cold start reads footers once.
-    val newRows = if (snap.nonEmpty) statsWinners
-      else table.footerRowCounts(newBucketFiles)
-    if (snap.isEmpty) {
-      // cold-start stats: totals from footers (free); tombstones from the
-      // observed write metrics
-      batchRows = newRows.values.sum
-      touchedCount = newBucketFiles.size
-      nDeletes = coldObs.get("dels").asInstanceOf[Long]
-    }
 
     def metricsFor(extra: Map[String, Long]) = Map(
       "batchRows" -> batchRows,
@@ -500,104 +390,32 @@ object MergeApplier {
     val (aligned, mergedSchema) = evolve(table, batch)
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
-    val keyCols = Model.KeyCols.map(col)
-    // Per-bucket lineage rides a per-partition accumulator (the COW
-    // winner-count pattern): partition id == bucket id by the alignment
-    // invariant, so the delta write needs neither a bucket-hash column per
-    // row nor post-write parquet footer re-opens on the driver — the footer
-    // reads were per-micro-batch driver I/O on the write-optimized tail's
-    // critical path. One (pid, rows, dels) entry per task ATTEMPT; the
-    // driver collapses duplicates by partition id (exact under retry /
-    // speculation, like the COW stats).
-    val statsAcc = spark.sparkContext
-      .collectionAccumulator[TaskWriteStats]("graft.morStats")
-    val opI = mergedSchema.fieldIndex("op")
-    val convI = mergedSchema.fieldIndex("conv_id")
-    val turnI = mergedSchema.fieldIndex("turn_idx")
-    val tsI = mergedSchema.fieldIndex("ts")
-    val deltaRdd = ScanBridge.toInternalRdd(
-        aligned.repartition(table.numBuckets, keyCols: _*))
-      .mapPartitions { it =>
-        new Iterator[InternalRow] {
-          private val pid = org.apache.spark.TaskContext.getPartitionId()
-          private val deleteOp = UTF8String.fromString(Model.OpDelete)
-          private val bucketRow = new GenericInternalRow(Array[Any](pid))
-          private val joined = new JoinedRow
-          private var nRows = 0L
-          private var nDel = 0L
-          // key stats of the delta file as it streams through — the
-          // row's UTF8String points into a reused buffer, so min/max are
-          // CLONED on update (rare after the first few rows); the bloom
-          // hashes the buffer in place (no copies, 4 murmur probes/row)
-          private var minConv: UTF8String = null
-          private var maxConv: UTF8String = null
-          private var minTurn = Int.MaxValue
-          private var maxTurn = Int.MinValue
-          private var minTs = Long.MaxValue
-          private var maxTs = Long.MinValue
-          private val bloom = graft.table.ConvBloom.empty()
-          private var reported = false
-          override def hasNext: Boolean = {
-            val h = it.hasNext
-            if (!h && !reported) {
-              reported = true
-              val range = if (nRows == 0) None
-                else Some(graft.table.FileStats(minConv.toString, maxConv.toString,
-                  minTurn, maxTurn, graft.table.ConvBloom.seal(bloom), None,
-                  if (minTs == Long.MaxValue) None else Some(minTs),
-                  if (maxTs == Long.MinValue) None else Some(maxTs)))
-              statsAcc.add(TaskWriteStats(pid, nRows, nDel, nRows, range))
-            }
-            h
-          }
-          override def next(): InternalRow = {
-            val r = it.next()
-            nRows += 1
-            if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) nDel += 1
-            val c = r.getUTF8String(convI)
-            if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-            if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-            graft.table.ConvBloom.add(bloom, c)
-            val t = r.getInt(turnI)
-            if (t < minTurn) minTurn = t
-            if (t > maxTurn) maxTurn = t
-            if (!r.isNullAt(tsI)) {
-              val ts = r.getLong(tsI)
-              if (ts < minTs) minTs = ts
-              if (ts > maxTs) maxTs = ts
-            }
-            joined(r, bucketRow)
-          }
-        }
-      }
-    val outSchema = StructType(mergedSchema.fields :+
-      StructField("bucket", org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, deltaRdd, outSchema)
-      .write.mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(outDir.toString)
-    import scala.jdk.CollectionConverters._
-    val perPartition = statsAcc.value.asScala.groupBy(_.pid).values.map(_.head)
-    val batchRows = perPartition.map(_.rows).sum
-    val nDeletes = perPartition.map(_.dels).sum
-    if (batchRows == 0) {
-      // same no-orphan contract as the COW idle path: drop the empty dir
-      deleteDir(outDir)
+    // Each task appends its partition (= bucket, the alignment invariant) as
+    // one delta file through the COW path's task writer, which tracks the
+    // file's key bounds + conv bloom — the skip input that keeps point
+    // lookups O(files holding the key) on a delta-deep tail. The driver
+    // commits the collected entries: no listing, no footer reads.
+    val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
+    val dir = outDir.toString
+    val written = ScanBridge.toInternalRdd(
+        aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*))
+      .mapPartitions { rows =>
+        if (rows.hasNext) Iterator(writeBucket(writers, dir, rows)) else Iterator.empty
+      }.collect()
+    if (written.isEmpty) {
+      // same no-orphan contract as the COW idle path
       return ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
     }
+    val batchRows = written.map(_.rows).sum
+    val nDeletes = written.map(_.tombstones).sum
     val tMeta = System.nanoTime()
-    // delta files carry their key bounds + conv bloom (from the same
-    // accumulator pass) — the skip input that keeps point lookups
-    // O(files holding the key) on a delta-deep tail
-    val keyRanges = perPartition.flatMap(s => s.range.map(r => s.pid -> r)).toMap
-    val newBucketFiles = table.attachStats(table.listBucketFiles(outDir), keyRanges)
+    val newBucketFiles = written.map(w => w.bucket -> Seq(w.entry)).toMap
     val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
       newBucketFiles.keySet, delta = true)
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
     // bucketRows counts STORED rows (incl. superseded versions until
-    // compact); per-bucket counts come from the write-side accumulator — no
-    // footer reads on the hot path
-    val newRows = perPartition.filter(_.rows > 0).map(s => s.pid -> s.rows).toMap
+    // compact), straight from the tasks' results
+    val newRows = written.map(w => w.bucket -> w.rows).toMap
     def rowsOn(base: Map[Int, Long]) = (base.keySet ++ newBucketFiles.keySet).map { b =>
       b -> (base.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))
     }.toMap
@@ -742,15 +560,16 @@ object MergeApplier {
     val keyCols = Model.KeyCols.map(col)
     // same alignment trick as the merge: repartition(newN, key) partitions
     // equal the NEW bucket function, so the partitioned write needs no
-    // second exchange. Row counts + FileStats come from the SAME write-side
-    // accumulator lineage as every other write path (no driver footer
-    // reads), deduplicated by partition id against task retries.
+    // second exchange. Row counts + FileStats come from the same
+    // FileStatsTracker as every other write path (no driver footer reads),
+    // via an accumulator deduplicated by partition id against task retries.
     val statsAcc = spark.sparkContext
       .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("rebucketStats")
     val aligned = Model.alignToSchema(state, snap.schema)
     BucketLocal.clusterTagAndTrack(spark,
         aligned.repartition(newNumBuckets, keyCols: _*), snap.schema, statsAcc)
-      .write.mode("overwrite").partitionBy("bucket").parquet(outDir.toString)
+      .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
+      .partitionBy("bucket").parquet(outDir.toString)
     val perBucket = {
       import scala.jdk.CollectionConverters._
       statsAcc.value.asScala.groupBy(_._1).map(_._2.head)
@@ -806,13 +625,14 @@ object MergeApplier {
       // is the one pass that must survive it
       val spill = table.maxBucketBytes(snap, sel) > table.spillFoldBytes
       // write-side stats: compaction files get key bounds + conv bloom
-      // (+ the opt-in token bloom) and their row counts from the SAME task
-      // accumulator — no stat-less long-lived files, no driver footer reads
+      // (+ the opt-in token bloom) and their row counts from the task's
+      // FileStatsTracker — no stat-less long-lived files, no footer reads
       val statsAcc = spark.sparkContext
         .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("compactStats")
       BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel,
           Some(statsAcc), textIndex)
-        .write.mode("overwrite").partitionBy("bucket").parquet(outDir.toString)
+        .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
+        .partitionBy("bucket").parquet(outDir.toString)
       val perBucket = {
         import scala.jdk.CollectionConverters._
         statsAcc.value.asScala.groupBy(_._1).map(_._2.head)

@@ -1,0 +1,109 @@
+package graft.table
+
+import graft.model.Model
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.WriteBridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import java.nio.file.{Files, Paths}
+
+/** Write-side stats of one data file, tracked as its rows stream into the
+  * writer: row and tombstone counts, conv/turn/ts bounds, the conv bloom and
+  * (opt-in) a token bloom over whitespace-split `text`. The one tracker
+  * behind every engine-written file, so each manifest entry gets its
+  * [[FileStats]] at zero added I/O.
+  *
+  * Rows may come from a reused buffer: the held extrema are cloned on update
+  * (rare after the first rows); the blooms hash the bytes in place.
+  */
+final class FileStatsTracker(schema: StructType, textIndex: Boolean = false) {
+  private val convI = schema.fieldIndex("conv_id")
+  private val turnI = schema.fieldIndex("turn_idx")
+  private val tsI = schema.fieldIndex("ts")
+  private val opI = schema.fieldIndex("op")
+  private val textI = if (textIndex) schema.fieldIndex("text") else -1
+  private val deleteOp = UTF8String.fromString(Model.OpDelete)
+  var rows = 0L
+  var tombstones = 0L
+  private var minConv: UTF8String = null
+  private var maxConv: UTF8String = null
+  private var minTurn = Int.MaxValue
+  private var maxTurn = Int.MinValue
+  private var minTs = Long.MaxValue
+  private var maxTs = Long.MinValue
+  private val convBloom = ConvBloom.empty()
+  private val tokBloom = if (textIndex) ConvBloom.empty() else null
+
+  def track(r: InternalRow): Unit = {
+    rows += 1
+    if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) tombstones += 1
+    val c = r.getUTF8String(convI)
+    if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
+    if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
+    ConvBloom.add(convBloom, c)
+    val t = r.getInt(turnI)
+    if (t < minTurn) minTurn = t
+    if (t > maxTurn) maxTurn = t
+    // null-ts rows are excluded from the ts bounds — sound, a null ts
+    // satisfies no ts predicate
+    if (!r.isNullAt(tsI)) {
+      val ts = r.getLong(tsI)
+      if (ts < minTs) minTs = ts
+      if (ts > maxTs) maxTs = ts
+    }
+    if (textIndex && !r.isNullAt(textI)) {
+      r.getUTF8String(textI).toString.split("\\s+").foreach { tok =>
+        if (tok.nonEmpty) ConvBloom.add(tokBloom, UTF8String.fromString(tok))
+      }
+    }
+  }
+
+  def stats: Option[FileStats] =
+    if (rows == 0) None
+    else Some(FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
+      ConvBloom.seal(convBloom), if (textIndex) ConvBloom.seal(tokBloom) else None,
+      if (minTs == Long.MaxValue) None else Some(minTs),
+      if (maxTs == Long.MinValue) None else Some(maxTs)))
+}
+
+/** One task-written data file: its bucket, its manifest entry (path, bytes,
+  * stats), and its row and tombstone counts — everything the driver commits,
+  * carried back in the task's result so no file is listed or re-opened.
+  */
+final case class WrittenFile(bucket: Int, entry: FileEntry, rows: Long, tombstones: Long)
+
+/** One bucket data file written from inside a task, through Spark's parquet
+  * writer ([[WriteBridge]]). The name carries the partition and the task
+  * attempt, so retried and speculative attempts never collide; an unused
+  * attempt's file is simply never referenced (vacuum sweeps it), and a
+  * failed one is deleted by [[abort]].
+  */
+final class BucketFileWriter(writers: WriteBridge.TaskWriterFactory, dir: String,
+    val bucket: Int, partitionId: Int, taskId: Long) {
+  private val path = {
+    val d = Paths.get(dir, s"bucket=$bucket")
+    Files.createDirectories(d)
+    d.resolve(f"part-$bucket%05d-p$partitionId-t$taskId.parquet").toString
+  }
+  private val out = writers.open(path, partitionId, taskId)
+  private val tracker = new FileStatsTracker(writers.schema)
+
+  def write(r: InternalRow): Unit = { tracker.track(r); out.write(r) }
+
+  def commit(): WrittenFile = {
+    out.close()
+    val bytes = Files.size(Paths.get(path))
+    WriteBridge.recordOutput(bytes, tracker.rows)
+    WrittenFile(bucket, FileEntry(path, bytes, tracker.stats), tracker.rows, tracker.tombstones)
+  }
+
+  /** Close and delete the partial file and its checksum sidecar. */
+  def abort(): Unit = {
+    try out.close() catch { case _: Exception => () }
+    val p = Paths.get(path)
+    Seq(p, p.resolveSibling(s".${p.getFileName}.crc")).foreach { f =>
+      try Files.deleteIfExists(f) catch { case _: Exception => () }
+    }
+  }
+}

@@ -128,8 +128,7 @@ private final class LakeReplaceDataWrite(
     val spark = SparkSession.active
     val entries = messages.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
     val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(e => FileEntry(e.path, e.bytes, e.stats))
-        .toSeq.sortBy(_.path)).toMap
+      .view.mapValues(_.map(_.entry).toSeq.sortBy(_.path)).toMap
     val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
       .view.mapValues(_.map(_.rows).sum).toMap
     // the groups this output REPLACES = what the target scan actually read
@@ -146,7 +145,8 @@ private final class LakeReplaceDataWrite(
         table.readRaw(spark, Some(replaced), asOfVersion = Some(snap.version))
           .filter(col("op") === Model.OpDelete)
           .withColumn("bucket", table.bucketCol)
-          .write.mode("overwrite").partitionBy("bucket").parquet(tombDir.toString)
+          .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
+          .partitionBy("bucket").parquet(tombDir.toString)
         table.listBucketFiles(tombDir)
       }
 
@@ -224,15 +224,8 @@ private final class LakeReplaceDataWrite(
     org.apache.commons.io.FileUtils.deleteDirectory(outDir.toFile)
 }
 
-/** One task-written data file: bucket, path, bytes, rows, and the rows'
-  * key bounds (tracked as the rows streamed through the writer — zero extra
-  * I/O; becomes the manifest's [[FileStats]] for file skipping).
-  */
-private final case class ReplaceFile(bucket: Int, path: String, bytes: Long,
-    rows: Long, stats: Option[FileStats])
-
 private final case class LakeReplaceMessage(
-    files: Seq[ReplaceFile]) extends WriterCommitMessage
+    files: Seq[WrittenFile]) extends WriterCommitMessage
 
 /** Per-task writer: routes each replacement row to its bucket's parquet file
   * (same murmur3(seed 42) + pmod as every other engine path), appending the
@@ -292,47 +285,7 @@ private[table] final class LakeBucketDataWriter(
       })
     hash = Murmur3Hash(Seq(ref("conv_id"), ref("turn_idx")), 42)
   }
-  /** Per-open-file write stats: row count + key bounds of the rows written
-    * so far. Bounds track the PROJECTED (table-schema) row; its UTF8Strings
-    * point into the projection's reused buffer, so min/max are cloned on
-    * update (rare after the first rows).
-    */
-  private final class FileAcc(val w: org.apache.spark.sql.execution.datasources.OutputWriter,
-      convI: Int, turnI: Int, tsI: Int) {
-    var rows = 0L
-    private var minConv: UTF8String = null
-    private var maxConv: UTF8String = null
-    private var minTurn = Int.MaxValue
-    private var maxTurn = Int.MinValue
-    private var minTs = Long.MaxValue
-    private var maxTs = Long.MinValue
-    private val bloom = ConvBloom.empty()
-    def track(p: InternalRow): Unit = {
-      rows += 1
-      val c = p.getUTF8String(convI)
-      if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-      if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
-      ConvBloom.add(bloom, c)
-      val t = p.getInt(turnI)
-      if (t < minTurn) minTurn = t
-      if (t > maxTurn) maxTurn = t
-      if (!p.isNullAt(tsI)) {
-        val ts = p.getLong(tsI)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-    }
-    def range: Option[FileStats] =
-      if (rows == 0) None
-      else Some(FileStats(minConv.toString, maxConv.toString, minTurn, maxTurn,
-        ConvBloom.seal(bloom), None,
-        if (minTs == Long.MaxValue) None else Some(minTs),
-        if (maxTs == Long.MinValue) None else Some(maxTs)))
-  }
-  private lazy val tConvI = tableSchema.fieldIndex("conv_id")
-  private lazy val tTurnI = tableSchema.fieldIndex("turn_idx")
-  private lazy val tTsI = tableSchema.fieldIndex("ts")
-  private val open = scala.collection.mutable.Map.empty[Int, FileAcc]
+  private val open = scala.collection.mutable.Map.empty[Int, BucketFileWriter]
 
   /** Metadata-projection path (the row-level op's normal one): `meta`
     * carries the copied row's `_bucket`; inserted rows have no source group
@@ -354,35 +307,18 @@ private[table] final class LakeBucketDataWriter(
     ((h % numBuckets) + numBuckets) % numBuckets
   }
 
-  private def writeTo(b: Int, row: InternalRow): Unit = {
-    val acc = open.getOrElseUpdate(b, {
-      val dir = java.nio.file.Paths.get(outDir, s"bucket=$b")
-      java.nio.file.Files.createDirectories(dir)
-      val path = dir.resolve(f"part-$b%05d-p$partitionId-t$taskId.parquet").toString
-      new FileAcc(writers.open(path, partitionId, taskId), tConvI, tTurnI, tTsI)
-    })
-    val p = project(row)
-    acc.track(p)
-    acc.w.write(p)
-  }
+  private def writeTo(b: Int, row: InternalRow): Unit =
+    open.getOrElseUpdate(b, new BucketFileWriter(writers, outDir, b, partitionId, taskId))
+      .write(project(row))
 
   override def commit(): WriterCommitMessage = {
-    val files = open.toSeq.sortBy(_._1).map { case (b, acc) =>
-      acc.w.close()
-      ReplaceFile(b, acc.w.path(),
-        java.nio.file.Files.size(java.nio.file.Paths.get(acc.w.path())),
-        acc.rows, acc.range)
-    }
+    val files = open.toSeq.sortBy(_._1).map(_._2.commit())
     open.clear()
     LakeReplaceMessage(files)
   }
 
   override def abort(): Unit = {
-    open.values.foreach { acc =>
-      try acc.w.close() catch { case _: Exception => () }
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(acc.w.path()))
-      catch { case _: Exception => () }
-    }
+    open.values.foreach(_.abort())
     open.clear()
   }
 

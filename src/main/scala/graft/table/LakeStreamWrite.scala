@@ -100,8 +100,7 @@ private[table] final class LakeStreamingWrite(
     // — sink-written deltas are skippable by point lookups like every other
     // delta, at zero added I/O
     val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(e => FileEntry(e.path, e.bytes, e.stats))
-        .toSeq.sortBy(_.path)).toMap
+      .view.mapValues(_.map(_.entry).toSeq.sortBy(_.path)).toMap
     val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
       .view.mapValues(_.map(_.rows).sum).toMap
     def dropStaged(): Unit = newFiles.values.flatten.foreach { f =>
@@ -155,7 +154,7 @@ private[table] final class LakeStreamingWrite(
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.filter(_ != null).flatMap(_.asInstanceOf[LakeReplaceMessage].files)
       .foreach { f =>
-        try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path))
+        try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.entry.path))
         catch { case _: Exception => () }
       }
 }

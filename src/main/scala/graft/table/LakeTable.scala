@@ -137,14 +137,14 @@ object ConvBloom {
 /** Key statistics of one data file's rows — the file-skipping input
   * (Iceberg's per-file column bounds, for the table's two key columns, plus
   * a conv_id bloom — see [[ConvBloom]] for why bounds alone cannot prune a
-  * hash-bucketed layout). Written by the hot apply paths from their existing
-  * per-partition write accumulators (NO footer reads added), so every COW /
-  * MOR / streaming-sink / SQL-write file carries its stats for free; files
-  * from stat-less paths (cold start, compaction) simply have none and are
-  * never skipped.
+  * hash-bucketed layout). Tracked by [[FileStatsTracker]] as each file is
+  * written (NO footer reads added), so every replay / COW / MOR /
+  * compaction / streaming-sink / SQL-write file carries its stats for free;
+  * files without (legacy manifests, the SQL row-level ops' carried-over
+  * tombstones) are never skipped.
   *
   * Range comparisons are in UTF8 BYTE order (`UTF8String.compareTo`,
-  * unsigned bytes) — the same ordering the accumulators used to compute
+  * unsigned bytes) — the same ordering the tracker uses to compute
   * min/max, so pruning is exact for any conv_id content, ASCII or not.
   * The bloom rides as `ArraySeq[Long]` (value equality, unboxed backing).
   */
@@ -173,7 +173,7 @@ final case class FileStats(minConv: String, maxConv: String, minTurn: Int, maxTu
   /** Event-time window admission for time-scoped analytics (retention /
     * sessionization over recent days, change-window scans): bounds are over
     * the WRITTEN rows' `ts` in Catalyst micros (null ts excluded by widening
-    * to always-admit at the write site — see the accumulators). A file
+    * to always-admit at the write site — see [[FileStatsTracker]]). A file
     * without ts bounds (legacy manifest, stat-less path) always admits —
     * skipping needs positive absence evidence, never its absence.
     */

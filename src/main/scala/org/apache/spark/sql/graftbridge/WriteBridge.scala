@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -11,9 +14,10 @@ import org.apache.spark.util.SerializableConfiguration
 /** Executor-side parquet writing over `private[sql]` machinery — the write
   * twin of [[ScanBridge]].
   *
-  * DSv2 [[org.apache.spark.sql.connector.write.DataWriter]]s run on
-  * executors and must emit parquet files directly (no DataFrame writer is
-  * reachable from a task). Spark's own write support —
+  * Tasks emit parquet files directly: the bucket-local merge and MOR append
+  * write their bucket's file from the fold task, and DSv2
+  * [[org.apache.spark.sql.connector.write.DataWriter]]s have no DataFrame
+  * writer to hand rows to. Spark's own write support —
   * `ParquetFileFormat.prepareWrite` → [[OutputWriterFactory]] — is exactly
   * that per-file writer (same compression, schema conversion and
   * timestamp/decimal encodings as every other file the engine writes, so the
@@ -26,25 +30,41 @@ object WriteBridge {
   /** Serializable per-task handle: `open(path, …)` returns an
     * [[OutputWriter]] writing `schema`-shaped [[org.apache.spark.sql.catalyst.InternalRow]]s
     * to `path`. One writer per output file; close() finalizes the footer.
+    * The Hadoop conf rides a broadcast, so it is deserialized once per
+    * executor rather than once per task.
     */
   final class TaskWriterFactory(
       factory: OutputWriterFactory,
-      conf: SerializableConfiguration,
-      schema: StructType) extends Serializable {
+      conf: Broadcast[SerializableConfiguration],
+      val schema: StructType) extends Serializable {
+    def hadoopConf: Configuration = conf.value.value
     def open(path: String, partitionId: Int, taskId: Long): OutputWriter = {
       val attempt = new TaskAttemptID(
         new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt)
-      factory.newInstance(path, schema, new TaskAttemptContextImpl(conf.value, attempt))
+      factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
     }
   }
 
   /** Prepare a parquet writer factory for `schema` under the session's SQL
-    * conf (driver-side; the result ships to tasks).
+    * conf (driver-side; the result ships to tasks). Files are created through
+    * [[graft.table.ForkFreeLocalFileSystem]].
     */
   def parquetWriterFactory(spark: SparkSession, schema: StructType): TaskWriterFactory = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val job = Job.getInstance(classic.sessionState.newHadoopConf())
+    val job = Job.getInstance(
+      classic.sessionState.newHadoopConfWithOptions(graft.table.ForkFreeLocalFileSystem.conf))
     val factory = new ParquetFileFormat().prepareWrite(classic, job, Map.empty, schema)
-    new TaskWriterFactory(factory, new SerializableConfiguration(job.getConfiguration), schema)
+    new TaskWriterFactory(factory,
+      classic.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)), schema)
+  }
+
+  /** Add one written file to the running task's output metrics — the
+    * counters Spark's own file writer maintains, which a direct writer
+    * bypasses (the setters are `private[spark]`).
+    */
+  def recordOutput(bytes: Long, rows: Long): Unit = Option(TaskContext.get()).foreach { tc =>
+    val m = tc.taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + rows)
   }
 }

@@ -47,9 +47,21 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("COW merge commits carry the written bucket's key bounds") {
     val t = new LakeTable(tmpDir("fs-cow"), numBuckets = 2)
-    // cold start files legitimately have no bounds (no accumulator pass)
-    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 3, 0)).toDF(), "w", 0L)
-    assert(allEntries(t).forall(_.stats.isEmpty))
+    // cold start writes through the same task writer: every entry carries
+    // the bounds of exactly its bucket's written keys, and its bloom admits
+    // each written conv
+    val first = batch("a", 3, 0)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(first).toDF(), "w", 0L)
+    val cold = t.resolveFiles(t.currentSnapshot().get)
+    val written = first.groupBy(e => t.bucketFor(e.conv_id, e.turn_idx))
+    assert(cold.keySet == written.keySet)
+    written.foreach { case (b, evs) =>
+      assert(cold(b).size == 1, s"one file per written bucket: ${cold(b)}")
+      val st = cold(b).head.stats.getOrElse(fail(s"bucket $b cold-start entry has no stats"))
+      assert(bounds(st) == ((evs.map(_.conv_id).min, evs.map(_.conv_id).max,
+        evs.map(_.turn_idx).min, evs.map(_.turn_idx).max)), st.toString)
+      assert(st.bloom.nonEmpty && evs.forall(e => st.mightContainConv(e.conv_id)))
+    }
     // the hot COW merge attaches the fold's winner bounds
     MergeApplier.applyBatch(spark, t, spark.createDataset(batch("b", 3, 100)).toDF(), "w", 1L)
     val entries = allEntries(t)
@@ -91,12 +103,25 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("pruned lookups agree with the full read on a mixed stats/stat-less table") {
     val t = new LakeTable(tmpDir("fs-mixed"), numBuckets = 4)
-    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 6, 0)).toDF(), "w", 0L) // no stats
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 6, 0)).toDF(), "w", 0L)
+    // engine writes always carry stats: rewrite the base manifest as a
+    // legacy stat-less one (the string entry form the manifest-format test
+    // round-trips) to keep the table mixed
+    locally {
+      val s = t.currentSnapshot().get
+      val legacy = t.writeManifest(s.version, t.resolveFiles(s).map { case (b, fs) =>
+        b -> fs.map(_.copy(stats = None)) })
+      val raw = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(legacy)))
+      assert(!raw.contains("\"c0\""), s"legacy string form expected: $raw")
+      t.commit(s.copy(version = s.version + 1, parentVersion = s.version,
+        manifests = s.manifests.map(_.copy(path = legacy))))
+    }
     MergeApplier.applyBatchMor(spark, t, spark.createDataset(
       batch("a", 6, 100) ++ batch("z", 3, 400)).toDF(), "w", 1L) // stats
     MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
       ev("a3", 1, "newer", "2025-01-02 10:00:00", 999),
       ev("a4", 2, "", "2025-01-02 10:00:00", 1000, op = "delete"))).toDF(), "w", 2L)
+    assert(allEntries(t).exists(_.stats.isEmpty) && allEntries(t).exists(_.stats.nonEmpty))
     val full = t.read(spark).collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) -> r.getAs[String]("text")).toMap
     for (conv <- Seq("a0", "a3", "a4", "z2", "nope"); turn <- 0 until 4) {

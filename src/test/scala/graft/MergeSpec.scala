@@ -36,6 +36,12 @@ class MergeSpec extends SparkSpecBase {
       MergeApplier.applyBatch(spark, table, df, "t", i.toLong)
     }
     assert(finalState(table) == oracle)
+    // each bucket's file holds its winners in (conv_id, turn_idx) order
+    table.resolveFiles(table.currentSnapshot().get).values.flatten.foreach { f =>
+      val keys = spark.read.parquet(f.path).select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(keys == keys.sorted, s"${f.path} is not key-ordered")
+    }
   }
 
   test("idle trigger: empty batch commits no version, leaves no orphan dir") {
@@ -185,8 +191,8 @@ class MergeSpec extends SparkSpecBase {
 
   test("alignment invariant: repartition(N, key) partition id equals bucketCol for every row") {
     // The bucket-local merge (MergeApplier.mergeBucket) reads bucket i's
-    // target files in partition i of the batch's key shuffle and tags output
-    // rows with the partition id. That is sound ONLY if Spark's
+    // target files in partition i of the batch's key shuffle and writes its
+    // output as bucket i = the partition id. That is sound ONLY if Spark's
     // HashPartitioning (murmur3, seed 42) equals pmod(hash(key), N) — this
     // test pins the invariant against any Spark-internals drift.
     import org.apache.spark.sql.functions.{col, spark_partition_id}
@@ -243,5 +249,82 @@ class MergeSpec extends SparkSpecBase {
     assert(s.bucketRows.values.sum == s.totalRows)
     assert(s.metrics("deletes") == 0L)
     assert(s.metrics("batchRows") > 0L)
+  }
+
+  test("a fold/write task failing mid-file leaves the table as it was and no file of its own") {
+    val all = Generator.events(spark, 4000, numConvs = 20, turnsPerConv = 6, seed = 53)
+      .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
+    val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
+    val table = new LakeTable(tmpDir("merge-fail"), numBuckets = 4)
+    def dataFiles(): Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(table.root))
+      try { import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.toString).filter(_.contains("/data/")).toSet } finally s.close()
+    }
+    // cold start (batch 0), then the hot merge (batch 1): each fails once in
+    // one bucket's task right after that task opened its file, then re-applies
+    all.grouped(2000).zipWithIndex.foreach { case (chunk, i) =>
+      val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
+      val version = table.currentSnapshot().map(_.version)
+      val state = if (version.isEmpty) Map.empty else finalState(table)
+      val filesBefore = dataFiles()
+      MergeApplier.afterBucketFileOpen =
+        b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
+      val e = try intercept[Exception] {
+        MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+      } finally MergeApplier.afterBucketFileOpen = _ => ()
+      assert(e.getMessage.contains("injected failure"), e.getMessage)
+      assert(table.currentSnapshot().map(_.version) == version)
+      if (version.nonEmpty) assert(finalState(table) == state)
+      val left = dataFiles() -- filesBefore
+      assert(!left.exists(_.contains(s"/bucket=$victim/")),
+        s"the failed task's file (bucket $victim) was left behind: $left")
+      val r = MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+      assert(!r.skipped && r.touchedBuckets > 0)
+    }
+    assert(finalState(table) == oracle)
+  }
+
+  test("the apply job reports output bytes and rows equal to what the commit references") {
+    import org.apache.spark.scheduler._
+    val table = new LakeTable(tmpDir("merge-outmetrics"), numBuckets = 4)
+    val all = Generator.events(spark, 3000, numConvs = 15, turnsPerConv = 6, seed = 61)
+      .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
+    all.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
+      val group = s"merge-outmetrics-$i"
+      val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val ended = new java.util.concurrent.atomic.AtomicInteger()
+      val out = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+            e.stageIds.foreach(stages.add(_)); jobs.add(e.jobId)
+          }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (jobs.contains(e.jobId)) ended.incrementAndGet()
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          val m = e.stageInfo.taskMetrics.outputMetrics
+          out.put(e.stageInfo.stageId, (m.bytesWritten, m.recordsWritten))
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setJobGroup(group, group)
+        try MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+        finally spark.sparkContext.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while ((jobs.isEmpty || ended.get < jobs.size) && System.nanoTime() < deadline) Thread.sleep(20)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      val reported = stages.asScala.toSeq.flatMap(id => Option(out.get(id)))
+      val snap = table.currentSnapshot().get
+      val files = table.readManifest(snap.manifests.last.path).values.flatten.toSeq
+      assert(files.nonEmpty && reported.map(_._1).sum == files.map(_.bytes).sum,
+        s"batch $i: stage output bytes $reported vs manifest ${files.map(_.bytes)}")
+      val touched = table.readManifest(snap.manifests.last.path).keySet
+      assert(reported.map(_._2).sum == touched.toSeq.map(snap.bucketRows).sum)
+    }
   }
 }
