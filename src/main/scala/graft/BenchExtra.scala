@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * fixed-overhead structure of each query is visible. Optionally dumps
   * `.explain("formatted")` plans to a directory.
   *
-  * Usage: runMain graft.BenchExtra [--plans <dir> <suffix>] [query ...]
+  * Usage: runMain graft.BenchExtra [--profile] [--plans <dir> <suffix>] [query ...]
+  * (flags in any order, before the query names)
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
   */
 object BenchExtra {
@@ -50,10 +51,11 @@ object BenchExtra {
       var prevEnd = 0L
       order.asScala.foreach { id =>
         val j = js.get(id)
-        val durMs = (j.end - j.start) / 1e6
         val gapMs = if (prevEnd == 0L) 0.0 else (j.start - prevEnd) / 1e6
-        prevEnd = j.end
-        System.err.println(f"[job] ${j.id}%4d dur=${durMs}%8.1fms gap=${gapMs}%7.1fms ${j.desc.take(90)}")
+        // a job whose end event has not arrived has no duration
+        val dur = if (j.end == 0L) "unfinished" else f"${(j.end - j.start) / 1e6}%.1fms"
+        if (j.end != 0L) prevEnd = j.end
+        System.err.println(f"[job] ${j.id}%4d dur=$dur%12s gap=${gapMs}%7.1fms ${j.desc.take(90)}")
       }
     }
   }
@@ -65,9 +67,12 @@ object BenchExtra {
     var plansDir: Option[String] = None
     var plansSuffix = "before"
     var profile = false
-    if (rest.take(1) == List("--profile")) { profile = true; rest = rest.drop(1) }
-    if (rest.take(1) == List("--plans")) {
-      plansDir = Some(rest(1)); plansSuffix = rest(2); rest = rest.drop(3)
+    var parsing = true
+    while (parsing) rest match {
+      case "--profile" :: more => profile = true; rest = more
+      case "--plans" :: d :: suffix :: more =>
+        plansDir = Some(d); plansSuffix = suffix; rest = more
+      case _ => parsing = false
     }
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toList.sorted
     val spark = SparkSession.builder()

@@ -222,25 +222,12 @@ object AnnIndex {
       .write.mode("append").partitionBy("list").parquet(s"$root/vectors")
   }
 
-  /** One full scan of the batch proves every vector matches the index's
-    * dimension BEFORE any file is written — a silently-appended wrong-width
-    * vector would poison every later search that probes its list. Returns
-    * the batch row count (the same aggregation carries it, so callers need
-    * no second counting job).
-    */
-  private def requireDim(c: DataFrame, dim: Int): Long = {
-    val r = c.agg(count(when(size(col("cv")) =!= dim, 1)).as("bad"),
-      count(lit(1)).as("n")).first()
-    require(r.getLong(0) == 0L,
-      s"append batch has ${r.getLong(0)} vector(s) whose dimension != the index's $dim")
-    r.getLong(1)
-  }
-
   /** Checkpoint an append batch with the dimension check + row count RIDING
-    * the checkpoint job via observe() — one job where checkpoint +
-    * [[requireDim]] were two, same validate-before-any-write ordering
-    * (the observation completes with the checkpoint, before any file is
-    * written). Returns (checkpointed batch, row count).
+    * the checkpoint job via observe(): every vector must match the index's
+    * dimension BEFORE any file is written — a silently-appended wrong-width
+    * vector would poison every later search that probes its list — and the
+    * observation completes with the checkpoint, so the check costs no job of
+    * its own. Returns (checkpointed batch, row count).
     */
   private def checkpointDimChecked(newVectors: DataFrame, idCol: String,
       vecCol: String, dim: Int): (DataFrame, Long) = {
@@ -295,10 +282,9 @@ object AnnIndex {
     recoverInflight(root)
     val meta = readMeta(root)
     val gen = meta.gen + 1
-    // every per-row count — including the dimension check, which the old
-    // code paid a separate requireDim scan for — rides the batch's
-    // checkpoint job via observe(); only the distinct-id tie check (observe
-    // cannot carry DISTINCT aggregates) stays a second (single) job
+    // every per-row count — including the dimension check — rides the
+    // batch's checkpoint job via observe(); only the distinct-id tie check
+    // (observe cannot carry DISTINCT aggregates) stays a second (single) job
     val chObs = org.apache.spark.sql.Observation()
     val ch = changes.select(col(idCol).as("vec_id"), col(vecCol).as("cv"),
       col(typeCol).as("ct"))

@@ -1,13 +1,13 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{FileStats, FileStatsTracker, LakeTable, Snapshot}
+import graft.table.{LakeTable, Snapshot}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.ScanBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.CollectionAccumulator
 
 /** Bucket-local (zero-shuffle) table passes. The table's bucket layout means
   * every per-key operation — LWW fold, tombstone expiry, rewrite — is fully
@@ -15,6 +15,10 @@ import org.apache.spark.util.CollectionAccumulator
   * narrow-dependency pass: bucket-aligned scan (partition i = bucket i's
   * files) → in-task fold → emit. No exchange at any table size; the unit of
   * parallelism is the bucket, which is exactly how the table scales.
+  *
+  * Every rewrite pass here hands its rows to the bucket's task writer
+  * ([[graft.table.BucketFileWriter]]): compaction through [[compactRows]],
+  * rebucket through [[keyOrdered]].
   *
   * [[wins]] is the engine's one LWW rule on every write path (replay, COW
   * merge, compaction) and delta-folding read: winner per (conv_id,
@@ -119,7 +123,7 @@ object BucketLocal {
     (schema.fieldIndex("conv_id"), schema.fieldIndex("turn_idx"),
       schema.fieldIndex("ts"), schema.fieldIndex("seq"))
 
-  private[operators] def bucketArray(table: LakeTable, snap: Snapshot,
+  private[graft] def bucketArray(table: LakeTable, snap: Snapshot,
       buckets: Option[Set[Int]] = None): Array[Array[(String, Long)]] = {
     // sized from the SNAPSHOT, not the handle: the snapshot's manifest is
     // the authority on the bucket layout (a stale handle after a rebucket
@@ -214,17 +218,6 @@ object BucketLocal {
     }
   }
 
-  /** Report a partition's (= bucket's) write-side stats for compaction and
-    * rebucket output, once: (bucket, stats, rows, tombstones). Compaction
-    * rewrites are the LONG-LIVED majority of a mature table's files; without
-    * stats they were never skippable and their row counts cost driver footer
-    * reads per maintenance pass.
-    */
-  private def report(st: FileStatsTracker,
-      acc: CollectionAccumulator[(Int, FileStats, Long, Long)]): Unit =
-    st.stats.foreach(s => acc.add((org.apache.spark.TaskContext.getPartitionId(), s,
-      st.rows, st.tombstones)))
-
   private[operators] def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
     new java.util.Comparator[InternalRow] {
       override def compare(a: InternalRow, b: InternalRow): Int = {
@@ -233,59 +226,24 @@ object BucketLocal {
       }
     }
 
-  /** The shared in-task tail of every clustered rewrite (compaction's hash
-    * path, rebucket, SQL overwrite): buffer the partition, CLUSTER by
-    * (conv_id, turn_idx), track its [[FileStatsTracker]] stats, tag rows with
-    * the bucket id (= partition id). `copyRows = false` only when the input
-    * rows are already safe copies (e.g. a hash fold's map values).
+  /** Buffer a partition and CLUSTER it by (conv_id, turn_idx) — the in-task
+    * layout of every key-unique rewrite (compaction's hash path, rebucket).
+    * `copyRows = false` only when the rows are already safe copies (a hash
+    * fold's map values); scanned and shuffled rows reuse their buffers.
     */
-  private def clusterStatsTag(rows: Iterator[InternalRow], copyRows: Boolean,
-      schema: StructType, textIndex: Boolean,
-      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]])
-      : Iterator[InternalRow] = {
-    val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
-    rows.foreach(r => buf += (if (copyRows) r.copy() else r))
-    val arr = buf.toArray
-    val (convI, turnI, _, _) = keyIdx(schema)
+  private[operators] def keyOrdered(rows: Iterator[InternalRow], copyRows: Boolean,
+      convI: Int, turnI: Int): Iterator[InternalRow] = {
+    val arr = (if (copyRows) rows.map(_.copy()) else rows).toArray
     java.util.Arrays.sort(arr, keyComparator(convI, turnI))
-    statsAcc.foreach { acc =>
-      val st = new FileStatsTracker(schema, textIndex)
-      arr.foreach(st.track)
-      report(st, acc)
-    }
-    val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.TaskContext.getPartitionId()))
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    arr.iterator.map(r => joined(r, bucketRow): InternalRow)
+    arr.iterator
   }
 
-  /** Rebucket write support: `state` arrives already repartitioned by the
-    * NEW bucket function, so partition id == new bucket id (the same
-    * alignment every apply path uses). Each partition is clustered by key
-    * in-task (the layout compaction emits), tracked by the same
-    * [[graft.table.FileStatsTracker]] as every other write — so rebucket
-    * needs no driver footer reads AND its long-lived files carry
-    * [[graft.table.FileStats]] — and tagged with the bucket column from the
-    * partition id.
-    */
-  def clusterTagAndTrack(spark: SparkSession, state: DataFrame, schema: StructType,
-      statsAcc: CollectionAccumulator[(Int, FileStats, Long, Long)]): DataFrame = {
-    val tagged = ScanBridge.toInternalRdd(state).mapPartitions { rows =>
-      // rows reuse upstream buffers → copy
-      clusterStatsTag(rows, copyRows = true, schema, textIndex = false, Some(statsAcc))
-    }
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, tagged, outSchema)
-  }
-
-  /** One bucket-local compaction pass: fold deltas (when present), drop
-    * tombstones older than the watermark, CLUSTER the bucket's rows by
-    * (conv_id, turn_idx), tag rows with the bucket id (= partition id, the
-    * alignment invariant). ZERO shuffles — compaction cost is exactly
-    * read + sort-in-task + write, the property that keeps maintenance
-    * feasible at 10^10 rows.
+  /** One bucket-local compaction pass: partition i holds bucket i's rows
+    * with deltas folded (when present), tombstones older than the watermark
+    * dropped, CLUSTERED by (conv_id, turn_idx) — ready for that bucket's
+    * task write ([[graft.table.BucketFileWriter.writeAll]]). ZERO shuffles
+    * — compaction cost is exactly read + sort-in-task + write, the property
+    * that keeps maintenance feasible at 10^10 rows.
     *
     * Clustering: the rewritten parquet gets tight per-row-group min/max
     * statistics on the key columns (a conversation's turns are contiguous),
@@ -298,9 +256,7 @@ object BucketLocal {
     */
   def compactRows(spark: SparkSession, table: LakeTable, snap: Snapshot,
       watermarkMicros: Long, spill: Boolean = false,
-      buckets: Option[Set[Int]] = None,
-      statsAcc: Option[CollectionAccumulator[(Int, FileStats, Long, Long)]] = None,
-      textIndex: Boolean = false): DataFrame = {
+      buckets: Option[Set[Int]] = None): RDD[InternalRow] = {
     val schema = snap.schema
     val (convI, turnI, tsI, seqI) = keyIdx(schema)
     val opI = schema.fieldIndex("op")
@@ -312,30 +268,7 @@ object BucketLocal {
     def expired(r: InternalRow): Boolean =
       !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp) &&
         !r.isNullAt(tsI) && r.getLong(tsI) < watermarkMicros
-    def tag(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
-      val bucketRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](org.apache.spark.TaskContext.getPartitionId()))
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      rows.map(r => joined(r, bucketRow): InternalRow)
-    }
-    // streaming stats wrapper (spill path): observe each emitted row, report
-    // once on exhaustion — the parquet writer always drains its iterator
-    def tracked(rows: Iterator[InternalRow]): Iterator[InternalRow] =
-      statsAcc match {
-        case None => rows
-        case Some(acc) =>
-          val st = new FileStatsTracker(schema, textIndex)
-          var reported = false
-          new Iterator[InternalRow] {
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h && !reported) { reported = true; report(st, acc) }
-              h
-            }
-            override def next(): InternalRow = { val r = rows.next(); st.track(r); r }
-          }
-      }
-    val compacted = if (spill) {
+    if (spill) {
       // Spill-safe compaction — THE maintenance pass that must survive an
       // oversized bucket (it is how the operator shrinks one): partition-
       // local SortExec (spills) already clusters by key, so the streaming
@@ -350,7 +283,7 @@ object BucketLocal {
         // before pulling the next, so no copy is needed there
         val resolved =
           if (fold) foldWinnersSorted(rows, convI, turnI) else rows
-        tag(tracked(resolved.filter(r => !expired(r))))
+        resolved.filter(r => !expired(r))
       }
     } else ScanBridge.bucketFilesRdd(spark, schema, bucketArray(table, snap, buckets))
       .mapPartitions { rows =>
@@ -358,12 +291,7 @@ object BucketLocal {
           if (fold) foldWinners(rows, convI, turnI, tsI, seqI) else rows
         // fold-path rows are already safe copies (map values); raw-scan rows
         // reuse the reader's buffer and must be copied to be held for the sort
-        clusterStatsTag(resolved.filter(r => !expired(r)), copyRows = !fold,
-          schema, textIndex, statsAcc)
+        keyOrdered(resolved.filter(r => !expired(r)), copyRows = !fold, convI, turnI)
       }
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    ScanBridge.internalDf(spark, compacted, outSchema)
   }
 }

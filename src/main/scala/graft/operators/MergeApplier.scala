@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{BucketFileWriter, ForkFreeLocalFileSystem, LakeTable, ManifestRef, Snapshot, WrittenFile}
+import graft.table.{BucketFileWriter, LakeTable, ManifestRef, Snapshot, WrittenFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -89,29 +89,7 @@ object MergeApplier {
     val winners = BucketLocal.foldWinnersMap(counted ++ target, convI, turnI, tsI, seqI)
       .values().toArray(new Array[InternalRow](0))
     java.util.Arrays.sort(winners, BucketLocal.keyComparator(convI, turnI))
-    Iterator(BucketMerge(writeBucket(writers, dir, winners.iterator), nRows, nDel))
-  }
-
-  /** Test seam: runs inside a fold/write task right after it opened its
-    * bucket's file, with the bucket id. Specs throw here to fail one task
-    * mid-write. No-op in production.
-    */
-  private[graft] var afterBucketFileOpen: Int => Unit = _ => ()
-
-  /** Write this task's rows as its bucket's (= partition's) one file; a
-    * failure deletes the partial file before the task fails. Files of a
-    * failed job's other tasks are never referenced; vacuum sweeps them.
-    */
-  private def writeBucket(writers: WriteBridge.TaskWriterFactory, dir: String,
-      rows: Iterator[InternalRow]): WrittenFile = {
-    val tc = org.apache.spark.TaskContext.get()
-    val w = new BucketFileWriter(writers, dir, tc.partitionId(), tc.partitionId(),
-      tc.taskAttemptId())
-    try {
-      afterBucketFileOpen(w.bucket)
-      rows.foreach(w.write)
-      w.commit()
-    } catch { case e: Throwable => w.abort(); throw e }
+    Iterator(BucketMerge(BucketFileWriter.write(writers, dir, winners.iterator), nRows, nDel))
   }
 
   private def deleteDir(p: java.nio.file.Path): Unit =
@@ -256,11 +234,12 @@ object MergeApplier {
     // every touched bucket emits >=1 winner (tombstones retained), so the
     // written bucket set IS the touched set. Cold start reports what it
     // wrote (winners, tombstones); the hot path its raw batch rows.
-    val newBucketFiles = merged.map(m => m.file.bucket -> Seq(m.file.entry)).toMap
-    val newRows = merged.map(m => m.file.bucket -> m.file.rows).toMap
+    val written = WrittenFile.byBucket(merged.map(_.file).toSeq)
+    val newBucketFiles = written.files
+    val newRows = written.rows
     val touchedCount = merged.length
     val (batchRows, nDeletes) =
-      if (snap.isEmpty) (newRows.values.sum, merged.map(_.file.tombstones).sum)
+      if (snap.isEmpty) (newRows.values.sum, written.tombstones.values.sum)
       else (merged.map(_.batchRows).sum, merged.map(_.batchDeletes).sum)
 
     // Manifest-list commit: ONE new manifest file for the touched buckets;
@@ -272,9 +251,7 @@ object MergeApplier {
     val mine = newBucketFiles.keySet
     val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
       mine, delta = false)
-    val manifests = snap.map(_.manifests).getOrElse(Seq.empty)
-      .map(m => m.copy(buckets = m.buckets -- mine))
-      .filter(_.buckets.nonEmpty) :+ myRef
+    val manifests = ManifestRef.replace(snap.map(_.manifests).getOrElse(Seq.empty), mine, Seq(myRef))
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
 
     def metricsFor(extra: Map[String, Long]) = Map(
@@ -351,8 +328,7 @@ object MergeApplier {
             version = cur.version + 1,
             schemaJson = Model.mergeSchemas(cur.schema, mergedSchema).json,
             numBuckets = table.numBuckets,
-            manifests = cur.manifests.map(m => m.copy(buckets = m.buckets -- mine))
-              .filter(_.buckets.nonEmpty) :+ myRef,
+            manifests = ManifestRef.replace(cur.manifests, mine, Seq(myRef)),
             committed = cur.committed + (writerId -> batchId),
             bucketRows = cur.bucketRows ++ newRows,
             metrics = metricsFor(Map("rebasedFrom" -> version)),
@@ -395,27 +371,23 @@ object MergeApplier {
     // file's key bounds + conv bloom — the skip input that keeps point
     // lookups O(files holding the key) on a delta-deep tail. The driver
     // commits the collected entries: no listing, no footer reads.
-    val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
-    val dir = outDir.toString
-    val written = ScanBridge.toInternalRdd(
-        aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*))
-      .mapPartitions { rows =>
-        if (rows.hasNext) Iterator(writeBucket(writers, dir, rows)) else Iterator.empty
-      }.collect()
-    if (written.isEmpty) {
+    val written = WrittenFile.byBucket(BucketFileWriter.writeAll(
+      ScanBridge.toInternalRdd(aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*)),
+      WriteBridge.parquetWriterFactory(spark, mergedSchema), outDir.toString))
+    if (written.files.isEmpty) {
       // same no-orphan contract as the COW idle path
       return ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
     }
-    val batchRows = written.map(_.rows).sum
-    val nDeletes = written.map(_.tombstones).sum
+    val batchRows = written.rows.values.sum
+    val nDeletes = written.tombstones.values.sum
     val tMeta = System.nanoTime()
-    val newBucketFiles = written.map(w => w.bucket -> Seq(w.entry)).toMap
+    val newBucketFiles = written.files
     val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
       newBucketFiles.keySet, delta = true)
     val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
     // bucketRows counts STORED rows (incl. superseded versions until
     // compact), straight from the tasks' results
-    val newRows = written.map(w => w.bucket -> w.rows).toMap
+    val newRows = written.rows
     def rowsOn(base: Map[Int, Long]) = (base.keySet ++ newBucketFiles.keySet).map { b =>
       b -> (base.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))
     }.toMap
@@ -488,10 +460,6 @@ object MergeApplier {
       writerId: String = "replay", batchId: Long = 0L): ApplyResult =
     applyBatch(spark, table, changelog, writerId, batchId)
 
-  /** Maintenance: drop tombstones older than `watermark` and rewrite all
-    * buckets (compaction). Safe once no in-flight source can still produce
-    * events with ts < watermark.
-    */
   /** Compaction that folds deltas but retains EVERY tombstone — the variant
     * maintenance policies (auto-compaction) must use, since they cannot know
     * how late the source can still run. Returns rows in the compacted table,
@@ -502,6 +470,10 @@ object MergeApplier {
       textIndex: Boolean = false): Long =
     compactMicros(spark, table, Long.MinValue, textIndex = textIndex)
 
+  /** Maintenance: drop tombstones older than `watermark` and rewrite all
+    * buckets (compaction). Safe once no in-flight source can still produce
+    * events with ts < watermark.
+    */
   def compact(spark: SparkSession, table: LakeTable,
       watermark: java.sql.Timestamp, textIndex: Boolean = false): Long =
     compactMicros(spark, table,
@@ -557,25 +529,17 @@ object MergeApplier {
     val state =
       if (snap.morDeltas) BucketLocal.readFoldedAuto(spark, table, snap)
       else table.readRaw(spark)
-    val keyCols = Model.KeyCols.map(col)
-    // same alignment trick as the merge: repartition(newN, key) partitions
-    // equal the NEW bucket function, so the partitioned write needs no
-    // second exchange. Row counts + FileStats come from the same
-    // FileStatsTracker as every other write path (no driver footer reads),
-    // via an accumulator deduplicated by partition id against task retries.
-    val statsAcc = spark.sparkContext
-      .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("rebucketStats")
-    val aligned = Model.alignToSchema(state, snap.schema)
-    BucketLocal.clusterTagAndTrack(spark,
-        aligned.repartition(newNumBuckets, keyCols: _*), snap.schema, statsAcc)
-      .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
-      .partitionBy("bucket").parquet(outDir.toString)
-    val perBucket = {
-      import scala.jdk.CollectionConverters._
-      statsAcc.value.asScala.groupBy(_._1).map(_._2.head)
-    }
-    val newFiles = resized.attachStats(resized.listBucketFiles(outDir),
-      perBucket.map(s => s._1 -> s._2).toMap)
+    // same alignment trick as the merge: repartition(newN, key) partition i
+    // holds exactly the NEW bucket i's rows, so its task key-orders them and
+    // writes the bucket's one file — no second exchange, and row counts +
+    // FileStats come back with the task's result (no listing, no footers)
+    val (convI, turnI, _, _) = BucketLocal.keyIdx(snap.schema)
+    val rows = ScanBridge.toInternalRdd(Model.alignToSchema(state, snap.schema)
+        .repartition(newNumBuckets, Model.KeyCols.map(col): _*))
+      .mapPartitions(it => BucketLocal.keyOrdered(it, copyRows = true, convI, turnI))
+    val written = WrittenFile.byBucket(BucketFileWriter.writeAll(rows,
+      WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString))
+    val newFiles = written.files
     resized.commit(Snapshot(
       version = version,
       schemaJson = snap.schemaJson,
@@ -583,7 +547,7 @@ object MergeApplier {
       manifests = Seq(ManifestRef(resized.writeManifest(version, newFiles),
         newFiles.keySet, delta = false)),
       committed = snap.committed,
-      bucketRows = perBucket.map(s => s._1 -> s._3).toMap,
+      bucketRows = written.rows,
       metrics = Map("rebucketedFrom" -> snap.numBuckets.toLong),
       parentVersion = snap.version,
       morDeltas = false))
@@ -624,22 +588,15 @@ object MergeApplier {
       // compaction is exactly how the operator SHRINKS such a bucket, so it
       // is the one pass that must survive it
       val spill = table.maxBucketBytes(snap, sel) > table.spillFoldBytes
-      // write-side stats: compaction files get key bounds + conv bloom
-      // (+ the opt-in token bloom) and their row counts from the task's
-      // FileStatsTracker — no stat-less long-lived files, no footer reads
-      val statsAcc = spark.sparkContext
-        .collectionAccumulator[(Int, graft.table.FileStats, Long, Long)]("compactStats")
-      BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel,
-          Some(statsAcc), textIndex)
-        .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
-        .partitionBy("bucket").parquet(outDir.toString)
-      val perBucket = {
-        import scala.jdk.CollectionConverters._
-        statsAcc.value.asScala.groupBy(_._1).map(_._2.head)
-      }
-      val newFiles = table.attachStats(table.listBucketFiles(outDir),
-        perBucket.map(s => s._1 -> s._2).toMap)
-      val rows = perBucket.map(s => s._1 -> s._3).toMap
+      // each bucket's task writes its compacted rows through the shared task
+      // writer: key bounds + conv bloom (+ the opt-in token bloom) and row
+      // counts come back with the result — no stat-less long-lived files,
+      // no listing, no footer reads
+      val written = WrittenFile.byBucket(BucketFileWriter.writeAll(
+        BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel),
+        WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString, textIndex))
+      val newFiles = written.files
+      val rows = written.rows
       beforePublish("compact", snap.version)
       try {
         val cand = sel match {
@@ -658,7 +615,7 @@ object MergeApplier {
                 newFiles.keySet, delta = false)),
               snap.committed, rows,
               Map("compactedRows" -> rows.values.sum,
-                "tombstoneRows" -> perBucket.map(_._4).sum), snap.version,
+                "tombstoneRows" -> written.tombstones.values.sum), snap.version,
               morDeltas = false)
           case Some(t) =>
             // Partial: mask the targets out of every prior ref, append one
@@ -666,16 +623,13 @@ object MergeApplier {
             // simply ends up claimed-with-no-files = empty). Other buckets'
             // files and the ledger are untouched; morDeltas reflects
             // whatever deltas REMAIN on the un-compacted buckets.
-            val masked = snap.manifests
-              .map(m => m.copy(buckets = m.buckets -- t))
-              .filter(_.buckets.nonEmpty)
-            Snapshot(version, snap.schemaJson, table.numBuckets,
-              masked :+ ManifestRef(table.writeManifest(version, newFiles), t,
-                delta = false),
+            val manifests = ManifestRef.replace(snap.manifests, t,
+              Seq(ManifestRef(table.writeManifest(version, newFiles), t, delta = false)))
+            Snapshot(version, snap.schemaJson, table.numBuckets, manifests,
               snap.committed, (snap.bucketRows -- t) ++ rows,
               Map("compactedRows" -> rows.values.sum,
                 "compactedBuckets" -> t.size.toLong), snap.version,
-              morDeltas = masked.exists(_.delta))
+              morDeltas = manifests.exists(_.delta))
         }
         table.commit(cand)
         return rows.values.sum

@@ -23,14 +23,6 @@ object WindowedStats {
       .agg(count(lit(1)).as("n_events"),
         approx_count_distinct("conv_id").as("approx_convs"))
 
-  /** Sliding-window event rate per conversation (hot-conversation monitor). */
-  def convRates(events: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("conv_id"))
-      .agg(count(lit(1)).as("n_events"))
-
   final case class ConvSession(conv_id: String, turns: Long, firstTs: Long,
       lastTs: Long, closed: Boolean)
 

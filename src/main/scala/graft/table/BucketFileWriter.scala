@@ -1,6 +1,7 @@
 package graft.table
 
 import graft.model.Model
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.WriteBridge
 import org.apache.spark.sql.types.StructType
@@ -73,21 +74,40 @@ final class FileStatsTracker(schema: StructType, textIndex: Boolean = false) {
   */
 final case class WrittenFile(bucket: Int, entry: FileEntry, rows: Long, tombstones: Long)
 
+object WrittenFile {
+  /** Task-written files keyed by bucket: manifest entries (path order), rows
+    * and tombstones — what a commit puts in its manifest and `bucketRows`.
+    */
+  final case class ByBucket(files: Map[Int, Seq[FileEntry]], rows: Map[Int, Long],
+      tombstones: Map[Int, Long])
+
+  def byBucket(written: Seq[WrittenFile]): ByBucket = {
+    val g = written.groupBy(_.bucket)
+    ByBucket(g.map { case (b, ws) => b -> ws.map(_.entry).sortBy(_.path) },
+      g.map { case (b, ws) => b -> ws.map(_.rows).sum },
+      g.map { case (b, ws) => b -> ws.map(_.tombstones).sum })
+  }
+}
+
 /** One bucket data file written from inside a task, through Spark's parquet
-  * writer ([[WriteBridge]]). The name carries the partition and the task
-  * attempt, so retried and speculative attempts never collide; an unused
-  * attempt's file is simply never referenced (vacuum sweeps it), and a
-  * failed one is deleted by [[abort]].
+  * writer ([[WriteBridge]]) — every lake-table data file is written by one:
+  * replay, COW merge, MOR append, compaction, rebucket and the SQL
+  * tombstone carry through [[BucketFileWriter.write]], the SQL row-level
+  * write and the streaming sink through their per-task bucket router. The
+  * name carries the partition and the task attempt, so retried and
+  * speculative attempts never collide; an unused attempt's file is simply
+  * never referenced (vacuum sweeps it), and a failed one is deleted by
+  * [[abort]]. `textIndex` adds the token bloom to the file's stats.
   */
 final class BucketFileWriter(writers: WriteBridge.TaskWriterFactory, dir: String,
-    val bucket: Int, partitionId: Int, taskId: Long) {
+    val bucket: Int, partitionId: Int, taskId: Long, textIndex: Boolean = false) {
   private val path = {
     val d = Paths.get(dir, s"bucket=$bucket")
     Files.createDirectories(d)
     d.resolve(f"part-$bucket%05d-p$partitionId-t$taskId.parquet").toString
   }
   private val out = writers.open(path, partitionId, taskId)
-  private val tracker = new FileStatsTracker(writers.schema)
+  private val tracker = new FileStatsTracker(writers.schema, textIndex)
 
   def write(r: InternalRow): Unit = { tracker.track(r); out.write(r) }
 
@@ -106,4 +126,41 @@ final class BucketFileWriter(writers: WriteBridge.TaskWriterFactory, dir: String
       try Files.deleteIfExists(f) catch { case _: Exception => () }
     }
   }
+}
+
+object BucketFileWriter {
+
+  /** Test seam: runs inside a task right after [[write]] opened its
+    * bucket's file, with the bucket id. Specs throw here to fail one task
+    * mid-write. No-op in production.
+    */
+  private[graft] var afterBucketFileOpen: Int => Unit = _ => ()
+
+  /** The one bucket-aligned task write: this task's rows become its
+    * bucket's (= partition's) one file. A failure deletes the partial file
+    * before the task fails; files of a failed job's other tasks are never
+    * referenced, and vacuum sweeps them.
+    */
+  def write(writers: WriteBridge.TaskWriterFactory, dir: String,
+      rows: Iterator[InternalRow], textIndex: Boolean = false): WrittenFile = {
+    val tc = org.apache.spark.TaskContext.get()
+    val w = new BucketFileWriter(writers, dir, tc.partitionId(), tc.partitionId(),
+      tc.taskAttemptId(), textIndex)
+    try {
+      afterBucketFileOpen(w.bucket)
+      rows.foreach(w.write)
+      w.commit()
+    } catch { case e: Throwable => w.abort(); throw e }
+  }
+
+  /** [[write]] every non-empty partition of a bucket-aligned RDD (partition
+    * i holds bucket i's rows) and collect the files. collect() carries
+    * successful attempts only, so retries and speculation cannot inflate
+    * the counts, and the commit needs no listing and no footer reads.
+    */
+  def writeAll(rows: RDD[InternalRow], writers: WriteBridge.TaskWriterFactory,
+      dir: String, textIndex: Boolean = false): Seq[WrittenFile] =
+    rows.mapPartitions { it =>
+      if (it.hasNext) Iterator(write(writers, dir, it, textIndex)) else Iterator.empty
+    }.collect().toSeq
 }

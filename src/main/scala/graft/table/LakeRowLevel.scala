@@ -8,8 +8,7 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.WriteBridge
+import org.apache.spark.sql.graftbridge.{ScanBridge, WriteBridge}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -42,10 +41,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * CDC-invariant preservation: the SQL scan folds tombstones out, so a naive
   * group replacement would DROP the replaced buckets' tombstones and a stale
   * out-of-order insert could resurrect a deleted turn. Instead the commit
-  * re-reads just the replaced buckets' tombstone rows (one filtered scan of
-  * the groups already being rewritten — same cost class as the op itself)
-  * and carries them as a delta manifest. LWW is associative, so the old
-  * tombstones fold correctly against the replacement rows: a key the
+  * re-reads just the replaced buckets' tombstone rows (one bucket-aligned
+  * scan of the groups already being rewritten — same cost class as the op
+  * itself), each bucket's task writes its tombstones as one file with
+  * [[FileStats]], and the commit carries them as a delta manifest. LWW is
+  * associative, so the old tombstones fold correctly against the replacement rows: a key the
   * statement re-inserted with a NEWER (ts, seq) lives; a pre-delete replay
   * stays dead — exactly the engine's contract everywhere else.
   *
@@ -126,29 +126,31 @@ private final class LakeReplaceDataWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val entries = messages.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
-    val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.entry).toSeq.sortBy(_.path)).toMap
-    val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.rows).sum).toMap
+    val written = WrittenFile.byBucket(
+      messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files))
+    val newFiles = written.files
+    val newRows = written.rows
     // the groups this output REPLACES = what the target scan actually read
     // (a never-planned scan means Spark read nothing — replace nothing)
     val replaced: Set[Int] = op.scannedBuckets.getOrElse(Set.empty)
     val baseFiles = newFiles.filter { case (b, _) => replaced.contains(b) }
     val deltaFiles = newFiles.filter { case (b, _) => !replaced.contains(b) }
 
-    // preserve the replaced buckets' CDC tombstones as a delta (see class doc)
-    val tombFiles: Map[Int, Seq[FileEntry]] =
-      if (replaced.isEmpty) Map.empty
+    // preserve the replaced buckets' CDC tombstones as a delta (see class
+    // doc): bucket i's task scans bucket i's files and writes its tombstones
+    val tombs = WrittenFile.byBucket(
+      if (replaced.isEmpty) Seq.empty
       else {
-        val tombDir = outDir.resolve("tombstones")
-        table.readRaw(spark, Some(replaced), asOfVersion = Some(snap.version))
-          .filter(col("op") === Model.OpDelete)
-          .withColumn("bucket", table.bucketCol)
-          .write.options(ForkFreeLocalFileSystem.conf).mode("overwrite")
-          .partitionBy("bucket").parquet(tombDir.toString)
-        table.listBucketFiles(tombDir)
-      }
+        val opI = snap.schema.fieldIndex("op")
+        val deleteOp = UTF8String.fromString(Model.OpDelete)
+        BucketFileWriter.writeAll(
+          ScanBridge.bucketFilesRdd(spark, snap.schema,
+              graft.operators.BucketLocal.bucketArray(table, snap, Some(replaced)))
+            .filter(r => !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)),
+          WriteBridge.parquetWriterFactory(spark, snap.schema),
+          outDir.resolve("tombstones").toString)
+      })
+    val tombFiles = tombs.files
 
     if (replaced.isEmpty && newFiles.isEmpty) return // no groups, no rows: no-op
 
@@ -163,19 +165,13 @@ private final class LakeReplaceDataWrite(
       base ++ tomb ++ extra
     }
     val writerId = Option(info.options().get("writerId")).getOrElse("sql-rlo")
-    // one parallel pass sharing one Hadoop Configuration — a per-bucket
-    // footerRowCount call rebuilds the ~20 ms Configuration per bucket and
-    // turns a wide MERGE's commit into seconds of serial driver time
-    val tombRows = table.footerRowCounts(tombFiles)
 
     def candidate(cur: Snapshot, rebasedFrom: Option[Long]): Snapshot = {
       val mine = refsFor(cur.version + 1)
-      val manifests = cur.manifests
-        .map(m => m.copy(buckets = m.buckets -- replaced))
-        .filter(_.buckets.nonEmpty) ++ mine
+      val manifests = ManifestRef.replace(cur.manifests, replaced, mine)
       val rows = cur.bucketRows --
         replaced ++
-        replaced.map(b => b -> (newRows.getOrElse(b, 0L) + tombRows.getOrElse(b, 0L))).toMap ++
+        replaced.map(b => b -> (newRows.getOrElse(b, 0L) + tombs.rows.getOrElse(b, 0L))).toMap ++
         deltaFiles.keySet.map(b => b ->
           (cur.bucketRows.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))).toMap
       Snapshot(

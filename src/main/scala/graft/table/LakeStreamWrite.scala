@@ -95,14 +95,13 @@ private[table] final class LakeStreamingWrite(
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val entries = messages.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
     // epoch delta files carry their key bounds (tracked in the task writer)
     // — sink-written deltas are skippable by point lookups like every other
     // delta, at zero added I/O
-    val newFiles: Map[Int, Seq[FileEntry]] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.entry).toSeq.sortBy(_.path)).toMap
-    val newRows: Map[Int, Long] = entries.groupBy(_.bucket)
-      .view.mapValues(_.map(_.rows).sum).toMap
+    val written = WrittenFile.byBucket(
+      messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files))
+    val newFiles = written.files
+    val newRows = written.rows
     def dropStaged(): Unit = newFiles.values.flatten.foreach { f =>
       try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path))
       catch { case _: Exception => () }

@@ -21,6 +21,16 @@ import scala.jdk.CollectionConverters._
   */
 final case class ManifestRef(path: String, buckets: Set[Int], delta: Boolean)
 
+object ManifestRef {
+  /** The manifest-list masking rule of every commit that rewrites buckets:
+    * `buckets` leave every prior ref, refs left with no bucket drop out, and
+    * `added` go on the end.
+    */
+  def replace(prior: Seq[ManifestRef], buckets: Set[Int],
+      added: Seq[ManifestRef]): Seq[ManifestRef] =
+    prior.map(m => m.copy(buckets = m.buckets -- buckets)).filter(_.buckets.nonEmpty) ++ added
+}
+
 /** ADAPTIVE bloom filter over a file's distinct conv_ids — the file-skip
   * input that works where min/max bounds cannot: on a HASH-bucketed table
   * every delta file holds a near-uniform sample of the key space, so its
@@ -139,9 +149,9 @@ object ConvBloom {
   * a conv_id bloom — see [[ConvBloom]] for why bounds alone cannot prune a
   * hash-bucketed layout). Tracked by [[FileStatsTracker]] as each file is
   * written (NO footer reads added), so every replay / COW / MOR /
-  * compaction / streaming-sink / SQL-write file carries its stats for free;
-  * files without (legacy manifests, the SQL row-level ops' carried-over
-  * tombstones) are never skipped.
+  * compaction / rebucket / streaming-sink / SQL-write file, the SQL
+  * row-level ops' carried-over tombstones included, carries its stats for
+  * free; files without (legacy manifests) are never skipped.
   *
   * Range comparisons are in UTF8 BYTE order (`UTF8String.compareTo`,
   * unsigned bytes) — the same ordering the tracker uses to compute
@@ -684,9 +694,8 @@ final class LakeTable(val root: String, val numBuckets: Int) {
       schemaJson = base.map(b => Model.mergeSchemas(b.schema,
         DataType.fromJson(r.schemaJson).asInstanceOf[StructType]).json).getOrElse(r.schemaJson),
       numBuckets = numBuckets,
-      manifests = base.map(_.manifests).getOrElse(Seq.empty)
-        .map(m => m.copy(buckets = m.buckets -- r.touched))
-        .filter(_.buckets.nonEmpty) :+ myRef,
+      manifests = ManifestRef.replace(base.map(_.manifests).getOrElse(Seq.empty),
+        r.touched, Seq(myRef)),
       committed = base.map(_.committed).getOrElse(Map.empty) + (r.writerId -> r.batchId),
       bucketRows = base.map(_.bucketRows).getOrElse(Map.empty) ++ r.bucketRows,
       metrics = r.metrics,
@@ -752,9 +761,8 @@ final class LakeTable(val root: String, val numBuckets: Int) {
           DataType.fromJson(r.schemaJson).asInstanceOf[StructType]).json)
           .getOrElse(r.schemaJson),
         numBuckets = numBuckets,
-        manifests = cur.map(_.manifests).getOrElse(Seq.empty)
-          .map(m => m.copy(buckets = m.buckets -- r.touched))
-          .filter(_.buckets.nonEmpty) :+ myRef,
+        manifests = ManifestRef.replace(cur.map(_.manifests).getOrElse(Seq.empty),
+          r.touched, Seq(myRef)),
         committed = cur.map(_.committed).getOrElse(Map.empty) + (r.writerId -> r.batchId),
         bucketRows = cur.map(_.bucketRows).getOrElse(Map.empty) ++ r.bucketRows,
         metrics = r.metrics ++ Map("publishedFromStage" -> 1L, "stagedBase" -> r.baseVersion),
@@ -804,20 +812,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
     target.toString
   }
-
-  /** Attach per-bucket key bounds (from a write-side accumulator) to the
-    * bucket's files — every file of the bucket gets the bucket-commit's
-    * union range, which is SOUND for skipping (a file's true range is within
-    * it) and exact in the common one-file-per-bucket-per-commit layout.
-    */
-  def attachStats(files: Map[Int, Seq[FileEntry]],
-      ranges: Map[Int, FileStats]): Map[Int, Seq[FileEntry]] =
-    files.map { case (b, fs) =>
-      b -> (ranges.get(b) match {
-        case Some(st) => fs.map(_.copy(stats = Some(st)))
-        case None => fs
-      })
-    }
 
   /** Manifests are immutable once published, so a driver-side cache makes
     * re-resolution (once per micro-batch on a streaming driver) free. Bounded
@@ -940,19 +934,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
   def attemptDir(version: Long, writerId: String, batchId: Long): Path =
     dataDir.resolve(
       s"c$version-$writerId-$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  def listBucketFiles(dir: Path): Map[Int, Seq[FileEntry]] = {
-    if (!Files.isDirectory(dir)) return Map.empty
-    LakeTable.listing(Files.list(dir)) {
-      _.filter(_.getFileName.toString.startsWith("bucket=")).toSeq
-    }.map { bdir =>
-      val b = bdir.getFileName.toString.stripPrefix("bucket=").toInt
-      val fs = LakeTable.listing(Files.list(bdir)) {
-        _.filter(_.toString.endsWith(".parquet")).toSeq
-      }.sortBy(_.toString).map(p => FileEntry(p.toString, Files.size(p)))
-      b -> fs
-    }.toMap
-  }
 
   /** Read the table rows (including tombstones) at the current snapshot,
     * optionally restricted to a set of buckets (file pruning — the physical
@@ -1296,21 +1277,11 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     deleted
   }
 
-  /** Sum parquet footer row counts — no Spark job, no data read. Footer
-    * opens are parallelized: they are driver-side serial time otherwise,
-    * which caps strong scaling (Amdahl) once the distributed phases shrink.
-    */
-  def footerRowCount(files: Seq[String]): Long = {
-    import org.apache.hadoop.conf.Configuration
-    import scala.collection.parallel.CollectionConverters._
-    val conf = new Configuration()
-    files.par.map(footerCount(_, conf)).sum
-  }
-
-  /** Per-bucket footer row counts in ONE parallel pass sharing ONE Hadoop
-    * Configuration. Building a Configuration per bucket (XML resource load,
-    * ~20 ms) made commit metadata cost O(buckets × 20 ms) of driver serial
-    * time per micro-batch — measured ~0.6 s of the ~3 s tail batch.
+  /** Per-bucket parquet footer row counts in one parallel pass sharing one
+    * Hadoop Configuration. No write path calls this: every commit takes its
+    * row counts from its tasks' [[WrittenFile]]s. It stays as an oracle
+    * independent of the write path — specs check `bucketRows` against the
+    * files' own footers.
     */
   def footerRowCounts(byBucket: Map[Int, Seq[FileEntry]]): Map[Int, Long] = {
     import org.apache.hadoop.conf.Configuration

@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
 
 /** Per-file key stats in the manifest (Iceberg's column bounds + a conv_id
-  * bloom filter, for the table's key columns): written by the hot apply
-  * paths from their existing accumulators — zero added I/O — and used by the
+  * bloom filter, for the table's key columns): tracked by every write
+  * path's task writer — zero added I/O — and used by the
   * key-addressed lookups to open only the files that can hold the key.
   * The physical proofs DELETE the skippable files from disk: a lookup that
   * still answers exactly cannot have opened them. The bloom cases pin the
@@ -331,5 +331,38 @@ class FileStatsSpec extends SparkSpecBase {
     entries.filter(!_.stats.get.mightContainConv("a1"))
       .foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(f.path)))
     assert(t.lookupTurn(spark, "a1", 2).collect().map(_.getAs[String]("text")).toSeq == Seq("a1-t2"))
+  }
+  test("SQL row-level ops: the carried-over tombstones' delta files carry stats") {
+    val base = tmpDir("fs-rlo-tomb")
+    val t = new LakeTable(s"$base/convs", numBuckets = 2)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("k", 6, 0)).toDF(), "w", 0L)
+    val deletes = (0 until 6).filter(_ % 2 == 0).flatMap(i => Seq(1, 3).map(turn =>
+      ev(s"k$i", turn, null, "2025-01-01 11:00:00", 100L + i * 4 + turn, op = Model.OpDelete)))
+    MergeApplier.applyBatch(spark, t, spark.createDataset(deletes).toDF(), "w", 1L)
+    spark.conf.set("spark.sql.catalog.fsrlo", classOf[graft.table.LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.fsrlo.base", base)
+    spark.sql("UPDATE fsrlo.convs SET role = 'assistant'") // replaces every bucket
+    val snap = t.currentSnapshot().get
+    val files = t.resolveFiles(snap)
+    val carried = files.map { case (b, fs) => b -> fs.filter(_.path.contains("/tombstones/")) }
+      .filter(_._2.nonEmpty)
+    val byBucket = deletes.groupBy(e => t.bucketFor(e.conv_id, e.turn_idx))
+    assert(carried.keySet == byBucket.keySet, s"tombstone-carry files: $carried")
+    carried.foreach { case (b, fs) =>
+      fs.foreach { f =>
+        val st = f.stats.getOrElse(fail(s"bucket $b tombstone-carry entry has no stats: $f"))
+        val evs = byBucket(b)
+        assert(bounds(st) == ((evs.map(_.conv_id).min, evs.map(_.conv_id).max,
+          evs.map(_.turn_idx).min, evs.map(_.turn_idx).max)), st.toString)
+        assert(st.bloom.nonEmpty && evs.forall(e => st.mightContainConv(e.conv_id)))
+      }
+      // the commit's row count for the bucket is the replacement file's rows
+      // plus exactly the carried tombstones (parquet footers as the oracle)
+      val footers = t.footerRowCounts(Map(b -> fs))
+      val rest = t.footerRowCounts(Map(b -> files(b).filterNot(fs.contains)))
+      assert(footers(b) == byBucket(b).size.toLong)
+      assert(snap.bucketRows(b) - rest.getOrElse(b, 0L) == footers(b))
+    }
+    assert(snap.bucketRows == t.footerRowCounts(files))
   }
 }

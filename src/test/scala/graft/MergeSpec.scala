@@ -3,7 +3,7 @@ package graft
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.MergeApplier
-import graft.table.LakeTable
+import graft.table.{BucketFileWriter, LakeTable}
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -269,11 +269,11 @@ class MergeSpec extends SparkSpecBase {
       val version = table.currentSnapshot().map(_.version)
       val state = if (version.isEmpty) Map.empty else finalState(table)
       val filesBefore = dataFiles()
-      MergeApplier.afterBucketFileOpen =
+      BucketFileWriter.afterBucketFileOpen =
         b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
       val e = try intercept[Exception] {
         MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
-      } finally MergeApplier.afterBucketFileOpen = _ => ()
+      } finally BucketFileWriter.afterBucketFileOpen = _ => ()
       assert(e.getMessage.contains("injected failure"), e.getMessage)
       assert(table.currentSnapshot().map(_.version) == version)
       if (version.nonEmpty) assert(finalState(table) == state)
@@ -284,41 +284,95 @@ class MergeSpec extends SparkSpecBase {
       assert(!r.skipped && r.touchedBuckets > 0)
     }
     assert(finalState(table) == oracle)
+
+    // compaction (hash and spill, full and selective) and rebucket write
+    // through the same task writer: each pass fails once in the victim
+    // bucket's task right after it opened its file, then re-runs
+    def failingOnce[T](t: LakeTable, victim: Int)(pass: => T): T = {
+      val version = t.currentSnapshot().map(_.version)
+      val state = finalState(t)
+      val filesBefore = dataFiles()
+      BucketFileWriter.afterBucketFileOpen =
+        b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
+      val e = try intercept[Exception](pass) finally BucketFileWriter.afterBucketFileOpen = _ => ()
+      assert(e.getMessage.contains("injected failure"), e.getMessage)
+      assert(t.currentSnapshot().map(_.version) == version)
+      assert(finalState(t) == state)
+      val left = dataFiles() -- filesBefore
+      assert(!left.exists(_.contains(s"/bucket=$victim/")),
+        s"the failed task's file (bucket $victim) was left behind: $left")
+      pass
+    }
+    val more = Generator.events(spark, 3200, numConvs = 20, turnsPerConv = 6, seed = 57,
+      baseTs = "2025-02-01 00:00:00").as[ChangeEvent].collect().toSeq.sortBy(_.seq)
+    val passes: Seq[(String, Boolean, Int => Long)] = Seq(
+      ("full hash", false, _ => MergeApplier.compactRetainTombstones(spark, table)),
+      ("full spill", true, _ => MergeApplier.compactRetainTombstones(spark, table)),
+      ("selective hash", false,
+        v => MergeApplier.compactBucketsRetainTombstones(spark, table, Set(v))),
+      ("selective spill", true,
+        v => MergeApplier.compactBucketsRetainTombstones(spark, table, Set(v))))
+    more.grouped(800).toSeq.zip(passes).zipWithIndex.foreach {
+      case ((chunk, (name, spill, pass)), i) =>
+        // a MOR delta per pass, so every pass folds deltas into its rewrite
+        MergeApplier.applyBatchMor(spark, table, spark.createDataset(chunk).toDF(), "m", i.toLong)
+        val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
+        table.spillFoldBytes = if (spill) 0L else 2L << 30
+        try assert(failingOnce(table, victim)(pass(victim)) > 0L, name)
+        finally table.spillFoldBytes = 2L << 30
+        val want = Generator.oracleFold(all ++ more.take((i + 1) * 800))
+          .map { case (k, e) => k -> ((e.text, e.seq)) }
+        assert(finalState(table) == want, name)
+    }
+    val oracleAll = Generator.oracleFold(all ++ more).map { case (k, e) => k -> ((e.text, e.seq)) }
+    val victim8 = new LakeTable(table.root, numBuckets = 8)
+      .bucketFor(more.head.conv_id, more.head.turn_idx)
+    val resized = failingOnce(table, victim8)(MergeApplier.rebucket(spark, table, 8))
+    assert(resized.currentSnapshot().get.numBuckets == 8)
+    assert(finalState(resized) == oracleAll)
+  }
+
+  /** Per stage of the jobs `body` runs: the (bytes, records) its tasks
+    * reported as output.
+    */
+  private def stageOutput[T](group: String)(body: => T): (T, Seq[(Long, Long)]) = {
+    import org.apache.spark.scheduler._
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val out = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          e.stageIds.foreach(stages.add(_)); jobs.add(e.jobId)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) ended.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics.outputMetrics
+        out.put(e.stageInfo.stageId, (m.bytesWritten, m.recordsWritten))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result = try {
+      spark.sparkContext.setJobGroup(group, group)
+      val r = try body finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((jobs.isEmpty || ended.get < jobs.size) && System.nanoTime() < deadline) Thread.sleep(20)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (result, stages.asScala.toSeq.flatMap(id => Option(out.get(id))))
   }
 
   test("the apply job reports output bytes and rows equal to what the commit references") {
-    import org.apache.spark.scheduler._
     val table = new LakeTable(tmpDir("merge-outmetrics"), numBuckets = 4)
     val all = Generator.events(spark, 3000, numConvs = 15, turnsPerConv = 6, seed = 61)
       .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
     all.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
-      val group = s"merge-outmetrics-$i"
-      val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      val ended = new java.util.concurrent.atomic.AtomicInteger()
-      val out = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-            e.stageIds.foreach(stages.add(_)); jobs.add(e.jobId)
-          }
-        override def onJobEnd(e: SparkListenerJobEnd): Unit =
-          if (jobs.contains(e.jobId)) ended.incrementAndGet()
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics.outputMetrics
-          out.put(e.stageInfo.stageId, (m.bytesWritten, m.recordsWritten))
-        }
+      val (_, reported) = stageOutput(s"merge-outmetrics-$i") {
+        MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(group, group)
-        try MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
-        finally spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while ((jobs.isEmpty || ended.get < jobs.size) && System.nanoTime() < deadline) Thread.sleep(20)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val reported = stages.asScala.toSeq.flatMap(id => Option(out.get(id)))
       val snap = table.currentSnapshot().get
       val files = table.readManifest(snap.manifests.last.path).values.flatten.toSeq
       assert(files.nonEmpty && reported.map(_._1).sum == files.map(_.bytes).sum,
@@ -326,5 +380,25 @@ class MergeSpec extends SparkSpecBase {
       val touched = table.readManifest(snap.manifests.last.path).keySet
       assert(reported.map(_._2).sum == touched.toSeq.map(snap.bucketRows).sum)
     }
+    // compaction and rebucket write through the same task writer: the one
+    // manifest their commit leaves holds exactly what the job reported
+    def referencesReported(name: String, t: LakeTable, reported: Seq[(Long, Long)]): Unit = {
+      val snap = t.currentSnapshot().get
+      assert(snap.manifests.size == 1, name)
+      val written = t.readManifest(snap.manifests.head.path)
+      val files = written.values.flatten.toSeq
+      assert(files.nonEmpty && reported.map(_._1).sum == files.map(_.bytes).sum,
+        s"$name: stage output bytes $reported vs manifest ${files.map(_.bytes)}")
+      assert(reported.map(_._2).sum == written.keySet.toSeq.map(snap.bucketRows).sum, name)
+      assert(snap.bucketRows == t.footerRowCounts(written), name)
+    }
+    val (_, compacted) = stageOutput("merge-outmetrics-compact") {
+      MergeApplier.compactRetainTombstones(spark, table)
+    }
+    referencesReported("compact", table, compacted)
+    val (resized, rebucketed) = stageOutput("merge-outmetrics-rebucket") {
+      MergeApplier.rebucket(spark, table, 8)
+    }
+    referencesReported("rebucket", resized, rebucketed)
   }
 }

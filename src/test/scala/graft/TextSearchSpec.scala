@@ -12,7 +12,7 @@ import java.sql.Timestamp
   * `LakeTable.searchText` answers exact-token queries reading only the
   * buckets/files that can hold the token. Also pins the new compaction
   * FileStats (compacted files were previously stat-less) and their
-  * accumulator-derived row counts.
+  * task-reported row counts.
   */
 class TextSearchSpec extends SparkSpecBase {
   import Model.changeEventEncoder
@@ -44,7 +44,7 @@ class TextSearchSpec extends SparkSpecBase {
       s"every compacted file must carry a token bloom: $entries")
     // compaction stats also close the old stat-less gap: bounds + conv bloom
     assert(entries.forall(_.stats.exists(_.bloom.nonEmpty)))
-    // accumulator row counts match the physical files exactly
+    // task-reported row counts match the physical files exactly
     val snap = t.currentSnapshot().get
     assert(snap.bucketRows == t.footerRowCounts(t.resolveFiles(snap)))
 
