@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{BucketFileWriter, LakeTable, ManifestRef, Snapshot, WrittenFile}
+import graft.table.{BucketFileWriter, CommitBuilder, CommitConflictException, LakeTable, Ledger, ManifestRef, Snapshot, StagedRef, TableChange, WrittenFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -95,28 +95,18 @@ object MergeApplier {
   private def deleteDir(p: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
 
-  /** Test seam: runs once per apply/compact ATTEMPT, after the data files are
-    * staged but before the first CAS try — i.e. inside the race window.
-    * Specs inject a concurrent winner here to exercise every conflict path
-    * deterministically (rebase, re-run, split-brain skip, compaction yield);
-    * the thread-race stress test covers the same paths nondeterministically.
-    * Args: (writerId, batchId). No-op in production.
+  /** Normalize an incoming changelog batch to the base snapshot's schema
+    * merged with its own (additive evolution; the commit merges the head's).
     */
-  private[graft] var beforePublish: (String, Long) => Unit = (_, _) => ()
-
-  /** Normalize an incoming changelog batch to the merged (evolved) schema. */
-  private def evolve(table: LakeTable, batch: DataFrame): (DataFrame, StructType) = {
-    val current = table.currentSnapshot().map(_.schema)
-      .getOrElse(StructType(Seq.empty))
-    val merged = if (current.isEmpty) batch.schema
-      else Model.mergeSchemas(current, batch.schema)
+  private def evolve(snap: Option[Snapshot], batch: DataFrame): (DataFrame, StructType) = {
+    val merged = snap.fold(batch.schema)(s => Model.mergeSchemas(s.schema, batch.schema))
     (Model.alignToSchema(batch, merged), merged)
   }
 
   /** Copy-on-write apply with OPTIMISTIC CONCURRENCY (Iceberg's multi-writer
     * contract, from scratch): the merge folds against a base snapshot; the
     * commit is a CAS on the snapshot version. A lost CAS is resolved by
-    * [[cowAttempt]]'s conflict rule — rebase the metadata when the winner
+    * [[CommitBuilder.RebaseIfUnchanged]] — rebase the metadata when the winner
     * left our touched buckets alone (disjoint writers, the common sharded-
     * ingest case: pure O(1) driver-side retry, no recompute), re-run the
     * whole merge when it rewrote or delta-appended any of them (our in-task
@@ -162,11 +152,8 @@ object MergeApplier {
   def stageBatch(spark: SparkSession, table: LakeTable, batch: DataFrame,
       writerId: String, batchId: Long): Option[String] = {
     val name = s"$writerId-$batchId"
-    cowAttempt(spark, table, batch, writerId, batchId, stageName = Some(name)) match {
-      case Some(r) if r.skipped || (r.batchRows == 0 && r.touchedBuckets == 0) => None
-      case Some(_) => Some(name)
-      case None => None // unreachable: staging never enters the publish race
-    }
+    cowAttempt(spark, table, batch, writerId, batchId, stageName = Some(name))
+      .filter(r => !r.skipped && r.touchedBuckets > 0).map(_ => name)
   }
 
   private def cowAttempt(spark: SparkSession, table: LakeTable, batch: DataFrame,
@@ -174,21 +161,14 @@ object MergeApplier {
       stageName: Option[String] = None): Option[ApplyResult] = {
     val t0 = System.nanoTime()
     val snap = table.currentSnapshot()
-    val ledger = snap.map(_.maxBatchId(writerId)).getOrElse(-1L)
-    if (batchId <= ledger) {
+    if (snap.exists(_.maxBatchId(writerId) >= batchId)) {
       // Exactly-once: this batch already landed in a published snapshot
       // (the streaming checkpoint replayed it after a crash). No-op.
       return Some(ApplyResult(skipped = true, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
     }
 
-    snap.foreach { s =>
-      // The bucket function is part of the table's physical identity: pruning
-      // and file layout both derive from it. A handle opened with a different
-      // bucket count would silently mis-prune — fail loudly instead.
-      require(s.numBuckets == table.numBuckets,
-        s"table has ${s.numBuckets} buckets; handle opened with ${table.numBuckets}")
-    }
-    val (aligned, mergedSchema) = evolve(table, batch)
+    snap.foreach(table.checkBuckets)
+    val (aligned, mergedSchema) = evolve(snap, batch)
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
 
@@ -235,11 +215,9 @@ object MergeApplier {
     // written bucket set IS the touched set. Cold start reports what it
     // wrote (winners, tombstones); the hot path its raw batch rows.
     val written = WrittenFile.byBucket(merged.map(_.file).toSeq)
-    val newBucketFiles = written.files
-    val newRows = written.rows
     val touchedCount = merged.length
     val (batchRows, nDeletes) =
-      if (snap.isEmpty) (newRows.values.sum, written.tombstones.values.sum)
+      if (snap.isEmpty) (written.rows.values.sum, written.tombstones.values.sum)
       else (merged.map(_.batchRows).sum, merged.map(_.batchDeletes).sum)
 
     // Manifest-list commit: ONE new manifest file for the touched buckets;
@@ -248,96 +226,59 @@ object MergeApplier {
     // independent of how many data files the table holds. A COW rewrite of a
     // bucket also masks that bucket's MOR delta refs: the rewrite read and
     // folded them (the bucket-aligned scan reads base + deltas).
-    val mine = newBucketFiles.keySet
-    val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
-      mine, delta = false)
-    val manifests = ManifestRef.replace(snap.map(_.manifests).getOrElse(Seq.empty), mine, Seq(myRef))
-    val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
-
-    def metricsFor(extra: Map[String, Long]) = Map(
-      "batchRows" -> batchRows,
-      "upserts" -> (batchRows - nDeletes),
-      "deletes" -> nDeletes,
-      "touchedBuckets" -> touchedCount.toLong,
-      "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
-      "durationMs" -> (System.nanoTime() - t0) / 1000000) ++
-      // contention lineage: a commit whose merge had to RE-RUN against a
-      // concurrent winner records which attempt landed (rebases record
-      // "rebasedFrom" instead) — makes conflict cost auditable from history()
-      (if (attempt > 1) Map("rerunAttempt" -> attempt.toLong) else Map.empty) ++
-      extra
+    val mine = written.files.keySet
+    val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
+      Seq(ManifestRef(table.writeManifest(version, written.files), mine, delta = false)),
+      replaced = mine, rows = written.rows,
+      metrics = applyMetrics(batchRows, nDeletes, touchedCount, t0, tMeta) ++
+        // contention lineage: a commit whose merge had to RE-RUN against a
+        // concurrent winner records which attempt landed (rebases record
+        // "rebasedFrom" instead) — makes conflict cost auditable from history()
+        (if (attempt > 1) Map("rerunAttempt" -> attempt.toLong) else Map.empty))
+    def landed(version: Long) = ApplyResult(skipped = false, version, batchRows,
+      touchedCount, batchRows - nDeletes, nDeletes)
 
     stageName.foreach { n =>
       // WRITE of write-audit-publish: the full merge ran and its files +
       // manifest exist, but nothing is published — readers see the old head
       // until LakeTable.publishStaged CASes the staged ref in (O(metadata))
       // after LakeTable.readStaged's audit passes
-      table.writeStaged(graft.table.StagedRef(n, snap.map(_.version).getOrElse(0L),
-        mine, myRef.path, newRows, writerId, batchId, mergedSchema.json,
-        metricsFor(Map.empty)))
-      return Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L),
-        batchRows, touchedCount, batchRows - nDeletes, nDeletes))
+      table.writeStaged(StagedRef(n, snap.map(_.version).getOrElse(0L), change))
+      return Some(landed(snap.map(_.version).getOrElse(0L)))
     }
-    var cand = Snapshot(
-      version = version,
-      schemaJson = mergedSchema.json,
-      numBuckets = table.numBuckets,
-      manifests = manifests,
-      committed = snap.map(_.committed).getOrElse(Map.empty) + (writerId -> batchId),
-      bucketRows = prevRows ++ newRows,
-      metrics = metricsFor(Map.empty),
-      parentVersion = snap.map(_.version).getOrElse(0L),
-      // a COW merge folds deltas only in the buckets it TOUCHED; untouched
-      // buckets may still hold MOR deltas, so the flag clears only at compact
-      morDeltas = snap.exists(_.morDeltas))
-
     // Optimistic publish. On a lost CAS: a concurrent commit that left OUR
     // buckets' resolved file lists exactly as the base snapshot had them
     // cannot have folded or superseded any row we merged — rebase is pure
-    // metadata (mask our buckets out of the winner's manifest list, append
-    // our ref, merge ledger/lineage/schema) and costs no recompute. Any
-    // change to our buckets (COW rewrite, MOR delta, compaction, resize)
-    // means our in-task fold is stale: drop the attempt's files and re-run
-    // the merge (None → applyBatch loops).
-    beforePublish(writerId, batchId)
-    while (true) {
-      try {
-        table.commit(cand)
-        return Some(ApplyResult(skipped = false, cand.version, batchRows,
-          touchedCount, batchRows - nDeletes, nDeletes))
-      } catch {
-        case _: graft.table.CommitConflictException =>
-          val cur = table.currentSnapshot().getOrElse(
-            throw new IllegalStateException("commit conflict on an empty table"))
-          if (cur.maxBatchId(writerId) >= batchId) {
-            // split brain: another instance of this writer already landed the
-            // batch — exactly-once holds, our attempt is redundant
-            deleteDir(outDir)
-            return Some(ApplyResult(skipped = true, cur.version, 0, 0, 0, 0))
-          }
-          require(cur.numBuckets == table.numBuckets,
-            s"table was rebucketed to ${cur.numBuckets} buckets mid-apply " +
-              s"(handle opened with ${table.numBuckets})")
-          val baseFiles = snap.map(s => table.resolveFiles(s, Some(mine)))
-            .getOrElse(Map.empty[Int, Seq[graft.table.FileEntry]])
-          if (table.resolveFiles(cur, Some(mine)) != baseFiles) {
-            deleteDir(outDir)
-            return None
-          }
-          cand = Snapshot(
-            version = cur.version + 1,
-            schemaJson = Model.mergeSchemas(cur.schema, mergedSchema).json,
-            numBuckets = table.numBuckets,
-            manifests = ManifestRef.replace(cur.manifests, mine, Seq(myRef)),
-            committed = cur.committed + (writerId -> batchId),
-            bucketRows = cur.bucketRows ++ newRows,
-            metrics = metricsFor(Map("rebasedFrom" -> version)),
-            parentVersion = cur.version,
-            morDeltas = cur.morDeltas)
-      }
-    }
-    None // unreachable
+    // metadata. Any change to our buckets (COW rewrite, MOR delta,
+    // compaction, resize) means our in-task fold is stale: drop the
+    // attempt's files and re-run the merge (None → applyBatch loops).
+    publish(table, snap, change, CommitBuilder.RebaseIfUnchanged(mine), outDir, landed)
   }
+
+  private def applyMetrics(batchRows: Long, nDeletes: Long, touched: Int,
+      t0: Long, tMeta: Long): Map[String, Long] = Map(
+    "batchRows" -> batchRows,
+    "upserts" -> (batchRows - nDeletes),
+    "deletes" -> nDeletes,
+    "touchedBuckets" -> touched.toLong,
+    "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
+    "durationMs" -> (System.nanoTime() - t0) / 1000000)
+
+  /** Commit an apply's change; None when it went stale (the merge re-runs). */
+  private def publish(table: LakeTable, snap: Option[Snapshot],
+      change: TableChange, onConflict: CommitBuilder.OnConflict,
+      outDir: java.nio.file.Path, landed: Long => ApplyResult): Option[ApplyResult] =
+    CommitBuilder.commit(table, snap, change, onConflict) match {
+      case CommitBuilder.Committed(s) => Some(landed(s.version))
+      case CommitBuilder.AlreadyApplied(head) =>
+        // split brain: another instance of this writer already landed the
+        // batch — exactly-once holds, our attempt is redundant
+        deleteDir(outDir)
+        Some(ApplyResult(skipped = true, head.version, 0, 0, 0, 0))
+      case CommitBuilder.Stale(_) =>
+        deleteDir(outDir)
+        None
+    }
 
   /** Merge-on-read apply: append the batch's events as DELTA files to each
     * touched bucket — NO target read, NO rewrite, NO aggregation (the LSM
@@ -359,11 +300,8 @@ object MergeApplier {
     if (batchId <= snap.map(_.maxBatchId(writerId)).getOrElse(-1L)) {
       return ApplyResult(skipped = true, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
     }
-    snap.foreach { s =>
-      require(s.numBuckets == table.numBuckets,
-        s"table has ${s.numBuckets} buckets; handle opened with ${table.numBuckets}")
-    }
-    val (aligned, mergedSchema) = evolve(table, batch)
+    snap.foreach(table.checkBuckets)
+    val (aligned, mergedSchema) = evolve(snap, batch)
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
     // Each task appends its partition (= bucket, the alignment invariant) as
@@ -382,34 +320,15 @@ object MergeApplier {
     val nDeletes = written.tombstones.values.sum
     val tMeta = System.nanoTime()
     val newBucketFiles = written.files
-    val myRef = ManifestRef(table.writeManifest(version, newBucketFiles),
-      newBucketFiles.keySet, delta = true)
-    val prevRows = snap.map(_.bucketRows).getOrElse(Map.empty)
-    // bucketRows counts STORED rows (incl. superseded versions until
-    // compact), straight from the tasks' results
-    val newRows = written.rows
-    def rowsOn(base: Map[Int, Long]) = (base.keySet ++ newBucketFiles.keySet).map { b =>
-      b -> (base.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))
-    }.toMap
-    def metricsFor(extra: Map[String, Long]) = Map(
-      "batchRows" -> batchRows,
-      "upserts" -> (batchRows - nDeletes),
-      "deletes" -> nDeletes,
-      "touchedBuckets" -> newBucketFiles.size.toLong,
-      "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
-      "durationMs" -> (System.nanoTime() - t0) / 1000000) ++ extra
     // Delta commit: append ONE delta manifest ref; no prior ref is touched.
     // Readers concatenate base + deltas per bucket in manifest-list order.
-    var cand = Snapshot(
-      version = version,
-      schemaJson = mergedSchema.json,
-      numBuckets = table.numBuckets,
-      manifests = snap.map(_.manifests).getOrElse(Seq.empty) :+ myRef,
-      committed = snap.map(_.committed).getOrElse(Map.empty) + (writerId -> batchId),
-      bucketRows = rowsOn(prevRows),
-      metrics = metricsFor(Map.empty),
-      parentVersion = snap.map(_.version).getOrElse(0L),
-      morDeltas = true)
+    // bucketRows counts STORED rows (incl. superseded versions until
+    // compact), straight from the tasks' results.
+    val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
+      Seq(ManifestRef(table.writeManifest(version, newBucketFiles),
+        newBucketFiles.keySet, delta = true)),
+      replaced = Set.empty, rows = written.rows,
+      metrics = applyMetrics(batchRows, nDeletes, newBucketFiles.size, t0, tMeta))
     // Optimistic publish. A MOR delta is a pure append of not-yet-seen rows,
     // and the LWW fold is associative and order-independent — appending our
     // ref AFTER any concurrent commit (COW rewrite, another delta, a
@@ -419,36 +338,8 @@ object MergeApplier {
     // tombstone our delta's late stale insert would have lost to; the
     // watermark contract — no in-flight source older than the watermark —
     // already forbids that input, exactly as in the sequential schedule.)
-    beforePublish(writerId, batchId)
-    while (true) {
-      try {
-        table.commit(cand)
-        return ApplyResult(skipped = false, cand.version, batchRows,
-          newBucketFiles.size, batchRows - nDeletes, nDeletes)
-      } catch {
-        case _: graft.table.CommitConflictException =>
-          val cur = table.currentSnapshot().getOrElse(
-            throw new IllegalStateException("commit conflict on an empty table"))
-          if (cur.maxBatchId(writerId) >= batchId) {
-            deleteDir(outDir) // split brain: the batch already landed once
-            return ApplyResult(skipped = true, cur.version, 0, 0, 0, 0)
-          }
-          require(cur.numBuckets == table.numBuckets,
-            s"table was rebucketed to ${cur.numBuckets} buckets mid-apply " +
-              s"(handle opened with ${table.numBuckets})")
-          cand = Snapshot(
-            version = cur.version + 1,
-            schemaJson = Model.mergeSchemas(cur.schema, mergedSchema).json,
-            numBuckets = table.numBuckets,
-            manifests = cur.manifests :+ myRef,
-            committed = cur.committed + (writerId -> batchId),
-            bucketRows = rowsOn(cur.bucketRows),
-            metrics = metricsFor(Map("rebasedFrom" -> version)),
-            parentVersion = cur.version,
-            morDeltas = true)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    publish(table, snap, change, CommitBuilder.Rebase, outDir, v => ApplyResult(
+      skipped = false, v, batchRows, newBucketFiles.size, batchRows - nDeletes, nDeletes)).get
   }
 
   /** Cold start (§3.1): single-pass full replay — read the whole changelog,
@@ -515,14 +406,10 @@ object MergeApplier {
     require(newNumBuckets > 0, s"invalid bucket count $newNumBuckets")
     val snap = table.currentSnapshot().getOrElse(
       throw new IllegalStateException("empty table cannot be rebucketed"))
-    require(snap.numBuckets == table.numBuckets,
-      s"table has ${snap.numBuckets} buckets; handle opened with ${table.numBuckets}")
+    table.checkBuckets(snap)
     val resized = new LakeTable(table.root, newNumBuckets)
     if (newNumBuckets == snap.numBuckets) return resized
     val version = snap.version + 1
-    // a concurrent commit during the rewrite makes the CAS below throw
-    // CommitConflictException — resizing under live writers is the caller's
-    // coordination decision, so it propagates rather than silently retrying
     val outDir = table.attemptDir(version, "rebucket", snap.version)
     // fold deltas first if present (the rewrite must land key-unique rows);
     // COW state reads raw — tombstones included on both paths
@@ -539,19 +426,19 @@ object MergeApplier {
       .mapPartitions(it => BucketLocal.keyOrdered(it, copyRows = true, convI, turnI))
     val written = WrittenFile.byBucket(BucketFileWriter.writeAll(rows,
       WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString))
-    val newFiles = written.files
-    resized.commit(Snapshot(
-      version = version,
-      schemaJson = snap.schemaJson,
-      numBuckets = newNumBuckets,
-      manifests = Seq(ManifestRef(resized.writeManifest(version, newFiles),
-        newFiles.keySet, delta = false)),
-      committed = snap.committed,
-      bucketRows = written.rows,
+    val change = TableChange(Ledger.Untracked("rebucket", snap.version), snap.schemaJson,
+      Seq(ManifestRef(table.writeManifest(version, written.files), written.files.keySet,
+        delta = false)),
+      replaced = (0 until snap.numBuckets).toSet, rows = written.rows,
       metrics = Map("rebucketedFrom" -> snap.numBuckets.toLong),
-      parentVersion = snap.version,
-      morDeltas = false))
-    resized
+      numBuckets = Some(newNumBuckets))
+    // a concurrent commit during the rewrite fails it — resizing under live
+    // writers is the caller's coordination decision, so it propagates rather
+    // than silently retrying
+    CommitBuilder.commit(table, Some(snap), change, CommitBuilder.Never) match {
+      case _: CommitBuilder.Committed => resized
+      case _ => throw new CommitConflictException(version)
+    }
   }
 
   private def compactMicros(spark: SparkSession, table: LakeTable,
@@ -570,8 +457,7 @@ object MergeApplier {
       // Same physical-identity guard as the apply paths: a handle opened with a
       // different bucket count would silently REBUCKET the table here (the
       // bucket column derives from the handle, not the snapshot).
-      require(snap.numBuckets == table.numBuckets,
-        s"table has ${snap.numBuckets} buckets; handle opened with ${table.numBuckets}")
+      table.checkBuckets(snap)
       // Bucket-local compaction: fold + expire inside each bucket's own task —
       // ZERO shuffles; compaction cost is exactly read + write (BucketLocal).
       // With `targets`, read + write only THOSE buckets (the others' tasks
@@ -595,46 +481,29 @@ object MergeApplier {
       val written = WrittenFile.byBucket(BucketFileWriter.writeAll(
         BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel),
         WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString, textIndex))
-      val newFiles = written.files
       val rows = written.rows
-      beforePublish("compact", snap.version)
-      try {
-        val cand = sel match {
-          case None =>
-            // Full compaction resets the manifest list to a single full
-            // manifest — the bound on manifest-list growth (one delta ref
-            // per MOR commit between compactions).
-            // A FULL compaction knows the whole table's retained tombstone
-            // count exactly (every live file was rewritten through the
-            // stats pass) — recorded so metadata-only COUNT(*) pushdown can
-            // answer live-row counts without touching a data file. Partial
-            // passes can't know the un-rewritten buckets' tombstones, so
-            // they don't record it (absent = unknown = no pushdown).
-            Snapshot(version, snap.schemaJson, table.numBuckets,
-              Seq(ManifestRef(table.writeManifest(version, newFiles),
-                newFiles.keySet, delta = false)),
-              snap.committed, rows,
-              Map("compactedRows" -> rows.values.sum,
-                "tombstoneRows" -> written.tombstones.values.sum), snap.version,
-              morDeltas = false)
-          case Some(t) =>
-            // Partial: mask the targets out of every prior ref, append one
-            // non-delta ref claiming them (a target whose rows all expired
-            // simply ends up claimed-with-no-files = empty). Other buckets'
-            // files and the ledger are untouched; morDeltas reflects
-            // whatever deltas REMAIN on the un-compacted buckets.
-            val manifests = ManifestRef.replace(snap.manifests, t,
-              Seq(ManifestRef(table.writeManifest(version, newFiles), t, delta = false)))
-            Snapshot(version, snap.schemaJson, table.numBuckets, manifests,
-              snap.committed, (snap.bucketRows -- t) ++ rows,
-              Map("compactedRows" -> rows.values.sum,
-                "compactedBuckets" -> t.size.toLong), snap.version,
-              morDeltas = manifests.exists(_.delta))
-        }
-        table.commit(cand)
-        return rows.values.sum
-      } catch {
-        case _: graft.table.CommitConflictException => deleteDir(outDir)
+      // Full compaction replaces every bucket, resetting the manifest list
+      // to a single full manifest — the bound on manifest-list growth (one
+      // delta ref per MOR commit between compactions). It also knows the
+      // whole table's retained tombstone count exactly (every live file was
+      // rewritten through the stats pass) — recorded so metadata-only
+      // COUNT(*) pushdown can answer live-row counts without touching a data
+      // file. A partial pass masks the targets out of every prior ref and
+      // appends one non-delta ref claiming them (a target whose rows all
+      // expired ends up claimed-with-no-files = empty); it can't know the
+      // other buckets' tombstones, so it doesn't record them (absent =
+      // unknown = no pushdown).
+      val change = TableChange(Ledger.Untracked("compact", snap.version), snap.schemaJson,
+        Seq(ManifestRef(table.writeManifest(version, written.files),
+          sel.getOrElse(written.files.keySet), delta = false)),
+        replaced = sel.getOrElse((0 until table.numBuckets).toSet), rows = rows,
+        metrics = Map("compactedRows" -> rows.values.sum) ++ (sel match {
+          case None => Map("tombstoneRows" -> written.tombstones.values.sum)
+          case Some(t) => Map("compactedBuckets" -> t.size.toLong)
+        }))
+      CommitBuilder.commit(table, Some(snap), change, CommitBuilder.Never) match {
+        case _: CommitBuilder.Committed => return rows.values.sum
+        case _ => deleteDir(outDir)
       }
     }
     -1L

@@ -126,19 +126,16 @@ private final class LakeReplaceDataWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val written = WrittenFile.byBucket(
-      messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files))
-    val newFiles = written.files
-    val newRows = written.rows
+    val mine = messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files)
+    val newFiles = WrittenFile.byBucket(mine).files
     // the groups this output REPLACES = what the target scan actually read
     // (a never-planned scan means Spark read nothing — replace nothing)
     val replaced: Set[Int] = op.scannedBuckets.getOrElse(Set.empty)
-    val baseFiles = newFiles.filter { case (b, _) => replaced.contains(b) }
-    val deltaFiles = newFiles.filter { case (b, _) => !replaced.contains(b) }
+    val (baseFiles, deltaFiles) = newFiles.partition { case (b, _) => replaced(b) }
 
     // preserve the replaced buckets' CDC tombstones as a delta (see class
     // doc): bucket i's task scans bucket i's files and writes its tombstones
-    val tombs = WrittenFile.byBucket(
+    val tombs =
       if (replaced.isEmpty) Seq.empty
       else {
         val opI = snap.schema.fieldIndex("op")
@@ -149,70 +146,41 @@ private final class LakeReplaceDataWrite(
             .filter(r => !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)),
           WriteBridge.parquetWriterFactory(spark, snap.schema),
           outDir.resolve("tombstones").toString)
-      })
-    val tombFiles = tombs.files
+      }
+    val tombFiles = WrittenFile.byBucket(tombs).files
 
     if (replaced.isEmpty && newFiles.isEmpty) return // no groups, no rows: no-op
 
     val touched = replaced ++ deltaFiles.keySet
-    def refsFor(version: Long): Seq[ManifestRef] = {
-      val base = if (baseFiles.isEmpty && replaced.isEmpty) Seq.empty
-        else Seq(ManifestRef(table.writeManifest(version, baseFiles), replaced, delta = false))
-      val tomb = if (tombFiles.isEmpty) Seq.empty
-        else Seq(ManifestRef(table.writeManifest(version, tombFiles), tombFiles.keySet, delta = true))
-      val extra = if (deltaFiles.isEmpty) Seq.empty
-        else Seq(ManifestRef(table.writeManifest(version, deltaFiles), deltaFiles.keySet, delta = true))
-      base ++ tomb ++ extra
-    }
-    val writerId = Option(info.options().get("writerId")).getOrElse("sql-rlo")
-
-    def candidate(cur: Snapshot, rebasedFrom: Option[Long]): Snapshot = {
-      val mine = refsFor(cur.version + 1)
-      val manifests = ManifestRef.replace(cur.manifests, replaced, mine)
-      val rows = cur.bucketRows --
-        replaced ++
-        replaced.map(b => b -> (newRows.getOrElse(b, 0L) + tombs.rows.getOrElse(b, 0L))).toMap ++
-        deltaFiles.keySet.map(b => b ->
-          (cur.bucketRows.getOrElse(b, 0L) + newRows.getOrElse(b, 0L))).toMap
-      Snapshot(
-        version = cur.version + 1,
-        schemaJson = cur.schema.json,
-        numBuckets = cur.numBuckets,
-        manifests = manifests,
-        committed = cur.committed + (writerId -> (cur.maxBatchId(writerId) + 1)),
-        bucketRows = rows.filter(_._2 > 0),
-        metrics = Map(
-          "batchRows" -> newRows.values.sum,
-          "touchedBuckets" -> touched.size.toLong,
-          "replacedBuckets" -> replaced.size.toLong,
-          "rowLevelCommand" -> op.command().ordinal().toLong) ++
-          rebasedFrom.map("rebasedFrom" -> _),
-        parentVersion = cur.version,
-        morDeltas = manifests.exists(_.delta))
-    }
-
-    var cand = candidate(snap, None)
-    while (true) {
-      try {
-        table.commit(cand)
-        return
-      } catch {
-        case _: CommitConflictException =>
-          val cur = table.currentSnapshot().getOrElse(
-            throw new IllegalStateException("commit conflict on an empty table"))
-          if (cur.numBuckets != snap.numBuckets ||
-              table.resolveFiles(cur, Some(touched)) != table.resolveFiles(snap, Some(touched))) {
-            // a concurrent commit changed the groups this statement rewrote:
-            // the replacement content is stale and Spark cannot re-run the
-            // rewrite plan from here — clean up and make the user retry
-            abort(messages)
-            throw new java.util.ConcurrentModificationException(
-              s"lake table at ${table.root} changed concurrently in buckets " +
-                s"${touched.toSeq.sorted.mkString("{", ",", "}")} during ${op.command()}; " +
-                "re-run the statement against the new snapshot")
-          }
-          cand = candidate(cur, Some(snap.version + 1))
-      }
+    val change = TableChange(
+      Ledger.Next(Option(info.options().get("writerId")).getOrElse("sql-rlo")),
+      snap.schemaJson,
+      refs = Seq((baseFiles, replaced, false), (tombFiles, tombFiles.keySet, true),
+          (deltaFiles, deltaFiles.keySet, true)).filter(_._2.nonEmpty).map {
+        case (files, buckets, delta) =>
+          ManifestRef(table.writeManifest(snap.version + 1, files), buckets, delta)
+      },
+      replaced = replaced,
+      // a replaced bucket's stored rows = its replacement rows + carried
+      // tombstones; an unscanned bucket's rows are appended
+      rows = WrittenFile.byBucket(mine ++ tombs).rows,
+      metrics = Map(
+        "batchRows" -> mine.map(_.rows).sum,
+        "touchedBuckets" -> touched.size.toLong,
+        "replacedBuckets" -> replaced.size.toLong,
+        "rowLevelCommand" -> op.command().ordinal().toLong))
+    CommitBuilder.commit(table, Some(snap), change,
+        CommitBuilder.RebaseIfUnchanged(touched)) match {
+      case CommitBuilder.Stale(_) =>
+        // a concurrent commit changed the groups this statement rewrote:
+        // the replacement content is stale and Spark cannot re-run the
+        // rewrite plan from here — clean up and make the user retry
+        abort(messages)
+        throw new java.util.ConcurrentModificationException(
+          s"lake table at ${table.root} changed concurrently in buckets " +
+            s"${touched.toSeq.sorted.mkString("{", ",", "}")} during ${op.command()}; " +
+            "re-run the statement against the new snapshot")
+      case _ => () // a Next ledger entry is never already applied
     }
   }
 

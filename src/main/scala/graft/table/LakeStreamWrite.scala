@@ -101,52 +101,26 @@ private[table] final class LakeStreamingWrite(
     val written = WrittenFile.byBucket(
       messages.toSeq.flatMap(_.asInstanceOf[LakeReplaceMessage].files))
     val newFiles = written.files
-    val newRows = written.rows
-    def dropStaged(): Unit = newFiles.values.flatten.foreach { f =>
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path))
-      catch { case _: Exception => () }
-    }
     if (newFiles.isEmpty) return // idle trigger: no orphan version
-    while (true) {
-      val cur = table.currentSnapshot()
-      if (epochId <= cur.map(_.maxBatchId(writerId)).getOrElse(-1L)) {
-        // checkpoint replay after resume: the ledger already carries this
-        // epoch — exactly-once means this attempt's files must die
-        dropStaged()
-        return
-      }
-      cur.foreach { s =>
-        require(s.numBuckets == table.numBuckets,
-          s"table was rebucketed to ${s.numBuckets} buckets mid-stream " +
-            s"(sink opened with ${table.numBuckets}); restart the query")
-      }
-      val version = cur.map(_.version).getOrElse(0L) + 1
-      val myRef = ManifestRef(table.writeManifest(version, newFiles),
-        newFiles.keySet, delta = true)
-      val prevRows = cur.map(_.bucketRows).getOrElse(Map.empty)
-      val cand = Snapshot(
-        version = version,
-        schemaJson = cur.map(s => Model.mergeSchemas(s.schema, fileSchema))
-          .getOrElse(fileSchema).json,
-        numBuckets = table.numBuckets,
-        manifests = cur.map(_.manifests).getOrElse(Seq.empty) :+ myRef,
-        committed = cur.map(_.committed).getOrElse(Map.empty) + (writerId -> epochId),
-        bucketRows = prevRows ++ newRows.map { case (b, n) =>
-          b -> (prevRows.getOrElse(b, 0L) + n) },
-        metrics = Map(
-          "batchRows" -> newRows.values.sum,
-          "touchedBuckets" -> newFiles.size.toLong,
-          "streamEpoch" -> epochId),
-        parentVersion = cur.map(_.version).getOrElse(0L),
-        morDeltas = true)
-      try {
-        table.commit(cand)
-        return
-      } catch {
-        // a delta append commutes with ANY concurrent commit (the LWW fold
-        // is associative): rebase unconditionally off the new head
-        case _: CommitConflictException => ()
-      }
+    val base = table.currentSnapshot()
+    if (epochId <= base.map(_.maxBatchId(writerId)).getOrElse(-1L)) {
+      // checkpoint replay after resume: the ledger already carries this
+      // epoch — exactly-once means this attempt's files must die
+      abort(epochId, messages)
+      return
+    }
+    base.foreach(table.checkBuckets) // rebucketed mid-stream: restart the query
+    val change = TableChange(Ledger.Batch(writerId, epochId), fileSchema.json,
+      Seq(ManifestRef(table.writeManifest(base.map(_.version).getOrElse(0L) + 1, newFiles),
+        newFiles.keySet, delta = true)),
+      replaced = Set.empty, rows = written.rows,
+      metrics = Map(
+        "batchRows" -> written.rows.values.sum,
+        "touchedBuckets" -> newFiles.size.toLong,
+        "streamEpoch" -> epochId))
+    CommitBuilder.commit(table, base, change, CommitBuilder.Rebase) match {
+      case _: CommitBuilder.AlreadyApplied => abort(epochId, messages) // a split-brain twin landed it
+      case _ => ()
     }
   }
 

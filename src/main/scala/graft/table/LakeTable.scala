@@ -205,20 +205,14 @@ final case class FileEntry(path: String, bytes: Long, stats: Option[FileStats] =
   * merge has run and its manifest + data files exist on disk, but no
   * snapshot references them: readers see nothing, [[LakeTable.readStaged]]
   * audits exactly what publish would make current, and
-  * [[LakeTable.publishStaged]] CASes it in as pure metadata. `touched` and
-  * `baseVersion` carry the audit-validity condition: publish requires the
-  * touched buckets unchanged since the staging fold read them.
+  * [[LakeTable.publishStaged]] CASes it in as pure metadata. The ref records
+  * the merge's [[TableChange]] and `baseVersion`: publish requires the
+  * `touched` buckets unchanged since the staging fold read them.
   */
-final case class StagedRef(
-    name: String,
-    baseVersion: Long,
-    touched: Set[Int],
-    manifest: String,
-    bucketRows: Map[Int, Long],
-    writerId: String,
-    batchId: Long,
-    schemaJson: String,
-    metrics: Map[String, Long])
+final case class StagedRef(name: String, baseVersion: Long, change: TableChange) {
+  def touched: Set[Int] = change.replaced
+  def manifest: String = change.refs.head.path
+}
 
 /** Snapshot metadata of one table version (Iceberg-style, from scratch —
   * no Iceberg/Delta runtime exists in this environment).
@@ -234,8 +228,9 @@ final case class StagedRef(
   *   - `committed`: writerId → max committed batchId (the idempotence ledger;
   *     Structured Streaming batchIds are strictly increasing, so one Long per
   *     writer suffices at any scale — O(1) state, not a growing set)
-  *   - `lineage`: per-bucket row counts + per-commit metrics (events applied,
-  *     upserts/deletes, duration) — the reference's ConversionStats analog.
+  *   - `bucketRows` + `metrics`: per-bucket stored-row counts + per-commit
+  *     metrics (events applied, upserts/deletes, duration) — the reference's
+  *     ConversionStats analog.
   */
 final case class Snapshot(
     version: Long,
@@ -254,9 +249,9 @@ final case class Snapshot(
 
 /** A concurrent [[LakeTable.commit]] won the race to this snapshot version.
   * The loser's data/manifest files are unpublished (invisible to readers,
-  * swept by vacuum); the apply paths catch this and either REBASE their
-  * metadata onto the new current snapshot (disjoint buckets, MOR appends) or
-  * re-run the merge against it (overlapping COW rewrites).
+  * swept by vacuum). [[CommitBuilder.commit]] catches it and resolves the
+  * race by the write's conflict rule; [[graft.operators.MergeApplier.rebucket]]
+  * rethrows it, since resizing under live writers is the caller's decision.
   */
 final class CommitConflictException(val version: Long)
   extends RuntimeException(
@@ -266,15 +261,15 @@ final class CommitConflictException(val version: Long)
   *
   * Layout:
   * {{{
-  *   <root>/data/c<version>-<writerId>-<batchId>/bucket=<b>/part-*.parquet
-  *   <root>/meta/snap-<%012d version>.json     (atomic rename commit)
+  *   <root>/data/c<version>-<writerId>-<batchId>-<random>/bucket=<b>/part-*.parquet
+  *   <root>/meta/snap-<%012d version>.json     (hard-link CAS commit)
   * }}}
   *
   * Readers resolve the highest snapshot version; data files not referenced by
-  * it are invisible (a crashed writer's half-written commit directory is
-  * simply never published; a retried batch overwrites the same directory
-  * deterministically because its name derives from (version, writerId,
-  * batchId)).
+  * it are invisible. Every write ATTEMPT stages into its own directory
+  * ([[attemptDir]]'s random suffix), so a crashed or retried attempt never
+  * overwrites another's files: its directory is simply never published, and
+  * [[vacuum]] sweeps it.
   *
   * Buckets: rows are hash-bucketed by pmod(hash(conv_id, turn_idx), N). A
   * micro-batch rewrites ONLY its touched buckets (copy-on-write), bounding
@@ -288,11 +283,10 @@ final class CommitConflictException(val version: Long)
   * Files.createLink (hard link), which atomically FAILS if the version
   * already exists — unlike ATOMIC_MOVE, which silently replaces it and
   * would lose the race winner's commit. A loser gets
-  * [[CommitConflictException]] and (in MergeApplier) rebases its metadata
-  * onto the new current snapshot when its touched buckets are untouched
-  * there — concurrent writers on disjoint key ranges, a MOR appender racing
-  * a compactor — or re-runs the merge when they overlap. On S3 this layer
-  * would swap the link CAS for a catalog CAS — isolated behind [[commit]].
+  * [[CommitConflictException]], which [[CommitBuilder.commit]] — the one
+  * path every write publishes through — resolves by the write's conflict
+  * rule ([[CommitBuilder.OnConflict]]). On S3 this layer would swap the
+  * link CAS for a catalog CAS — isolated behind [[commit]].
   */
 object LakeTable {
   /** Open an existing table with the bucket count recorded in its newest
@@ -432,36 +426,33 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     j.put("morDeltas", java.lang.Boolean.valueOf(s.morDeltas))
     val tmp = metaDir.resolve(s".tmp-snap-${s.version}-${System.nanoTime()}.json")
     mapper.writerWithDefaultPrettyPrinter().writeValue(tmp.toFile, j)
-    publishCas(tmp, target, s.version)
+    if (!createOnce(tmp, target)) throw new CommitConflictException(s.version)
     // best-effort O(1) resolution hint — written AFTER the atomic publish so
     // it can only lag (readers probe forward); a crash here costs nothing
     try Files.writeString(hintPath, s.version.toString)
     catch { case _: Exception => () }
   }
 
-  /** Publish `tmp` as `target` iff `target` does not exist, atomically.
+  /** Publish `tmp` as `target` iff `target` does not exist, atomically;
+    * false if it exists. The temp name is dropped either way.
     * Files.createLink is the POSIX CAS primitive: link(2) fails with EEXIST,
     * so of N racing committers exactly one creates the name; the fully-
-    * written temp file becomes the published snapshot (same inode), then the
-    * temp name is dropped. Filesystems without hard links degrade to the
-    * pre-checked atomic rename — still torn-write-safe, but last-writer-wins
-    * in the (tiny) check-to-move window, i.e. single-writer only there.
+    * written temp file becomes the published file (same inode). Filesystems
+    * without hard links degrade to the pre-checked atomic rename — still
+    * torn-write-safe, but last-writer-wins in the (tiny) check-to-move
+    * window, i.e. single-writer only there. Snapshot commits and tags share it.
     */
-  private def publishCas(tmp: Path, target: Path, version: Long): Unit = {
-    if (Files.exists(target)) { // cheap pre-check; the link below is the CAS
-      Files.deleteIfExists(tmp)
-      throw new CommitConflictException(version)
-    }
-    try {
-      Files.createLink(target, tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new CommitConflictException(version)
-      case _: UnsupportedOperationException =>
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    }
+  private def createOnce(tmp: Path, target: Path): Boolean = {
+    val created = !Files.exists(target) && // cheap pre-check; the link is the CAS
+      (try { Files.createLink(target, tmp); true }
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case _: UnsupportedOperationException =>
+          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+          true
+      })
+    Files.deleteIfExists(tmp)
+    created
   }
 
   // --- commit lock (pessimistic fallback) ---------------------------------
@@ -587,22 +578,8 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     val j = new java.util.LinkedHashMap[String, Object]()
     j.put("version", java.lang.Long.valueOf(version))
     mapper.writeValue(tmp.toFile, j)
-    try {
-      Files.createLink(tagPath(name), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"tag '$name' already exists (tags are immutable — dropTag first)")
-      case _: UnsupportedOperationException => // no-hardlink FS: pre-checked move
-        if (Files.exists(tagPath(name))) {
-          Files.deleteIfExists(tmp)
-          throw new IllegalStateException(
-            s"tag '$name' already exists (tags are immutable — dropTag first)")
-        }
-        Files.move(tmp, tagPath(name), StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (!createOnce(tmp, tagPath(name))) throw new IllegalStateException(
+      s"tag '$name' already exists (tags are immutable — dropTag first)")
   }
 
   def tags(): Map[String, Long] = {
@@ -630,17 +607,18 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     read(spark, asOfVersion = Some(readTag(name)))
 
   private[graft] def writeStaged(r: StagedRef): Unit = {
+    val Ledger.Batch(writerId, batchId) = r.change.ledger
     Files.createDirectories(metaDir)
     val j = new java.util.LinkedHashMap[String, Object]()
     j.put("baseVersion", java.lang.Long.valueOf(r.baseVersion))
     j.put("touched", r.touched.toSeq.sorted.map(Integer.valueOf).asJava)
     j.put("manifest", r.manifest)
-    j.put("bucketRows", r.bucketRows.map { case (b, n) =>
+    j.put("bucketRows", r.change.rows.map { case (b, n) =>
       b.toString -> java.lang.Long.valueOf(n) }.asJava)
-    j.put("writerId", r.writerId)
-    j.put("batchId", java.lang.Long.valueOf(r.batchId))
-    j.put("schemaJson", r.schemaJson)
-    j.put("metrics", r.metrics.map { case (k, v) =>
+    j.put("writerId", writerId)
+    j.put("batchId", java.lang.Long.valueOf(batchId))
+    j.put("schemaJson", r.change.schemaJson)
+    j.put("metrics", r.change.metrics.map { case (k, v) =>
       k -> java.lang.Long.valueOf(v) }.asJava)
     val tmp = metaDir.resolve(s".tmp-wap-${refName(r.name)}-${System.nanoTime()}.json")
     mapper.writeValue(tmp.toFile, j)
@@ -660,19 +638,17 @@ final class LakeTable(val root: String, val numBuckets: Int) {
   def readStagedRef(name: String): StagedRef = {
     require(Files.exists(stagedPath(name)), s"no staged commit '$name'")
     val m = mapper.readValue(stagedPath(name).toFile, classOf[java.util.Map[String, Object]])
-    StagedRef(
-      name = name,
-      baseVersion = m.get("baseVersion").toString.toLong,
-      touched = m.get("touched").asInstanceOf[java.util.List[Object]].asScala
-        .map(_.toString.toInt).toSet,
-      manifest = m.get("manifest").toString,
-      bucketRows = m.get("bucketRows").asInstanceOf[java.util.Map[String, Object]].asScala
-        .map { case (b, n) => b.toInt -> n.toString.toLong }.toMap,
-      writerId = m.get("writerId").toString,
-      batchId = m.get("batchId").toString.toLong,
+    val touched = m.get("touched").asInstanceOf[java.util.List[Object]].asScala
+      .map(_.toString.toInt).toSet
+    StagedRef(name, m.get("baseVersion").toString.toLong, TableChange(
+      ledger = Ledger.Batch(m.get("writerId").toString, m.get("batchId").toString.toLong),
       schemaJson = m.get("schemaJson").toString,
+      refs = Seq(ManifestRef(m.get("manifest").toString, touched, delta = false)),
+      replaced = touched,
+      rows = m.get("bucketRows").asInstanceOf[java.util.Map[String, Object]].asScala
+        .map { case (b, n) => b.toInt -> n.toString.toLong }.toMap,
       metrics = m.get("metrics").asInstanceOf[java.util.Map[String, Object]].asScala
-        .map { case (k, v) => k -> v.toString.toLong }.toMap)
+        .map { case (k, v) => k -> v.toString.toLong }.toMap))
   }
 
   /** Discard a staged commit: the ref dies now; its unpublished manifest and
@@ -680,27 +656,18 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     */
   def dropStaged(name: String): Unit = Files.deleteIfExists(stagedPath(name))
 
-  /** The staged commit's AUDIT view — the base snapshot with the staged
-    * rewrite applied, i.e. exactly the state publish would make current.
+  /** The staged commit's AUDIT view — the builder's candidate of the
+    * staged change on its base, i.e. exactly the state publish would make
+    * current if nothing commits in between.
     */
   def stagedSnapshot(name: String): Snapshot = {
     val r = readStagedRef(name)
-    val base = snapshotAt(r.baseVersion)
-    require(base.nonEmpty || r.baseVersion == 0L,
-      s"staged commit '$name' bases on vacuumed v${r.baseVersion}")
-    val myRef = ManifestRef(r.manifest, r.touched, delta = false)
-    Snapshot(
-      version = r.baseVersion,
-      schemaJson = base.map(b => Model.mergeSchemas(b.schema,
-        DataType.fromJson(r.schemaJson).asInstanceOf[StructType]).json).getOrElse(r.schemaJson),
-      numBuckets = numBuckets,
-      manifests = ManifestRef.replace(base.map(_.manifests).getOrElse(Seq.empty),
-        r.touched, Seq(myRef)),
-      committed = base.map(_.committed).getOrElse(Map.empty) + (r.writerId -> r.batchId),
-      bucketRows = base.map(_.bucketRows).getOrElse(Map.empty) ++ r.bucketRows,
-      metrics = r.metrics,
-      parentVersion = r.baseVersion,
-      morDeltas = base.exists(_.morDeltas))
+    CommitBuilder.candidate(this, stagedBase(r), r.change)
+  }
+
+  private def stagedBase(r: StagedRef): Option[Snapshot] = snapshotAt(r.baseVersion).orElse {
+    require(r.baseVersion == 0L, s"staged commit '${r.name}' bases on vacuumed v${r.baseVersion}")
+    None
   }
 
   /** Audit read of a staged commit (live rows, tombstones filtered) —
@@ -708,15 +675,9 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     */
   def readStaged(spark: SparkSession, name: String): DataFrame = {
     val s = stagedSnapshot(name)
-    val resolved =
-      if (s.morDeltas) graft.operators.BucketLocal.readFoldedAuto(spark, this, s)
-      else {
-        val paths = resolveFiles(s).values.flatten.map(_.path).toSeq
-        if (paths.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-        else spark.read.schema(s.schema).parquet(paths: _*)
-      }
-    resolved.filter(col("op") =!= Model.OpDelete).drop("op")
+    (if (s.morDeltas) graft.operators.BucketLocal.readFoldedAuto(spark, this, s)
+      else readPrunedFiles(spark, s, resolveFiles(s)))
+      .filter(col("op") =!= Model.OpDelete).drop("op")
   }
 
   /** PUBLISH of write-audit-publish: CAS the staged commit in as the next
@@ -731,50 +692,24 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     */
   def publishStaged(name: String): Snapshot = {
     val r = readStagedRef(name)
-    val base = snapshotAt(r.baseVersion)
-    require(base.nonEmpty || r.baseVersion == 0L,
-      s"staged commit '$name' bases on vacuumed v${r.baseVersion}")
-    val myRef = ManifestRef(r.manifest, r.touched, delta = false)
-    val baseFiles = base.map(b => resolveFiles(b, Some(r.touched)))
-      .getOrElse(Map.empty[Int, Seq[FileEntry]])
-    while (true) {
-      val cur = currentSnapshot()
-      cur.foreach { c =>
-        require(c.numBuckets == numBuckets,
-          s"table was rebucketed to ${c.numBuckets} buckets since staging " +
-            s"(staged under $numBuckets) — drop and re-stage")
-      }
-      if (cur.exists(_.maxBatchId(r.writerId) >= r.batchId)) {
+    val change = r.change.copy(metrics = r.change.metrics ++
+      Map("publishedFromStage" -> 1L, "stagedBase" -> r.baseVersion))
+    CommitBuilder.commit(this, stagedBase(r), change,
+        CommitBuilder.RebaseIfUnchanged(r.touched)) match {
+      case CommitBuilder.Committed(s) =>
+        dropStaged(name)
+        s
+      case CommitBuilder.AlreadyApplied(head) =>
         // the (writer, batch) already landed — a racing publish or the live
         // writer re-applied it; exactly-once makes this staged copy moot
         dropStaged(name)
-        return cur.get
-      }
-      if (cur.map(c => resolveFiles(c, Some(r.touched))).getOrElse(Map.empty) != baseFiles)
+        head
+      case CommitBuilder.Stale(_) =>
         throw new java.util.ConcurrentModificationException(
           s"staged commit '$name' audited buckets " +
             s"${r.touched.toSeq.sorted.mkString("{", ",", "}")} at v${r.baseVersion}, " +
             "which changed concurrently; drop and re-stage")
-      val cand = Snapshot(
-        version = cur.map(_.version).getOrElse(0L) + 1,
-        schemaJson = cur.map(c => Model.mergeSchemas(c.schema,
-          DataType.fromJson(r.schemaJson).asInstanceOf[StructType]).json)
-          .getOrElse(r.schemaJson),
-        numBuckets = numBuckets,
-        manifests = ManifestRef.replace(cur.map(_.manifests).getOrElse(Seq.empty),
-          r.touched, Seq(myRef)),
-        committed = cur.map(_.committed).getOrElse(Map.empty) + (r.writerId -> r.batchId),
-        bucketRows = cur.map(_.bucketRows).getOrElse(Map.empty) ++ r.bucketRows,
-        metrics = r.metrics ++ Map("publishedFromStage" -> 1L, "stagedBase" -> r.baseVersion),
-        parentVersion = cur.map(_.version).getOrElse(0L),
-        morDeltas = cur.exists(_.morDeltas))
-      try {
-        commit(cand)
-        dropStaged(name)
-        return cand
-      } catch { case _: CommitConflictException => () } // head moved: re-check and rebase
     }
-    throw new IllegalStateException("unreachable")
   }
 
   // --- manifests ----------------------------------------------------------
@@ -935,6 +870,13 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     dataDir.resolve(
       s"c$version-$writerId-$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
 
+  /** The bucket function is part of the table's physical identity: pruning,
+    * file layout and every bucket id derive from it. A handle opened with a
+    * different count than `s` would silently mis-prune — fail loudly instead.
+    */
+  def checkBuckets(s: Snapshot): Unit = require(s.numBuckets == numBuckets,
+    s"table has ${s.numBuckets} buckets; handle opened with $numBuckets")
+
   /** Read the table rows (including tombstones) at the current snapshot,
     * optionally restricted to a set of buckets (file pruning — the physical
     * partition pruning of the MERGE read path).
@@ -1060,8 +1002,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
         // same physical-identity guard as the apply paths: the bucket id is
         // computed from the HANDLE's count, so a handle left stale by a
         // rebucket would silently name the wrong bucket of the new layout
-        require(s.numBuckets == numBuckets,
-          s"table has ${s.numBuckets} buckets; handle opened with $numBuckets")
+        checkBuckets(s)
         val one = Set(bucketFor(convId, turnIdx))
         // pin the read to the SNAPSHOT the bucket id was derived from — a
         // concurrent commit between resolution and read must not retarget it.
@@ -1115,8 +1056,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     currentSnapshot() match {
       case None => spark.emptyDataFrame
       case Some(s) =>
-        require(s.numBuckets == numBuckets,
-          s"table has ${s.numBuckets} buckets; handle opened with $numBuckets")
+        checkBuckets(s)
         val buckets = scala.collection.mutable.Set.empty[Int]
         var t = 0
         while (t < maxTurnExclusive && buckets.size < numBuckets) {
@@ -1162,8 +1102,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     currentSnapshot() match {
       case None => spark.emptyDataFrame
       case Some(s) =>
-        require(s.numBuckets == numBuckets,
-          s"table has ${s.numBuckets} buckets; handle opened with $numBuckets")
+        checkBuckets(s)
         def admits(f: FileEntry): Boolean =
           !fileSkipping || f.stats.forall(_.mightContainToken(token))
         val all = resolveFiles(s)

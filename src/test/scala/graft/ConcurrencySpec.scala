@@ -3,7 +3,7 @@ package graft
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.MergeApplier
-import graft.table.{CommitConflictException, LakeTable, Snapshot}
+import graft.table.{CommitBuilder, CommitConflictException, LakeTable, Snapshot}
 
 import java.sql.Timestamp
 import java.util.concurrent.CountDownLatch
@@ -15,7 +15,7 @@ import java.util.concurrent.CountDownLatch
   * nondeterministic thread-race stress against the in-memory oracle fold.
   *
   * Deterministic cases inject the concurrent winner through
-  * MergeApplier.beforePublish — inside the window between staging the
+  * CommitBuilder.beforePublish — inside the window between staging the
   * attempt's data files and the first CAS try.
   */
 class ConcurrencySpec extends SparkSpecBase {
@@ -51,8 +51,8 @@ class ConcurrencySpec extends SparkSpecBase {
   }
 
   private def withHook[T](hook: (String, Long) => Unit)(body: => T): T =
-    try { MergeApplier.beforePublish = hook; body }
-    finally MergeApplier.beforePublish = (_, _) => ()
+    try { CommitBuilder.beforePublish = hook; body }
+    finally CommitBuilder.beforePublish = (_, _) => ()
 
   test("commit CAS: of N racing committers of one version exactly one wins") {
     val table = new LakeTable(tmpDir("cas"), numBuckets = 4)
@@ -101,7 +101,7 @@ class ConcurrencySpec extends SparkSpecBase {
 
     // winner B commits inside A's CAS window, touching only cb's bucket
     val r = withHook((w, _) => if (w == "A") {
-      MergeApplier.beforePublish = (_, _) => ()
+      CommitBuilder.beforePublish = (_, _) => ()
       apply1(table, Seq(ev(cb, 0, "b1", "2025-01-01 00:01:00", "update", 3)), "B", 0L)
     }) {
       apply1(table, Seq(ev(ca, 0, "a1", "2025-01-01 00:01:00", "update", 4)), "A", 0L)
@@ -123,7 +123,7 @@ class ConcurrencySpec extends SparkSpecBase {
     apply1(table, Seq(ev("c1", 0, "v0", "2025-01-01 00:00:00", "insert", 1)), "init", 0L)
 
     val r = withHook((w, _) => if (w == "A") {
-      MergeApplier.beforePublish = (_, _) => ()
+      CommitBuilder.beforePublish = (_, _) => ()
       // B updates the SAME key — A's staged fold no longer includes the winner
       apply1(table, Seq(ev("c1", 0, "b-won", "2025-01-01 00:01:00", "update", 2)), "B", 0L)
     }) {
@@ -146,7 +146,7 @@ class ConcurrencySpec extends SparkSpecBase {
     applyMor1(table, Seq(ev("c1", 0, "v0", "2025-01-01 00:00:00", "insert", 1)), "init", 0L)
 
     val r = withHook((w, _) => if (w == "A") {
-      MergeApplier.beforePublish = (_, _) => ()
+      CommitBuilder.beforePublish = (_, _) => ()
       // even a SAME-key winner doesn't force a re-run on the MOR path
       applyMor1(table, Seq(ev("c1", 0, "b", "2025-01-01 00:01:00", "update", 2)), "B", 0L)
     }) {
@@ -182,7 +182,7 @@ class ConcurrencySpec extends SparkSpecBase {
     // winner B adds `model`; loser A (disjoint buckets — rebase path) adds
     // `score`: the rebased snapshot's schema must be the UNION of both
     val r = withHook((w, _) => if (w == "A") {
-      MergeApplier.beforePublish = (_, _) => ()
+      CommitBuilder.beforePublish = (_, _) => ()
       MergeApplier.applyBatch(spark, table,
         evolved(ev(cb, 0, "b1", "2025-01-01 00:01:00", "update", 3), "model", "m1"),
         "B", 0L)
@@ -210,7 +210,7 @@ class ConcurrencySpec extends SparkSpecBase {
 
     val batch = Seq(ev("c1", 0, "v1", "2025-01-01 00:01:00", "update", 2))
     val r = withHook((w, b) => if (w == "w" && b == 1L) {
-      MergeApplier.beforePublish = (_, _) => ()
+      CommitBuilder.beforePublish = (_, _) => ()
       apply1(table, batch, "w", 1L) // the other instance of the same writer
     }) {
       apply1(table, batch, "w", 1L)
@@ -434,5 +434,117 @@ class ConcurrencySpec extends SparkSpecBase {
     // final quiet compaction lands and preserves the fold
     assert(MergeApplier.compactRetainTombstones(spark, table) >= 0L)
     assert(finalState(table) == oracle)
+  }
+
+  test("every commit path meets a seam-injected race by its conflict rule") {
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val n = 8
+    val (ca, cb) = disjointConvs(n)
+    val init = Seq(ev(ca, 0, "a0", "2025-01-01 00:00:00", "insert", 1),
+      ev(cb, 0, "b0", "2025-01-01 00:00:00", "insert", 2))
+    // what the COW, MOR, sink and publish paths write: an update of ca's key
+    val mine = Seq(ev(ca, 0, "a1", "2025-01-01 00:02:00", "update", 4))
+    def listed(dir: java.nio.file.Path): Set[String] =
+      if (!java.nio.file.Files.isDirectory(dir)) Set.empty
+      else {
+        val s = java.nio.file.Files.list(dir)
+        try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+      }
+    def manifests(t: LakeTable) =
+      listed(java.nio.file.Paths.get(t.root, "meta")).filter(_.startsWith("man-"))
+    def state(t: LakeTable) = t.read(spark).collect().map(r =>
+      (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) ->
+        ((r.getAs[String]("text"), r.getAs[String]("role"), r.getAs[Long]("seq")))).toMap
+    def sinkEpoch(t: LakeTable): Unit = {
+      val src = tmpDir("race-sink-src")
+      writeFlatParquet(spark.createDataset(mine).toDF().drop("op"), src, "a.parquet")
+      spark.readStream
+        .schema(org.apache.spark.sql.types.StructType(
+          Model.changeEventSchema.fields.filterNot(_.name == "op")))
+        .parquet(src).writeStream.format("lake")
+        .option("path", t.root)
+        .option("checkpointLocation", tmpDir("race-sink-ckpt"))
+        .option("writerId", "S")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+
+    // (path, the writerId its seam call carries, outcome when the injected
+    // winner touches a disjoint bucket / the same bucket, the write itself;
+    // it gets the table and the name of a catalog over the table's parent)
+    val paths: Seq[(String, String, String, String, (LakeTable, String) => Unit)] = Seq(
+      ("cow", "A", "rebase", "rerun", (t, _) => apply1(t, mine, "A", 0L)),
+      ("mor", "A", "rebase", "rebase", (t, _) => applyMor1(t, mine, "A", 0L)),
+      ("sink", "S", "rebase", "rebase", (t, _) => sinkEpoch(t)),
+      ("sql-update", "sql-rlo", "rebase", "cme", (_, cat) =>
+        spark.sql(s"UPDATE $cat.convs SET role = 'assistant' WHERE conv_id = '$ca'")),
+      ("publish", "A", "rebase", "cme", (t, _) => t.publishStaged(MergeApplier.stageBatch(
+        spark, t, spark.createDataset(mine).toDF(), "A", 0L).get)),
+      ("selective-compaction", "compact", "rerun", "rerun", (t, _) =>
+        MergeApplier.compactBucketsRetainTombstones(spark, t, Set(t.bucketFor(ca, 0)))),
+      ("rebucket", "rebucket", "cce", "cce", (t, _) => MergeApplier.rebucket(spark, t, 4)))
+
+    for ((path, trigger, onDisjoint, onSame, write) <- paths; same <- Seq(false, true)) {
+      val expected = if (same) onSame else onDisjoint
+      val clue = s"$path, ${if (same) "same" else "disjoint"} bucket:"
+      val base = tmpDir(s"race-$path")
+      val t = new LakeTable(s"$base/convs", numBuckets = n)
+      apply1(t, init, "init", 0L)
+      val cat = s"race_${path.replace('-', '_')}_$same"
+      spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.table.LakeCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+      val injected =
+        if (same) ev(ca, 0, "b-won", "2025-01-01 00:01:00", "update", 3)
+        else ev(cb, 0, "b1", "2025-01-01 00:01:00", "update", 3)
+      var fires = 0
+      var afterInjection = Set.empty[String]
+      val failure = withHook((w, _) => if (w == trigger) {
+        fires += 1
+        if (fires == 1) {
+          apply1(t, Seq(injected), "B", 0L)
+          afterInjection = manifests(t)
+        }
+      }) {
+        try { write(t, cat); None } catch { case e: Throwable => Some(e) }
+      }
+      def causes(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+      val head = t.currentSnapshot().get
+      expected match {
+        case "rebase" =>
+          assert(failure.isEmpty && fires == 1, s"$clue $failure, seam fired $fires times")
+          assert(head.metrics.contains("rebasedFrom"), s"$clue must rebase: ${head.metrics}")
+          assert(manifests(t) == afterInjection,
+            s"$clue the rebase wrote a manifest beyond its own")
+        case "rerun" =>
+          assert(failure.isEmpty && fires == 2, s"$clue $failure, seam fired $fires times")
+          assert(!head.metrics.contains("rebasedFrom"), s"$clue must re-run: ${head.metrics}")
+        case "cme" =>
+          assert(failure.exists(causes(_).exists(
+            _.isInstanceOf[java.util.ConcurrentModificationException])), s"$clue $failure")
+          assert(fires == 1 && head.version == 2, s"$clue no snapshot from the stale write")
+        case "cce" =>
+          assert(failure.exists(_.isInstanceOf[CommitConflictException]), s"$clue $failure")
+          assert(fires == 1 && head.version == 2 && head.numBuckets == n, clue)
+      }
+      if (path == "cow" && same)
+        assert(head.metrics.get("rerunAttempt").contains(2L), s"$clue ${head.metrics}")
+      if (path == "sql-update" && same) {
+        assert(!head.committed.contains("sql-rlo"), clue)
+        assert(!listed(java.nio.file.Paths.get(t.root, "data")).exists(_.contains("-sql-rlo-")),
+          s"$clue the stale statement's attempt dir must be deleted")
+      }
+      // the final state is the sequential oracle's: init, the winner, then
+      // the path's own write if it landed
+      val landed = expected == "rebase" || expected == "rerun"
+      val writes = init ++ Seq(injected) ++
+        (if (landed && Set("cow", "mor", "sink", "publish")(path)) mine else Seq.empty)
+      val oracle = Generator.oracleFold(writes).map { case (k, e) => k -> ((e.text, e.role, e.seq)) }
+      val want =
+        if (landed && path == "sql-update")
+          oracle.updated((ca, 0), oracle((ca, 0)).copy(_2 = "assistant"))
+        else oracle
+      assert(state(t) == want, clue)
+      assert(head.bucketRows == t.footerRowCounts(t.resolveFiles(head)), clue)
+    }
   }
 }

@@ -183,4 +183,44 @@ class MorSpec extends SparkSpecBase {
     val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
     assert(finalState(table) == oracle)
   }
+
+  test("a COW rewrite of the only delta-carrying bucket clears morDeltas; reads match the oracle") {
+    import graft.operators.ChangeFeed
+    val table = new LakeTable(tmpDir("mor-cow-clears"), numBuckets = 4)
+    def applyCow(evs: Seq[ChangeEvent], b: Long) =
+      MergeApplier.applyBatch(spark, table, spark.createDataset(evs).toDF(), "w", b)
+    val base = (0 until 12).map(i =>
+      ev(s"c$i", 0, s"t$i", "2025-01-01 00:00:00", "insert", i.toLong))
+    applyCow(base, 0L)
+    val v1 = table.currentSnapshot().get.version
+    // one key: the MOR delta lands in one bucket, which the COW batch rewrites
+    val delta = Seq(ev("c1", 0, "mor", "2025-01-01 00:01:00", "update", 100))
+    MergeApplier.applyBatchMor(spark, table, spark.createDataset(delta).toDF(), "w", 1L)
+    assert(table.currentSnapshot().get.morDeltas)
+    val cow = Seq(ev("c1", 0, "cow", "2025-01-01 00:02:00", "update", 101))
+    applyCow(cow, 2L)
+    val head = table.currentSnapshot().get
+    assert(!head.manifests.exists(_.delta), "the rewrite must mask the bucket's delta ref")
+    assert(!head.morDeltas, "no delta ref is left, so reads must not fold")
+
+    val before = Generator.oracleFold(base)
+    val oracle = Generator.oracleFold(base ++ delta ++ cow)
+    assert(finalState(table) == oracle.map { case (k, e) => k -> ((e.text, e.seq)) })
+    oracle.foreach { case ((c, t), e) =>
+      assert(table.lookupTurn(spark, c, t).collect().map(_.getAs[String]("text")).toSeq ==
+        Seq(e.text), s"lookupTurn($c, $t)")
+    }
+    val feed = ChangeFeed.changesBetween(spark, table, v1, head.version).collect()
+      .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) ->
+        ((r.getAs[String]("change_type"), r.getAs[String]("text"), r.getAs[Long]("seq")))).toMap
+    val want = (before.keySet ++ oracle.keySet).flatMap { k =>
+      (before.get(k), oracle.get(k)) match {
+        case (None, Some(e)) => Some(k -> (("insert", e.text, e.seq)))
+        case (Some(b), Some(e)) if b != e => Some(k -> (("update", e.text, e.seq)))
+        case (Some(b), None) => Some(k -> (("delete", b.text, b.seq)))
+        case _ => None
+      }
+    }.toMap
+    assert(feed == want)
+  }
 }
