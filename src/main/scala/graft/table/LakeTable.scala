@@ -874,7 +874,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     * file layout and every bucket id derive from it. A handle opened with a
     * different count than `s` would silently mis-prune — fail loudly instead.
     */
-  def checkBuckets(s: Snapshot): Unit = require(s.numBuckets == numBuckets,
+  private[graft] def checkBuckets(s: Snapshot): Unit = require(s.numBuckets == numBuckets,
     s"table has ${s.numBuckets} buckets; handle opened with $numBuckets")
 
   /** Read the table rows (including tombstones) at the current snapshot,
