@@ -61,9 +61,12 @@ object CommitBuilder {
     */
   private[graft] var beforePublish: (String, Long) => Unit = (_, _) => ()
 
-  /** The snapshot `change` makes of `on` (None: an empty table). */
+  /** The snapshot `change` makes of `on` (None: an empty table); `on` must
+    * have the handle's bucket count, which the candidate declares.
+    */
   def candidate(table: LakeTable, on: Option[Snapshot], change: TableChange,
       rebasedFrom: Option[Long] = None): Snapshot = {
+    on.foreach(table.checkBuckets)
     val version = on.map(_.version).getOrElse(0L)
     val manifests = ManifestRef.replace(on.map(_.manifests).getOrElse(Seq.empty),
       change.replaced, change.refs)
@@ -90,10 +93,12 @@ object CommitBuilder {
       morDeltas = manifests.exists(_.delta))
   }
 
-  /** Publish `change`, built from `base`, as the next snapshot. A lost CAS
-    * reads the new head: [[AlreadyApplied]] if its ledger holds the change's
-    * batch; a failure if its bucket count is no longer the base's; else a
-    * rebase or [[Stale]] by `onConflict`. The caller cleans up after Stale.
+  /** Publish `change`, built from `base`, as the next snapshot. A head past
+    * the attempt's base is a lost race even if the CAS could win (vacuum can
+    * free the slot after a tagged base): [[AlreadyApplied]] if its ledger
+    * holds the change's batch; a failure if its bucket count is no longer
+    * the base's; else a rebase or [[Stale]] by `onConflict`. The caller
+    * cleans up after Stale.
     */
   def commit(table: LakeTable, base: Option[Snapshot], change: TableChange,
       onConflict: OnConflict): Result = {
@@ -105,25 +110,29 @@ object CommitBuilder {
     val baseBuckets = base.map(_.numBuckets).getOrElse(table.numBuckets)
     beforePublish(writerId, batchId)
     @annotation.tailrec
-    def attempt(on: Option[Snapshot], rebasedFrom: Option[Long]): Result = {
-      val cand = candidate(table, on, change, rebasedFrom)
-      if (try { table.commit(cand); true } catch { case _: CommitConflictException => false })
-        return Committed(cand)
-      val head = table.currentSnapshot().getOrElse(
-        throw new IllegalStateException("commit conflict on an empty table"))
-      if (change.ledger.isInstanceOf[Ledger.Batch] && head.maxBatchId(writerId) >= batchId)
-        return AlreadyApplied(head)
-      require(head.numBuckets == baseBuckets, s"table was rebucketed to " +
-        s"${head.numBuckets} buckets after this write read it at $baseBuckets")
-      val rebase = onConflict match {
-        case Rebase => true
-        case RebaseIfUnchanged(t) => table.resolveFiles(head, Some(t)) ==
-          base.map(table.resolveFiles(_, Some(t))).getOrElse(Map.empty)
-        case Never => false
+    def attempt(on: Option[Snapshot], rebasedFrom: Option[Long]): Result =
+      table.currentSnapshot() match {
+        case Some(head) if !on.exists(_.version == head.version) =>
+          if (change.ledger.isInstanceOf[Ledger.Batch] && head.maxBatchId(writerId) >= batchId)
+            AlreadyApplied(head)
+          else {
+            require(head.numBuckets == baseBuckets, s"table was rebucketed to " +
+              s"${head.numBuckets} buckets after this write read it at $baseBuckets")
+            val rebase = onConflict match {
+              case Rebase => true
+              case RebaseIfUnchanged(t) => table.resolveFiles(head, Some(t)) ==
+                base.map(table.resolveFiles(_, Some(t))).getOrElse(Map.empty)
+              case Never => false
+            }
+            if (!rebase) Stale(head)
+            else attempt(Some(head), Some(base.map(_.version).getOrElse(0L) + 1))
+          }
+        case _ =>
+          val cand = candidate(table, on, change, rebasedFrom)
+          if (try { table.commit(cand); true } catch { case _: CommitConflictException => false })
+            Committed(cand)
+          else attempt(on, rebasedFrom) // lost the CAS: the re-read head is past `on`
       }
-      if (!rebase) Stale(head)
-      else attempt(Some(head), Some(base.map(_.version).getOrElse(0L) + 1))
-    }
     attempt(base, None)
   }
 }

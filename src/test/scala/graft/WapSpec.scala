@@ -170,4 +170,51 @@ class WapSpec extends SparkSpecBase {
     assert(t.currentSnapshot().get.version == 1L)
     assert(state(t.read(spark)).size == 4)
   }
+
+  test("WAP: publish over a vacuumed gap in the version log lands on the head") {
+    // vacuum keeps tagged snapshots and the last K, so the version after a
+    // staged base can be gone while the head is far past it: publish must
+    // land on the head, not in the freed slot below it
+    for ((label, tagged) <- Seq("tagged base" -> true, "empty base" -> false)) {
+      val t = new LakeTable(tmpDir(s"wap-gap-$tagged"), numBuckets = 64)
+      if (tagged) {
+        apply1(t, batch("a", 4, 0), "w", 0L)
+        t.tag("base", t.currentSnapshot().get.version)
+      }
+      val name = MergeApplier.stageBatch(spark, t, spark.createDataset(Seq(
+        ev("a0", 0, "staged", "2025-01-02 10:00:00", 100))).toDF(), "w", 1L).get
+      val baseVersion = t.readStagedRef(name).baseVersion
+      val racers = Seq("z0", "z1")
+      assert(racers.forall(c => !t.readStagedRef(name).touched.contains(t.bucketFor(c, 0))),
+        s"$label: test setup needs buckets disjoint from the staged one")
+      racers.zipWithIndex.foreach { case (c, i) =>
+        apply1(t, Seq(ev(c, 0, "concurrent", "2025-01-02 11:00:00", 200 + i)), "other", i)
+      }
+      val head = t.currentSnapshot().get.version
+      t.vacuum(keepLast = 1, graceMs = 0L)
+      assert(t.snapshotAt(baseVersion + 1).isEmpty, s"$label: test setup needs a gap")
+      val pub = t.publishStaged(name)
+      assert(pub.version == head + 1 && t.currentSnapshot().get.version == pub.version,
+        s"$label: publish must land on the head v$head, not below it")
+      val got = state(t.read(spark))
+      assert(got(("a0", 0)) == "staged", label)
+      assert(racers.forall(c => got((c, 0)) == "concurrent"), label)
+      assert(pub.metrics.get("rebasedFrom").contains(baseVersion + 1), label)
+    }
+  }
+
+  test("WAP: audit and publish through a handle with another bucket count fail loudly") {
+    val t = new LakeTable(tmpDir("wap-handle"), numBuckets = 4)
+    apply1(t, batch("a", 4, 0), "w", 0L)
+    val v = t.currentSnapshot().get.version
+    val name = MergeApplier.stageBatch(spark, t, spark.createDataset(Seq(
+      ev("a0", 0, "staged", "2025-01-02 10:00:00", 100))).toDF(), "w", 1L).get
+    val wrong = new LakeTable(t.root, numBuckets = 8)
+    intercept[IllegalArgumentException] { wrong.stagedSnapshot(name) }
+    intercept[IllegalArgumentException] { wrong.publishStaged(name) }
+    assert(t.currentSnapshot().get.version == v, "nothing may commit")
+    assert(t.stagedRefs() == Seq(name), "the staged ref stays for a correct handle")
+    assert(t.publishStaged(name).numBuckets == 4)
+    assert(state(t.read(spark))(("a0", 0)) == "staged")
+  }
 }
