@@ -4,7 +4,7 @@ import graft.changelog.Changelog
 import graft.functions.{Grel, Rml, Text}
 import graft.multimodal.Multimodal
 import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Similarity}
-import graft.streaming.{AnnMaintenance, Replicate}
+import graft.streaming.{AnnMaintenance, ForkFreeCheckpointFileManager, Replicate}
 import graft.table.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -105,15 +105,19 @@ object SparkEntry {
     * points slightly — irrelevant by the same invariant that let the splits
     * be approximate at all: ANY ts-range split keeps equal event times in
     * one chunk and cross-chunk arrival in event-time order, and the max is
-    * only used to place the far-future sentinel.
+    * only used to place the far-future sentinel. An input with no non-null
+    * `tsCol` value has no split points and fails with a named message.
     */
-  private def checkpointWithTsSplits(df: DataFrame,
+  private[graft] def checkpointWithTsSplits(df: DataFrame,
       tsCol: String): (DataFrame, Array[Double]) = {
     val obs = org.apache.spark.sql.Observation()
     val ck = df.observe(obs, expr(
       s"percentile_approx(cast($tsCol as double), array(0.33d, 0.66d, 1.0d), 10000)")
       .as("qs")).localCheckpoint(true)
-    (ck, obs.get("qs").asInstanceOf[Seq[Double]].toArray)
+    val qs = obs.get("qs")
+    require(qs != null,
+      s"checkpointWithTsSplits: no non-null '$tsCol' value in the input, so no ts split points")
+    (ck, qs.asInstanceOf[Seq[Double]].toArray)
   }
 
   /** Split `df` into three ts-range chunks on `tsCol` (split points `t1`/`t2`
@@ -164,9 +168,10 @@ object SparkEntry {
       math.max(4, s.sparkContext.defaultParallelism / 4))
 
   /** Drain a streaming frame to parquet via Trigger.AvailableNow. */
-  private def runAvailableNowToParquet(sdf: DataFrame, outDir: String,
+  private[graft] def runAvailableNowToParquet(sdf: DataFrame, outDir: String,
       ckpt: String): Unit = {
     val s = sdf.sparkSession
+    ForkFreeCheckpointFileManager.install(s)
     withStatePartitions(s, statePartitions(s)) {
       val q = sdf.writeStream.format("parquet")
         .option("path", outDir)

@@ -168,9 +168,11 @@ object Similarity {
     * adapt (no skew, nothing to coalesce below the session partition count),
     * so the extra per-exchange job is a pure scheduler round-trip, at any
     * scale. Plans and values are bit-identical; only the job count changes
-    * (measured: 2 jobs → 1 per Lloyd iteration). The flag is thread-local
-    * session state restored in finally; the lazily-returned frames plan at
-    * their own action time under the caller's AQE setting.
+    * (measured: 2 jobs → 1 per Lloyd iteration). The flag is session-wide,
+    * not thread-local: while `f` runs, every other query on the same session
+    * (from any thread) also plans with AQE off. It is restored in finally;
+    * the lazily-returned frames plan at their own action time under the
+    * caller's AQE setting.
     */
   private def withoutAqe[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"

@@ -75,6 +75,7 @@ object AnnMaintenance {
       mutations: String = "fail"): StreamingQuery = {
     require(Modes(mutations),
       s"mutations must be one of ${Modes.mkString("|")}, got '$mutations'")
+    ForkFreeCheckpointFileManager.install(spark)
     spark.readStream.format("lake-cdf")
       .option("path", sourceRoot)
       .option("startingVersion", startingVersion)

@@ -4,10 +4,8 @@ import graft.model.Model
 import graft.operators.MergeApplier
 import graft.table.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 /** Structured Streaming change-event tail: file source → foreachBatch MERGE.
   *
@@ -31,22 +29,6 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
   * (StreamSpec "lost checkpoint"; LifecycleSpec pins the mode-switch case).
   */
 object CdcStream {
-
-  /** Per-query throughput metrics (the reference's ConversionStats,
-    * ConversionStats.java:6-105, via StreamingQueryListener).
-    */
-  final class Metrics extends StreamingQueryListener {
-    val batches = new AtomicLong(0)
-    val rows = new AtomicLong(0)
-    val lastProgress = new AtomicReference[String]("")
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      batches.incrementAndGet()
-      rows.addAndGet(e.progress.numInputRows)
-      lastProgress.set(e.progress.prettyJson)
-    }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
 
   def source(spark: SparkSession, dir: String,
       schema: StructType = Model.changeEventSchema,
@@ -74,6 +56,7 @@ object CdcStream {
       case "mor" => MergeApplier.applyBatchMor(spark, table, _, writerId, _)
       case other => throw new IllegalArgumentException(s"unknown mode: $other")
     }
+    ForkFreeCheckpointFileManager.install(spark)
     source(spark, sourceDir, schema, maxFilesPerTrigger)
       .writeStream
       .queryName(s"cdc-tail-$writerId")

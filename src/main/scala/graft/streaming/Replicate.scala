@@ -61,6 +61,7 @@ object Replicate {
       case "mor" => MergeApplier.applyBatchMor(spark, dest, _, writerId, _)
       case other => throw new IllegalArgumentException(s"unknown mode: $other")
     }
+    ForkFreeCheckpointFileManager.install(spark)
     spark.readStream.format("lake-cdf")
       .option("path", sourceRoot)
       .option("maxVersionsPerTrigger", maxVersionsPerTrigger)

@@ -38,7 +38,8 @@ object StreamingView {
   def start(spark: SparkSession, baseRoot: String, view: LakeTable,
       checkpointDir: String, writerId: String = "statsview-stream",
       maxVersionsPerTrigger: Long = 16,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    ForkFreeCheckpointFileManager.install(spark)
     spark.readStream.format("lake-cdf")
       .option("path", baseRoot)
       .option("updatePreImages", true)
@@ -53,6 +54,7 @@ object StreamingView {
         IncrementalAgg.applyFeedToTable(spark, view, batch, writerId, batchId)
       }
       .start()
+  }
 
   /** Catch the view up to the base's current version and stop. */
   def runAvailableNow(spark: SparkSession, baseRoot: String, view: LakeTable,

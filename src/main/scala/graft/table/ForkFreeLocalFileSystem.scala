@@ -9,6 +9,14 @@ import org.apache.hadoop.fs.permission.FsPermission
   * process spawns the largest off-CPU cost of a parquet write. This sets the
   * same mode bits through java.nio; a sticky bit (which java.nio's POSIX
   * permission set cannot express) falls back to the parent.
+  *
+  * Used by the table's task writers and, through
+  * [[graft.streaming.ForkFreeCheckpointFileManager]], by the streaming
+  * checkpoint (offsets, commits, source/sink logs, state store). The
+  * checkpoint had a second fork: Spark's default manager renames through
+  * `FileContext`, whose rename reads the destination's link status, and
+  * Hadoop's `FileUtil.readLink` starts `readlink`. `FileSystem.rename` here
+  * is `File.renameTo` and starts nothing.
   */
 final class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =

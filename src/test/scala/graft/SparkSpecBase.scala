@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   def tmpDir(prefix: String): String =
@@ -24,6 +26,45 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       } finally s.close() }
     Files.move(part, Paths.get(s"$dir/$name"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  /** The `.parquet` file names directly under `dir`, sorted. */
+  def parquetNames(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try { import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+        .toSeq.sorted } finally s.close()
+  }
+
+  /** Copy the named files from `from` into `to` — arrival of staged chunks. */
+  def copyIn(from: String, to: String, names: Seq[String]): Unit =
+    names.foreach(n => Files.copy(Paths.get(s"$from/$n"), Paths.get(s"$to/$n"),
+      StandardCopyOption.REPLACE_EXISTING))
+
+  /** The command lines of every OS process this JVM started while `f` ran,
+    * from an in-process JFR recording of `jdk.ProcessStart` events. Hadoop's
+    * local filesystem falls back to forking `chmod`, `readlink` and `ls` when
+    * libhadoop is absent; this is how a spec pins a path as fork-free. Not
+    * counted, because they land on whatever runs at that moment: `getconf
+    * PAGESIZE`, which Spark's executor-metrics poller runs once per JVM at
+    * its first heartbeat, and the `rm -rf` with which Spark deletes a
+    * garbage-collected session's artifact dir, after whichever GC finds it.
+    */
+  def processStarts(f: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("process-starts", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      f
+      rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command"))
+        .filterNot(c => c == "getconf PAGESIZE" ||
+          c.startsWith("rm -rf ") && c.contains("/artifacts-"))
+    } finally { rec.close(); Files.delete(dump) }
   }
 }
 

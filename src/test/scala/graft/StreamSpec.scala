@@ -3,10 +3,26 @@ package graft
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.MergeApplier
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, ForkFreeCheckpointFileManager}
 import graft.table.LakeTable
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
+import java.net.URI
 import java.nio.file.{Files, Paths, StandardCopyOption}
+
+/** The local filesystem under another scheme, so the checkpoint manager's
+  * non-`file:` branch runs without a cluster.
+  */
+class OtherSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("other:///")
+  override def getScheme: String = "other"
+}
+
+/** [[OtherSchemeFileSystem]] as a `FileContext` filesystem. */
+class OtherSchemeFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new OtherSchemeFileSystem, conf, "other", false)
 
 class StreamSpec extends SparkSpecBase {
   import Model.changeEventEncoder
@@ -179,5 +195,120 @@ class StreamSpec extends SparkSpecBase {
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) ->
         ((r.getAs[String]("text"), Option(r.getAs[String]("tool"))))).toMap
     assert(got == oracle)
+  }
+
+  private val ManagerKey = ForkFreeCheckpointFileManager.Key
+  private val ForkFree = classOf[ForkFreeCheckpointFileManager].getName
+  private val Stock = classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** Stage `numFiles` changelog chunks; returns (stash dir, sorted names). */
+  private def stash(prefix: String, n: Long, seed: Long, numFiles: Int): (String, Seq[String]) = {
+    val dir = tmpDir(s"$prefix-stash")
+    Generator.writeChangelog(spark, dir, n, numConvs = 12, turnsPerConv = 5,
+      numFiles = numFiles, seed = seed)
+    (dir, parquetNames(dir))
+  }
+
+  private def oracleOf(n: Long, seed: Long): Map[(String, Int), (String, Long)] =
+    Generator.oracleFold(Generator.events(spark, n, 12, 5, seed).as[ChangeEvent].collect().toSeq)
+      .map { case (k, e) => k -> ((e.text, e.seq)) }
+
+  test("checkpoint compatibility: a stock-manager checkpoint resumes under the fork-free one") {
+    val (dir, names) = stash("compat", 2400, 17, 6)
+    val src = tmpDir("compat-src")
+    val table = new LakeTable(tmpDir("compat-table"), numBuckets = 4)
+    val ckpt = tmpDir("compat-ckpt")
+    copyIn(dir, src, names.take(3))
+    spark.conf.set(ManagerKey, Stock)
+    try {
+      CdcStream.runAvailableNow(spark, src, table, ckpt, maxFilesPerTrigger = 1)
+      assert(spark.conf.get(ManagerKey) == Stock, "a user-set manager must be left as it is")
+    } finally spark.conf.unset(ManagerKey)
+    assert(Files.exists(Paths.get(s"$ckpt/commits/2")))
+    copyIn(dir, src, names.drop(3))
+    val starts = processStarts {
+      CdcStream.runAvailableNow(spark, src, table, ckpt, maxFilesPerTrigger = 1)
+    }
+    assert(spark.conf.get(ManagerKey) == ForkFree)
+    assert(starts.isEmpty, s"the resumed run started ${starts.size} processes")
+    assert(Files.exists(Paths.get(s"$ckpt/commits/5")))
+    assert(table.currentSnapshot().get.maxBatchId("stream") == 5L)
+    assert(finalState(table) == oracleOf(2400, 17))
+  }
+
+  test("crash between the offset write and the commit write: batch N re-runs as a ledger no-op") {
+    val (dir, names) = stash("crashwin", 2000, 23, 4)
+    val src = tmpDir("crashwin-src")
+    copyIn(dir, src, names)
+    val table = new LakeTable(tmpDir("crashwin-table"), numBuckets = 4)
+    val ckpt = tmpDir("crashwin-ckpt")
+    CdcStream.runAvailableNow(spark, src, table, ckpt, maxFilesPerTrigger = 1)
+    val last = names.size - 1
+    val commit = Paths.get(s"$ckpt/commits/$last")
+    assert(Files.exists(Paths.get(s"$ckpt/offsets/$last")) && Files.exists(commit))
+    // the state a crash after the offset write and before the commit write leaves
+    Files.delete(commit)
+    Files.deleteIfExists(commit.resolveSibling(s".$last.crc"))
+    val before = table.currentSnapshot().get
+    CdcStream.runAvailableNow(spark, src, table, ckpt, maxFilesPerTrigger = 1)
+    assert(Files.exists(commit), s"batch $last was not re-run")
+    assert(table.currentSnapshot().get.version == before.version,
+      "the re-run batch must not commit again")
+    assert(finalState(table) == oracleOf(2000, 23))
+  }
+
+  test("createAtomic without overwrite onto an existing batch file fails and keeps its bytes") {
+    val dir = tmpDir("atomic")
+    val fm = new ForkFreeCheckpointFileManager(new Path(dir), new Configuration())
+    val file = new Path(s"$dir/0")
+    val first = fm.createAtomic(file, overwriteIfPossible = false)
+    first.write("v1\n{\"batch\":0}".getBytes("UTF-8"))
+    first.close()
+    val bytes = Files.readAllBytes(Paths.get(s"$dir/0"))
+    val second = fm.createAtomic(file, overwriteIfPossible = false)
+    second.write("v1\n{\"batch\":\"other\"}".getBytes("UTF-8"))
+    intercept[FileAlreadyExistsException](second.close())
+    assert(Files.readAllBytes(Paths.get(s"$dir/0")).sameElements(bytes))
+    assert(fm.list(new Path(dir)).map(_.getPath.getName).filterNot(_.startsWith(".")).toSeq
+      == Seq("0"))
+  }
+
+  test("installing the fork-free manager leaves a user's choice of manager as it is") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    spark.conf.set(ManagerKey, Stock)
+    try {
+      ForkFreeCheckpointFileManager.install(spark)
+      assert(spark.conf.get(ManagerKey) == Stock)
+      spark.conf.unset(ManagerKey)
+      hadoopConf.set(ManagerKey, Stock)
+      ForkFreeCheckpointFileManager.install(spark)
+      assert(spark.conf.getOption(ManagerKey).isEmpty,
+        "a manager set in the Hadoop conf is a user choice")
+      hadoopConf.unset(ManagerKey)
+      ForkFreeCheckpointFileManager.install(spark)
+      assert(spark.conf.get(ManagerKey) == ForkFree)
+    } finally { hadoopConf.unset(ManagerKey); spark.conf.unset(ManagerKey) }
+  }
+
+  test("a non-file: checkpoint path gets the manager Spark would have picked") {
+    val conf = new Configuration()
+    conf.set(ManagerKey, ForkFree) // as the session's Hadoop conf carries it
+    conf.set("fs.other.impl", classOf[OtherSchemeFileSystem].getName)
+    conf.set("fs.AbstractFileSystem.other.impl", classOf[OtherSchemeFs].getName)
+    val other = new Path(s"other://${tmpDir("other-ckpt")}")
+    def stock(c: Configuration) = {
+      val without = new Configuration(c)
+      without.unset(ManagerKey)
+      CheckpointFileManager.create(other, without).getClass
+    }
+    assert(stock(conf) == classOf[FileContextBasedCheckpointFileManager])
+    assert(new ForkFreeCheckpointFileManager(other, conf).underlying.getClass == stock(conf))
+    // without a FileContext binding Spark falls back to the FileSystem manager
+    conf.unset("fs.AbstractFileSystem.other.impl")
+    assert(stock(conf) == classOf[FileSystemBasedCheckpointFileManager])
+    assert(new ForkFreeCheckpointFileManager(other, conf).underlying.getClass == stock(conf))
+    // a scheme-less path resolves against the default filesystem, file:
+    val local = new ForkFreeCheckpointFileManager(new Path(tmpDir("local-ckpt")), conf)
+    assert(local.underlying.getClass == classOf[FileSystemBasedCheckpointFileManager])
   }
 }

@@ -98,4 +98,13 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(sessions.map(_.turns).sum == 500L)
     assert(sessions.forall(s => s.firstTs <= s.lastTs))
   }
+
+  test("the gates' ts split points fail loudly on an input with no ts values") {
+    val empty = spark.range(0).select(col("id").cast("long").as("tsMicros"))
+    val nulls = spark.range(3).select(lit(null).cast("long").as("tsMicros"))
+    Seq(empty, nulls).foreach { df =>
+      val e = intercept[IllegalArgumentException](SparkEntry.checkpointWithTsSplits(df, "tsMicros"))
+      assert(e.getMessage.contains("no non-null 'tsMicros' value"), e.getMessage)
+    }
+  }
 }
