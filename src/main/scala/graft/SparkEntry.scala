@@ -5,7 +5,7 @@ import graft.functions.{Grel, Rml, Text}
 import graft.multimodal.Multimodal
 import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Similarity}
 import graft.streaming.{AnnMaintenance, ForkFreeCheckpointFileManager, Replicate}
-import graft.table.LakeTable
+import graft.table.{ForkFreeLocalFileSystem, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,10 +152,16 @@ object SparkEntry {
     * a handful of keys; state partitioning should be sized to state, not to
     * the host. Restored immediately after, so batch queries are untouched.
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", old)
+  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T =
+    withSessionConf(s, Map("spark.sql.shuffle.partitions" -> n.toString))(f)
+
+  /** Run `f` with `kv` set on the session conf; each key gets its previous
+    * value (or its absence) back afterwards. Session-wide while `f` runs.
+    */
+  private def withSessionConf[T](s: SparkSession, kv: Map[String, String])(f: => T): T = {
+    val old = kv.keys.map(k => k -> s.conf.getOption(k)).toMap
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally old.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
   /** State-store partition count for the gate streams: a quarter of the
@@ -167,12 +173,19 @@ object SparkEntry {
     sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(
       math.max(4, s.sparkContext.defaultParallelism / 4))
 
-  /** Drain a streaming frame to parquet via Trigger.AvailableNow. */
+  /** Drain a streaming frame to parquet via Trigger.AvailableNow. Spark's
+    * file sink writes its data files through the session's Hadoop conf and
+    * takes no writer options, so the drain sets
+    * [[ForkFreeLocalFileSystem.conf]] on the session for its
+    * length: `file:` data files then get their permissions through java.nio
+    * instead of a forked `chmod` each.
+    */
   private[graft] def runAvailableNowToParquet(sdf: DataFrame, outDir: String,
       ckpt: String): Unit = {
     val s = sdf.sparkSession
     ForkFreeCheckpointFileManager.install(s)
-    withStatePartitions(s, statePartitions(s)) {
+    withSessionConf(s, ForkFreeLocalFileSystem.conf +
+        ("spark.sql.shuffle.partitions" -> statePartitions(s).toString)) {
       val q = sdf.writeStream.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)

@@ -150,8 +150,9 @@ object AnnIndex {
     val c = Par.spread(corpus).select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
       .observe(obs, max(size(col("cv"))).as("dim"), count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val (dim, corpusCount) =
-      (obs.get("dim").asInstanceOf[Int], obs.get("n").asInstanceOf[Long])
+    val dim = Option(obs.get("dim")).fold(0)(_.asInstanceOf[Int])
+    require(dim > 0, s"buildIvf: empty corpus (no non-empty '$vecCol' vector to index)")
+    val corpusCount = obs.get("n").asInstanceOf[Long]
     val centroids = Similarity.trainIvfCentroids(c, nLists, iters)
     centroids.write.mode("overwrite").parquet(s"$root/centroids")
     val indexed = Similarity.assignListsCos(c, centroids, "vec_id", "cv")

@@ -1,11 +1,12 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.{LakeTable, Snapshot}
+import graft.table.{FileEntry, LakeTable, Snapshot}
+import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftbridge.ScanBridge
+import org.apache.spark.sql.graftbridge.{DriverScan, ScanBridge}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -201,7 +202,7 @@ object BucketLocal {
     * buckets.
     */
   def readFoldedFiles(spark: SparkSession, schema: StructType, numBuckets: Int,
-      files: Map[Int, Seq[graft.table.FileEntry]], spill: Boolean = false): DataFrame = {
+      files: Map[Int, Seq[FileEntry]], spill: Boolean = false): DataFrame = {
     val arr = Array.fill(numBuckets)(Array.empty[(String, Long)])
     files.foreach { case (b, fs) => arr(b) = fs.map(f => (f.path, f.bytes)).toArray }
     val (convI, turnI, tsI, seqI) = keyIdx(schema)
@@ -216,6 +217,25 @@ object BucketLocal {
         .mapPartitions(rows => foldWinners(rows, convI, turnI, tsI, seqI))
       ScanBridge.internalDf(spark, folded, schema)
     }
+  }
+
+  /** Driver-side twin of [[readFoldedFiles]] for the key-addressed lookups:
+    * read `files` on the driver ([[DriverScan]]), keep the rows whose key
+    * `key` admits, and with `fold` resolve them with the same
+    * [[foldWinners]] kernel the tasks use. The fold is per key, so filtering
+    * keys first leaves each admitted key's winner unchanged: the result is
+    * readFoldedFiles restricted to the admitted keys, in memory
+    * O(versions of those keys), not O(bucket). `filter` is the parquet form
+    * of `key`, for row-group skipping.
+    */
+  private[graft] def foldFilesOnDriver(spark: SparkSession, schema: StructType,
+      files: Map[Int, Seq[FileEntry]], fold: Boolean, filter: FilterPredicate,
+      key: (UTF8String, Int) => Boolean): Seq[InternalRow] = {
+    val (convI, turnI, tsI, seqI) = keyIdx(schema)
+    val rows = DriverScan.read(spark, schema, files.values.flatten.map(_.path).toSeq, filter,
+      r => !r.isNullAt(convI) && !r.isNullAt(turnI) &&
+        key(r.getUTF8String(convI), r.getInt(turnI)))
+    if (fold) foldWinners(rows.iterator, convI, turnI, tsI, seqI).toSeq else rows
   }
 
   private[operators] def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =

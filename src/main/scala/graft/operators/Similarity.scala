@@ -466,8 +466,9 @@ object Similarity {
     val c = Par.spread(corpus).select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
       .observe(dimObs, max(size(col("cv"))).as("dim"), count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val (dim, corpusCount) =
-      (dimObs.get("dim").asInstanceOf[Int], dimObs.get("n").asInstanceOf[Long])
+    val dim = Option(dimObs.get("dim")).fold(0)(_.asInstanceOf[Int])
+    require(dim > 0, s"buildPqModel: empty corpus (no non-empty '$vecCol' vector to quantize)")
+    val corpusCount = dimObs.get("n").asInstanceOf[Long]
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     require(trainSample > 0.0 && trainSample <= 1.0, s"trainSample: $trainSample")
     val sub = dim / m

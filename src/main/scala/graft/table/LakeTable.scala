@@ -3,9 +3,13 @@ package graft.table
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.model.Model
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DriverScan
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -974,14 +978,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     s
   }
 
-  /** Point lookup of one turn. The key hash names the ONE bucket that can
-    * hold it (the same murmur3(seed 42) + pmod as [[bucketCol]] and the
-    * merge's repartition, evaluated driver-side), so the scan opens only
-    * that bucket's files — O(table/numBuckets) I/O, not O(table) — and on a
-    * compacted (clustered) table the pushed key predicate then skips row
-    * groups within them. Delta-carrying snapshots fold that one bucket
-    * in-task first (same LWW rule), so MOR and COW lookups agree.
-    */
   /** The bucket holding key (convId, turnIdx) — the same murmur3(seed 42) +
     * pmod as [[bucketCol]] and the merge's repartition, evaluated
     * driver-side. The basis of every key-addressed physical pruning
@@ -995,6 +991,23 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     ((h % numBuckets) + numBuckets) % numBuckets
   }
 
+  /** Point lookup of one turn. The key hash names the ONE bucket that can
+    * hold it, so the read opens only that bucket's files — O(table/numBuckets)
+    * I/O, not O(table) — and within the bucket only the files whose key
+    * bounds and bloom admit the key (unless [[fileSkipping]] is off).
+    *
+    * Small reads run on the driver: when the pruned files' manifest bytes
+    * are at most Spark's `spark.sql.autoBroadcastJoinThreshold` (Spark's
+    * own bound for "small enough to collect on the driver"), they are read
+    * right here, with the key predicate pushed to parquet row-group
+    * filtering and only the key's rows kept (driver memory O(versions of
+    * the key)), and the result is a `LocalRelation`: building it and
+    * collecting it start no Spark job and create no broadcast. A larger
+    * pruned set, or a threshold of -1, takes the Spark path: a parquet scan
+    * with the key filter pushed down. Delta-carrying snapshots fold the
+    * key's versions first on either path, with the same LWW kernel
+    * (`BucketLocal.foldWinners`), so MOR and COW lookups agree.
+    */
   def lookupTurn(spark: SparkSession, convId: String, turnIdx: Int): DataFrame = {
     currentSnapshot() match {
       case None => spark.emptyDataFrame
@@ -1015,17 +1028,24 @@ final class LakeTable(val root: String, val numBuckets: Int) {
           bk -> (if (fileSkipping)
             fs.filter(_.stats.forall(_.mightContain(convId, turnIdx))) else fs)
         }.filter(_._2.nonEmpty)
-        val base = readPrunedFiles(spark, s, pruned)
+        val conv = UTF8String.fromString(convId)
+        val base = readPrunedKeys(spark, s, pruned,
+          FilterApi.and(convIs(convId), FilterApi.eq(turnCol, Int.box(turnIdx))),
+          (c, t) => t == turnIdx && c == conv)
         base.filter(col("conv_id") === convId && col("turn_idx") === turnIdx &&
             col("op") =!= Model.OpDelete)
           .drop("op")
     }
   }
 
-  /** Read an explicitly pruned per-bucket file subset of a pinned snapshot —
-    * the shared tail of the key-addressed lookups. MOR snapshots fold
-    * bucket-locally over exactly these files (spill policy applies); COW
-    * snapshots read them as a plain pushdown-friendly parquet scan.
+  private def turnCol = FilterApi.intColumn("turn_idx")
+  private def convIs(convId: String) =
+    FilterApi.eq(FilterApi.binaryColumn("conv_id"), Binary.fromString(convId))
+
+  /** Read an explicitly pruned per-bucket file subset of a pinned snapshot.
+    * MOR snapshots fold bucket-locally over exactly these files (spill
+    * policy applies); COW snapshots read them as a plain pushdown-friendly
+    * parquet scan.
     */
   private def readPrunedFiles(spark: SparkSession, s: Snapshot,
       pruned: Map[Int, Seq[FileEntry]]): DataFrame = {
@@ -1038,6 +1058,24 @@ final class LakeTable(val root: String, val numBuckets: Int) {
       spark.read.schema(s.schema).parquet(pruned.values.flatten.map(_.path).toSeq: _*)
   }
 
+  /** The shared tail of the key-addressed lookups: the pruned files' rows
+    * (folded on a delta-carrying snapshot), of which the caller keeps the
+    * keys `key` admits. Pruned files whose manifest bytes total at most
+    * `spark.sql.autoBroadcastJoinThreshold` are read on the driver into a
+    * `LocalRelation` holding only the admitted keys' rows (`filter`, the
+    * parquet form of `key`, skips row groups); a larger set, or a threshold
+    * of -1, is [[readPrunedFiles]].
+    */
+  private def readPrunedKeys(spark: SparkSession, s: Snapshot,
+      pruned: Map[Int, Seq[FileEntry]], filter: FilterPredicate,
+      key: (UTF8String, Int) => Boolean): DataFrame = {
+    val bound = DriverScan.collectBound(spark)
+    if (bound >= 0 && pruned.valuesIterator.flatten.map(_.bytes).sum <= bound)
+      DriverScan.localDf(spark, s.schema, graft.operators.BucketLocal.foldFilesOnDriver(
+        spark, s.schema, pruned, s.morDeltas, filter, key))
+    else readPrunedFiles(spark, s, pruned)
+  }
+
   /** Fetch a whole conversation's live turns — THE read pattern of a
     * transcript store. The turns of one conversation spread across buckets
     * (the bucket key is (conv_id, turn_idx), chosen so hot conversations
@@ -1045,10 +1083,13 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     * bucket SET is driver-computable: hash each candidate turn id until the
     * set saturates (coupon-collector: ~N·lnN turns fill all N buckets, so a
     * huge bound degrades gracefully to a full-bucket read, never an error).
-    * The scan opens only those buckets' files; the pushed conv_id predicate
-    * then skips row groups within them (tight after key-clustered
-    * compaction). Turns at or beyond the bound are EXCLUDED by predicate,
-    * not silently missed — the result is exact for the declared range.
+    * The read opens only those buckets' files whose conv bounds and bloom
+    * admit the conversation; the conv_id predicate then skips row groups
+    * within them (tight after key-clustered compaction). Turns at or beyond
+    * the bound are EXCLUDED by predicate, not silently missed — the result
+    * is exact for the declared range. Small reads run on the driver with no
+    * Spark job, exactly as in [[lookupTurn]], holding O(versions of the
+    * conversation's turns).
     */
   def lookupConversation(spark: SparkSession, convId: String,
       maxTurnExclusive: Int = 4096): DataFrame = {
@@ -1071,7 +1112,10 @@ final class LakeTable(val root: String, val numBuckets: Int) {
           bk -> (if (fileSkipping)
             fs.filter(_.stats.forall(_.mightContainConv(convId))) else fs)
         }.filter(_._2.nonEmpty)
-        val base = readPrunedFiles(spark, s, pruned)
+        val conv = UTF8String.fromString(convId)
+        val base = readPrunedKeys(spark, s, pruned,
+          FilterApi.and(convIs(convId), FilterApi.lt(turnCol, Int.box(maxTurnExclusive))),
+          (c, t) => t < maxTurnExclusive && c == conv)
         base.filter(col("conv_id") === convId &&
             col("turn_idx") < maxTurnExclusive &&
             col("op") =!= Model.OpDelete)

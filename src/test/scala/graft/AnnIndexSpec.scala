@@ -537,4 +537,19 @@ class AnnIndexSpec extends SparkSpecBase {
       assert(ranks == (1L to ranks.length).toSeq)
     }
   }
+
+  test("an empty corpus fails IVF and IVF-PQ builds with a named message, not dim = 0") {
+    val empty = clustered.filter(lit(false))
+    val zeroDim = clustered.select($"vec_id", array().cast("array<float>").as("embedding"))
+    Seq(empty, zeroDim).foreach { corpus =>
+      val ivf = intercept[IllegalArgumentException] {
+        AnnIndex.buildIvf(corpus, tmpDir("ann-empty-ivf"), nLists = 4, iters = 1)
+      }
+      assert(ivf.getMessage.contains("buildIvf: empty corpus"), ivf.getMessage)
+      val pq = intercept[IllegalArgumentException] {
+        AnnIndex.buildIvfPq(corpus, tmpDir("ann-empty-pq"), nLists = 4, m = 8, codes = 16)
+      }
+      assert(pq.getMessage.contains("buildPqModel: empty corpus"), pq.getMessage)
+    }
+  }
 }

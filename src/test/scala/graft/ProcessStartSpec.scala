@@ -4,7 +4,7 @@ import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.{IncrementalAgg, MergeApplier}
 import graft.streaming.{CdcStream, StreamingView, WindowedStats}
-import graft.table.LakeTable
+import graft.table.{ForkFreeLocalFileSystem, LakeTable}
 import org.apache.spark.sql.functions.col
 
 /** The engine's write and stream paths start no OS process. Without
@@ -55,13 +55,12 @@ class ProcessStartSpec extends SparkSpecBase {
     }
   }
 
-  test("a stateful gate drain forks only for its sink's data files; a view drain not at all") {
+  test("a stateful gate drain and a view drain start no process") {
     // Windowed counts through the gates' drain: offsets, commits, the file
-    // source log, the state store and the parquet sink's log. The sink's
-    // data files are written through the session's own Hadoop conf (Spark's
-    // file sink takes no writer options), so their chmods are the only
-    // process starts left. ts-ordered chunks: no event is late, so every
-    // emitted window's count is the batch count.
+    // source log, the state store, the parquet sink's log and its data files
+    // (written through the session's Hadoop conf, which the drain points at
+    // the fork-free filesystem while it runs). ts-ordered chunks: no event
+    // is late, so every emitted window's count is the batch count.
     val evDf = Generator.events(spark, 2000, 10, 5, seed = 23).select("conv_id", "op", "ts")
     val schema = evDf.schema
     val events = evDf.collect().sortBy(_.getTimestamp(2).getTime)
@@ -81,10 +80,10 @@ class ProcessStartSpec extends SparkSpecBase {
     SparkEntry.runAvailableNowToParquet(agg, out, ckpt)
     copyIn(stage, src, chunks.drop(2))
     val gateStarts = processStarts { SparkEntry.runAvailableNowToParquet(agg, out, ckpt) }
-    val notSinkData = gateStarts.filterNot(c => c.startsWith(s"chmod 0644 $out/") &&
-      !c.contains("/_spark_metadata/"))
-    assert(notSinkData.isEmpty, s"stateful gate drain started ${notSinkData.size} processes " +
-      s"other than the sink's data-file chmods: ${summary(notSinkData)}: $notSinkData")
+    assert(gateStarts.isEmpty, s"stateful gate drain started ${gateStarts.size} processes: " +
+      s"${summary(gateStarts)}: $gateStarts")
+    // the drain's scoped keys are gone again
+    ForkFreeLocalFileSystem.conf.keys.foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
     val batch = WindowedStats.opCountsPerWindow(spark.read.parquet(stage))
       .select(col("window.start").as("window_start"), col("op"), col("n_events"))
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap

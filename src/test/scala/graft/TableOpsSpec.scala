@@ -3,6 +3,7 @@ package graft
 import graft.model.{ChangeEvent, Model}
 import graft.operators.MergeApplier
 import graft.table.LakeTable
+import org.apache.spark.sql.graftbridge.DriverScan
 
 import java.sql.Timestamp
 
@@ -114,9 +115,14 @@ class TableOpsSpec extends SparkSpecBase {
     val row = table.lookupTurn(spark, "c5", 1).collect()
     assert(row.map(r => (r.getAs[String]("conv_id"), r.getAs[String]("text"))).toSeq ==
       Seq(("c5", "t5")))
-    // key predicate reaches the parquet scan (row-group skipping on a
+    // Spark path (autoBroadcastJoinThreshold -1 turns the driver read off):
+    // the key predicate reaches the parquet scan (row-group skipping on a
     // clustered table)
-    val plan = table.lookupTurn(spark, "c5", 1).queryExecution.executedPlan.toString
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    val plan = try table.lookupTurn(spark, "c5", 1).queryExecution.executedPlan.toString
+      finally old.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(conv_id,c5)"), plan)
 
     // physical pruning: with every OTHER bucket's files gone, the lookup
@@ -131,6 +137,37 @@ class TableOpsSpec extends SparkSpecBase {
     intercept[Exception] {
       table.lookupTurn(spark, other._1, other._2).collect()
     }
+  }
+
+  test("lookupTurn: driver path pushes the key predicate to parquet row-group filtering") {
+    // one bucket, unique conv per row, small row groups: the key-ordered
+    // file has many row groups and exactly one whose conv_id range admits
+    // the key
+    val table = new LakeTable(tmpDir("ops-lookup-rg"), numBuckets = 1)
+    val base = (0 until 3000).map(i =>
+      ev(f"k$i%05d", 0, s"text $i", "2025-01-01 00:00:00", "insert", i.toLong))
+    spark.conf.set("parquet.block.size", "8192")
+    try MergeApplier.applyBatch(spark, table, spark.createDataset(base).toDF(), "w", 0L)
+    finally spark.conf.unset("parquet.block.size")
+    val files = table.resolveFiles(table.currentSnapshot().get).values.flatten.toSeq
+    assert(files.size == 1)
+    val groups = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(files.head.path), spark.sparkContext.hadoopConfiguration))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups > 4, s"test needs several row groups, got $groups")
+    val read = new java.util.concurrent.atomic.AtomicInteger()
+    DriverScan.afterRowGroup = () => read.incrementAndGet()
+    try {
+      assert(table.lookupTurn(spark, "k01234", 0).collect().map(_.getAs[String]("text"))
+        .toSeq == Seq("text 1234"))
+      assert(read.get == 1, s"read ${read.get} of $groups row groups")
+      read.set(0)
+      assert(table.lookupConversation(spark, "k02345").collect().length == 1)
+      assert(read.get == 1, s"read ${read.get} of $groups row groups")
+    } finally DriverScan.afterRowGroup = () => ()
   }
 
   test("lookupTurn: MOR snapshot folds the one bucket; tombstoned key reads empty") {
