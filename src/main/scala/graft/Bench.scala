@@ -603,7 +603,7 @@ object Bench {
       val (n, sec) = timed { lastMorTable.read(spark).count() }
       spillFoldRows = n; sec
     }
-    require(!graft.operators.BucketLocal.lastFoldWasSpill,
+    require(graft.operators.BucketLocal.lastSpilled.isEmpty,
       "hash-fold leg unexpectedly took the spill branch")
     lastMorTable.spillFoldBytes = 0L
     val spillFoldS = (1 to 3).map { _ =>
@@ -612,7 +612,7 @@ object Bench {
         s"spill fold disagrees with hash fold: $n vs $spillFoldRows rows")
       sec
     }
-    require(graft.operators.BucketLocal.lastFoldWasSpill,
+    require(graft.operators.BucketLocal.lastSpilled.nonEmpty,
       "spill-fold leg did not take the spill branch")
     lastMorTable.spillFoldBytes = savedSpillBytes
     // ---- SELECTIVE compaction: fold 4 of 32 buckets first — the

@@ -46,6 +46,21 @@ object Model {
   val OpUpdate = "update"
   val OpDelete = "delete"
 
+  /** The LWW version order, the one rule every fold applies: a version
+    * `(ts, seq)` supersedes the incumbent `(curTs, curSeq)` iff it is
+    * STRICTLY greater, ts first. Callers map a null ts or seq to
+    * `Long.MinValue` (lowest), so a version with no event time never beats
+    * one that has it. On a full tie the incumbent keeps its place. Primitive
+    * longs only: this is the inner loop of every bucket fold.
+    */
+  def supersedes(ts: Long, seq: Long, curTs: Long, curSeq: Long): Boolean =
+    ts > curTs || (ts == curTs && seq > curSeq)
+
+  /** A typed event time as the micros the table stores; null is lowest. */
+  def tsMicros(ts: java.sql.Timestamp): Long =
+    if (ts == null) Long.MinValue
+    else org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)
+
   /** Canonical changelog schema (v1 = without `tool`; v2 adds it additively). */
   val changeEventSchemaV1: StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = false),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Model
-import graft.table.LakeTable
+import graft.table.{FileEntry, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
@@ -85,77 +85,62 @@ object ChangeFeed {
     val schema = sTo.schema
     val filesFrom = table.resolveFiles(sFrom)
     val filesTo = table.resolveFiles(sTo)
-    // identical file list ⇒ identical bucket contents ⇒ skip without a
-    // read: a COW rewrite REPLACES the list, a MOR append EXTENDS it, so
-    // any change to the bucket changes the list
-    val changed = (0 until n).filter { b =>
-      filesFrom.getOrElse(b, Seq.empty) != filesTo.getOrElse(b, Seq.empty)
-    }.toSet
-    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
-    val opI = schema.fieldIndex("op")
+    val (changed, spill) = planDiff(n, filesFrom, filesTo, table.spillFoldBytes)
+    def changedFiles(fs: Map[Int, Seq[FileEntry]]) = fs.filter { case (b, _) => changed.contains(b) }
     val fromRdd = ScanBridge.bucketFilesRdd(spark, schema,
-      BucketLocal.bucketArray(table, sFrom, Some(changed)))
+      BucketLocal.bucketArray(n, changedFiles(filesFrom)))
     val toRdd = ScanBridge.bucketFilesRdd(spark, schema,
-      BucketLocal.bucketArray(table, sTo, Some(changed)))
-    // oversized-bucket degradation, same policy (and threshold) as every
-    // fold path: per bucket, a side whose manifest bytes exceed
-    // spillFoldBytes diffs via spilling sort + streaming fold + merge-diff
-    // (O(1) task rows) instead of the two whole-bucket hash maps
-    def bytesOf(fs: Map[Int, Seq[graft.table.FileEntry]]): Array[Long] = {
-      val a = new Array[Long](n)
-      fs.foreach { case (b, l) => a(b) = l.iterator.map(_.bytes).sum }
-      a
-    }
-    val fromBytes = bytesOf(filesFrom)
-    val toBytes = bytesOf(filesTo)
-    val spillBytes = table.spillFoldBytes
-    lastDiffWasSpill = changed.exists(b =>
-      math.max(fromBytes(b), toBytes(b)) > spillBytes)
+      BucketLocal.bucketArray(n, changedFiles(filesTo)))
     val preImages = withUpdatePreImages
     val diffed = fromRdd.zipPartitions(toRdd, preservesPartitioning = false) {
       (f, t) =>
         val b = org.apache.spark.TaskContext.getPartitionId()
-        diffPartitionAuto(schema, convI, turnI, tsI, seqI, opI, preImages,
-          deleteTombstones = false, spillBytes,
-          math.max(fromBytes(b), toBytes(b)))(f, t)
+        diffPartitionAuto(schema, preImages, deleteTombstones = false, spill(b))(f, t)
     }
     val outSchema = StructType(schema.fields :+
       StructField(ChangeTypeCol, StringType, nullable = false))
     ScanBridge.internalDf(spark, diffed, outSchema).drop("op")
   }
 
-  /** Test observability only (driver-side mirror of the per-bucket decision
-    * the tasks make): whether the last [[changesBetween]] had any bucket on
-    * the spill path.
+  /** The buckets a diff between two endpoint file maps reads, and which of
+    * them it sends to the sort. Identical file list ⇒ identical bucket
+    * contents ⇒ skip without a read: a COW rewrite REPLACES the list, a MOR
+    * append EXTENDS it, so any change to the bucket changes the list.
+    * Oversized-bucket degradation, same policy (and threshold) as every
+    * fold path: a changed bucket whose larger side exceeds `spillFoldBytes`
+    * diffs via spilling sort + streaming fold + merge-diff (O(1) task rows)
+    * instead of the two whole-bucket hash maps.
     */
-  @volatile private[graft] var lastDiffWasSpill: Boolean = false
+  private[graft] def planDiff(numBuckets: Int, from: Map[Int, Seq[FileEntry]],
+      to: Map[Int, Seq[FileEntry]], spillFoldBytes: Long): (Seq[Int], Set[Int]) = {
+    def files(m: Map[Int, Seq[FileEntry]], b: Int) = m.getOrElse(b, Seq.empty)
+    val changed = (0 until numBuckets).filter(b => files(from, b) != files(to, b))
+    def bytes(m: Map[Int, Seq[FileEntry]], b: Int) = files(m, b).iterator.map(_.bytes).sum
+    (changed, BucketLocal.spillPlan(
+      changed.map(b => b -> math.max(bytes(from, b), bytes(to, b))), spillFoldBytes))
+  }
 
-  /** Per-bucket policy switch between [[diffPartition]] (two in-task hash
-    * maps — fast while the bucket fits the executor-sized contract) and the
-    * spill-safe sorted merge-diff (each side: SortBridge's spilling sort →
-    * O(1)-row streaming fold; then [[diffSortedWinners]] holds one row per
-    * side). The threshold is the SAME `spillFoldBytes` every other fold path
-    * honors, so the feed — and the incremental view refresh riding on it —
-    * keeps working on exactly the oversized bucket the degradation contract
-    * exists for, instead of OOMing at 2× the bucket-sized memory unit.
+  /** Per-bucket switch between [[diffPartition]] (two in-task hash maps —
+    * fast while the bucket fits the executor-sized contract) and, for a
+    * bucket `spill` marks ([[BucketLocal.spillPlan]] over the SAME
+    * `spillFoldBytes` every fold path honors), the spill-safe sorted
+    * merge-diff: each side through [[BucketLocal.foldBucket]]'s sort fold,
+    * then [[diffSortedWinners]] holds one row per side. The feed — and the
+    * incremental view refresh riding on it — keeps working on exactly the
+    * oversized bucket the degradation contract exists for, instead of
+    * OOMing at 2× the bucket-sized memory unit.
     */
-  private[graft] def diffPartitionAuto(schema: StructType,
-      convI: Int, turnI: Int, tsI: Int, seqI: Int, opI: Int,
-      preImages: Boolean, deleteTombstones: Boolean,
-      spillBytes: Long, bucketBytes: Long)(
-      from: Iterator[InternalRow], to: Iterator[InternalRow]): Iterator[InternalRow] =
+  private[graft] def diffPartitionAuto(schema: StructType, preImages: Boolean,
+      deleteTombstones: Boolean, spill: Boolean)(
+      from: Iterator[InternalRow], to: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
+    val opI = schema.fieldIndex("op")
     if (!from.hasNext && !to.hasNext) Iterator.empty // skipped bucket: no sorters
-    else if (bucketBytes <= spillBytes)
+    else if (!spill)
       diffPartition(convI, turnI, tsI, seqI, opI, preImages, deleteTombstones)(from, to)
-    else {
-      val sortCols = Seq("conv_id", "turn_idx", "ts", "seq")
-      def winners(rows: Iterator[InternalRow]): Iterator[InternalRow] =
-        BucketLocal.foldWinnersSorted(
-          org.apache.spark.sql.graftbridge.SortBridge.sortedAscNullsFirst(
-            schema, sortCols, rows), convI, turnI)
-      diffSortedWinners(convI, turnI, tsI, seqI, opI, preImages,
-        deleteTombstones)(winners(from), winners(to))
-    }
+    else diffSortedWinners(convI, turnI, tsI, seqI, opI, preImages, deleteTombstones)(
+      BucketLocal.foldBucket(schema, from, spill), BucketLocal.foldBucket(schema, to, spill))
+  }
 
   /** In-task diff of one bucket's two folded states. Memory: the two winner
     * maps — bounded by the bucket's contents at each version, the same unit

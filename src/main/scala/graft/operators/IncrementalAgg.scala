@@ -178,7 +178,8 @@ object IncrementalAgg {
           val buckets = affected.map(c => view.bucketFor(c, 0)).toSet
           // same snapshot-pinned pruned read as lookupTurn, for a key SET
           val pruned =
-            if (s.morDeltas) BucketLocal.readFoldedAuto(spark, view, s, Some(buckets))
+            if (s.morDeltas)
+              BucketLocal.readFolded(spark, view, s, view.resolveFiles(s, Some(buckets)))
             else view.readRaw(spark, Some(buckets), asOfVersion = Some(s.version))
           pruned.filter(col("op") =!= Model.OpDelete)
             .filter(col("conv_id").isInCollection(affected))

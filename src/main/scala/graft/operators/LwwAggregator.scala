@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.ChangeEvent
+import graft.model.{ChangeEvent, Model}
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -15,12 +15,14 @@ import org.apache.spark.sql.expressions.Aggregator
   */
 object LwwAggregator extends Aggregator[ChangeEvent, ChangeEvent, ChangeEvent] {
 
-  private def newer(a: ChangeEvent, b: ChangeEvent): ChangeEvent = {
-    if (a == null) return b
-    if (b == null) return a
-    val c = a.ts.compareTo(b.ts)
-    if (c > 0 || (c == 0 && a.seq >= b.seq)) a else b
-  }
+  /** The later of the incumbent `cur` and `e` by [[Model.supersedes]], a
+    * null ts lowest; on a full (ts, seq) tie `cur` stays.
+    */
+  def newer(cur: ChangeEvent, e: ChangeEvent): ChangeEvent =
+    if (cur == null) e
+    else if (e == null) cur
+    else if (Model.supersedes(Model.tsMicros(e.ts), e.seq, Model.tsMicros(cur.ts), cur.seq)) e
+    else cur
 
   override def zero: ChangeEvent = null
   override def reduce(buf: ChangeEvent, e: ChangeEvent): ChangeEvent = newer(buf, e)

@@ -195,7 +195,7 @@ object MergeApplier {
     // Each task returns its file's manifest entry and counts; collect()
     // carries successful attempts only, so retries and speculation cannot
     // inflate them, and the commit needs no listing and no footer reads.
-    val files = snap.map(BucketLocal.bucketArray(table, _))
+    val files = snap.map(s => BucketLocal.bucketArray(s.numBuckets, table.resolveFiles(s)))
       .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)]))
     val batchRdd = ScanBridge.toInternalRdd(
       aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*))
@@ -414,7 +414,7 @@ object MergeApplier {
     // fold deltas first if present (the rewrite must land key-unique rows);
     // COW state reads raw — tombstones included on both paths
     val state =
-      if (snap.morDeltas) BucketLocal.readFoldedAuto(spark, table, snap)
+      if (snap.morDeltas) BucketLocal.readFolded(spark, table, snap, table.resolveFiles(snap))
       else table.readRaw(spark)
     // same alignment trick as the merge: repartition(newN, key) partition i
     // holds exactly the NEW bucket i's rows, so its task key-orders them and
@@ -460,8 +460,10 @@ object MergeApplier {
       table.checkBuckets(snap)
       // Bucket-local compaction: fold + expire inside each bucket's own task —
       // ZERO shuffles; compaction cost is exactly read + write (BucketLocal).
-      // With `targets`, read + write only THOSE buckets (the others' tasks
-      // open no file).
+      // Each bucket decides its own fold from its manifest bytes: an
+      // oversized one takes the disk-backed sort instead of OOMing the hash
+      // fold. With `targets`, read + write only THOSE buckets (the others'
+      // tasks open no file).
       val claimed = snap.manifests.flatMap(_.buckets).toSet
       // a target set covering every claimed bucket IS a full compaction —
       // take the list-resetting branch so the manifest list stays bounded
@@ -469,17 +471,12 @@ object MergeApplier {
       if (targets.nonEmpty && sel.exists(_.isEmpty)) return 0L // nothing to fold
       val version = snap.version + 1
       val outDir = table.attemptDir(version, "compact", snap.version)
-      // spill policy (manifest metadata only): an oversized bucket compacts
-      // through the disk-backed sort instead of OOMing the hash fold —
-      // compaction is exactly how the operator SHRINKS such a bucket, so it
-      // is the one pass that must survive it
-      val spill = table.maxBucketBytes(snap, sel) > table.spillFoldBytes
       // each bucket's task writes its compacted rows through the shared task
       // writer: key bounds + conv bloom (+ the opt-in token bloom) and row
       // counts come back with the result — no stat-less long-lived files,
       // no listing, no footer reads
       val written = WrittenFile.byBucket(BucketFileWriter.writeAll(
-        BucketLocal.compactRows(spark, table, snap, watermarkMicros, spill, sel),
+        BucketLocal.compactRows(spark, table, snap, watermarkMicros, sel),
         WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString, textIndex))
       val rows = written.rows
       // Full compaction replaces every bucket, resetting the manifest list

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{BucketLocal, ChangeFeed}
+import graft.operators.ChangeFeed
 import graft.table.{FileEntry, LakeTable}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -46,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     bucket whose manifest file list is identical at both endpoint
   *     versions is skipped without opening a file, so a batch costs
   *     O(touched buckets), not O(table). Readers run [[ChangeFeed
-  *     .diffPartition]] (the batch feed's in-task fold+diff) over the same
+  *     .diffPartitionAuto]] (the batch feed's in-task fold+diff) over the same
   *     parquet reader the merge scan uses: ZERO exchanges at any table size.
   *   - `deleteTombstones=true` (the default here, unlike the batch feed's
   *     pre-image contract) emits deletes with the TOMBSTONE's (ts, seq) so a
@@ -109,9 +109,12 @@ private[streaming] object LakeCdf {
   /** One InputPartition per bucket whose manifest file list differs between
     * the endpoint versions — metadata-only planning, O(touched), no file
     * opened on the driver. fromVersion ≤ 0 = empty baseline (bootstrap).
+    * Oversized-bucket degradation, same contract as the batch feed: a
+    * bucket whose larger side exceeds `spillFoldBytes` diffs via spilling
+    * sort + streaming merge-diff instead of two hash maps.
     */
-  def planPartitions(table: LakeTable, fromVersion: Long, toVersion: Long)
-      : Array[InputPartition] = {
+  def planPartitions(table: LakeTable, fromVersion: Long, toVersion: Long,
+      spillFoldBytes: Long): Array[InputPartition] = {
     if (fromVersion >= toVersion) return Array.empty
     def snap(v: Long) = table.snapshotAt(v).getOrElse(throw new IllegalStateException(
       s"lake-cdf: snapshot v$v is gone (vacuumed?); re-bootstrap the stream"))
@@ -128,10 +131,10 @@ private[streaming] object LakeCdf {
     val filesTo = table.resolveFiles(sTo)
     def arr(m: Map[Int, Seq[FileEntry]], b: Int): Array[(String, Long)] =
       m.getOrElse(b, Seq.empty).map(f => (f.path, f.bytes)).toArray
-    (0 until sTo.numBuckets).iterator
-      .filter(b => filesFrom.getOrElse(b, Seq.empty) != filesTo.getOrElse(b, Seq.empty))
-      .map(b => CdfInputPartition(b, arr(filesFrom, b), arr(filesTo, b)): InputPartition)
-      .toArray
+    val (changed, spill) =
+      ChangeFeed.planDiff(sTo.numBuckets, filesFrom, filesTo, spillFoldBytes)
+    changed.toArray.map(b =>
+      CdfInputPartition(b, arr(filesFrom, b), arr(filesTo, b), spill(b)): InputPartition)
   }
 }
 
@@ -167,19 +170,17 @@ private final class LakeCdfScan(root: String, tableSchema: StructType,
     // change classification only reads key/version/op)
     val needed = LakeCdf.FoldCols ++ required.fieldNames
     val readSchema = StructType(tableSchema.fields.filter(f => needed.contains(f.name)))
-    // oversized-bucket degradation, same contract (and conf override) as the
-    // lake DSv2 reader: a bucket side whose bytes exceed the threshold diffs
-    // via spilling sort + streaming merge-diff instead of two hash maps
-    val spillBytes = Option(SparkSession.active.conf
-        .get("graft.lake.spillFoldBytes", null))
-      .map(_.toLong).getOrElse(LakeTable.open(root).spillFoldBytes)
     new CdfReaderFactory(
       ScanBridge.parquetReader(SparkSession.active, readSchema),
-      readSchema, required, preImages, deleteTombstones, spillBytes)
+      readSchema, required, preImages, deleteTombstones)
   }
 
+  // the spill threshold, with the lake DSv2 reader's session-conf override
+  private lazy val spillFoldBytes: Long =
+    LakeTable.open(root).sessionSpillFoldBytes(SparkSession.active)
+
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new LakeCdfStream(root, options, readerFactory(), tableSchema)
+    new LakeCdfStream(root, options, readerFactory(), tableSchema, spillFoldBytes)
 
   /** The same feed as a one-shot batch scan:
     * `spark.read.format("lake-cdf").option("fromVersion", v).load()` —
@@ -193,7 +194,7 @@ private final class LakeCdfScan(root: String, tableSchema: StructType,
     private val to = options.getLong("toVersion",
       table.currentSnapshot().map(_.version).getOrElse(0L))
     override def planInputPartitions(): Array[InputPartition] =
-      LakeCdf.planPartitions(table, from, to)
+      LakeCdf.planPartitions(table, from, to, spillFoldBytes)
     override def createReaderFactory(): PartitionReaderFactory = readerFactory()
   }
 }
@@ -206,7 +207,8 @@ private[streaming] final case class CdfOffset(version: Long) extends Offset {
 }
 
 private final class LakeCdfStream(root: String, options: CaseInsensitiveStringMap,
-    factory: PartitionReaderFactory, pinnedSchema: StructType) extends MicroBatchStream
+    factory: PartitionReaderFactory, pinnedSchema: StructType,
+    spillFoldBytes: Long) extends MicroBatchStream
     with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private val startingVersion = Option(options.get("startingVersion")).getOrElse("earliest")
@@ -262,7 +264,7 @@ private final class LakeCdfStream(root: String, options: CaseInsensitiveStringMa
       }
     }
     val parts = LakeCdf.planPartitions(table,
-      start.asInstanceOf[CdfOffset].version, endV)
+      start.asInstanceOf[CdfOffset].version, endV, spillFoldBytes)
     lastChangedBuckets = parts.length
     parts
   }
@@ -288,9 +290,11 @@ private final class LakeCdfStream(root: String, options: CaseInsensitiveStringMa
   override def stop(): Unit = ()
 }
 
-/** One changed bucket: both endpoint versions' file lists for that bucket. */
+/** One changed bucket: both endpoint versions' file lists for that bucket,
+  * and whether it diffs through the sort fold.
+  */
 private final case class CdfInputPartition(bucket: Int,
-    fromFiles: Array[(String, Long)], toFiles: Array[(String, Long)])
+    fromFiles: Array[(String, Long)], toFiles: Array[(String, Long)], spill: Boolean)
   extends InputPartition
 
 /** Serialized to executors: the merge scan's own parquet reader function
@@ -302,13 +306,10 @@ private final class CdfReaderFactory(
     readSchema: StructType,
     outputSchema: StructType,
     preImages: Boolean,
-    deleteTombstones: Boolean,
-    spillFoldBytes: Long) extends PartitionReaderFactory {
+    deleteTombstones: Boolean) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdfInputPartition]
-    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(readSchema)
-    val opI = readSchema.fieldIndex("op")
     def files(fs: Array[(String, Long)]): Iterator[InternalRow] =
       fs.iterator.flatMap { case (path, size) =>
         reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
@@ -326,11 +327,8 @@ private final class CdfReaderFactory(
           BoundReference(i, readSchema.fields(i).dataType, readSchema.fields(i).nullable)
         }
       })
-    def bytesOf(fs: Array[(String, Long)]): Long = fs.iterator.map(_._2).sum
-    val diffed = ChangeFeed.diffPartitionAuto(readSchema, convI, turnI, tsI,
-      seqI, opI, preImages, deleteTombstones, spillFoldBytes,
-      math.max(bytesOf(p.fromFiles), bytesOf(p.toFiles)))(
-      files(p.fromFiles), files(p.toFiles))
+    val diffed = ChangeFeed.diffPartitionAuto(readSchema, preImages, deleteTombstones,
+      p.spill)(files(p.fromFiles), files(p.toFiles))
 
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.{ChangeEvent, Model, Turn}
+import graft.operators.LwwAggregator
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -35,13 +36,9 @@ object StatefulLww {
       .flatMapGroupsWithState[KeyState, Turn](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (_, batch, state: GroupState[KeyState]) =>
-          val newer = (a: ChangeEvent, b: ChangeEvent) => {
-            val c = a.ts.compareTo(b.ts)
-            if (c > 0 || (c == 0 && a.seq >= b.seq)) a else b
-          }
-          val incoming = batch.reduce(newer(_, _))
+          val incoming = batch.reduce(LwwAggregator.newer(_, _))
           val prev = state.getOption.map(_.e)
-          val winner = prev.map(newer(_, incoming)).getOrElse(incoming)
+          val winner = prev.map(LwwAggregator.newer(_, incoming)).getOrElse(incoming)
           val changed = !prev.contains(winner)
           state.update(KeyState(winner))
           if (changed && winner.op != Model.OpDelete)

@@ -142,7 +142,8 @@ private final class LakeReplaceDataWrite(
         val deleteOp = UTF8String.fromString(Model.OpDelete)
         BucketFileWriter.writeAll(
           ScanBridge.bucketFilesRdd(spark, snap.schema,
-              graft.operators.BucketLocal.bucketArray(table, snap, Some(replaced)))
+              graft.operators.BucketLocal.bucketArray(snap.numBuckets,
+                table.resolveFiles(snap, Some(replaced))))
             .filter(r => !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)),
           WriteBridge.parquetWriterFactory(spark, snap.schema),
           outDir.resolve("tombstones").toString)

@@ -703,10 +703,17 @@ private[table] final class LakeSourceScan(table: LakeTable, snap: Snapshot,
         if (snap.morDeltas) { if (fs.exists(admits)) fs else Seq.empty }
         else fs.filter(admits)
     }
-    plannedBuckets.toArray.map { b =>
-      LakeInputPartition(b,
-        tsPruned(files.getOrElse(b, Seq.empty))
-          .map(f => (f.path, f.bytes)).toArray): InputPartition
+    val planned = plannedBuckets.map(b => b -> tsPruned(files.getOrElse(b, Seq.empty)))
+    // oversized-bucket degradation, same contract as the programmatic fold
+    // paths: a delta-carrying bucket whose file bytes exceed the threshold
+    // folds via spilling sort + O(1)-row streaming fold instead of the
+    // whole-bucket hash map
+    val spill =
+      if (snap.morDeltas)
+        BucketLocal.spillPlan(planned.toMap, table.sessionSpillFoldBytes(SparkSession.active))
+      else Set.empty[Int]
+    planned.toArray.map { case (b, fs) =>
+      LakeInputPartition(b, fs.map(f => (f.path, f.bytes)).toArray, spill(b)): InputPartition
     }
   }
 
@@ -719,21 +726,14 @@ private[table] final class LakeSourceScan(table: LakeTable, snap: Snapshot,
     // _bucket is not a stored column: it is the partition's identity,
     // injected per-partition by the reader factory
     val readSchema = StructType(snap.schema.fields.filter(f => needed.contains(f.name)))
-    // oversized-bucket degradation policy, same contract as the programmatic
-    // fold paths (LakeTable.spillFoldBytes): a bucket whose file bytes exceed
-    // the threshold folds via spilling sort + O(1)-row streaming fold instead
-    // of the whole-bucket hash map. Session conf overrides the handle default
-    // (the DSv2 path opens its own handle, so the var is not reachable).
-    val spillBytes = Option(SparkSession.active.conf
-        .get("graft.lake.spillFoldBytes", null))
-      .map(_.toLong).getOrElse(table.spillFoldBytes)
     new LakeReaderFactory(ScanBridge.parquetReader(SparkSession.active, readSchema),
-      readSchema, required, snap.morDeltas, spillBytes)
+      readSchema, required, snap.morDeltas)
   }
 }
 
+/** `spill`: fold this bucket through the sort ([[BucketLocal.foldBucket]]). */
 private final case class LakeInputPartition(bucket: Int,
-    files: Array[(String, Long)]) extends InputPartition
+    files: Array[(String, Long)], spill: Boolean) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   // the value of this partition's bucket(...) transform — what Spark groups
   // and aligns on in a storage-partitioned join
@@ -744,8 +744,7 @@ private final class LakeReaderFactory(
     reader: PartitionedFile => Iterator[InternalRow],
     readSchema: StructType,
     outputSchema: StructType,
-    fold: Boolean,
-    spillFoldBytes: Long) extends PartitionReaderFactory {
+    fold: Boolean) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LakeInputPartition]
@@ -755,21 +754,10 @@ private final class LakeReaderFactory(
       reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
     }
     // delta-carrying bucket: in-task LWW fold (the writer's associative
-    // rule) so readers see exactly one version per key; compacted bucket:
-    // stream through (buckets are key-unique in steady state). A bucket
-    // whose file bytes exceed the spill threshold (manifest sizes — zero
-    // I/O, same policy as every programmatic fold) degrades to the spilling
-    // sort + O(1)-row streaming fold instead of OOMing the hash map — the
-    // recovery contract must hold on the SQL surface too.
-    val resolved =
-      if (fold) {
-        val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(readSchema)
-        if (p.files.iterator.map(_._2).sum > spillFoldBytes) {
-          val sorted = org.apache.spark.sql.graftbridge.SortBridge.sortedAscNullsFirst(
-            readSchema, Seq("conv_id", "turn_idx", "ts", "seq"), rows)
-          BucketLocal.foldWinnersSorted(sorted, convI, turnI)
-        } else BucketLocal.foldWinners(rows, convI, turnI, tsI, seqI)
-      } else rows
+    // rule, spilling when planned so) so readers see exactly one version per
+    // key; compacted bucket: stream through (buckets are key-unique in
+    // steady state)
+    val resolved = if (fold) BucketLocal.foldBucket(readSchema, rows, p.spill) else rows
     val live = resolved.filter(r => r.getUTF8String(opI) != deleteOp)
     val proj = UnsafeProjection.create(
       outputSchema.fields.toIndexedSeq.map { f =>

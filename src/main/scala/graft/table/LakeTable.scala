@@ -679,8 +679,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     */
   def readStaged(spark: SparkSession, name: String): DataFrame = {
     val s = stagedSnapshot(name)
-    (if (s.morDeltas) graft.operators.BucketLocal.readFoldedAuto(spark, this, s)
-      else readPrunedFiles(spark, s, resolveFiles(s)))
+    readPrunedFiles(spark, s, resolveFiles(s))
       .filter(col("op") =!= Model.OpDelete).drop("op")
   }
 
@@ -816,14 +815,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
   def allFiles(s: Snapshot): Seq[String] =
     resolveFiles(s).values.flatten.map(_.path).toSeq
 
-  /** Largest per-bucket byte footprint among the requested buckets —
-    * manifest metadata only (file sizes travel in the manifest), no I/O.
-    * The input to the spill-fold policy below.
-    */
-  def maxBucketBytes(s: Snapshot, buckets: Option[Set[Int]] = None): Long =
-    resolveFiles(s, buckets).values
-      .foldLeft(0L)((m, fs) => math.max(m, fs.iterator.map(_.bytes).sum))
-
   /** Per-bucket DELTA depth — how many delta refs cover each bucket — from
     * the manifest LIST alone (no manifest files opened, no I/O beyond the
     * snapshot already in hand). This is the selective-compaction driver:
@@ -835,9 +826,9 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     s.manifests.filter(_.delta).flatMap(_.buckets)
       .groupBy(identity).view.mapValues(_.size).toMap
 
-  /** Spill-fold policy threshold: a delta-carrying read (or compaction)
-    * whose bucket exceeds this byte size runs the SORT-SPILL fold
-    * (BucketLocal.readFoldedSpill / compactRows(spill=true)) instead of the
+  /** Spill-fold policy threshold: in a delta-carrying read, a compaction or
+    * a change feed, each bucket whose manifest bytes exceed this size folds
+    * through the spilling sort (`BucketLocal.foldBucket`) instead of the
     * in-memory hash fold. The hash fold's memory bound is one bucket's
     * post-merge contents — the COW sizing contract — so a bucket that
     * outgrew its executor (hot-key flood, delayed compaction, undersized
@@ -849,6 +840,14 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     * size is larger).
     */
   var spillFoldBytes: Long = 2L << 30
+
+  /** The spill threshold of a DSv2 scan, which opens its own handle: the
+    * session conf `graft.lake.spillFoldBytes` when set, else this handle's
+    * [[spillFoldBytes]].
+    */
+  def sessionSpillFoldBytes(spark: SparkSession): Long =
+    Option(spark.conf.get("graft.lake.spillFoldBytes", null)).map(_.toLong)
+      .getOrElse(spillFoldBytes)
 
   /** Operational kill-switch for manifest-stats file skipping in the
     * key-addressed lookups (and the bench's honest skip-vs-full comparison).
@@ -929,7 +928,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     // for analytical readers.
     val resolved = snap match {
       case Some(s) if s.morDeltas =>
-        graft.operators.BucketLocal.readFoldedAuto(spark, this, s)
+        graft.operators.BucketLocal.readFolded(spark, this, s, resolveFiles(s))
       case _ => readRaw(spark, None, asOfVersion)
     }
     resolved.filter(col("op") =!= Model.OpDelete).drop("op")
@@ -1043,18 +1042,16 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     FilterApi.eq(FilterApi.binaryColumn("conv_id"), Binary.fromString(convId))
 
   /** Read an explicitly pruned per-bucket file subset of a pinned snapshot.
-    * MOR snapshots fold bucket-locally over exactly these files (spill
-    * policy applies); COW snapshots read them as a plain pushdown-friendly
-    * parquet scan.
+    * MOR snapshots fold bucket-locally over exactly these files (the spill
+    * decision is per bucket); COW snapshots read them as a plain
+    * pushdown-friendly parquet scan.
     */
   private def readPrunedFiles(spark: SparkSession, s: Snapshot,
       pruned: Map[Int, Seq[FileEntry]]): DataFrame = {
     if (pruned.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    else if (s.morDeltas) {
-      val spill = pruned.values.map(_.iterator.map(_.bytes).sum).max > spillFoldBytes
-      graft.operators.BucketLocal.readFoldedFiles(spark, s.schema, numBuckets, pruned, spill)
-    } else
+    else if (s.morDeltas) graft.operators.BucketLocal.readFolded(spark, this, s, pruned)
+    else
       spark.read.schema(s.schema).parquet(pruned.values.flatten.map(_.path).toSeq: _*)
   }
 

@@ -11,11 +11,10 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 /** Task-local SPILLING sort over InternalRows — SortExec's engine
   * (UnsafeExternalRowSorter over UnsafeExternalSorter: memory-managed pages
   * that spill to disk under pressure) detached from the physical-plan layer,
-  * so a DataSource V2 `PartitionReader` can run the spill-safe LWW fold on a
-  * bucket whose content outgrew the in-memory hash fold. The programmatic
-  * read path gets the same degradation from a real SortExec
-  * (`BucketLocal.readFoldedSpill`); a DSv2 reader cannot splice a plan node
-  * into itself, so it borrows the node's engine instead.
+  * so any task — an RDD fold or a DataSource V2 `PartitionReader`, which
+  * cannot splice a plan node into itself — can run the spill-safe LWW fold
+  * on a bucket whose content outgrew the in-memory hash fold. Its one
+  * caller is `BucketLocal.foldBucket`, the engine's task-side bucket fold.
   *
   * Memory lifecycle: `UnsafeExternalSorter.create` receives the live
   * TaskContext and registers its cleanup on task completion, and the sorted

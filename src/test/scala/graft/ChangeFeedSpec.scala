@@ -2,7 +2,7 @@ package graft
 
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
-import graft.operators.{ChangeFeed, MergeApplier}
+import graft.operators.{BucketLocal, ChangeFeed, MergeApplier}
 import graft.table.LakeTable
 import org.apache.spark.sql.Row
 
@@ -259,10 +259,10 @@ class ChangeFeedSpec extends SparkSpecBase {
     def rows(t: LakeTable) = ChangeFeed.changesBetween(spark, t, v1, v2,
       withUpdatePreImages = true).collect().map(_.toString).sorted.toSeq
     val hash = rows(table)
-    assert(!ChangeFeed.lastDiffWasSpill, "healthy buckets must take the hash diff")
+    assert(BucketLocal.lastSpilled.isEmpty, "healthy buckets must take the hash diff")
     table.spillFoldBytes = 1L
     val spill = rows(table)
-    assert(ChangeFeed.lastDiffWasSpill, "1-byte threshold must force the spill diff")
+    assert(BucketLocal.lastSpilled.nonEmpty, "1-byte threshold must force the spill diff")
     assert(spill == hash, "spill merge-diff must emit exactly the hash diff's rows")
     // the DSv2 CDF source honors the same session-conf override
     def cdf() = spark.read.format("lake-cdf").option("path", table.root)

@@ -227,7 +227,7 @@ class LookupSpec extends SparkSpecBase {
     assert(t.lookupTurn(spark, "a", 0).collect().map(_.getAs[String]("text")).toSeq == Seq("v2"))
   }
 
-  test("the driver-side MOR fold equals BucketLocal.readFoldedFiles") {
+  test("the driver-side MOR fold equals BucketLocal.readFolded") {
     val t = new LakeTable(tmpDir("lk-fold"), numBuckets = 4)
     val all = events(1000, seed = 65)
     val batches = all.grouped(250).toSeq
@@ -239,7 +239,7 @@ class LookupSpec extends SparkSpecBase {
     val anyConv = FilterApi.notEq(FilterApi.binaryColumn("conv_id"), null: Binary)
     val onDriver = DriverScan.localDf(spark, s.schema, BucketLocal.foldFilesOnDriver(
       spark, s.schema, files, fold = true, anyConv, (_, _) => true)).collect().map(_.toSeq).toSet
-    val inTasks = BucketLocal.readFoldedFiles(spark, s.schema, t.numBuckets, files)
+    val inTasks = BucketLocal.readFolded(spark, t, s, files)
       .collect().map(_.toSeq).toSet
     assert(onDriver.size == all.map(e => (e.conv_id, e.turn_idx)).distinct.size)
     assert(onDriver == inTasks)

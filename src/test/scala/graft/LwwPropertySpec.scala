@@ -2,13 +2,16 @@ package graft
 
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
-import graft.operators.{Lww, MergeApplier}
+import graft.operators.{BucketLocal, Lww, LwwAggregator, MergeApplier}
 import graft.table.LakeTable
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** SURVEY §5 property tests: (a) permutation invariance of LWW, (b) any
   * batch split of the same event set converges to the same final table,
-  * (c) re-applying any committed batch is a no-op.
+  * (c) re-applying any committed batch is a no-op, and (d) every LWW
+  * implementation applies the one version order.
   */
 class LwwPropertySpec extends SparkSpecBase {
 
@@ -32,6 +35,33 @@ class LwwPropertySpec extends SparkSpecBase {
 
   private def fold(events: Seq[ChangeEvent]): Map[(String, Int), (String, Long)] =
     Generator.oracleFold(events).map { case (k, e) => k -> ((e.text, e.seq)) }
+
+  test("property: Model order, BucketLocal.wins and LwwAggregator pick the same winner; a full tie keeps the incumbent") {
+    // small ranges so full (ts, seq) ties are frequent; None = null ts
+    val version: Gen[(Option[Long], Long)] = for {
+      ts <- Gen.option(Gen.choose(0L, 2L).map(_ * 1000L))
+      seq <- Gen.choose(0L, 2L)
+    } yield (ts, seq)
+    def event(v: (Option[Long], Long), text: String) = ChangeEvent("c", 0, "user", text, None,
+      v._1.map(DateTimeUtils.toJavaTimestamp).orNull, "insert", v._2)
+    def row(v: (Option[Long], Long)) =
+      new GenericInternalRow(Array[Any](v._1.getOrElse(null), v._2))
+    check(500)(Prop.forAll(version, version) { (cur, e) =>
+      val model = Model.supersedes(e._1.getOrElse(Long.MinValue), e._2,
+        cur._1.getOrElse(Long.MinValue), cur._2)
+      // the order itself: lexicographic (ts, seq), null ts lowest, strict
+      val lex = Ordering[(Long, Long)].gt((e._1.getOrElse(Long.MinValue), e._2),
+        (cur._1.getOrElse(Long.MinValue), cur._2))
+      val incumbent = event(cur, "cur")
+      val challenger = event(e, "e")
+      val typed = LwwAggregator.reduce(incumbent, challenger)
+      val tie = cur == e
+      model == lex && model == BucketLocal.wins(row(e), row(cur), 0, 1) &&
+        (typed eq (if (model) challenger else incumbent)) &&
+        (LwwAggregator.merge(incumbent, challenger) eq typed) &&
+        (!tie || !model)
+    })
+  }
 
   test("property: LWW winners are invariant under input permutation") {
     check(8)(Prop.forAll(Gen.listOfN(80, eventGen)) { events =>

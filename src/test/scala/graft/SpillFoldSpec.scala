@@ -4,14 +4,16 @@ import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.{BucketLocal, MergeApplier}
 import graft.table.LakeTable
+import org.apache.spark.sql.DataFrame
 
 import java.sql.Timestamp
 
 /** The spill-safe (sort-based) fold: a bucket that outgrew its executor must
   * stay readable, compactable and rebucketable — the hash fold's memory
-  * bound is one bucket's contents, the sort fold's is O(1) rows (SortExec
-  * spills to disk). These tests pin (a) exact semantic equality between the
-  * two folds, including tombstones and null-ts edge rows, (b) the policy
+  * bound is one bucket's contents, the sort fold's is O(1) rows (the
+  * sorter spills to disk). These tests pin (a) exact semantic equality
+  * between the two folds through the one entry point (`spillFoldBytes` 0 vs
+  * the default), including tombstones and null-ts edge rows, (b) the policy
   * switch on `spillFoldBytes`, (c) the zero-exchange plan shape, and (d)
   * that compaction and rebucket run end-to-end through the spill path.
   */
@@ -39,11 +41,21 @@ class SpillFoldSpec extends SparkSpecBase {
     (table, oracle)
   }
 
+  /** The head snapshot folded through the one entry point under a spill
+    * threshold: 0 sends every bucket to the sort fold, the default none.
+    */
+  private def readFolded(table: LakeTable, spillFoldBytes: Long): DataFrame = {
+    val snap = table.currentSnapshot().get
+    val saved = table.spillFoldBytes
+    table.spillFoldBytes = spillFoldBytes
+    try BucketLocal.readFolded(spark, table, snap, table.resolveFiles(snap))
+    finally table.spillFoldBytes = saved
+  }
+
   test("sort fold == hash fold == oracle on a delta-carrying table") {
     val (table, oracle) = buildMor("spill-eq")
-    val snap = table.currentSnapshot().get
-    val hash = BucketLocal.readFolded(spark, table, snap)
-    val sorted = BucketLocal.readFoldedSpill(spark, table, snap)
+    val hash = readFolded(table, 2L << 30)
+    val sorted = readFolded(table, 0L)
     // identical winner SETS (op column included — tombstones must agree)
     val h = hash.collect().map(_.toSeq).toSet
     val s = sorted.collect().map(_.toSeq).toSet
@@ -63,9 +75,8 @@ class SpillFoldSpec extends SparkSpecBase {
       ChangeEvent("c3", 0, "user", "gone", None, null, "delete", 4),
       ev("c3", 0, "stale", "2024-01-01 10:00:00", "insert", 0))
     MergeApplier.applyBatchMor(spark, table, spark.createDataset(rows).toDF(), "t", 0L)
-    val snap = table.currentSnapshot().get
-    val h = BucketLocal.readFolded(spark, table, snap).collect().map(_.toSeq).toSet
-    val s = BucketLocal.readFoldedSpill(spark, table, snap).collect().map(_.toSeq).toSet
+    val h = readFolded(table, 2L << 30).collect().map(_.toSeq).toSet
+    val s = readFolded(table, 0L).collect().map(_.toSeq).toSet
     assert(h == s)
     // c1 folded to its tombstone; c3's null-ts tombstone loses LWW to the
     // ts-bearing insert (null = lowest) — both folds must agree on that
@@ -77,7 +88,8 @@ class SpillFoldSpec extends SparkSpecBase {
     val (table, oracle) = buildMor("spill-policy")
     table.spillFoldBytes = 0L // force: every bucket "exceeds" the executor budget
     val df = table.read(spark)
-    assert(BucketLocal.lastFoldWasSpill, "spillFoldBytes = 0 must select the sort fold")
+    assert(BucketLocal.lastSpilled == (0 until 8).toSet,
+      "spillFoldBytes = 0 must send every bucket to the sort fold")
     // zero-shuffle proof across the bridged inner plan: the full RDD lineage
     // (which includes the inner sort's execution RDDs) has no shuffle stage
     val debug = org.apache.spark.sql.graftbridge.ScanBridge.toInternalRdd(df).toDebugString
@@ -86,7 +98,7 @@ class SpillFoldSpec extends SparkSpecBase {
     // default policy on healthy small buckets: hash fold
     table.spillFoldBytes = 2L << 30
     table.read(spark)
-    assert(!BucketLocal.lastFoldWasSpill, "healthy buckets must keep the hash fold")
+    assert(BucketLocal.lastSpilled.isEmpty, "healthy buckets must keep the hash fold")
   }
 
   test("spill compaction: same final state, tombstone expiry and clustering as the hash path") {
@@ -124,7 +136,7 @@ class SpillFoldSpec extends SparkSpecBase {
   }
 
   test("spill compaction on a pure-COW (no delta) snapshot streams the sorted rows through") {
-    // fold=false branch of the spill path: key-unique buckets, sorted pass
+    // COW branch of the spill path: key-unique buckets through the sort fold
     val table = new LakeTable(tmpDir("spill-cow"), numBuckets = 4)
     val rows = (0 until 200).map(i => ev(s"c${i % 7}", i, s"t$i", "2024-01-01 10:00:00", "insert", i.toLong))
     MergeApplier.applyBatch(spark, table, spark.createDataset(rows).toDF(), "t", 0L)

@@ -3,7 +3,10 @@ package graft
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.streaming.StatefulLww
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+
+import java.sql.Timestamp
 
 class StatefulLwwSpec extends SparkSpecBase {
   import Model.changeEventEncoder
@@ -38,5 +41,31 @@ class StatefulLwwSpec extends SparkSpecBase {
     // a key can end deleted after emitting — so compare on the oracle's keys.
     assert(oracle.keySet.subsetOf(last.keySet))
     oracle.foreach { case (k, v) => assert(last(k) == v, s"key $k") }
+  }
+
+  private val noTs = ChangeEvent("c1", 0, "user", "no-ts", None, null, Model.OpInsert, 5L)
+  private val withTs = ChangeEvent("c1", 0, "user", "ts", None,
+    Timestamp.valueOf("2025-01-01 00:00:00"), Model.OpUpdate, 1L)
+
+  /** The texts the feed emits, in order, with one micro-batch per group. */
+  private def emitted(name: String, batches: Seq[ChangeEvent]*): Seq[String] = {
+    val src = MemoryStream[ChangeEvent](Model.changeEventEncoder, spark.sqlContext)
+    val q = StatefulLww.changeFeed(src.toDS())
+      .writeStream.outputMode("append").format("memory").queryName(name)
+      .option("checkpointLocation", tmpDir(s"$name-ckpt")).start()
+    try batches.foreach { b => src.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name).collect().map(_.getAs[String]("text")).toSeq
+  }
+
+  test("a null-ts event loses to a ts-bearing event of its key within one micro-batch") {
+    // a null ts is the lowest version, as in the table fold
+    assert(emitted("slww_null_one", Seq(noTs, withTs)) == Seq("ts"))
+    assert(emitted("slww_null_one_rev", Seq(withTs, noTs)) == Seq("ts"))
+  }
+
+  test("a null-ts event loses to a ts-bearing event of its key across two micro-batches") {
+    assert(emitted("slww_null_two", Seq(noTs), Seq(withTs)) == Seq("no-ts", "ts"))
+    assert(emitted("slww_null_two_rev", Seq(withTs), Seq(noTs)) == Seq("ts"))
   }
 }

@@ -24,6 +24,20 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(typed == df)
   }
 
+  test("typed LwwAggregator: a null-ts event loses to a ts-bearing event of its key") {
+    import spark.implicits._
+    val noTs = ChangeEvent("c1", 0, "user", "no-ts", None, null, Model.OpInsert, 5L)
+    val withTs = ChangeEvent("c1", 0, "user", "ts", None,
+      java.sql.Timestamp.valueOf("2025-01-01 00:00:00"), Model.OpUpdate, 1L)
+    // both input orders, one and two partitions: reduce and merge alike
+    for (events <- Seq(Seq(noTs, withTs), Seq(withTs, noTs)); parts <- Seq(1, 2)) {
+      val got = spark.createDataset(events).repartition(parts)
+        .groupByKey(e => (e.conv_id, e.turn_idx)).agg(LwwAggregator.latest)
+        .map(_._2.text).collect().toSeq
+      assert(got == Seq("ts"), s"$events over $parts partitions")
+    }
+  }
+
   test("windowed op counts over a real stream with watermark (C7)") {
     val dir = tmpDir("wstats-src")
     Generator.writeChangelog(spark, dir, 2000, numConvs = 10, turnsPerConv = 5,
