@@ -205,7 +205,7 @@ object BucketLocal {
   private[operators] def keyComparator(convI: Int, turnI: Int): java.util.Comparator[InternalRow] =
     new java.util.Comparator[InternalRow] {
       override def compare(a: InternalRow, b: InternalRow): Int = {
-        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
+        val c = a.getUTF8String(convI).binaryCompare(b.getUTF8String(convI))
         if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
       }
     }

@@ -244,24 +244,21 @@ object ChangeFeed {
     val t = toW.buffered
     val joined = new JoinedRow
     val joinedPre = new JoinedRow
+    val keyOrder = BucketLocal.keyComparator(convI, turnI)
     new Iterator[InternalRow] {
       private var out: InternalRow = null
       private var pendingOut: InternalRow = null // the update half of a pre/post pair
-      private def cmp(a: InternalRow, b: InternalRow): Int = {
-        val c = a.getUTF8String(convI).compareTo(b.getUTF8String(convI))
-        if (c != 0) c else Integer.compare(a.getInt(turnI), b.getInt(turnI))
-      }
       private def advance(): Unit = {
         if (out != null) return
         if (pendingOut != null) { out = pendingOut; pendingOut = null; return }
         while (out == null && (f.hasNext || t.hasNext)) {
-          if (!t.hasNext || (f.hasNext && cmp(f.head, t.head) < 0)) {
+          if (!t.hasNext || (f.hasNext && keyOrder.compare(f.head, t.head) < 0)) {
             // key only at `from`: a vanished live row is a delete (pre-image
             // fallback — no tombstone exists at `to` to emit); a vanished
             // tombstone is not a visible change
             val fr = f.next()
             if (!isDelete(fr)) out = joined(fr, tDelete)
-          } else if (!f.hasNext || cmp(f.head, t.head) > 0) {
+          } else if (!f.hasNext || keyOrder.compare(f.head, t.head) > 0) {
             // key only at `to`: live ⇒ insert; a fresh tombstone with no
             // prior row is nothing visible
             val tr = t.next()

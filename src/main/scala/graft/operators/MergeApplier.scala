@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.model.Model
 import graft.table.{BucketFileWriter, CommitBuilder, CommitConflictException, LakeTable, Ledger, ManifestRef, Snapshot, StagedRef, TableChange, WrittenFile}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -16,18 +17,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - the Redis max-version LWW dance (/root/reference SpecialCases.java:212-253)
   *   - the EC2 delete-then-import apply loop
   *     (incremental-updates-ingestion.py:29-63)
-  * — into one distributed job per batch (the bucket-local merge):
+  * — into one fold/write stage per batch (the bucket-local merge):
   *
   * {{{
-  *   batch ─ repartition(N, key) ──────────┐   partition i == bucket i
+  *   batch ─ batch side (see below) ───────┐   partition i == bucket i
   *                                         ├─ zipPartitions: in-task LWW fold
   *   target ─ bucket-aligned parquet scan ─┘   + write of the bucket's file ─ atomic commit(batchId)
   * }}}
   *
-  * ONE exchange total (the batch's); the table side never shuffles — its
-  * bucket files are read directly by the task owning that bucket
-  * (ScanBridge.bucketFilesRdd), and untouched buckets' tasks open no file.
-  * Cold start (full replay) is the same job against an empty target.
+  * The table side never shuffles — its bucket files are read directly by the
+  * task owning that bucket (ScanBridge.bucketFilesRdd), and untouched
+  * buckets' tasks open no file. The batch side ([[batchSide]]) has two
+  * forms, picked from the batch plan's size estimate and the bucket count:
+  *   - copied: a deterministic batch whose estimate × N is within
+  *     `spark.sql.autoBroadcastJoinThreshold` (a streaming tail's trigger)
+  *     is read whole by every bucket task, which keeps its own bucket's
+  *     rows — no exchange, so the apply is one job of one stage
+  *   - exchanged: any other batch (a full replay, -1 threshold) takes one
+  *     `repartition(N, key)` exchange — a map stage, then the fold/write
+  *     stage
+  * Cold start (full replay) is the same apply against an empty target.
   *
   * Correctness properties (tested in MergeSpec/StreamSpec):
   *   - idempotent: a replayed batchId is a no-op (ledger check before work)
@@ -39,10 +48,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     files read back with nulls
   *
   * Scale notes (10^10 rows, 1000 executors):
-  *   - there is NO map-side combine: the exchange ships every raw batch
-  *     event, and within-batch duplicates collapse in the reducer's fold
-  *   - only the batch shuffles; write amplification is bounded by
-  *     (touched buckets / total buckets)
+  *   - there is NO map-side combine: the batch side hands every raw batch
+  *     event to its bucket's task (shuffled or copied), and within-batch
+  *     duplicates collapse in that task's fold
+  *   - only the batch shuffles, and only when it is too large to copy;
+  *     write amplification is bounded by (touched buckets / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
   *     an event-time watermark
   */
@@ -91,6 +101,20 @@ object MergeApplier {
     java.util.Arrays.sort(winners, BucketLocal.keyComparator(convI, turnI))
     Iterator(BucketMerge(BucketFileWriter.write(writers, dir, winners.iterator), nRows, nDel))
   }
+
+  /** The batch side of an apply: partition i holds exactly bucket i's batch
+    * rows. A batch that [[ScanBridge.copyable]] admits for N copies (small
+    * and deterministic) is split in each bucket task with no exchange
+    * ([[ScanBridge.bucketCopies]]); any other keeps the `repartition(N, key)`
+    * exchange. Both evaluate `HashPartitioning(key, N)`'s partition id —
+    * the murmur3 (seed 42) pmod the table's bucketCol is — so the alignment
+    * invariant holds on either side (MergeSpec pins both). A batch side with
+    * no partitions is an empty batch.
+    */
+  private[graft] def batchSide(aligned: DataFrame, numBuckets: Int): RDD[InternalRow] =
+    if (ScanBridge.copyable(aligned, numBuckets))
+      ScanBridge.bucketCopies(aligned, Model.KeyCols, numBuckets)
+    else ScanBridge.toInternalRdd(aligned.repartition(numBuckets, Model.KeyCols.map(col): _*))
 
   private def deleteDir(p: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
@@ -172,11 +196,12 @@ object MergeApplier {
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
 
-    // BUCKET-LOCAL MERGE — one job, one exchange (the batch's), ZERO
-    // table-side shuffle, no probe job; a cold start is the same job against
+    // BUCKET-LOCAL MERGE — ZERO table-side shuffle, no probe job; a small
+    // batch is copied to the bucket tasks (one job, one stage), a large one
+    // takes one exchange (batchSide); a cold start is the same job against
     // an empty target:
     //
-    //   batch ─ repartition(N, key) ──┐ partition i == bucket i
+    //   batch ─ batchSide(N) ─────────┐ partition i == bucket i
     //                                 ├─ zipPartitions: in-task LWW fold
     //   target ─ bucket-aligned scan ─┘ + write of bucket i's one new file
     //
@@ -187,29 +212,29 @@ object MergeApplier {
     // because the LWW rule is associative. Tombstones participate and are
     // RETAINED, so a later stale insert still loses.
     //
-    // Alignment invariant (pinned by MergeSpec "partition id equals bucket
-    // id"): repartition's HashPartitioning uses the same murmur3 (seed 42)
-    // as the table's bucketCol, so partition i holds exactly bucket i's
-    // batch rows and the task's bucket is its partition id.
+    // Alignment invariant (pinned by MergeSpec's "alignment invariant"):
+    // both batch sides evaluate HashPartitioning's partition id, the same
+    // murmur3 (seed 42) pmod as the table's bucketCol, so partition i holds
+    // exactly bucket i's batch rows and the task's bucket is its partition id.
     //
     // Each task returns its file's manifest entry and counts; collect()
     // carries successful attempts only, so retries and speculation cannot
     // inflate them, and the commit needs no listing and no footer reads.
+    //
+    // Idle trigger (or an empty first batch): commit no orphan version;
+    // replay of an empty batch is trivially idempotent. A batch side with no
+    // partitions starts no job at all; an exchanged empty batch runs one
+    // wave of empty tasks, which open no file and write nothing.
+    val idle = Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
+    val batchRdd = batchSide(aligned, table.numBuckets)
+    if (batchRdd.partitions.isEmpty) return idle
     val files = snap.map(s => BucketLocal.bucketArray(s.numBuckets, table.resolveFiles(s)))
       .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)]))
-    val batchRdd = ScanBridge.toInternalRdd(
-      aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*))
     val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema, files)
     val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
     val merged = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false)(
       mergeBucket(writers, outDir.toString)).collect()
-    if (merged.isEmpty) {
-      // Idle trigger (or an empty first batch): every task saw an empty
-      // batch side, opened no file and wrote nothing, so the job cost one
-      // empty task wave and left no directory. Commit no orphan version;
-      // replay of an empty batch is trivially idempotent.
-      return Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
-    }
+    if (merged.isEmpty) return idle
     val tMeta = System.nanoTime()
     // every touched bucket emits >=1 winner (tombstones retained), so the
     // written bucket set IS the touched set. Cold start reports what it
@@ -285,8 +310,9 @@ object MergeApplier {
     * "L0 append"); the read path (LakeTable.read) and the next [[compact]]
     * run the associative LWW fold, so COW and MOR commits interleave freely.
     *
-    * Cost per batch is scan + ONE bucket-aligned exchange + write — strictly
-    * O(batch), the high-throughput tail mode at 10^10 scale; compaction
+    * Cost per batch is scan + the bucket-aligned batch side ([[batchSide]]:
+    * copied to the bucket tasks when small, else one exchange) + write —
+    * strictly O(batch), the high-throughput tail mode at 10^10 scale; compaction
     * amortizes the read-side merge (exactly Iceberg's v2 merge-on-read
     * contract, built from scratch). Within-batch LWW is deliberately NOT run
     * here: it collapses only the batch's own duplicate keys (~10% at the
@@ -309,13 +335,13 @@ object MergeApplier {
     // file's key bounds + conv bloom — the skip input that keeps point
     // lookups O(files holding the key) on a delta-deep tail. The driver
     // commits the collected entries: no listing, no footer reads.
-    val written = WrittenFile.byBucket(BucketFileWriter.writeAll(
-      ScanBridge.toInternalRdd(aligned.repartition(table.numBuckets, Model.KeyCols.map(col): _*)),
+    // Same no-orphan idle contract as the COW path.
+    val idle = ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
+    val batchRdd = batchSide(aligned, table.numBuckets)
+    if (batchRdd.partitions.isEmpty) return idle
+    val written = WrittenFile.byBucket(BucketFileWriter.writeAll(batchRdd,
       WriteBridge.parquetWriterFactory(spark, mergedSchema), outDir.toString))
-    if (written.files.isEmpty) {
-      // same no-orphan contract as the COW idle path
-      return ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
-    }
+    if (written.files.isEmpty) return idle
     val batchRows = written.rows.values.sum
     val nDeletes = written.tombstones.values.sum
     val tMeta = System.nanoTime()

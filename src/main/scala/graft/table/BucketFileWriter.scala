@@ -40,8 +40,8 @@ final class FileStatsTracker(schema: StructType, textIndex: Boolean = false) {
     rows += 1
     if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) tombstones += 1
     val c = r.getUTF8String(convI)
-    if (minConv == null || c.compareTo(minConv) < 0) minConv = c.clone()
-    if (maxConv == null || c.compareTo(maxConv) > 0) maxConv = c.clone()
+    if (minConv == null || c.binaryCompare(minConv) < 0) minConv = c.clone()
+    if (maxConv == null || c.binaryCompare(maxConv) > 0) maxConv = c.clone()
     ConvBloom.add(convBloom, c)
     val t = r.getInt(turnI)
     if (t < minTurn) minTurn = t

@@ -490,8 +490,9 @@ private[table] final class LakeScanBuilder(table: LakeTable, snap: Snapshot,
       else if (files.isEmpty) Some((None, None))
       else {
         val st = files.map(_.stats.get)
-        val lo = st.map(s => UTF8String.fromString(s.minConv)).min
-        val hi = st.map(s => UTF8String.fromString(s.maxConv)).max
+        val byBytes: Ordering[UTF8String] = (a, b) => a.binaryCompare(b)
+        val lo = st.map(s => UTF8String.fromString(s.minConv)).min(byBytes)
+        val hi = st.map(s => UTF8String.fromString(s.maxConv)).max(byBytes)
         Some((Some((lo, hi)), Some((st.map(_.minTurn).min, st.map(_.maxTurn).max))))
       }
     }

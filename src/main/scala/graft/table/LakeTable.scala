@@ -157,7 +157,7 @@ object ConvBloom {
   * row-level ops' carried-over tombstones included, carries its stats for
   * free; files without (legacy manifests) are never skipped.
   *
-  * Range comparisons are in UTF8 BYTE order (`UTF8String.compareTo`,
+  * Range comparisons are in UTF8 BYTE order (`UTF8String.binaryCompare`,
   * unsigned bytes) — the same ordering the tracker uses to compute
   * min/max, so pruning is exact for any conv_id content, ASCII or not.
   * The bloom rides as `ArraySeq[Long]` (value equality, unboxed backing).
@@ -170,8 +170,8 @@ final case class FileStats(minConv: String, maxConv: String, minTurn: Int, maxTu
   /** min/max range admission alone (no bloom) — the bounds-only prune. */
   def boundsContainConv(conv: String): Boolean = {
     val c = UTF8String.fromString(conv)
-    c.compareTo(UTF8String.fromString(minConv)) >= 0 &&
-      c.compareTo(UTF8String.fromString(maxConv)) <= 0
+    c.binaryCompare(UTF8String.fromString(minConv)) >= 0 &&
+      c.binaryCompare(UTF8String.fromString(maxConv)) <= 0
   }
   def mightContainConv(conv: String): Boolean =
     boundsContainConv(conv) && bloom.forall(ConvBloom.mightContain(_, conv))

@@ -39,11 +39,7 @@ class LookupSpec extends SparkSpecBase {
   private def evTuple(e: ChangeEvent) = ((e.conv_id, e.turn_idx), e.role, e.text,
     e.tool.orNull, e.ts, e.seq)
 
-  private def withThreshold[T](v: String)(f: => T): T = {
-    val old = spark.conf.getOption(Threshold)
-    spark.conf.set(Threshold, v)
-    try f finally old.fold(spark.conf.unset(Threshold))(spark.conf.set(Threshold, _))
-  }
+  private def withThreshold[T](v: String)(f: => T): T = withConf(Threshold, Some(v))(f)
 
   /** Keys whose last event is a delete: present in the files, absent from
     * the oracle.

@@ -17,6 +17,13 @@ class MergeSpec extends SparkSpecBase {
       seq: Long, tool: Option[String] = None) =
     ChangeEvent(conv, turn, "user", text, tool, ts(t), op, seq)
 
+  /** Both batch sides of an apply: the default threshold copies a spec-sized
+    * batch to the bucket tasks, -1 forces the `repartition(N, key)` exchange.
+    */
+  private val batchSides = Seq("copied" -> None, "exchanged" -> Some("-1"))
+  private def withBatchSide[T](threshold: Option[String])(f: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", threshold)(f)
+
   private def finalState(table: LakeTable): Map[(String, Int), (String, Long)] =
     table.read(spark).collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) ->
@@ -28,19 +35,23 @@ class MergeSpec extends SparkSpecBase {
     val oracle = Generator.oracleFold(all)
       .map { case (k, e) => k -> ((e.text, e.seq)) }
 
-    val table = new LakeTable(tmpDir("merge-golden"), numBuckets = 8)
-    // apply in 5 arrival-order batches
-    val sorted = all.sortBy(_.seq)
-    sorted.grouped(1600).zipWithIndex.foreach { case (chunk, i) =>
-      val df = spark.createDataset(chunk).toDF()
-      MergeApplier.applyBatch(spark, table, df, "t", i.toLong)
-    }
-    assert(finalState(table) == oracle)
-    // each bucket's file holds its winners in (conv_id, turn_idx) order
-    table.resolveFiles(table.currentSnapshot().get).values.flatten.foreach { f =>
-      val keys = spark.read.parquet(f.path).select("conv_id", "turn_idx").collect()
-        .map(r => (r.getString(0), r.getInt(1))).toSeq
-      assert(keys == keys.sorted, s"${f.path} is not key-ordered")
+    batchSides.foreach { case (side, threshold) =>
+      val table = new LakeTable(tmpDir(s"merge-golden-$side"), numBuckets = 8)
+      // apply in 5 arrival-order batches
+      val sorted = all.sortBy(_.seq)
+      withBatchSide(threshold) {
+        sorted.grouped(1600).zipWithIndex.foreach { case (chunk, i) =>
+          val df = spark.createDataset(chunk).toDF()
+          MergeApplier.applyBatch(spark, table, df, "t", i.toLong)
+        }
+      }
+      assert(finalState(table) == oracle, side)
+      // each bucket's file holds its winners in (conv_id, turn_idx) order
+      table.resolveFiles(table.currentSnapshot().get).values.flatten.foreach { f =>
+        val keys = spark.read.parquet(f.path).select("conv_id", "turn_idx").collect()
+          .map(r => (r.getString(0), r.getInt(1))).toSeq
+        assert(keys == keys.sorted, s"$side: ${f.path} is not key-ordered")
+      }
     }
   }
 
@@ -49,13 +60,22 @@ class MergeSpec extends SparkSpecBase {
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "x", "2025-01-01 00:00:00", Model.OpInsert, 1))).toDF(), "w", 0L)
     val before = table.versions()
-    val r = MergeApplier.applyBatch(spark, table,
-      spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L)
+    // an empty batch side has no partitions: the apply starts no job at all
+    var r: MergeApplier.ApplyResult = null
+    val plan = jobPlan {
+      r = MergeApplier.applyBatch(spark, table,
+        spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L)
+    }
+    assert(plan.jobs == 0, plan)
     assert(!r.skipped && r.batchRows == 0 && r.touchedBuckets == 0)
     assert(table.versions() == before)
     // same contract on the MOR path
-    val rm = MergeApplier.applyBatchMor(spark, table,
-      spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L)
+    var rm: MergeApplier.ApplyResult = null
+    val planMor = jobPlan {
+      rm = MergeApplier.applyBatchMor(spark, table,
+        spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L)
+    }
+    assert(planMor.jobs == 0, planMor)
     assert(!rm.skipped && rm.batchRows == 0)
     assert(table.versions() == before)
     // the empty merge output dir was cleaned up, not left as an orphan
@@ -75,13 +95,17 @@ class MergeSpec extends SparkSpecBase {
       .as[ChangeEvent].collect().toSeq
     val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
 
-    val table = new LakeTable(tmpDir("merge-ooo"), numBuckets = 8)
-    // pathological order: batches sliced by ts DESC — every batch is "late"
-    val sorted = all.sortBy(e => (-e.ts.getTime, -e.seq))
-    sorted.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "t", i.toLong)
+    batchSides.foreach { case (side, threshold) =>
+      val table = new LakeTable(tmpDir(s"merge-ooo-$side"), numBuckets = 8)
+      // pathological order: batches sliced by ts DESC — every batch is "late"
+      val sorted = all.sortBy(e => (-e.ts.getTime, -e.seq))
+      withBatchSide(threshold) {
+        sorted.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
+          MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "t", i.toLong)
+        }
+      }
+      assert(finalState(table) == oracle, side)
     }
-    assert(finalState(table) == oracle)
   }
 
   test("idempotence: re-applying a committed batchId is a no-op") {
@@ -191,10 +215,11 @@ class MergeSpec extends SparkSpecBase {
 
   test("alignment invariant: repartition(N, key) partition id equals bucketCol for every row") {
     // The bucket-local merge (MergeApplier.mergeBucket) reads bucket i's
-    // target files in partition i of the batch's key shuffle and writes its
-    // output as bucket i = the partition id. That is sound ONLY if Spark's
+    // target files in partition i of the batch side and writes its output
+    // as bucket i = the partition id. That is sound ONLY if Spark's
     // HashPartitioning (murmur3, seed 42) equals pmod(hash(key), N) — this
-    // test pins the invariant against any Spark-internals drift.
+    // test pins the invariant against any Spark-internals drift, for the
+    // exchange and for the copied batch side (MergeApplier.batchSide).
     import org.apache.spark.sql.functions.{col, spark_partition_id}
     val table = new LakeTable(tmpDir("merge-align"), numBuckets = 8)
     val df = spark.createDataset((0 until 5000).map(i =>
@@ -205,6 +230,21 @@ class MergeSpec extends SparkSpecBase {
       .filter(col("__pid") =!= col("__bucket"))
       .count()
     assert(mismatched == 0L)
+    val withBucket = df.withColumn("__bucket", table.bucketCol)
+    val bucketI = withBucket.schema.fieldIndex("__bucket")
+    batchSides.foreach { case (side, threshold) =>
+      withBatchSide(threshold) {
+        assert(org.apache.spark.sql.graftbridge.ScanBridge.copyable(withBucket,
+          table.numBuckets) == threshold.isEmpty, side)
+        val rows = MergeApplier.batchSide(withBucket, table.numBuckets)
+          .mapPartitionsWithIndex((i, it) => Iterator(it.map(r => (r.getInt(bucketI) == i, 1L))
+            .foldLeft((true, 0L)) { case ((ok, n), (o, c)) => (ok && o, n + c) }))
+          .collect()
+        assert(rows.length == table.numBuckets, side)
+        assert(rows.forall(_._1), s"$side: a row sits outside its bucket's partition")
+        assert(rows.map(_._2).sum == 5000L, side)
+      }
+    }
   }
 
   test("flooded bucket: merge stays correct; numBuckets bounds the rewrite unit on a fresh table") {
@@ -256,34 +296,41 @@ class MergeSpec extends SparkSpecBase {
       .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
     val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
     val table = new LakeTable(tmpDir("merge-fail"), numBuckets = 4)
-    def dataFiles(): Set[String] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(table.root))
+    def dataFiles(t: LakeTable = table): Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(t.root))
       try { import scala.jdk.CollectionConverters._
         s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
           .map(_.toString).filter(_.contains("/data/")).toSet } finally s.close()
     }
     // cold start (batch 0), then the hot merge (batch 1): each fails once in
-    // one bucket's task right after that task opened its file, then re-applies
-    all.grouped(2000).zipWithIndex.foreach { case (chunk, i) =>
-      val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
-      val version = table.currentSnapshot().map(_.version)
-      val state = if (version.isEmpty) Map.empty else finalState(table)
-      val filesBefore = dataFiles()
-      BucketFileWriter.afterBucketFileOpen =
-        b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
-      val e = try intercept[Exception] {
-        MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
-      } finally BucketFileWriter.afterBucketFileOpen = _ => ()
-      assert(e.getMessage.contains("injected failure"), e.getMessage)
-      assert(table.currentSnapshot().map(_.version) == version)
-      if (version.nonEmpty) assert(finalState(table) == state)
-      val left = dataFiles() -- filesBefore
-      assert(!left.exists(_.contains(s"/bucket=$victim/")),
-        s"the failed task's file (bucket $victim) was left behind: $left")
-      val r = MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
-      assert(!r.skipped && r.touchedBuckets > 0)
+    // one bucket's task right after that task opened its file, then re-applies;
+    // once per batch side, the copied side's table going on to the passes below
+    def failingApplies(table: LakeTable): Unit = {
+      all.grouped(2000).zipWithIndex.foreach { case (chunk, i) =>
+        val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
+        val version = table.currentSnapshot().map(_.version)
+        val state = if (version.isEmpty) Map.empty else finalState(table)
+        val filesBefore = dataFiles(table)
+        BucketFileWriter.afterBucketFileOpen =
+          b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
+        val e = try intercept[Exception] {
+          MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+        } finally BucketFileWriter.afterBucketFileOpen = _ => ()
+        assert(e.getMessage.contains("injected failure"), e.getMessage)
+        assert(table.currentSnapshot().map(_.version) == version)
+        if (version.nonEmpty) assert(finalState(table) == state)
+        val left = dataFiles(table) -- filesBefore
+        assert(!left.exists(_.contains(s"/bucket=$victim/")),
+          s"the failed task's file (bucket $victim) was left behind: $left")
+        val r = MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+        assert(!r.skipped && r.touchedBuckets > 0)
+      }
+      assert(finalState(table) == oracle)
     }
-    assert(finalState(table) == oracle)
+    batchSides.foreach { case (side, threshold) =>
+      withBatchSide(threshold)(failingApplies(
+        if (threshold.isEmpty) table else new LakeTable(tmpDir(s"merge-fail-$side"), 4)))
+    }
 
     // compaction (hash and spill, full and selective) and rebucket write
     // through the same task writer: each pass fails once in the victim

@@ -41,6 +41,56 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     names.foreach(n => Files.copy(Paths.get(s"$from/$n"), Paths.get(s"$to/$n"),
       StandardCopyOption.REPLACE_EXISTING))
 
+  /** Run `f` with the session conf `key` set to `value` (unset for None),
+    * restoring the previous setting after.
+    */
+  def withConf[T](key: String, value: Option[String])(f: => T): T = {
+    val old = spark.conf.getOption(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** What the Spark jobs `f` started on this thread ran: the jobs, the
+    * stages that ran (skipped ones do not), and the shuffle bytes those
+    * stages wrote. A marker job after `f` flushes the listener bus.
+    */
+  def jobPlan(f: => Unit): SparkSpecBase.JobPlan = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"job-plan-${System.nanoTime()}"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.jobId); e.stageIds.foreach(jobStages.add(_))
+          case Some(g) if g == s"$group-marker" => markerJob.set(e.jobId)
+          case _ => ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (jobStages.contains(e.stageInfo.stageId)) {
+          stages.incrementAndGet()
+          shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) flushed.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "job plan")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job end")
+      SparkSpecBase.JobPlan(jobs.size, stages.get, shuffleBytes.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** The command lines of every OS process this JVM started while `f` ran,
     * from an in-process JFR recording of `jdk.ProcessStart` events. Hadoop's
     * local filesystem falls back to forking `chmod`, `readlink` and `ls` when
@@ -69,6 +119,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
+  final case class JobPlan(jobs: Int, stages: Int, shuffleWriteBytes: Long)
+
   // One session for the whole forked test JVM.
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
