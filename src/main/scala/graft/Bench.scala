@@ -34,7 +34,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   *     (ok|host_never_quiet): a final efficiency outside [0.8, 1.05] is
   *     published as evidence of host weather, never as an engine number.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: every core),
   * SPARK_GRAFT_BENCH_EVENTS (default 10M), SPARK_GRAFT_CDC_ROUNDS (default
   * 3), SPARK_GRAFT_SCALING_EVENTS (default 2×), SPARK_GRAFT_SCALING_CORES
   * ("4,16"), SPARK_GRAFT_SCALING=0 to skip the scaling section,
@@ -42,27 +42,6 @@ import org.apache.spark.sql.{Column, SparkSession}
   * recall.
   */
 object Bench {
-  private def session(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      // bypass-merge shuffle writer opens maps*reducers concurrent streams
-      // (2048 at 32 cores / 64 buckets) and collapses into kernel-time
-      // contention on this host; the serialized sort writer keeps one
-      // spill file per map task.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
   }
@@ -135,7 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Harness.cpus
     val benchEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_EVENTS", "10000000").toLong
     val cdcRounds = math.max(1, sys.env.getOrElse("SPARK_GRAFT_CDC_ROUNDS", "3").toInt)
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
@@ -150,7 +129,7 @@ object Bench {
 
     // ---- prepare shared synthetic changelog (excluded from timings) ----
     progress("prep: generating changelogs")
-    val prep = session(cpus)
+    val prep = Harness.session("graft-bench", cpus)
     val changelogDir = tmp("bench-changelog")
     val numConvs = math.max(1000, (benchEvents / 200).toInt)
     if (!onlyScaling)
@@ -211,7 +190,7 @@ object Bench {
     var scalingJson = "null"
     if (doScaling) {
       def one(cores: Int, warm: Boolean): Double = {
-        val s = session(cores)
+        val s = Harness.session("graft-bench", cores)
         if (warm) { progress(s"scaling: warmup local[$cores]"); replayJob(s, warmupDir) }
         progress(s"scaling: measuring local[$cores]")
         val t = replayJob(s, scalingDir)._2
@@ -285,7 +264,7 @@ object Bench {
     }
 
     // ---- main session: CDC throughput, interleaved min-based rounds ----
-    val spark = session(cpus)
+    val spark = Harness.session("graft-bench", cpus)
     replayJob(spark, warmupDir) // JIT/codegen warmup for the merge path
 
     val tailEvents = benchEvents / 2
@@ -489,11 +468,9 @@ object Bench {
     val spjS = scala.collection.mutable.ArrayBuffer.empty[Double]
     val spjShufS = scala.collection.mutable.ArrayBuffer.empty[Double]
     var spjRows = 0L
-    val oldV2Bucketing = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val oldAutoBroadcast = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try (1 to 3).foreach { r =>
+    graft.operators.Par.withSessionConf(spark, Map(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) { (1 to 3).foreach { r =>
       progress(s"spj round $r/3: partitioned vs shuffled join")
       val (r1, s1) = timed {
         spjJoinCount(spark.table("benchspj.a"), spark.table("benchspj.b")) }
@@ -502,12 +479,7 @@ object Bench {
         spark.read.format("lake").option("path", spjB.root).load()) }
       require(r1 == r2, s"SPJ and shuffled join disagree: $r1 vs $r2")
       spjRows = r1; spjS += s1; spjShufS += s2
-    } finally {
-      oldV2Bucketing.fold(spark.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
-      oldAutoBroadcast.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
+    } }
     // ---- SQL MERGE leg: group-based row-level rewrite, group-pruned ----
     // A MERGE INTO touching ONE conversation must rewrite O(that
     // conversation's buckets), never the table: the `_bucket` runtime group

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Optimization-round measurement harness (guide §1) — SEPARATE from the
-  * frozen Bench: times individual SparkEntry queries with the SAME session
-  * configuration and sweep methodology (warmup pass + 2 timed passes, min),
-  * and additionally counts Spark jobs / stages / tasks per timed pass so the
-  * fixed-overhead structure of each query is visible. Optionally dumps
-  * `.explain("formatted")` plans to a directory.
+/** The one-query timer and plan dumper, separate from the frozen Bench:
+  * times the named SparkEntry queries (all of them when none is named) on
+  * the same harness session and with Bench's sweep method (warmup pass + 2
+  * timed passes, min), and counts Spark jobs / stages / tasks per timed pass
+  * so each query's fixed-overhead structure is visible. `--plans` writes
+  * each query's `explain("formatted")` plan to `<dir>/<query>_<suffix>.txt`;
+  * `--profile` prints per-job durations and the gaps between jobs.
   *
   * Usage: runMain graft.BenchExtra [--profile] [--plans <dir> <suffix>] [query ...]
   * (flags in any order, before the query names)
@@ -62,7 +62,6 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     var rest = args.toList
     var plansDir: Option[String] = None
     var plansSuffix = "before"
@@ -75,17 +74,7 @@ object BenchExtra {
       case _ => parsing = false
     }
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toList.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench-extra")
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
     val profiler = if (profile) {

@@ -29,23 +29,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Cli {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bypass-merge shuffle writer opens maps*reducers concurrent streams
-      // (2048 at 32 cores / 64 buckets) and collapses into kernel-time
-      // contention on this host; the serialized sort writer keeps one
-      // spill file per map task.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-cli", master = sys.env.get("SPARK_GRAFT_MASTER"))
     try run(spark, args.toList)
     catch {
       case e: IllegalArgumentException =>

@@ -3,7 +3,7 @@ package graft
 import graft.changelog.Changelog
 import graft.functions.{Grel, Rml, Text}
 import graft.multimodal.Multimodal
-import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Similarity}
+import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Par, Similarity}
 import graft.streaming.{AnnMaintenance, ForkFreeCheckpointFileManager, Replicate}
 import graft.table.{ForkFreeLocalFileSystem, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -53,18 +53,59 @@ object SparkEntry {
   private lazy val gateRoot: java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft-gate-")
 
-  private def gateTable(name: String): LakeTable = {
-    val root = gateRoot.resolve(name).toString
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    new LakeTable(root, numBuckets = 8)
-  }
-
-  /** Fresh scratch dir for a stream-backed gate (delete + recreate). */
-  private def gateDir(name: String): java.nio.file.Path = {
+  /** Delete the gate scratch path `name` (table, index or checkpoint) and
+    * return it.
+    */
+  private def gatePath(name: String): String = {
     val p = gateRoot.resolve(name)
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    java.nio.file.Files.createDirectories(p)
-    p
+    p.toString
+  }
+
+  private def gateTable(name: String): LakeTable =
+    new LakeTable(gatePath(name), numBuckets = 8)
+
+  /** Build gate table `name` from the changelog in `k` batches, batch i
+    * holding `seq % k = i` (writer "gate", batch id i), through the COW or
+    * the MOR apply. Returns the table and the version each batch committed.
+    */
+  private def gateBuild(s: SparkSession, dir: String, name: String, k: Int,
+      mor: Boolean = false): (LakeTable, Seq[Long]) = {
+    val cl = changelog(s, dir)
+    val t = gateTable(name)
+    val versions = (0 until k).map { i =>
+      val batch = cl.filter(col("seq") % k === i)
+      val r = if (mor) MergeApplier.applyBatchMor(s, t, batch, "gate", i.toLong)
+        else MergeApplier.applyBatch(s, t, batch, "gate", i.toLong)
+      r.version
+    }
+    (t, versions)
+  }
+
+  /** Register the `graftfns` catalog (a LakeCatalog over the gate root)
+    * whose functions and procedures the SQL gates call.
+    */
+  private def graftfns(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.catalog.graftfns", classOf[graft.table.LakeCatalog].getName)
+    s.conf.set("spark.sql.catalog.graftfns.base", gateRoot.toString)
+  }
+
+  /** A stream-backed gate: `writeChunks` stages the input as chunk files in
+    * a fresh gate dir, a parquet stream of `schema` tails them one file per
+    * trigger, `query` runs over it as an AvailableNow drain to parquet, and
+    * the drained output is read back.
+    */
+  private def streamGate(s: SparkSession, name: String,
+      schema: org.apache.spark.sql.types.StructType)(
+      writeChunks: java.nio.file.Path => Unit)(query: DataFrame => DataFrame): DataFrame = {
+    val base = java.nio.file.Paths.get(gatePath(name))
+    val chunks = java.nio.file.Files.createDirectories(base.resolve("chunks"))
+    writeChunks(chunks)
+    val sdf = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(chunks.toString)
+    runAvailableNowToParquet(query(sdf), base.resolve("out").toString,
+      base.resolve("ckpt").toString)
+    s.read.parquet(base.resolve("out").toString)
   }
 
   /** Write `df` as one single-parquet-file chunk per distinct value of
@@ -144,34 +185,24 @@ object SparkEntry {
       dropCols = "__idx" +: (if (drop) Seq(tsCol) else Nil))
   }
 
-  /** Run `f` with the session's shuffle-partition count temporarily set to
-    * `n` — the knob a STREAMING query freezes into its state-store layout at
-    * start. The gate streams ingest one small file per trigger, so the
-    * session default (sized for the batch sweep's core count) fans each
-    * micro-batch into that many state-store commit tasks and delta files for
-    * a handful of keys; state partitioning should be sized to state, not to
-    * the host. Restored immediately after, so batch queries are untouched.
+  /** Run `f` with the session's shuffle-partition count set to
+    * [[statePartitions]] — the knob a STREAMING query freezes into its
+    * state-store layout at start. The gate streams ingest one small file per
+    * trigger, so the session default (sized for the batch sweep's core
+    * count) fans each micro-batch into that many state-store commit tasks
+    * and delta files for a handful of keys; state partitioning should be
+    * sized to state, not to the host. Restored immediately after, so batch
+    * queries are untouched.
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T =
-    withSessionConf(s, Map("spark.sql.shuffle.partitions" -> n.toString))(f)
-
-  /** Run `f` with `kv` set on the session conf; each key gets its previous
-    * value (or its absence) back afterwards. Session-wide while `f` runs.
-    */
-  private def withSessionConf[T](s: SparkSession, kv: Map[String, String])(f: => T): T = {
-    val old = kv.keys.map(k => k -> s.conf.getOption(k)).toMap
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally old.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
+  private def withStatePartitions[T](s: SparkSession)(f: => T): T =
+    Par.withSessionConf(s, Map("spark.sql.shuffle.partitions" -> statePartitions(s).toString))(f)
 
   /** State-store partition count for the gate streams: a quarter of the
     * parallelism, floored at 4 — derived from the session, not a host
-    * constant (SPARK_GRAFT_STATE_PARTITIONS overrides for deployments whose
-    * streaming state warrants more).
+    * constant.
     */
   private def statePartitions(s: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(
-      math.max(4, s.sparkContext.defaultParallelism / 4))
+    math.max(4, s.sparkContext.defaultParallelism / 4)
 
   /** Drain a streaming frame to parquet via Trigger.AvailableNow. Spark's
     * file sink writes its data files through the session's Hadoop conf and
@@ -184,7 +215,7 @@ object SparkEntry {
       ckpt: String): Unit = {
     val s = sdf.sparkSession
     ForkFreeCheckpointFileManager.install(s)
-    withSessionConf(s, ForkFreeLocalFileSystem.conf +
+    Par.withSessionConf(s, ForkFreeLocalFileSystem.conf +
         ("spark.sql.shuffle.partitions" -> statePartitions(s).toString)) {
       val q = sdf.writeStream.format("parquet")
         .option("path", outDir)
@@ -194,6 +225,46 @@ object SparkEntry {
         .start()
       q.awaitTermination()
     }
+  }
+
+  /** Embeddings as changelog rows of turn 0 keyed by the string vec_id
+    * (`conv_id`), all at `ts` with op `op` and seq `vec_id + seqOff`: the
+    * ANN maintenance gates' table input.
+    */
+  private def annEvents(emb: DataFrame, ts: String, op: String, seqOff: Long): DataFrame =
+    emb.select(
+      col("vec_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
+      lit("user").as("role"), lit("").as("text"),
+      lit(null).cast("string").as("tool"),
+      lit(java.sql.Timestamp.valueOf(ts)).as("ts"),
+      lit(op).as("op"), (col("vec_id") + seqOff).as("seq"), col("embedding"))
+
+  /** The ANN maintenance lifecycle: commit `base` to a fresh gate table
+    * (`<name>_tbl`, writer `writer`), build an IVF index on that state
+    * (`<name>_idx`), commit `late`, let AnnMaintenance tail the change feed
+    * to catch the index up (`<name>_ckpt`, `mutations` mode), then search
+    * the maintained index with an exhaustive probe for the top 5 of the
+    * first 8 vectors, ids cast back to long.
+    */
+  private def annMaintained(s: SparkSession, emb: DataFrame, name: String,
+      writer: String, base: DataFrame, late: DataFrame, mutations: String): DataFrame = {
+    val t = gateTable(s"${name}_tbl")
+    val idxRoot = gatePath(s"${name}_idx")
+    val ckpt = gatePath(s"${name}_ckpt")
+    val v0 = MergeApplier.applyBatch(s, t, base, writer, 0L).version
+    AnnIndex.buildIvf(t.read(s).select(col("conv_id"), col("embedding")),
+      idxRoot, nLists = 8, iters = 3, idCol = "conv_id")
+    MergeApplier.applyBatch(s, t, late, writer, 1L)
+    withStatePartitions(s) {
+      AnnMaintenance.runAvailableNow(s, t.root, idxRoot, ckpt,
+        idCol = "conv_id", startingVersion = v0.toString, mutations = mutations)
+    }
+    AnnIndex.searchIvf(s, idxRoot,
+      emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").cast("string").as("conv_id"), col("embedding")),
+      k = 5, nProbe = 8, idCol = "conv_id")
+      .select(col("query_id").cast("long").as("query_id"),
+        col("vec_id").cast("long").as("vec_id"), col("cosine"), col("rank"))
   }
 
   /** The table's final-state columns (op is internal; read() drops it). */
@@ -338,10 +409,7 @@ object SparkEntry {
     // tombstone filter, the live-row projection and (on this COW table) the
     // plain pruned scan path against the relational fold.
     "cdc_lake_source" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_lake_source")
-      (0 until 3).foreach(i =>
-        MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 3 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_lake_source", 3)
       s.read.format("lake").option("path", t.root).load()
         .select(TableCols.map(col): _*)
     }),
@@ -371,20 +439,14 @@ object SparkEntry {
     // deterministic out-of-ts-order split) must converge to the one-shot
     // fold: the LWW rule is associative, so batching cannot change state.
     "cdc_table_incremental" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_table_incremental")
-      (0 until 4).foreach(i =>
-        MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 4 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_table_incremental", 4)
       t.read(s).select(TableCols.map(col): _*)
     }),
 
     // C8/S14: the same four batches as MOR delta appends, read WITHOUT
     // compaction — gates the zero-shuffle read-time delta fold.
     "cdc_table_mor_read" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_table_mor_read")
-      (0 until 4).foreach(i =>
-        MergeApplier.applyBatchMor(s, t, cl.filter(col("seq") % 4 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_table_mor_read", 4, mor = true)
       t.read(s).select(TableCols.map(col): _*)
     }),
 
@@ -392,10 +454,7 @@ object SparkEntry {
     // (spillFoldBytes = 0 forces the policy) — the disk-backed fold for a
     // bucket that outgrew its executor must produce bit-identical winners.
     "cdc_spill_fold" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_spill_fold")
-      (0 until 4).foreach(i =>
-        MergeApplier.applyBatchMor(s, t, cl.filter(col("seq") % 4 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_spill_fold", 4, mor = true)
       t.spillFoldBytes = 0L
       t.read(s).select(TableCols.map(col): _*)
     }),
@@ -403,10 +462,7 @@ object SparkEntry {
     // C8: MOR appends + a full compaction — gates the bucket-local
     // fold-and-rewrite (and its key-clustered output) against the oracle.
     "cdc_table_mor_compact" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_table_mor_compact")
-      (0 until 4).foreach(i =>
-        MergeApplier.applyBatchMor(s, t, cl.filter(col("seq") % 4 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_table_mor_compact", 4, mor = true)
       MergeApplier.compactRetainTombstones(s, t)
       t.read(s).select(TableCols.map(col): _*)
     }),
@@ -415,10 +471,7 @@ object SparkEntry {
     // a text-INDEXED compaction, then an exact-token search that reads only
     // admitting buckets — must equal the relational fold + token filter.
     "cdc_text_search" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_text_search")
-      (0 until 3).foreach(i =>
-        MergeApplier.applyBatchMor(s, t, cl.filter(col("seq") % 3 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_text_search", 3, mor = true)
       MergeApplier.compactRetainTombstones(s, t, textIndex = true)
       t.searchText(s, "purchase").select(TableCols.map(col): _*)
     }),
@@ -426,22 +479,14 @@ object SparkEntry {
     // Time travel: two COW merges, then read AS OF the first commit — the
     // snapshot isolation the manifest list provides.
     "cdc_time_travel" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_time_travel")
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 0), "gate", 0L)
-      val v1 = t.currentSnapshot().get.version
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 1), "gate", 1L)
+      val (t, Seq(v1, _)) = gateBuild(s, dir, "cdc_time_travel", 2)
       t.read(s, asOfVersion = Some(v1)).select(TableCols.map(col): _*)
     }),
 
     // Rollback: same build, roll the head back to the first commit — the
     // rolled-back HEAD must serve exactly the time-traveled state.
     "cdc_rollback" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_rollback")
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 0), "gate", 0L)
-      val v1 = t.currentSnapshot().get.version
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 1), "gate", 1L)
+      val (t, Seq(v1, _)) = gateBuild(s, dir, "cdc_rollback", 2)
       t.rollback(v1)
       t.read(s).select(TableCols.map(col): _*)
     }),
@@ -451,12 +496,7 @@ object SparkEntry {
     // bucket-locally from the manifests (ChangeFeed); the oracle derives
     // the same feed from the two folded states with a full outer join.
     "cdc_change_feed" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_change_feed")
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 0), "gate", 0L)
-      val v1 = t.currentSnapshot().get.version
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 1), "gate", 1L)
-      val v2 = t.currentSnapshot().get.version
+      val (t, Seq(v1, v2)) = gateBuild(s, dir, "cdc_change_feed", 2)
       ChangeFeed.changesBetween(s, t, v1, v2)
         .select((ChangeFeed.ChangeTypeCol +: TableCols).map(col): _*)
     }),
@@ -466,12 +506,7 @@ object SparkEntry {
     // v2 (the defining invariant of subtractable-aggregate maintenance) —
     // which is what the DuckDB oracle computes from the final fold.
     "cdc_incr_agg" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_incr_agg")
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 0), "gate", 0L)
-      val v1 = t.currentSnapshot().get.version
-      MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === 1), "gate", 1L)
-      val v2 = t.currentSnapshot().get.version
+      val (t, Seq(v1, v2)) = gateBuild(s, dir, "cdc_incr_agg", 2)
       val prev = IncrementalAgg.convStats(t.read(s, asOfVersion = Some(v1)))
       IncrementalAgg.maintain(prev,
         ChangeFeed.changesBetween(s, t, v1, v2, withUpdatePreImages = true))
@@ -501,14 +536,10 @@ object SparkEntry {
     // tombstone delete contract, and the replica's batchId-ledger dedup in
     // one oracle query.
     "cdc_replicated" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val a = gateTable("cdc_replicated_src")
+      val (a, _) = gateBuild(s, dir, "cdc_replicated_src", 3)
       val b = gateTable("cdc_replicated_dst")
-      val ckpt = gateRoot.resolve("cdc_replicated_ckpt").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-      (0 until 3).foreach(i =>
-        MergeApplier.applyBatch(s, a, cl.filter(col("seq") % 3 === i), "gate", i.toLong))
-      withStatePartitions(s, statePartitions(s)) {
+      val ckpt = gatePath("cdc_replicated_ckpt")
+      withStatePartitions(s) {
         Replicate.runAvailableNow(s, a.root, b, ckpt, maxVersionsPerTrigger = 1)
       }
       b.read(s).select(TableCols.map(col): _*)
@@ -522,14 +553,10 @@ object SparkEntry {
     // oracle as the pull-refresh gates, proving push and pull maintenance
     // cannot drift.
     "cdc_streaming_view" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_streaming_view_base")
+      val (t, _) = gateBuild(s, dir, "cdc_streaming_view_base", 3)
       val v = gateTable("cdc_streaming_view_view")
-      val ckpt = gateRoot.resolve("cdc_streaming_view_ckpt").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-      (0 until 3).foreach(i =>
-        MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 3 === i), "gate", i.toLong))
-      withStatePartitions(s, statePartitions(s)) {
+      val ckpt = gatePath("cdc_streaming_view_ckpt")
+      withStatePartitions(s) {
         graft.streaming.StreamingView.runAvailableNow(s, t.root, v, ckpt,
           maxVersionsPerTrigger = 1)
       }
@@ -553,16 +580,10 @@ object SparkEntry {
             unix_micros(col("ts").cast("timestamp")).as("tsMicros"),
             col("event_type").as("step")),
         "tsMicros")
-      val base = gateDir("q_funnel_stream")
-      val chunks = java.nio.file.Files.createDirectories(base.resolve("chunks"))
-      writeTsChunks(ev, chunks, "tsMicros", drop = false, qs(0), qs(1))
-      val sdf = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(chunks.toString)
       implicit val evEnc = org.apache.spark.sql.Encoders.product[StatefulFunnel.FunnelEvent]
-      val prog = StatefulFunnel.progress(sdf.as[StatefulFunnel.FunnelEvent], steps)
-      runAvailableNowToParquet(prog.toDF(), base.resolve("out").toString,
-        base.resolve("ckpt").toString)
-      val res = s.read.parquet(base.resolve("out").toString)
+      val res = streamGate(s, "q_funnel_stream", ev.schema)(
+        writeTsChunks(ev, _, "tsMicros", drop = false, qs(0), qs(1)))(
+        sdf => StatefulFunnel.progress(sdf.as[StatefulFunnel.FunnelEvent], steps).toDF())
       val w = Window.partitionBy("key").orderBy(col("depth").desc)
       // back to NTZ so the schema equals the batch funnel's (UTC identity)
       def reachTs(i: Int) = when(col("depth") >= i,
@@ -597,20 +618,13 @@ object SparkEntry {
         .select("conv_id", "turn_idx", "ts", "wm", "seq", "dtext", "rn")
       // no checkpoint: the chunk write is the feed's only consumer (schema
       // access plans, never executes)
-      val base = gateDir("text_dedup_stream")
-      val chunks = java.nio.file.Files.createDirectories(base.resolve("chunks"))
-      writeChunksOneJob(feed, col("rn") - 1, 3, chunks, dropCols = Seq("rn"))
-      val schema = feed.drop("rn").schema
-      val sdf = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(chunks.toString)
-      // ttl beyond the data's whole span: horizon-eviction re-emission is
-      // out of frame here (it is exercised in StreamingOpsSpec); this gate
-      // pins the cross-batch state hit itself
-      runAvailableNowToParquet(
-        StreamingDedup.firstSeen(sdf, textCol = "dtext", tsCol = "wm",
-          ttl = "36500 days"),
-        base.resolve("out").toString, base.resolve("ckpt").toString)
-      s.read.parquet(base.resolve("out").toString)
+      streamGate(s, "text_dedup_stream", feed.drop("rn").schema)(
+        writeChunksOneJob(feed, col("rn") - 1, 3, _, dropCols = Seq("rn")))(
+        // ttl beyond the data's whole span: horizon-eviction re-emission is
+        // out of frame here (it is exercised in StreamingOpsSpec); this gate
+        // pins the cross-batch state hit itself
+        StreamingDedup.firstSeen(_, textCol = "dtext", tsCol = "wm",
+          ttl = "36500 days"))
         .select("conv_id", "turn_idx", "ts", "seq", "dtext")
     }),
 
@@ -633,16 +647,10 @@ object SparkEntry {
       // plans, never executes)
       val cl = changelog(s, dir)
         .withColumn("ts", col("ts").cast("timestamp"))
-      val base = gateDir("cdc_stateful_lww")
-      val chunks = java.nio.file.Files.createDirectories(base.resolve("chunks"))
-      writeChunksOneJob(cl, pmod(col("seq"), lit(3)).cast("int"), 3, chunks)
-      val sdf = s.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1).parquet(chunks.toString)
-      val feed = graft.streaming.StatefulLww.changeFeed(
-        sdf.as[ChangeEvent](Model.changeEventEncoder))
-      runAvailableNowToParquet(feed.toDF(), base.resolve("out").toString,
-        base.resolve("ckpt").toString)
-      s.read.parquet(base.resolve("out").toString)
+      streamGate(s, "cdc_stateful_lww", cl.schema)(
+        writeChunksOneJob(cl, pmod(col("seq"), lit(3)).cast("int"), 3, _))(
+        sdf => graft.streaming.StatefulLww.changeFeed(
+          sdf.as[ChangeEvent](Model.changeEventEncoder)).toDF())
         .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
           col("tool"), col("ts").cast("timestamp_ntz").as("ts"), col("seq"))
     }),
@@ -660,27 +668,23 @@ object SparkEntry {
           .select(col("conv_id"), col("op"), col("ts").cast("timestamp").as("ts"))
           .withColumn("tsMicros", unix_micros(col("ts"))),
         "tsMicros")
-      val base = gateDir("cdc_windowed_counts")
-      val chunks = java.nio.file.Files.createDirectories(base.resolve("chunks"))
       val mx = qs(2).toLong // exact: the sketch retains the max; micros < 2^53
       val sentinel = s.range(1).select(lit("zz").as("conv_id"),
         lit("sentinel").as("op"),
         timestamp_micros(lit(mx + 365L * 24 * 3600 * 1000000L)).as("ts"))
-      writeTsChunks(cl, chunks, "tsMicros", drop = true, qs(0), qs(1),
-        extra = Some(sentinel))
       // the sentinel's watermark advance only flushes the real windows if a
-      // post-sentinel no-data micro-batch runs — pin the default explicitly
-      // so a session-level override cannot silently starve the gate
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      val sdf = s.readStream.schema(sentinel.schema)
-        .option("maxFilesPerTrigger", 1).parquet(chunks.toString)
-      val agg = graft.streaming.WindowedStats.opCountsPerWindow(sdf)
-        .select(col("window.start").as("window_start"),
-          col("window.end").as("window_end"), col("op"), col("n_events"))
-      runAvailableNowToParquet(agg, base.resolve("out").toString,
-        base.resolve("ckpt").toString)
-      s.read.parquet(base.resolve("out").toString)
-        .filter(col("op") =!= "sentinel")
+      // post-sentinel no-data micro-batch runs — pin the default for the
+      // drain so a session-level override cannot silently starve the gate
+      val windows = Par.withSessionConf(s,
+          Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
+        streamGate(s, "cdc_windowed_counts", sentinel.schema)(
+          writeTsChunks(cl, _, "tsMicros", drop = true, qs(0), qs(1),
+            extra = Some(sentinel)))(
+          sdf => graft.streaming.WindowedStats.opCountsPerWindow(sdf)
+            .select(col("window.start").as("window_start"),
+              col("window.end").as("window_end"), col("op"), col("n_events")))
+      }
+      windows.filter(col("op") =!= "sentinel")
         .select(col("window_start").cast("timestamp_ntz").as("window_start"),
           col("window_end").cast("timestamp_ntz").as("window_end"),
           col("op"), col("n_events"))
@@ -690,10 +694,7 @@ object SparkEntry {
     // bucket set for turn_idx < bound is driver-computed (no scan outside
     // it), and the result must equal the plain filtered fold.
     "cdc_conv_lookup" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_conv_lookup")
-      (0 until 2).foreach(i =>
-        MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 2 === i), "gate", i.toLong))
+      val (t, _) = gateBuild(s, dir, "cdc_conv_lookup", 2)
       val cids = t.read(s).select("conv_id").distinct()
         .orderBy("conv_id").limit(5).collect().map(_.getString(0))
       cids.map(c => t.lookupConversation(s, c).select(TableCols.map(col): _*))
@@ -1073,8 +1074,7 @@ object SparkEntry {
     // in AnnIndexSpec by corrupting unprobed lists on disk.
     "ann_ivf_persisted" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val root = gateRoot.resolve("ann_ivf_persisted").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      val root = gatePath("ann_ivf_persisted")
       AnnIndex.buildIvf(emb, root, nLists = 8, iters = 3)
       AnnIndex.searchIvf(s, root, emb.filter(col("vec_id") < 8), k = 5,
         nProbe = 8)
@@ -1084,8 +1084,7 @@ object SparkEntry {
     // probe + refine ⇒ brute-force oracle.
     "ann_ivfpq_persisted" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val root = gateRoot.resolve("ann_ivfpq_persisted").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      val root = gatePath("ann_ivfpq_persisted")
       AnnIndex.buildIvfPq(emb, root, nLists = 8, m = 8, codes = 16, iters = 2)
       AnnIndex.searchIvfPq(s, root, emb, emb.filter(col("vec_id") < 8), k = 5,
         nProbe = 8, refine = Int.MaxValue)
@@ -1099,8 +1098,7 @@ object SparkEntry {
     // corpusCount maintenance — against the same brute-force oracle.
     "ann_ivf_appended" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val root = gateRoot.resolve("ann_ivf_appended").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      val root = gatePath("ann_ivf_appended")
       AnnIndex.buildIvf(emb.filter(col("vec_id") % 3 =!= 0), root,
         nLists = 8, iters = 3)
       AnnIndex.appendIvf(s, root, emb.filter(col("vec_id") % 3 === 0))
@@ -1109,8 +1107,7 @@ object SparkEntry {
     }),
     "ann_ivfpq_appended" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val root = gateRoot.resolve("ann_ivfpq_appended").toString
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      val root = gatePath("ann_ivfpq_appended")
       AnnIndex.buildIvfPq(emb.filter(col("vec_id") % 3 =!= 0), root,
         nLists = 8, m = 8, codes = 16, iters = 2)
       AnnIndex.appendIvfPq(s, root, emb.filter(col("vec_id") % 3 === 0))
@@ -1125,11 +1122,8 @@ object SparkEntry {
     // ann_sql_ivfpq_topk adds append and the corpus re-rank argument, so
     // all three procedures sit behind oracle gates.
     "ann_sql_topk" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftfns",
-        classOf[graft.table.LakeCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftfns.base", gateRoot.toString)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(gateRoot.resolve("ann_sql_idx").toString))
+      graftfns(s)
+      gatePath("ann_sql_idx")
       table(s, dir, "embeddings").createOrReplaceTempView("sql_ann_vectors")
       table(s, dir, "embeddings").filter(col("vec_id") < 8)
         .createOrReplaceTempView("sql_ann_queries")
@@ -1140,11 +1134,8 @@ object SparkEntry {
               |  queries => 'sql_ann_queries', k => 5, n_probe => 8)""".stripMargin)
     }),
     "ann_sql_ivfpq_topk" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftfns",
-        classOf[graft.table.LakeCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftfns.base", gateRoot.toString)
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(gateRoot.resolve("ann_sql_pq_idx").toString))
+      graftfns(s)
+      gatePath("ann_sql_pq_idx")
       val emb = table(s, dir, "embeddings")
       emb.createOrReplaceTempView("sql_annpq_vectors")
       emb.filter(col("vec_id") % 3 =!= 0).createOrReplaceTempView("sql_annpq_base")
@@ -1169,35 +1160,10 @@ object SparkEntry {
     // AnnMaintenanceSpec — this gate pins the end-to-end answer.
     "ann_maintained_topk" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val tblRoot = gateRoot.resolve("ann_maint_tbl").toString
-      val idxRoot = gateRoot.resolve("ann_maint_idx").toString
-      val ckpt = gateRoot.resolve("ann_maint_ckpt").toString
-      Seq(tblRoot, idxRoot, ckpt).foreach(r =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
-      val t = new LakeTable(tblRoot, numBuckets = 8)
-      def asEvents(df: DataFrame): DataFrame = df.select(
-        col("vec_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
-        lit("user").as("role"), lit("").as("text"),
-        lit(null).cast("string").as("tool"),
-        lit(java.sql.Timestamp.valueOf("2025-01-01 00:00:00")).as("ts"),
-        lit("insert").as("op"), col("vec_id").as("seq"), col("embedding"))
-      MergeApplier.applyBatch(s, t,
-        asEvents(emb.filter(col("vec_id") % 3 =!= 0)), "annm", 0L)
-      val v0 = t.currentSnapshot().get.version
-      AnnIndex.buildIvf(t.read(s).select(col("conv_id"), col("embedding")),
-        idxRoot, nLists = 8, iters = 3, idCol = "conv_id")
-      MergeApplier.applyBatch(s, t,
-        asEvents(emb.filter(col("vec_id") % 3 === 0)), "annm", 1L)
-      withStatePartitions(s, statePartitions(s)) {
-        AnnMaintenance.runAvailableNow(s, tblRoot, idxRoot, ckpt,
-          idCol = "conv_id", startingVersion = v0.toString)
-      }
-      AnnIndex.searchIvf(s, idxRoot,
-        emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").cast("string").as("conv_id"), col("embedding")),
-        k = 5, nProbe = 8, idCol = "conv_id")
-        .select(col("query_id").cast("long").as("query_id"),
-          col("vec_id").cast("long").as("vec_id"), col("cosine"), col("rank"))
+      annMaintained(s, emb, "ann_maint", "annm",
+        annEvents(emb.filter(col("vec_id") % 3 =!= 0), "2025-01-01 00:00:00", "insert", 0L),
+        annEvents(emb.filter(col("vec_id") % 3 === 0), "2025-01-01 00:00:00", "insert", 0L),
+        mutations = "fail")
     }),
     // STREAMING maintenance under MUTATIONS (the LWW closure): the table
     // takes updates (vec_id % 13 = 2, re-upserted at a newer version — an
@@ -1209,40 +1175,13 @@ object SparkEntry {
     // equal brute force over the SURVIVING corpus.
     "ann_maintained_mutations" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val tblRoot = gateRoot.resolve("ann_mutate_tbl").toString
-      val idxRoot = gateRoot.resolve("ann_mutate_idx").toString
-      val ckpt = gateRoot.resolve("ann_mutate_ckpt").toString
-      Seq(tblRoot, idxRoot, ckpt).foreach(r =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
-      val t = new LakeTable(tblRoot, numBuckets = 8)
-      def asEvents(df: DataFrame, tsS: String, op: String,
-          seqOff: Long): DataFrame = df.select(
-        col("vec_id").cast("string").as("conv_id"), lit(0).as("turn_idx"),
-        lit("user").as("role"), lit("").as("text"),
-        lit(null).cast("string").as("tool"),
-        lit(java.sql.Timestamp.valueOf(tsS)).as("ts"),
-        lit(op).as("op"), (col("vec_id") + seqOff).as("seq"), col("embedding"))
-      MergeApplier.applyBatch(s, t,
-        asEvents(emb, "2025-01-01 00:00:00", "insert", 0L), "annx", 0L)
-      val v0 = t.currentSnapshot().get.version
-      AnnIndex.buildIvf(t.read(s).select(col("conv_id"), col("embedding")),
-        idxRoot, nLists = 8, iters = 3, idCol = "conv_id")
-      MergeApplier.applyBatch(s, t,
-        asEvents(emb.filter(col("vec_id") % 13 === 2),
+      annMaintained(s, emb, "ann_mutate", "annx",
+        annEvents(emb, "2025-01-01 00:00:00", "insert", 0L),
+        annEvents(emb.filter(col("vec_id") % 13 === 2),
             "2025-01-01 00:01:00", "insert", 1000000L)
-          .unionByName(asEvents(emb.filter(col("vec_id") % 17 === 3),
-            "2025-01-01 00:01:00", "delete", 2000000L)), "annx", 1L)
-      withStatePartitions(s, statePartitions(s)) {
-        AnnMaintenance.runAvailableNow(s, tblRoot, idxRoot, ckpt,
-          idCol = "conv_id", startingVersion = v0.toString,
-          mutations = "apply")
-      }
-      AnnIndex.searchIvf(s, idxRoot,
-        emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").cast("string").as("conv_id"), col("embedding")),
-        k = 5, nProbe = 8, idCol = "conv_id")
-        .select(col("query_id").cast("long").as("query_id"),
-          col("vec_id").cast("long").as("vec_id"), col("cosine"), col("rank"))
+          .unionByName(annEvents(emb.filter(col("vec_id") % 17 === 3),
+            "2025-01-01 00:01:00", "delete", 2000000L)),
+        mutations = "apply")
     }),
     // threshold 0.35: the synthetic embeddings are near-orthogonal (max
     // pairwise cosine ≈0.46), so a realistic 0.95 cutoff would be vacuous;
@@ -1404,9 +1343,7 @@ object SparkEntry {
     // resolved expressions as the Column API, so this gate proves the `Cli
     // sql` user's curation path end-to-end against the DuckDB oracle.
     "text_sql_quality" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftfns",
-        classOf[graft.table.LakeCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftfns.base", gateRoot.toString)
+      graftfns(s)
       table(s, dir, "documents").createOrReplaceTempView("sql_quality_docs")
       s.sql("""SELECT doc_id,
               |  CAST(graftfns.token_count(text) AS BIGINT) AS n_tok,
@@ -1421,9 +1358,7 @@ object SparkEntry {
     // k exceeds the corpus hit count, so the gate compares the FULL ranked
     // slice against the same DuckDB formula as text_bm25.
     "text_sql_bm25" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftfns",
-        classOf[graft.table.LakeCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftfns.base", gateRoot.toString)
+      graftfns(s)
       table(s, dir, "documents").createOrReplaceTempView("sql_bm25_docs")
       s.sql("""CALL graftfns.system.bm25(view => 'sql_bm25_docs',
               |  terms => 'table,query,merge', k => 100000)""".stripMargin)
@@ -1466,6 +1401,7 @@ object SparkEntry {
         "doc_id", "toks", budgetTokens = 256, numGroups = 8)))
 
   private val C = Changelog.DuckDbCte
+  private val W = Changelog.DuckDbLwwCte
 
   /** The brute-force cosine-top-k oracle with VARCHAR-cast ids — the CALL
     * ann_* procedures surface ids as strings (they serve any id type a view
@@ -1578,22 +1514,15 @@ object SparkEntry {
     "cdc_changelog" -> s"$C SELECT * FROM changelog",
 
     "cdc_lww_dedup" ->
-      s"""$C SELECT conv_id, turn_idx, role, text, tool, ts, op, seq FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1""".stripMargin,
+      s"$W SELECT conv_id, turn_idx, role, text, tool, ts, op, seq FROM lww",
 
     "cdc_replay_final" ->
-      s"""$C SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1 AND op <> 'delete'""".stripMargin,
+      s"""$W SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM lww
+         |WHERE op <> 'delete'""".stripMargin,
 
     "cdc_text_search" ->
-      s"""$C SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1 AND op <> 'delete'
+      s"""$W SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM lww
+         |WHERE op <> 'delete'
          |  AND list_contains(regexp_split_to_array(text, '\\s+'), 'purchase')""".stripMargin,
 
     "cdc_max_ts" ->
@@ -1606,17 +1535,12 @@ object SparkEntry {
          |FROM changelog GROUP BY op""".stripMargin,
 
     "cdc_delete_keys" ->
-      s"""$C SELECT conv_id, turn_idx, ts, seq FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1 AND op = 'delete'""".stripMargin,
+      s"""$W SELECT conv_id, turn_idx, ts, seq FROM lww
+         |WHERE op = 'delete'""".stripMargin,
 
     "cdc_conv_assembly" ->
-      s"""$C , winners AS (
-         |  SELECT conv_id, turn_idx, role, text, ts FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete')
+      s"""$W , winners AS (
+         |  SELECT conv_id, turn_idx, role, text, ts FROM lww WHERE op <> 'delete')
          |SELECT conv_id, COUNT(*) AS n_turns, MAX(ts) AS last_ts,
          |  string_agg(concat_ws(': ', role, text), chr(10) ORDER BY turn_idx)
          |    AS transcript
@@ -1625,11 +1549,8 @@ object SparkEntry {
     // conversation near-dup mirror: LWW winners -> ordered transcript
     // assembly -> the document-level jaccard pattern over conv_id.
     "cdc_conv_neardup" ->
-      s"""$C , winners AS (
-         |  SELECT conv_id, turn_idx, role, text FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete'),
+      s"""$W , winners AS (
+         |  SELECT conv_id, turn_idx, role, text FROM lww WHERE op <> 'delete'),
          |conv AS (
          |  SELECT conv_id,
          |    string_agg(concat_ws(': ', role, text), chr(10) ORDER BY turn_idx)
@@ -1656,11 +1577,8 @@ object SparkEntry {
          |WHERE ROUND(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) >= 0.1""".stripMargin,
 
     "cdc_conv_quality" ->
-      s"""$C , winners AS (
-         |  SELECT conv_id, turn_idx, role, text, tool FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete'),
+      s"""$W , winners AS (
+         |  SELECT conv_id, turn_idx, role, text, tool FROM lww WHERE op <> 'delete'),
          |flagged AS (
          |  SELECT conv_id, turn_idx, role, text, tool,
          |    CASE WHEN role = lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
@@ -1681,11 +1599,8 @@ object SparkEntry {
          |FROM agg""".stripMargin,
 
     "cdc_context_pairs" ->
-      s"""$C , winners AS (
-         |  SELECT conv_id, turn_idx, role, text FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete')
+      s"""$W , winners AS (
+         |  SELECT conv_id, turn_idx, role, text FROM lww WHERE op <> 'delete')
          |SELECT conv_id, turn_idx, context, target FROM (
          |  SELECT conv_id, turn_idx,
          |    string_agg(concat_ws(': ', role, text), chr(10))
@@ -1696,20 +1611,14 @@ object SparkEntry {
          |WHERE context IS NOT NULL""".stripMargin,
 
     "cdc_turn_order" ->
-      s"""$C, final AS (
-         |  SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete')
+      s"""$W, final AS (
+         |  SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM lww WHERE op <> 'delete')
          |SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) AS turn_rank,
          |  LAG(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
          |FROM final""".stripMargin,
 
     "cdc_salted_dedup" ->
-      s"""$C SELECT conv_id, turn_idx, role, text, tool, ts, op, seq FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1""".stripMargin,
+      s"$W SELECT conv_id, turn_idx, role, text, tool, ts, op, seq FROM lww",
 
     "cdc_evolved_replay" ->
       s"""$C, evolved AS (
@@ -1724,21 +1633,15 @@ object SparkEntry {
          |WHERE rn = 1 AND op <> 'delete'""".stripMargin,
 
     "cdc_widened_replay" ->
-      s"""$C SELECT conv_id, turn_idx, role, text, tool, ts, seq,
+      s"""$W SELECT conv_id, turn_idx, role, text, tool, ts, seq,
          |  CAST(CASE WHEN seq % 2 = 0 THEN turn_idx
          |            ELSE seq + 5000000000 END AS BIGINT) AS score
-         |FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |WHERE rn = 1 AND op <> 'delete'""".stripMargin,
+         |FROM lww WHERE op <> 'delete'""".stripMargin,
 
     // the lexicographically-first conversation's live turns from the fold
     "cdc_conv_lookup" ->
-      s"""$C, final AS (
-         |  SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete')
+      s"""$W, final AS (
+         |  SELECT conv_id, turn_idx, role, text, tool, ts, seq FROM lww WHERE op <> 'delete')
          |SELECT * FROM final
          |WHERE conv_id IN (SELECT DISTINCT conv_id FROM final ORDER BY conv_id LIMIT 5)
          |  AND turn_idx < 4096""".stripMargin,
@@ -1746,11 +1649,8 @@ object SparkEntry {
     // per-conversation distributive stats over the FINAL fold — what the
     // incrementally-maintained view must equal after its last refresh
     "cdc_incr_agg" ->
-      s"""$C, final AS (
-         |  SELECT conv_id, turn_idx, role, text FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |      ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
-         |  WHERE rn = 1 AND op <> 'delete')
+      s"""$W, final AS (
+         |  SELECT conv_id, turn_idx, role, text FROM lww WHERE op <> 'delete')
          |SELECT conv_id, CAST(COUNT(*) AS BIGINT) AS turns,
          |  CAST(SUM(COALESCE(LENGTH(text), 0)) AS BIGINT) AS total_chars,
          |  CAST(SUM(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS user_turns
@@ -1763,18 +1663,14 @@ object SparkEntry {
          |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog WHERE seq % 2 = 0) t
          |WHERE rn = 1 AND op <> 'delete'""".stripMargin,
 
-    // row-level feed between the v1 (seq % 2 = 0) and v2 (full) folds:
+    // row-level feed between the v1 (seq % 2 = 0) and the full (lww) folds:
     // insert = key not live at v1, live at v2; delete = live → not live
     // (pre-image row); update = live → live with a different (ts, seq)
     // winner. Tombstone→tombstone and unchanged winners emit nothing.
     "cdc_change_feed" ->
-      s"""$C, v1 AS (
+      s"""$W, v1 AS (
          |  SELECT * FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
          |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog WHERE seq % 2 = 0) t
-         |  WHERE rn = 1),
-         |v2 AS (
-         |  SELECT * FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-         |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
          |  WHERE rn = 1),
          |j AS (
          |  SELECT COALESCE(a.conv_id, b.conv_id) AS conv_id,
@@ -1783,7 +1679,7 @@ object SparkEntry {
          |         a.ts AS a_ts, a.seq AS a_seq, a.op AS a_op,
          |         b.role AS b_role, b.text AS b_text, b.tool AS b_tool,
          |         b.ts AS b_ts, b.seq AS b_seq, b.op AS b_op
-         |  FROM v1 a FULL JOIN v2 b
+         |  FROM v1 a FULL JOIN lww b
          |    ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx),
          |c AS (
          |  SELECT *, CASE

@@ -73,4 +73,15 @@ object Changelog {
       |         ELSE 'insert' END AS op,
       |    (event_id * 7919) % 999999999989 AS seq
       |  FROM events)""".stripMargin
+
+  /** [[DuckDbCte]] plus `lww`: each (conv_id, turn_idx) key's last-write-wins
+    * winner (greatest `ts`, then greatest `seq`), delete winners included.
+    * It is the fold every replay and table gate must reproduce.
+    */
+  val DuckDbLwwCte: String =
+    DuckDbCte + """,
+      |lww AS (
+      |  SELECT * FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
+      |    ORDER BY ts DESC, seq DESC) AS rn FROM changelog) t
+      |  WHERE rn = 1)""".stripMargin
 }

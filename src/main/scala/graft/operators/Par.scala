@@ -56,4 +56,19 @@ object Par {
   def keyedShufflePartitions(spark: org.apache.spark.sql.SparkSession): Int =
     math.max(spark.sparkContext.defaultParallelism,
       org.apache.spark.sql.internal.SQLConf.get.numShufflePartitions)
+
+  /** Run `f` with `kv` set on the session conf; each key gets its previous
+    * value (or its absence) back afterwards, also when `f` throws. The
+    * setting is session-wide, not thread-local: while `f` runs, every other
+    * query on the same session plans under it too.
+    */
+  def withSessionConf[T](spark: org.apache.spark.sql.SparkSession,
+      kv: Map[String, String])(f: => T): T = {
+    // getAll holds only the keys set on the session; getOption would read a
+    // registered key's default back as a value and pin it on restore
+    val set = spark.conf.getAll
+    val old = kv.keys.map(k => k -> set.get(k)).toMap
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -174,12 +174,8 @@ object Similarity {
     * the lazily-returned frames plan at their own action time under the
     * caller's AQE setting.
     */
-  private def withoutAqe[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, old)
-  }
+  private def withoutAqe[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T =
+    Par.withSessionConf(spark, Map("spark.sql.adaptive.enabled" -> "false"))(f)
 
   /** IVF coarse-quantizer training (deterministic k-means-lite over cosine)
     * — extracted so [[AnnIndex]] can persist the trained centroids. Input
