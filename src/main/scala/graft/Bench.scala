@@ -562,14 +562,13 @@ object Bench {
       graft.operators.ChangeFeed.changesSince(spark, lastMorTable, 1L).count()
     }
     // ---- spill-fold leg: the sort-spill delta fold vs the hash fold on the
-    // SAME delta-deep raw-MOR table. spillFoldBytes=0 forces the policy on
-    // EVERY bucket — the worst case of the graceful-degradation path for a
-    // bucket that outgrew its executor (cdc_spill_fold gates its
+    // SAME delta-deep raw-MOR table. A 0-byte spill threshold forces the
+    // policy on EVERY bucket — the worst case of the graceful-degradation
+    // path for a bucket that outgrew its executor (cdc_spill_fold gates its
     // correctness at sf0.01; this is its cost at bench scale). The measured
     // gap is the narrow in-task sort's copy+spill overhead — the price of
     // keeping an oversized bucket readable at O(1) task memory.
     progress("cdc: spill-fold vs hash-fold read leg")
-    val savedSpillBytes = lastMorTable.spillFoldBytes
     var spillFoldRows = 0L
     val hashFoldS = (1 to 3).map { _ =>
       val (n, sec) = timed { lastMorTable.read(spark).count() }
@@ -577,16 +576,17 @@ object Bench {
     }
     require(graft.operators.BucketLocal.lastSpilled.isEmpty,
       "hash-fold leg unexpectedly took the spill branch")
-    lastMorTable.spillFoldBytes = 0L
-    val spillFoldS = (1 to 3).map { _ =>
-      val (n, sec) = timed { lastMorTable.read(spark).count() }
-      require(n == spillFoldRows,
-        s"spill fold disagrees with hash fold: $n vs $spillFoldRows rows")
-      sec
+    val spillFoldS = graft.operators.Par.withSessionConf(spark,
+        Map(graft.operators.BucketLocal.SpillFoldBytesKey -> "0")) {
+      (1 to 3).map { _ =>
+        val (n, sec) = timed { lastMorTable.read(spark).count() }
+        require(n == spillFoldRows,
+          s"spill fold disagrees with hash fold: $n vs $spillFoldRows rows")
+        sec
+      }
     }
     require(graft.operators.BucketLocal.lastSpilled.nonEmpty,
       "spill-fold leg did not take the spill branch")
-    lastMorTable.spillFoldBytes = savedSpillBytes
     // ---- SELECTIVE compaction: fold 4 of 32 buckets first — the
     // maintenance unit for a skewed tail (hot buckets go delta-deep, the
     // rest shouldn't pay). Cost should scale ~|targets|/|table| vs the full

@@ -14,15 +14,16 @@ object Harness {
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** A fresh session on `local[cores]` (or `master`, a deployment's own),
-    * with one shuffle partition per core, AQE on, UTC and no UI. Any active
-    * or default session is cleared first, so a harness that stops one
-    * session and builds the next (Bench's scaling legs) gets the new conf.
+    * with one shuffle partition per core, AQE on, UTC, no UI and log level
+    * WARN from start-up on. Any active or default session is cleared
+    * first, so a harness that stops one session and builds the next
+    * (Bench's scaling legs) gets the new conf.
     */
   def session(app: String, cores: Int = cpus,
       master: Option[String] = None): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master(master.getOrElse(s"local[$cores]"))
       .appName(app)
       .config("spark.sql.shuffle.partitions", cores)
@@ -35,8 +36,8 @@ object Harness {
       .config("spark.shuffle.file.buffer", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // before start-up, so the context's own INFO lines are not printed
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.changelog.Changelog
 import graft.functions.{Grel, Rml, Text}
 import graft.multimodal.Multimodal
-import graft.operators.{AnnIndex, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Par, Similarity}
+import graft.operators.{AnnIndex, BucketLocal, ChangeFeed, Dedup, IncrementalAgg, Lww, MergeApplier, Par, Similarity}
 import graft.streaming.{AnnMaintenance, ForkFreeCheckpointFileManager, Replicate}
 import graft.table.{ForkFreeLocalFileSystem, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -451,12 +451,14 @@ object SparkEntry {
     }),
 
     // Spill-safe fold: the SAME build read through the sort-spill path
-    // (spillFoldBytes = 0 forces the policy) — the disk-backed fold for a
-    // bucket that outgrew its executor must produce bit-identical winners.
+    // (a spill threshold of 0 bytes forces the policy; the read plans its
+    // spill set inside the scope) — the disk-backed fold for a bucket that
+    // outgrew its executor must produce bit-identical winners.
     "cdc_spill_fold" -> ((s, dir) => {
       val (t, _) = gateBuild(s, dir, "cdc_spill_fold", 4, mor = true)
-      t.spillFoldBytes = 0L
-      t.read(s).select(TableCols.map(col): _*)
+      Par.withSessionConf(s, Map(BucketLocal.SpillFoldBytesKey -> "0")) {
+        t.read(s).select(TableCols.map(col): _*)
+      }
     }),
 
     // C8: MOR appends + a full compaction — gates the bucket-local
@@ -1429,6 +1431,10 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     oracleSqlBase ++ Map(
       "dedup_clusters_star" -> oracleSqlBase("dedup_clusters"),
+      // near-exhaustive SRP banding and full-probe IVF share the
+      // brute-force oracle
+      "ann_lsh_topk" -> oracleSqlBase("ann_cosine_topk"),
+      "ann_ivf_topk" -> oracleSqlBase("ann_cosine_topk"),
       "ann_quant_topk" -> oracleSqlBase("ann_cosine_topk"),
       "ann_ivfpq_topk" -> oracleSqlBase("ann_cosine_topk"),
       "ann_ivf_persisted" -> oracleSqlBase("ann_cosine_topk"),
@@ -2173,31 +2179,6 @@ object SparkEntry {
         |FROM embeddings GROUP BY label""".stripMargin,
 
     "ann_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-        |  WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cos
-        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, ROUND(cos, 4) AS cosine, rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, vec_id ASC) AS rank FROM scored) t
-        |WHERE rank <= 5""".stripMargin,
-
-    // near-exhaustive SRP banding shares the brute-force oracle
-    "ann_lsh_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-        |  WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cos
-        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id, vec_id, ROUND(cos, 4) AS cosine, rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, vec_id ASC) AS rank FROM scored) t
-        |WHERE rank <= 5""".stripMargin,
-
-    "ann_ivf_topk" ->
       """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
         |  WHERE vec_id < 8),
         |scored AS (

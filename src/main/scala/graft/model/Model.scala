@@ -1,8 +1,10 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Core data model of the CDC engine.
   *
@@ -45,6 +47,15 @@ object Model {
   val OpInsert = "insert"
   val OpUpdate = "update"
   val OpDelete = "delete"
+
+  /** [[OpDelete]] as a table row stores it. */
+  private[graft] val DeleteOp = UTF8String.fromString(Model.OpDelete)
+
+  /** Whether a table row is a tombstone: its `op` (at `opI`) is a delete. A
+    * null op is a live row. The one tombstone test of every task-side pass.
+    */
+  def isDelete(r: InternalRow, opI: Int): Boolean =
+    !r.isNullAt(opI) && r.getUTF8String(opI).equals(DeleteOp)
 
   /** The LWW version order, the one rule every fold applies: a version
     * `(ts, seq)` supersedes the incumbent `(curTs, curSeq)` iff it is

@@ -18,15 +18,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * parallelism is the bucket, which is exactly how the table scales.
   *
   * [[foldBucket]] is the one task-side bucket fold behind every read
-  * ([[readFolded]], the lake DSv2 reader), compaction ([[compactRows]]) and
-  * change feed: the in-memory hash fold, or — for a bucket whose manifest
-  * bytes exceed the table's `spillFoldBytes` — the spilling sort followed
-  * by a streaming fold. [[spillPlan]] makes that decision per bucket on
-  * the driver, from manifest metadata.
+  * ([[readFolded]], the lake DSv2 reader), compaction ([[compactRows]]),
+  * change feed and row-level tombstone carry: the in-memory hash fold, or —
+  * for a bucket whose manifest bytes exceed the session's spill threshold
+  * ([[SpillFoldBytesKey]]) — the spilling sort followed by a streaming fold.
+  * [[spillPlan]] makes that decision per bucket on the driver, from
+  * manifest metadata. [[orderedWinners]] is the same fold in
+  * (conv_id, turn_idx) order: the COW merge, compaction and the change
+  * feed's diff consume it.
   *
   * Every rewrite pass here hands its rows to the bucket's task writer
   * ([[graft.table.BucketFileWriter]]): compaction through [[compactRows]],
-  * rebucket through [[keyOrdered]].
+  * rebucket through [[orderedWinners]].
   *
   * [[wins]] applies the engine's one LWW order ([[Model.supersedes]]) to
   * table rows on every write path (replay, COW merge, compaction) and
@@ -44,10 +47,9 @@ object BucketLocal {
     Model.supersedes(ver(r, tsI), ver(r, seqI), ver(cur, tsI), ver(cur, seqI))
 
   /** Fold an iterator to its per-key winner MAP. Rows are copied only when
-    * stored (the scan reuses row buffers); losers are never copied. Exposed
-    * (package-private) so the change feed can DIFF two folded states in-task.
+    * stored (the scan reuses row buffers); losers are never copied.
     */
-  private[operators] def foldWinnersMap(rows: Iterator[InternalRow],
+  private def foldWinnersMap(rows: Iterator[InternalRow],
       convI: Int, turnI: Int, tsI: Int, seqI: Int)
       : java.util.HashMap[(UTF8String, Int), InternalRow] = {
     val winners = new java.util.HashMap[(UTF8String, Int), InternalRow]()
@@ -130,18 +132,56 @@ object BucketLocal {
     else foldWinners(rows, convI, turnI, tsI, seqI)
   }
 
-  /** The spill decision, made per bucket on the driver from manifest
-    * metadata (no I/O): the buckets whose bytes exceed `threshold` fold
-    * through the sort. Records the set in [[lastSpilled]].
+  /** [[foldBucket]]'s winners in (conv_id, turn_idx) order, the input of
+    * every key-ordered consumer (the COW merge's write, compaction,
+    * rebucket, the change feed's diff). The sort fold emits key order
+    * already; the hash fold's winners are sorted in-task. The map values
+    * are copies, so the sort copies nothing; memory is the bucket's
+    * winners, as for the fold.
     */
-  private[graft] def spillPlan(bucketBytes: Iterable[(Int, Long)], threshold: Long): Set[Int] = {
+  private[graft] def orderedWinners(schema: StructType, rows: Iterator[InternalRow],
+      spill: Boolean): Iterator[InternalRow] =
+    if (spill) foldBucket(schema, rows, spill)
+    else {
+      val (convI, turnI, tsI, seqI) = keyIdx(schema)
+      val winners = foldWinnersMap(rows, convI, turnI, tsI, seqI).values()
+        .toArray(new Array[InternalRow](0))
+      java.util.Arrays.sort(winners, keyComparator(convI, turnI))
+      winners.iterator
+    }
+
+  /** The session conf that holds the spill-fold threshold, in bytes
+    * (default 2 GiB), the one setting of every fold path: in a
+    * delta-carrying read, a compaction, a change feed (batch or `lake-cdf`)
+    * or a row-level tombstone carry, each bucket whose manifest bytes exceed
+    * it folds through the spilling sort ([[foldBucket]]) instead of the
+    * in-memory hash fold. The hash fold's memory bound is one bucket's
+    * post-merge contents — the COW sizing contract — so a bucket that
+    * outgrew its executor (hot-key flood, delayed compaction, undersized
+    * numBuckets) would OOM it; above the threshold the engine degrades to
+    * disk-backed sorting instead, keeping the table readable, compactable
+    * and REBUCKETABLE — the recovery path that restores the sizing
+    * invariant. 2 GiB ≈ a conservative executor-task budget; tune per
+    * deployment (file bytes are compressed parquet, so in-memory row size
+    * is larger).
+    */
+  val SpillFoldBytesKey = "graft.lake.spillFoldBytes"
+
+  /** The spill decision, made per bucket on the driver from manifest
+    * metadata (no I/O): the buckets whose bytes exceed `spark`'s
+    * [[SpillFoldBytesKey]] fold through the sort. Records the set in
+    * [[lastSpilled]].
+    */
+  private[graft] def spillPlan(spark: SparkSession,
+      bucketBytes: Iterable[(Int, Long)]): Set[Int] = {
+    val threshold = spark.conf.getOption(SpillFoldBytesKey).fold(2L << 30)(_.toLong)
     val spill = bucketBytes.collect { case (b, n) if n > threshold => b }.toSet
     lastSpilled = spill
     spill
   }
 
-  private[graft] def spillPlan(files: Map[Int, Seq[FileEntry]], threshold: Long): Set[Int] =
-    spillPlan(files.map { case (b, fs) => b -> fs.iterator.map(_.bytes).sum }, threshold)
+  private[graft] def spillPlan(spark: SparkSession, files: Map[Int, Seq[FileEntry]]): Set[Int] =
+    spillPlan(spark, files.map { case (b, fs) => b -> fs.iterator.map(_.bytes).sum })
 
   /** Test observability only: the buckets the last planned fold sent to the
     * sort (the sort runs inside the tasks, invisible to any plan).
@@ -168,16 +208,16 @@ object BucketLocal {
     * fold done bucket-locally — ZERO exchanges at any number of
     * un-compacted deltas: partition i reads bucket i's files and folds them
     * through [[foldBucket]], spilling exactly the buckets whose bytes exceed
-    * `table.spillFoldBytes`. Serves every delta-carrying read: the table
+    * the spill threshold. Serves every delta-carrying read: the table
     * read, staged reads, the Spark path of the lookups (a pruned file's key
     * bounds exclude the looked-up key, so the fold of every key the caller
     * then filters FOR is unchanged), the view refresh and rebucket. Column
     * pruning is moot here: the fold's winner semantics need whole rows.
     */
-  def readFolded(spark: SparkSession, table: LakeTable, snap: Snapshot,
+  def readFolded(spark: SparkSession, snap: Snapshot,
       files: Map[Int, Seq[FileEntry]]): DataFrame = {
     val schema = snap.schema
-    val spill = spillPlan(files, table.spillFoldBytes)
+    val spill = spillPlan(spark, files)
     val folded = ScanBridge.bucketFilesRdd(spark, schema, bucketArray(snap.numBuckets, files))
       .mapPartitionsWithIndex((b, rows) => foldBucket(schema, rows, spill(b)))
     ScanBridge.internalDf(spark, folded, schema)
@@ -210,20 +250,8 @@ object BucketLocal {
       }
     }
 
-  /** Buffer a partition and CLUSTER it by (conv_id, turn_idx) — the in-task
-    * layout of every key-unique rewrite (compaction's hash path, rebucket).
-    * `copyRows = false` only when the rows are already safe copies (a hash
-    * fold's map values); scanned and shuffled rows reuse their buffers.
-    */
-  private[operators] def keyOrdered(rows: Iterator[InternalRow], copyRows: Boolean,
-      convI: Int, turnI: Int): Iterator[InternalRow] = {
-    val arr = (if (copyRows) rows.map(_.copy()) else rows).toArray
-    java.util.Arrays.sort(arr, keyComparator(convI, turnI))
-    arr.iterator
-  }
-
   /** One bucket-local compaction pass: partition i holds bucket i's rows
-    * folded through [[foldBucket]], tombstones older than the watermark
+    * folded through [[orderedWinners]], tombstones older than the watermark
     * dropped, CLUSTERED by (conv_id, turn_idx) — ready for that bucket's
     * task write ([[graft.table.BucketFileWriter.writeAll]]). ZERO shuffles
     * — compaction cost is exactly read + fold + write, the property that
@@ -235,32 +263,25 @@ object BucketLocal {
     * so any analytical scan with a conv_id/turn_idx predicate — including
     * [[graft.table.LakeTable.lookupTurn]]'s pushed filter — skips row
     * groups instead of scanning the bucket, and runs of one conversation
-    * compress better. The sort fold emits key order already; the hash
-    * fold's winners are sorted in-task, the SAME one-bucket memory bound the
-    * COW merge has. An oversized bucket takes the sort fold at O(1) task
-    * rows: compaction is how the operator SHRINKS such a bucket, so it is
-    * the one pass that must survive it.
+    * compress better. The hash fold's winners are sorted in-task, the SAME
+    * one-bucket memory bound the COW merge has. An oversized bucket takes
+    * the sort fold at O(1) task rows: compaction is how the operator SHRINKS
+    * such a bucket, so it is the one pass that must survive it.
     */
   def compactRows(spark: SparkSession, table: LakeTable, snap: Snapshot,
       watermarkMicros: Long, buckets: Option[Set[Int]] = None): RDD[InternalRow] = {
     val schema = snap.schema
-    val (convI, turnI, tsI, _) = keyIdx(schema)
+    val tsI = schema.fieldIndex("ts")
     val opI = schema.fieldIndex("op")
-    val deleteOp = UTF8String.fromString(Model.OpDelete)
     // a null-ts tombstone has UNKNOWN event time — it must never expire
     // (ver() maps null to Long.MinValue for ordering, which would
     // otherwise make it "older than" any watermark)
     def expired(r: InternalRow): Boolean =
-      !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp) &&
-        !r.isNullAt(tsI) && r.getLong(tsI) < watermarkMicros
+      Model.isDelete(r, opI) && !r.isNullAt(tsI) && r.getLong(tsI) < watermarkMicros
     val files = table.resolveFiles(snap, buckets)
-    val spill = spillPlan(files, table.spillFoldBytes)
+    val spill = spillPlan(spark, files)
     ScanBridge.bucketFilesRdd(spark, schema, bucketArray(snap.numBuckets, files))
-      .mapPartitionsWithIndex { (b, rows) =>
-        val live = foldBucket(schema, rows, spill(b)).filter(r => !expired(r))
-        // both folds hand out safe copies (map values / the streaming
-        // fold's held row), so the sort needs no copy
-        if (spill(b)) live else keyOrdered(live, copyRows = false, convI, turnI)
-      }
+      .mapPartitionsWithIndex((b, rows) =>
+        orderedWinners(schema, rows, spill(b)).filter(!expired(_)))
   }
 }

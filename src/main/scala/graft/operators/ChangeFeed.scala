@@ -26,9 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     not O(table): at 10^10 rows a feed across a tail window reads only
   *     the buckets the tail touched, twice.
   *   - each changed bucket is diffed IN-TASK: fold both versions' bucket
-  *     files to their per-key LWW winners (the same associative rule the
-  *     writer uses) and compare. zipPartitions over two bucket-aligned
-  *     scans — ZERO exchanges at any table size, same as the merge itself.
+  *     files to their per-key LWW winners in key order (the same
+  *     associative rule the writer uses) and merge-diff them
+  *     ([[diffSortedWinners]], the one diff this feed and the `lake-cdf`
+  *     source share). zipPartitions over two bucket-aligned scans — ZERO
+  *     exchanges at any table size, same as the merge itself. Rows come
+  *     out in (conv_id, turn_idx) order within a bucket.
   *
   * Emitted schema: the table's columns (minus the internal `op`) plus
   * `change_type` ∈ insert | update | delete. insert/update carry the
@@ -85,7 +88,7 @@ object ChangeFeed {
     val schema = sTo.schema
     val filesFrom = table.resolveFiles(sFrom)
     val filesTo = table.resolveFiles(sTo)
-    val (changed, spill) = planDiff(n, filesFrom, filesTo, table.spillFoldBytes)
+    val (changed, spill) = planDiff(spark, n, filesFrom, filesTo)
     def changedFiles(fs: Map[Int, Seq[FileEntry]]) = fs.filter { case (b, _) => changed.contains(b) }
     val fromRdd = ScanBridge.bucketFilesRdd(spark, schema,
       BucketLocal.bucketArray(n, changedFiles(filesFrom)))
@@ -107,45 +110,44 @@ object ChangeFeed {
     * contents ⇒ skip without a read: a COW rewrite REPLACES the list, a MOR
     * append EXTENDS it, so any change to the bucket changes the list.
     * Oversized-bucket degradation, same policy (and threshold) as every
-    * fold path: a changed bucket whose larger side exceeds `spillFoldBytes`
-    * diffs via spilling sort + streaming fold + merge-diff (O(1) task rows)
-    * instead of the two whole-bucket hash maps.
+    * fold path ([[BucketLocal.spillPlan]]): a changed bucket whose larger
+    * side exceeds the threshold folds each side through the spilling sort
+    * (O(1) task rows) instead of the in-memory hash fold.
     */
-  private[graft] def planDiff(numBuckets: Int, from: Map[Int, Seq[FileEntry]],
-      to: Map[Int, Seq[FileEntry]], spillFoldBytes: Long): (Seq[Int], Set[Int]) = {
+  private[graft] def planDiff(spark: SparkSession, numBuckets: Int,
+      from: Map[Int, Seq[FileEntry]], to: Map[Int, Seq[FileEntry]]): (Seq[Int], Set[Int]) = {
     def files(m: Map[Int, Seq[FileEntry]], b: Int) = m.getOrElse(b, Seq.empty)
     val changed = (0 until numBuckets).filter(b => files(from, b) != files(to, b))
     def bytes(m: Map[Int, Seq[FileEntry]], b: Int) = files(m, b).iterator.map(_.bytes).sum
-    (changed, BucketLocal.spillPlan(
-      changed.map(b => b -> math.max(bytes(from, b), bytes(to, b))), spillFoldBytes))
+    (changed, BucketLocal.spillPlan(spark,
+      changed.map(b => b -> math.max(bytes(from, b), bytes(to, b)))))
   }
 
-  /** Per-bucket switch between [[diffPartition]] (two in-task hash maps —
-    * fast while the bucket fits the executor-sized contract) and, for a
-    * bucket `spill` marks ([[BucketLocal.spillPlan]] over the SAME
-    * `spillFoldBytes` every fold path honors), the spill-safe sorted
-    * merge-diff: each side through [[BucketLocal.foldBucket]]'s sort fold,
-    * then [[diffSortedWinners]] holds one row per side. The feed — and the
-    * incremental view refresh riding on it — keeps working on exactly the
-    * oversized bucket the degradation contract exists for, instead of
-    * OOMing at 2× the bucket-sized memory unit.
+  /** The in-task diff of one changed bucket, shared by the batch feed and
+    * the [[graft.streaming.LakeCdfSource]] micro-batch reader: each side's
+    * rows fold to their winners in key order ([[BucketLocal.orderedWinners]],
+    * hash fold sorted in-task, or the sort fold for a bucket `spill` marks),
+    * then [[diffSortedWinners]] classifies them. A skipped bucket (no rows
+    * on either side) opens no fold and no sorter.
     */
   private[graft] def diffPartitionAuto(schema: StructType, preImages: Boolean,
       deleteTombstones: Boolean, spill: Boolean)(
-      from: Iterator[InternalRow], to: Iterator[InternalRow]): Iterator[InternalRow] = {
-    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
-    val opI = schema.fieldIndex("op")
-    if (!from.hasNext && !to.hasNext) Iterator.empty // skipped bucket: no sorters
-    else if (!spill)
-      diffPartition(convI, turnI, tsI, seqI, opI, preImages, deleteTombstones)(from, to)
-    else diffSortedWinners(convI, turnI, tsI, seqI, opI, preImages, deleteTombstones)(
-      BucketLocal.foldBucket(schema, from, spill), BucketLocal.foldBucket(schema, to, spill))
-  }
+      from: Iterator[InternalRow], to: Iterator[InternalRow]): Iterator[InternalRow] =
+    if (!from.hasNext && !to.hasNext) Iterator.empty
+    else diffSortedWinners(schema, preImages, deleteTombstones)(
+      BucketLocal.orderedWinners(schema, from, spill),
+      BucketLocal.orderedWinners(schema, to, spill))
 
-  /** In-task diff of one bucket's two folded states. Memory: the two winner
-    * maps — bounded by the bucket's contents at each version, the same unit
-    * the COW merge and the delta fold already hold (the rewrite unit, sized
-    * to the executor via numBuckets).
+  /** THE change classification: a merge-diff of two winner streams SORTED
+    * ascending by (conv_id, turn_idx), tombstones included. Per key:
+    *   - live at `to` only (absent or a tombstone at `from`): insert, the
+    *     post-image;
+    *   - live at both with a different (ts, seq): update, the post-image,
+    *     preceded by the pre-image as `update_preimage` with `preImages`;
+    *   - live at `from` only: delete, the PRE-image (the row that
+    *     disappeared);
+    *   - otherwise (unchanged winner, tombstone→tombstone, a vanished or
+    *     fresh tombstone): nothing visible.
     *
     * `deleteTombstones`: emit the TOMBSTONE row (the delete's own ts/seq)
     * instead of the pre-image for deletes — the REPLICATION contract: a
@@ -159,87 +161,24 @@ object ChangeFeed {
     * is not exactly-once (same contract as Delta CDF across VACUUM:
     * coordinate retention with consumers, or re-bootstrap).
     *
-    * Shared verbatim by the batch feed and the [[graft.streaming
-    * .LakeCdfSource]] micro-batch reader (package-private for the latter).
+    * Holds ONE row per side (winner iterators hand out copies). Emitted rows
+    * ride two mutable JoinedRows (pre/post of one update pair may be alive
+    * together), the standard reused-buffer contract — downstream copies.
     */
-  private[graft] def diffPartition(convI: Int, turnI: Int, tsI: Int, seqI: Int, opI: Int,
-      preImages: Boolean, deleteTombstones: Boolean = false)(
-      from: Iterator[InternalRow], to: Iterator[InternalRow]): Iterator[InternalRow] = {
-    if (!from.hasNext && !to.hasNext) return Iterator.empty // skipped bucket
-    val sem = new DiffSemantics(opI, tsI, seqI)
-    import sem.{isDelete, sameVersion, tDelete, tInsert, tUpdate, tUpdatePre}
-    val fromMap = BucketLocal.foldWinnersMap(from, convI, turnI, tsI, seqI)
-    val toMap = BucketLocal.foldWinnersMap(to, convI, turnI, tsI, seqI)
-    val joined = new JoinedRow
-    // a SECOND mutable JoinedRow for the pre-image half of an update pair:
-    // emitting two rows from one flatMap element materializes both joins
-    // before the consumer copies either, so they cannot share a buffer
-    val joinedPre = new JoinedRow
-    import scala.jdk.CollectionConverters._
-    val changes = toMap.entrySet().iterator().asScala.flatMap { e =>
-      val toRow = e.getValue
-      val fromRow = fromMap.remove(e.getKey)
-      val fromLive = fromRow != null && !isDelete(fromRow)
-      val toLive = !isDelete(toRow)
-      if (!fromLive && toLive) Seq(joined(toRow, tInsert): InternalRow)
-      else if (fromLive && !toLive)
-        // on this branch toRow IS the tombstone (present but dead at `to`)
-        Seq(joined(if (deleteTombstones) toRow else fromRow, tDelete): InternalRow)
-      else if (fromLive && toLive && !sameVersion(fromRow, toRow)) {
-        if (preImages)
-          Seq(joinedPre(fromRow, tUpdatePre): InternalRow, joined(toRow, tUpdate): InternalRow)
-        else Seq(joined(toRow, tUpdate): InternalRow)
-      }
-      else Seq.empty // unchanged winner, or tombstone→tombstone (nothing visible)
-    }
-    // keys present at fromVersion with NO row at toVersion: unreachable via
-    // merge alone (tombstones are retained), but a compaction between the
-    // versions expires tombstones — a vanished TOMBSTONE is not a visible
-    // change, while a vanished live row (defensive) is a delete. The
-    // leftover iterator MUST be created only after `changes` is exhausted:
-    // `changes` removes matched keys from fromMap as it is consumed, and a
-    // HashMap iterator opened before those removals would fail fast.
-    changes ++ Iterator.single(()).flatMap { _ =>
-      fromMap.values().iterator().asScala
-        .filter(r => !isDelete(r))
-        .map(r => joined(r, tDelete): InternalRow)
-    }
-  }
-
-  /** The change-classification vocabulary the hash diff and the sorted
-    * merge-diff share: tombstone detection, version equality, and the
-    * constant change-type tag rows.
-    */
-  private final class DiffSemantics(opI: Int, tsI: Int, seqI: Int)
-      extends Serializable {
-    private val deleteOp = UTF8String.fromString(Model.OpDelete)
-    def isDelete(r: InternalRow): Boolean =
-      !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)
-    def sameVersion(a: InternalRow, b: InternalRow): Boolean =
+  private[graft] def diffSortedWinners(schema: StructType, preImages: Boolean,
+      deleteTombstones: Boolean)(
+      fromW: Iterator[InternalRow], toW: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
+    val opI = schema.fieldIndex("op")
+    def live(r: InternalRow) = !Model.isDelete(r, opI)
+    def sameVersion(a: InternalRow, b: InternalRow) =
       BucketLocal.ver(a, tsI) == BucketLocal.ver(b, tsI) &&
         BucketLocal.ver(a, seqI) == BucketLocal.ver(b, seqI)
-    private def tag(t: String) =
-      new GenericInternalRow(Array[Any](UTF8String.fromString(t)))
-    val tInsert: GenericInternalRow = tag("insert")
-    val tUpdate: GenericInternalRow = tag("update")
-    val tDelete: GenericInternalRow = tag("delete")
-    val tUpdatePre: GenericInternalRow = tag("update_preimage")
-  }
-
-  /** Merge-diff of two winner streams already SORTED ascending by
-    * (conv_id, turn_idx) — the spill-safe twin of [[diffPartition]]'s map
-    * diff, emitting the SAME change rows (row order differs: key order here,
-    * hash order there). Holds ONE row per side (winner iterators hand out
-    * copies), so task memory is O(1) regardless of bucket size; the memory
-    * work moved into the upstream spilling sorts. Emitted rows ride two
-    * mutable JoinedRows (pre/post of one update pair may be alive together),
-    * the standard reused-buffer contract — downstream copies.
-    */
-  private[graft] def diffSortedWinners(convI: Int, turnI: Int, tsI: Int,
-      seqI: Int, opI: Int, preImages: Boolean, deleteTombstones: Boolean)(
-      fromW: Iterator[InternalRow], toW: Iterator[InternalRow]): Iterator[InternalRow] = {
-    val sem = new DiffSemantics(opI, tsI, seqI)
-    import sem.{isDelete, sameVersion, tDelete, tInsert, tUpdate, tUpdatePre}
+    def tag(t: String) = new GenericInternalRow(Array[Any](UTF8String.fromString(t)))
+    val tInsert = tag("insert")
+    val tUpdate = tag("update")
+    val tDelete = tag("delete")
+    val tUpdatePre = tag("update_preimage")
     val f = fromW.buffered
     val t = toW.buffered
     val joined = new JoinedRow
@@ -257,17 +196,17 @@ object ChangeFeed {
             // fallback — no tombstone exists at `to` to emit); a vanished
             // tombstone is not a visible change
             val fr = f.next()
-            if (!isDelete(fr)) out = joined(fr, tDelete)
+            if (live(fr)) out = joined(fr, tDelete)
           } else if (!f.hasNext || keyOrder.compare(f.head, t.head) > 0) {
             // key only at `to`: live ⇒ insert; a fresh tombstone with no
             // prior row is nothing visible
             val tr = t.next()
-            if (!isDelete(tr)) out = joined(tr, tInsert)
+            if (live(tr)) out = joined(tr, tInsert)
           } else {
             val fr = f.next()
             val tr = t.next()
-            val fromLive = !isDelete(fr)
-            val toLive = !isDelete(tr)
+            val fromLive = live(fr)
+            val toLive = live(tr)
             if (!fromLive && toLive) out = joined(tr, tInsert)
             else if (fromLive && !toLive)
               out = joined(if (deleteTombstones) tr else fr, tDelete)

@@ -179,7 +179,7 @@ object IncrementalAgg {
           // same snapshot-pinned pruned read as lookupTurn, for a key SET
           val pruned =
             if (s.morDeltas)
-              BucketLocal.readFolded(spark, view, s, view.resolveFiles(s, Some(buckets)))
+              BucketLocal.readFolded(spark, s, view.resolveFiles(s, Some(buckets)))
             else view.readRaw(spark, Some(buckets), asOfVersion = Some(s.version))
           pruned.filter(col("op") =!= Model.OpDelete)
             .filter(col("conv_id").isInCollection(affected))

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ScanBridge, WriteBridge}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine core: apply one micro-batch of change events to a LakeTable as
   * an exactly-once, key-partitioned MERGE.
@@ -73,10 +72,11 @@ object MergeApplier {
 
   /** In-task LWW merge of one bucket, written from the task: fold the batch
     * partition's rows and the bucket's stored rows through
-    * [[BucketLocal.foldWinnersMap]] (the engine's one LWW kernel: winner =
-    * max by (ts, seq), nulls lowest, ties keep the incumbent), then write
-    * the winners — tombstones included — in (conv_id, turn_idx) order as
-    * the bucket's one new file. Bucket id = partition id.
+    * [[BucketLocal.orderedWinners]]'s hash fold (the engine's one LWW
+    * kernel: winner = max by (ts, seq), nulls lowest, ties keep the
+    * incumbent), then write the winners — tombstones included — in
+    * (conv_id, turn_idx) order as the bucket's one new file. Bucket id =
+    * partition id.
     *
     * Memory: the map holds one row per distinct key of (batch ∪ bucket) —
     * exactly the bucket's post-merge contents, which the COW contract sizes
@@ -86,20 +86,16 @@ object MergeApplier {
       batch: Iterator[InternalRow], target: Iterator[InternalRow]): Iterator[BucketMerge] = {
     if (!batch.hasNext) return Iterator.empty // untouched bucket: no file opened
     val schema = writers.schema
-    val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
     val opI = schema.fieldIndex("op")
-    val deleteOp = UTF8String.fromString(Model.OpDelete)
     var nRows = 0L
     var nDel = 0L
     val counted = batch.map { r =>
       nRows += 1
-      if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) nDel += 1
+      if (Model.isDelete(r, opI)) nDel += 1
       r
     }
-    val winners = BucketLocal.foldWinnersMap(counted ++ target, convI, turnI, tsI, seqI)
-      .values().toArray(new Array[InternalRow](0))
-    java.util.Arrays.sort(winners, BucketLocal.keyComparator(convI, turnI))
-    Iterator(BucketMerge(BucketFileWriter.write(writers, dir, winners.iterator), nRows, nDel))
+    val winners = BucketLocal.orderedWinners(schema, counted ++ target, spill = false)
+    Iterator(BucketMerge(BucketFileWriter.write(writers, dir, winners), nRows, nDel))
   }
 
   /** The batch side of an apply: partition i holds exactly bucket i's batch
@@ -440,16 +436,16 @@ object MergeApplier {
     // fold deltas first if present (the rewrite must land key-unique rows);
     // COW state reads raw — tombstones included on both paths
     val state =
-      if (snap.morDeltas) BucketLocal.readFolded(spark, table, snap, table.resolveFiles(snap))
+      if (snap.morDeltas) BucketLocal.readFolded(spark, snap, table.resolveFiles(snap))
       else table.readRaw(spark)
     // same alignment trick as the merge: repartition(newN, key) partition i
     // holds exactly the NEW bucket i's rows, so its task key-orders them and
     // writes the bucket's one file — no second exchange, and row counts +
-    // FileStats come back with the task's result (no listing, no footers)
-    val (convI, turnI, _, _) = BucketLocal.keyIdx(snap.schema)
+    // FileStats come back with the task's result (no listing, no footers).
+    // The rows are key-unique already, so the fold hands them back whole.
     val rows = ScanBridge.toInternalRdd(Model.alignToSchema(state, snap.schema)
         .repartition(newNumBuckets, Model.KeyCols.map(col): _*))
-      .mapPartitions(it => BucketLocal.keyOrdered(it, copyRows = true, convI, turnI))
+      .mapPartitions(it => BucketLocal.orderedWinners(snap.schema, it, spill = false))
     val written = WrittenFile.byBucket(BucketFileWriter.writeAll(rows,
       WriteBridge.parquetWriterFactory(spark, snap.schema), outDir.toString))
     val change = TableChange(Ledger.Untracked("rebucket", snap.version), snap.schemaJson,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.ChangeFeed
 import graft.table.{FileEntry, LakeTable}
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -46,12 +45,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     bucket whose manifest file list is identical at both endpoint
   *     versions is skipped without opening a file, so a batch costs
   *     O(touched buckets), not O(table). Readers run [[ChangeFeed
-  *     .diffPartitionAuto]] (the batch feed's in-task fold+diff) over the same
-  *     parquet reader the merge scan uses: ZERO exchanges at any table size.
+  *     .diffPartitionAuto]] — the batch feed's in-task fold and its one
+  *     diff, [[ChangeFeed.diffSortedWinners]] — over the same parquet
+  *     reader the merge scan uses: ZERO exchanges at any table size.
   *   - `deleteTombstones=true` (the default here, unlike the batch feed's
   *     pre-image contract) emits deletes with the TOMBSTONE's (ts, seq) so a
   *     downstream LWW apply orders them after the replica's live row —
-  *     the replication contract (see diffPartition's scaladoc for the
+  *     the replication contract (see diffSortedWinners' scaladoc for the
   *     compact-expiry caveat).
   *   - the read schema is PINNED at stream start. Additive evolution
   *     mid-stream is safe (new files are read clipped to the pinned schema);
@@ -109,12 +109,12 @@ private[streaming] object LakeCdf {
   /** One InputPartition per bucket whose manifest file list differs between
     * the endpoint versions — metadata-only planning, O(touched), no file
     * opened on the driver. fromVersion ≤ 0 = empty baseline (bootstrap).
-    * Oversized-bucket degradation, same contract as the batch feed: a
-    * bucket whose larger side exceeds `spillFoldBytes` diffs via spilling
-    * sort + streaming merge-diff instead of two hash maps.
+    * Oversized-bucket degradation, same contract and session threshold as
+    * the batch feed ([[ChangeFeed.planDiff]]): a bucket whose larger side
+    * exceeds it folds each side through the spilling sort.
     */
-  def planPartitions(table: LakeTable, fromVersion: Long, toVersion: Long,
-      spillFoldBytes: Long): Array[InputPartition] = {
+  def planPartitions(table: LakeTable, fromVersion: Long,
+      toVersion: Long): Array[InputPartition] = {
     if (fromVersion >= toVersion) return Array.empty
     def snap(v: Long) = table.snapshotAt(v).getOrElse(throw new IllegalStateException(
       s"lake-cdf: snapshot v$v is gone (vacuumed?); re-bootstrap the stream"))
@@ -132,7 +132,7 @@ private[streaming] object LakeCdf {
     def arr(m: Map[Int, Seq[FileEntry]], b: Int): Array[(String, Long)] =
       m.getOrElse(b, Seq.empty).map(f => (f.path, f.bytes)).toArray
     val (changed, spill) =
-      ChangeFeed.planDiff(sTo.numBuckets, filesFrom, filesTo, spillFoldBytes)
+      ChangeFeed.planDiff(SparkSession.active, sTo.numBuckets, filesFrom, filesTo)
     changed.toArray.map(b =>
       CdfInputPartition(b, arr(filesFrom, b), arr(filesTo, b), spill(b)): InputPartition)
   }
@@ -175,12 +175,8 @@ private final class LakeCdfScan(root: String, tableSchema: StructType,
       readSchema, required, preImages, deleteTombstones)
   }
 
-  // the spill threshold, with the lake DSv2 reader's session-conf override
-  private lazy val spillFoldBytes: Long =
-    LakeTable.open(root).sessionSpillFoldBytes(SparkSession.active)
-
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new LakeCdfStream(root, options, readerFactory(), tableSchema, spillFoldBytes)
+    new LakeCdfStream(root, options, readerFactory(), tableSchema)
 
   /** The same feed as a one-shot batch scan:
     * `spark.read.format("lake-cdf").option("fromVersion", v).load()` —
@@ -194,7 +190,7 @@ private final class LakeCdfScan(root: String, tableSchema: StructType,
     private val to = options.getLong("toVersion",
       table.currentSnapshot().map(_.version).getOrElse(0L))
     override def planInputPartitions(): Array[InputPartition] =
-      LakeCdf.planPartitions(table, from, to, spillFoldBytes)
+      LakeCdf.planPartitions(table, from, to)
     override def createReaderFactory(): PartitionReaderFactory = readerFactory()
   }
 }
@@ -207,8 +203,7 @@ private[streaming] final case class CdfOffset(version: Long) extends Offset {
 }
 
 private final class LakeCdfStream(root: String, options: CaseInsensitiveStringMap,
-    factory: PartitionReaderFactory, pinnedSchema: StructType,
-    spillFoldBytes: Long) extends MicroBatchStream
+    factory: PartitionReaderFactory, pinnedSchema: StructType) extends MicroBatchStream
     with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private val startingVersion = Option(options.get("startingVersion")).getOrElse("earliest")
@@ -263,8 +258,7 @@ private final class LakeCdfStream(root: String, options: CaseInsensitiveStringMa
             s"at or before v$endV; restart the stream to adopt the new schema"))
       }
     }
-    val parts = LakeCdf.planPartitions(table,
-      start.asInstanceOf[CdfOffset].version, endV, spillFoldBytes)
+    val parts = LakeCdf.planPartitions(table, start.asInstanceOf[CdfOffset].version, endV)
     lastChangedBuckets = parts.length
     parts
   }
@@ -310,10 +304,6 @@ private final class CdfReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdfInputPartition]
-    def files(fs: Array[(String, Long)]): Iterator[InternalRow] =
-      fs.iterator.flatMap { case (path, size) =>
-        reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
-      }
     // diff rows are (pruned table row ++ change_type) on reused JoinedRow
     // buffers; project onto the requested output order as an UnsafeRow
     // (per-row buffer reuse is the standard source contract — downstream
@@ -327,8 +317,8 @@ private final class CdfReaderFactory(
           BoundReference(i, readSchema.fields(i).dataType, readSchema.fields(i).nullable)
         }
       })
-    val diffed = ChangeFeed.diffPartitionAuto(readSchema, preImages, deleteTombstones,
-      p.spill)(files(p.fromFiles), files(p.toFiles))
+    val diffed = ChangeFeed.diffPartitionAuto(readSchema, preImages, deleteTombstones, p.spill)(
+      ScanBridge.readFiles(reader, p.fromFiles), ScanBridge.readFiles(reader, p.toFiles))
 
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _

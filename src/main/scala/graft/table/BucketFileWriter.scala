@@ -24,7 +24,6 @@ final class FileStatsTracker(schema: StructType, textIndex: Boolean = false) {
   private val tsI = schema.fieldIndex("ts")
   private val opI = schema.fieldIndex("op")
   private val textI = if (textIndex) schema.fieldIndex("text") else -1
-  private val deleteOp = UTF8String.fromString(Model.OpDelete)
   var rows = 0L
   var tombstones = 0L
   private var minConv: UTF8String = null
@@ -38,7 +37,7 @@ final class FileStatsTracker(schema: StructType, textIndex: Boolean = false) {
 
   def track(r: InternalRow): Unit = {
     rows += 1
-    if (!r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)) tombstones += 1
+    if (Model.isDelete(r, opI)) tombstones += 1
     val c = r.getUTF8String(convI)
     if (minConv == null || c.binaryCompare(minConv) < 0) minConv = c.clone()
     if (maxConv == null || c.binaryCompare(maxConv) > 0) maxConv = c.clone()

@@ -1,9 +1,11 @@
 package graft.table
 
 import graft.model.Model
+import graft.operators.BucketLocal
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal, Murmur3Hash, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -39,15 +41,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     the read path, never a blind rewrite of groups Spark didn't read.
   *
   * CDC-invariant preservation: the SQL scan folds tombstones out, so a naive
-  * group replacement would DROP the replaced buckets' tombstones and a stale
-  * out-of-order insert could resurrect a deleted turn. Instead the commit
-  * re-reads just the replaced buckets' tombstone rows (one bucket-aligned
-  * scan of the groups already being rewritten — same cost class as the op
-  * itself), each bucket's task writes its tombstones as one file with
-  * [[FileStats]], and the commit carries them as a delta manifest. LWW is
-  * associative, so the old tombstones fold correctly against the replacement rows: a key the
-  * statement re-inserted with a NEWER (ts, seq) lives; a pre-delete replay
-  * stays dead — exactly the engine's contract everywhere else.
+  * group replacement would DROP the replaced buckets' tombstones, and a row
+  * the statement deleted (`DELETE` with a subquery, `MERGE … WHEN MATCHED
+  * THEN DELETE`) would simply vanish — either way a stale out-of-order
+  * insert could resurrect a deleted turn. Instead the commit folds just the
+  * replaced buckets' old files and reads their replacement keys (one
+  * bucket-aligned pass over the groups already being rewritten — same cost
+  * class as the op itself): each bucket's task keeps its winning tombstones
+  * and gives every deleted key — a live winner with no replacement row — a
+  * tombstone at (ts, seq + 1), the one a translatable `DELETE` writes. It
+  * writes them as one file with [[FileStats]], and the commit carries them
+  * as a delta manifest. LWW is associative, so the tombstones fold correctly
+  * against the replacement rows: a key the statement re-inserted with a
+  * NEWER (ts, seq) lives; a pre-delete replay stays dead — exactly the
+  * engine's contract everywhere else.
   *
   * Concurrency: same OCC as every other writer. A lost CAS whose winner left
   * the touched buckets' file lists unchanged is rebased (pure metadata); a
@@ -133,19 +140,37 @@ private final class LakeReplaceDataWrite(
     val replaced: Set[Int] = op.scannedBuckets.getOrElse(Set.empty)
     val (baseFiles, deltaFiles) = newFiles.partition { case (b, _) => replaced(b) }
 
-    // preserve the replaced buckets' CDC tombstones as a delta (see class
-    // doc): bucket i's task scans bucket i's files and writes its tombstones
+    // the replaced buckets' tombstones, old and new, as a delta (see class
+    // doc): bucket i's task folds bucket i's old files against its new keys
     val tombs =
       if (replaced.isEmpty) Seq.empty
       else {
-        val opI = snap.schema.fieldIndex("op")
-        val deleteOp = UTF8String.fromString(Model.OpDelete)
-        BucketFileWriter.writeAll(
-          ScanBridge.bucketFilesRdd(spark, snap.schema,
-              graft.operators.BucketLocal.bucketArray(snap.numBuckets,
-                table.resolveFiles(snap, Some(replaced))))
-            .filter(r => !r.isNullAt(opI) && r.getUTF8String(opI).equals(deleteOp)),
-          WriteBridge.parquetWriterFactory(spark, snap.schema),
+        val schema = snap.schema
+        val (convI, turnI, tsI, seqI) = BucketLocal.keyIdx(schema)
+        val opI = schema.fieldIndex("op")
+        val old = table.resolveFiles(snap, Some(replaced))
+        val spill = BucketLocal.spillPlan(spark, old)
+        def scan(s: StructType, files: Map[Int, Seq[FileEntry]]) =
+          ScanBridge.bucketFilesRdd(spark, s, BucketLocal.bucketArray(snap.numBuckets, files))
+        val keys = StructType(Model.KeyCols.map(schema(_)))
+        val carried = scan(schema, old).zipPartitions(scan(keys, baseFiles)) { (rows, kept) =>
+          val keep = new java.util.HashSet[(UTF8String, Int)]()
+          kept.foreach(k => keep.add((k.getUTF8String(0).clone(), k.getInt(1))))
+          BucketLocal.foldBucket(schema, rows, spill(TaskContext.getPartitionId())).flatMap { w =>
+            if (Model.isDelete(w, opI)) Some(w)
+            else if (keep.contains((w.getUTF8String(convI), w.getInt(turnI)))) None
+            else {
+              val t = new GenericInternalRow(schema.length)
+              t.update(convI, w.getUTF8String(convI))
+              t.setInt(turnI, w.getInt(turnI))
+              if (!w.isNullAt(tsI)) t.setLong(tsI, w.getLong(tsI))
+              if (!w.isNullAt(seqI)) t.setLong(seqI, w.getLong(seqI) + 1)
+              t.update(opI, Model.DeleteOp)
+              Some(t)
+            }
+          }
+        }
+        BucketFileWriter.writeAll(carried, WriteBridge.parquetWriterFactory(spark, schema),
           outDir.resolve("tombstones").toString)
       }
     val tombFiles = WrittenFile.byBucket(tombs).files

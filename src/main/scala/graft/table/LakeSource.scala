@@ -2,7 +2,6 @@ package graft.table
 
 import graft.model.Model
 import graft.operators.{BucketLocal, MergeApplier}
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -710,8 +709,7 @@ private[table] final class LakeSourceScan(table: LakeTable, snap: Snapshot,
     // folds via spilling sort + O(1)-row streaming fold instead of the
     // whole-bucket hash map
     val spill =
-      if (snap.morDeltas)
-        BucketLocal.spillPlan(planned.toMap, table.sessionSpillFoldBytes(SparkSession.active))
+      if (snap.morDeltas) BucketLocal.spillPlan(SparkSession.active, planned.toMap)
       else Set.empty[Int]
     planned.toArray.map { case (b, fs) =>
       LakeInputPartition(b, fs.map(f => (f.path, f.bytes)).toArray, spill(b)): InputPartition
@@ -750,16 +748,13 @@ private final class LakeReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LakeInputPartition]
     val opI = readSchema.fieldIndex("op")
-    val deleteOp = org.apache.spark.unsafe.types.UTF8String.fromString(Model.OpDelete)
-    val rows: Iterator[InternalRow] = p.files.iterator.flatMap { case (path, size) =>
-      reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
-    }
+    val rows = ScanBridge.readFiles(reader, p.files)
     // delta-carrying bucket: in-task LWW fold (the writer's associative
     // rule, spilling when planned so) so readers see exactly one version per
     // key; compacted bucket: stream through (buckets are key-unique in
     // steady state)
     val resolved = if (fold) BucketLocal.foldBucket(readSchema, rows, p.spill) else rows
-    val live = resolved.filter(r => r.getUTF8String(opI) != deleteOp)
+    val live = resolved.filter(r => !Model.isDelete(r, opI))
     val proj = UnsafeProjection.create(
       outputSchema.fields.toIndexedSeq.map { f =>
         if (f.name == LakeSource.BucketCol)

@@ -826,29 +826,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     s.manifests.filter(_.delta).flatMap(_.buckets)
       .groupBy(identity).view.mapValues(_.size).toMap
 
-  /** Spill-fold policy threshold: in a delta-carrying read, a compaction or
-    * a change feed, each bucket whose manifest bytes exceed this size folds
-    * through the spilling sort (`BucketLocal.foldBucket`) instead of the
-    * in-memory hash fold. The hash fold's memory bound is one bucket's
-    * post-merge contents — the COW sizing contract — so a bucket that
-    * outgrew its executor (hot-key flood, delayed compaction, undersized
-    * numBuckets) would OOM it; above the threshold the engine degrades to
-    * disk-backed sorting instead, keeping the table readable, compactable
-    * and REBUCKETABLE — the recovery path that restores the sizing
-    * invariant. Default 2 GiB ≈ a conservative executor-task budget; tune
-    * per deployment (file bytes are compressed parquet, so in-memory row
-    * size is larger).
-    */
-  var spillFoldBytes: Long = 2L << 30
-
-  /** The spill threshold of a DSv2 scan, which opens its own handle: the
-    * session conf `graft.lake.spillFoldBytes` when set, else this handle's
-    * [[spillFoldBytes]].
-    */
-  def sessionSpillFoldBytes(spark: SparkSession): Long =
-    Option(spark.conf.get("graft.lake.spillFoldBytes", null)).map(_.toLong)
-      .getOrElse(spillFoldBytes)
-
   /** Operational kill-switch for manifest-stats file skipping in the
     * key-addressed lookups (and the bench's honest skip-vs-full comparison).
     * Correctness never depends on skipping — disabling it only reads more.
@@ -928,7 +905,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
     // for analytical readers.
     val resolved = snap match {
       case Some(s) if s.morDeltas =>
-        graft.operators.BucketLocal.readFolded(spark, this, s, resolveFiles(s))
+        graft.operators.BucketLocal.readFolded(spark, s, resolveFiles(s))
       case _ => readRaw(spark, None, asOfVersion)
     }
     resolved.filter(col("op") =!= Model.OpDelete).drop("op")
@@ -1050,7 +1027,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
       pruned: Map[Int, Seq[FileEntry]]): DataFrame = {
     if (pruned.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    else if (s.morDeltas) graft.operators.BucketLocal.readFolded(spark, this, s, pruned)
+    else if (s.morDeltas) graft.operators.BucketLocal.readFolded(spark, s, pruned)
     else
       spark.read.schema(s.schema).parquet(pruned.values.flatten.map(_.path).toSeq: _*)
   }

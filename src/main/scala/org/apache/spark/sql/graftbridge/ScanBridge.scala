@@ -58,6 +58,16 @@ object ScanBridge {
       : PartitionedFile => Iterator[InternalRow] =
     parquetReaderFunc(spark, schema)
 
+  /** One bucket's rows: its (path, fileSize) files read in order through
+    * `reader`, lazily — the per-bucket file loop of the bucket-aligned scan
+    * and of both DSv2 readers.
+    */
+  def readFiles(reader: PartitionedFile => Iterator[InternalRow],
+      files: Array[(String, Long)]): Iterator[InternalRow] =
+    files.iterator.flatMap { case (path, size) =>
+      reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
+    }
+
   /** One RDD partition per bucket; `filesByBucket(i)` = bucket i's
     * (path, fileSize) list. Partitions are lazy: a consumer that never pulls
     * from the iterator (an untouched bucket in the merge) opens no file.
@@ -135,9 +145,7 @@ private class BucketFilesRDD(
     filesByBucket.indices.map(i => new BucketPartition(i, filesByBucket(i))).toArray
 
   override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
-    split.asInstanceOf[BucketPartition].files.iterator.flatMap { case (path, size) =>
-      reader(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, size))
-    }
+    ScanBridge.readFiles(reader, split.asInstanceOf[BucketPartition].files)
 }
 
 /** Partition i of a [[BucketCopiesRDD]]: it carries the parent's partitions

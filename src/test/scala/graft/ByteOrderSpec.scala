@@ -27,8 +27,7 @@ class ByteOrderSpec extends SparkSpecBase {
       val want = Generator.oracleFold(all).map { case (k, e) => k -> e.seq }
       // the hash fold and the sort fold (spillFoldBytes = 0) of every read
       Seq(2L << 30, 0L).foreach { spill =>
-        t.spillFoldBytes = spill
-        try {
+        withSpillFoldBytes(spill) {
           val got = t.read(spark).collect()
             .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) ->
               r.getAs[Long]("seq")).toMap
@@ -38,7 +37,7 @@ class ByteOrderSpec extends SparkSpecBase {
             Seq(seq))
           assert(ChangeFeed.changesBetween(spark, t, 1L, t.currentSnapshot().get.version)
             .count() > 0L, s"spillFoldBytes=$spill")
-        } finally t.spillFoldBytes = 2L << 30
+        }
       }
     } finally old.fold(System.clearProperty("spark.testing"))(System.setProperty("spark.testing", _))
   }

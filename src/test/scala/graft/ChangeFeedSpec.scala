@@ -197,24 +197,33 @@ class ChangeFeedSpec extends SparkSpecBase {
       op <- Gen.frequency(6 -> "insert", 2 -> "update", 2 -> "delete")
     } yield ChangeEvent(s"c$conv", turn, "user", s"t$conv-$turn-$sec",
       None, tsSec(sec), op, 0L)
-    // winners INCLUDING tombstones; diff rules identical to the golden case
+    // winners INCLUDING tombstones; diff rules identical to the golden case.
+    // `preImages`: an update also emits the old winner as update_preimage;
+    // `tombstones`: a delete carries the `to` side's tombstone (every key of
+    // `before` is in `after`: the histories are cumulative and compaction
+    // here retains tombstones), not the pre-image
     def foldAll(es: Seq[ChangeEvent]): Map[(String, Int), ChangeEvent] =
       es.groupBy(e => (e.conv_id, e.turn_idx))
         .map { case (k, g) => k -> g.maxBy(e => (e.ts.getTime, e.seq)) }
-    def expectedDiff(before: Seq[ChangeEvent], after: Seq[ChangeEvent])
-        : Map[(String, Int), (String, String, Long)] = {
+    type FeedRow = (String, Int, String, String, Long)
+    def expectedDiff(before: Seq[ChangeEvent], after: Seq[ChangeEvent],
+        preImages: Boolean, tombstones: Boolean): Seq[FeedRow] = {
       val f1 = foldAll(before); val f2 = foldAll(after)
-      f2.flatMap { case (k, b) =>
+      f2.toSeq.flatMap { case (k, b) =>
+        def row(change: String, e: ChangeEvent): FeedRow = (k._1, k._2, change, e.text, e.seq)
         val a = f1.get(k)
         val aLive = a.exists(_.op != Model.OpDelete)
         val bLive = b.op != Model.OpDelete
-        if (!aLive && bLive) Some(k -> (("insert", b.text, b.seq)))
-        else if (aLive && !bLive) Some(k -> (("delete", a.get.text, a.get.seq)))
+        if (!aLive && bLive) Seq(row("insert", b))
+        else if (aLive && !bLive) Seq(row("delete", if (tombstones) b else a.get))
         else if (aLive && bLive && a.get.seq != b.seq)
-          Some(k -> (("update", b.text, b.seq)))
-        else None
-      }
+          (if (preImages) Seq(row("update_preimage", a.get)) else Nil) :+ row("update", b)
+        else Nil
+      }.sorted
     }
+    def feedRows(df: org.apache.spark.sql.DataFrame): Seq[FeedRow] =
+      df.collect().toSeq.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
+        r.getAs[String]("change_type"), r.getAs[String]("text"), r.getAs[Long]("seq"))).sorted
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5),
       Prop.forAll(Gen.listOfN(60, eventGen),
           Gen.listOfN(8, Gen.oneOf("cow", "mor")),
@@ -240,9 +249,15 @@ class ChangeFeedSpec extends SparkSpecBase {
           val pairs = marks.sliding(2).map(w => (w(0), w(1))).toSeq :+
             ((marks.head, marks.last))
           pairs.forall { case ((vA, evA), (vB, evB)) =>
-            val got = feedMap(ChangeFeed.changesBetween(spark, table, vA, vB).collect())
-              .map { case (k, (c, t, s, _)) => k -> ((c, t, s)) }
-            got == expectedDiff(evA, evB)
+            def cdf = spark.read.format("lake-cdf").option("path", table.root)
+              .option("fromVersion", vA).option("toVersion", vB)
+              .option("deleteTombstones", "true").load()
+            feedRows(ChangeFeed.changesBetween(spark, table, vA, vB)) ==
+              expectedDiff(evA, evB, preImages = false, tombstones = false) &&
+            feedRows(ChangeFeed.changesBetween(spark, table, vA, vB,
+              withUpdatePreImages = true)) ==
+              expectedDiff(evA, evB, preImages = true, tombstones = false) &&
+            feedRows(cdf) == expectedDiff(evA, evB, preImages = false, tombstones = true)
           }
         }
       })
@@ -260,19 +275,16 @@ class ChangeFeedSpec extends SparkSpecBase {
       withUpdatePreImages = true).collect().map(_.toString).sorted.toSeq
     val hash = rows(table)
     assert(BucketLocal.lastSpilled.isEmpty, "healthy buckets must take the hash diff")
-    table.spillFoldBytes = 1L
-    val spill = rows(table)
+    val spill = withSpillFoldBytes(1L)(rows(table))
     assert(BucketLocal.lastSpilled.nonEmpty, "1-byte threshold must force the spill diff")
     assert(spill == hash, "spill merge-diff must emit exactly the hash diff's rows")
-    // the DSv2 CDF source honors the same session-conf override
+    // the DSv2 CDF source honors the same session threshold
     def cdf() = spark.read.format("lake-cdf").option("path", table.root)
       .option("fromVersion", v1).option("toVersion", v2).load()
       .collect().map(_.toString).sorted.toSeq
     val cdfHash = cdf()
-    spark.conf.set("graft.lake.spillFoldBytes", "1")
-    try assert(cdf() == cdfHash,
+    assert(withSpillFoldBytes(1L)(cdf()) == cdfHash,
       "CDF reader's spill diff must emit exactly the hash diff's rows")
-    finally spark.conf.unset("graft.lake.spillFoldBytes")
   }
 
   test("guard rails: unknown versions and reversed ranges fail loudly") {

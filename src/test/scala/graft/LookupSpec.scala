@@ -235,7 +235,7 @@ class LookupSpec extends SparkSpecBase {
     val anyConv = FilterApi.notEq(FilterApi.binaryColumn("conv_id"), null: Binary)
     val onDriver = DriverScan.localDf(spark, s.schema, BucketLocal.foldFilesOnDriver(
       spark, s.schema, files, fold = true, anyConv, (_, _) => true)).collect().map(_.toSeq).toSet
-    val inTasks = BucketLocal.readFolded(spark, t, s, files)
+    val inTasks = BucketLocal.readFolded(spark, s, files)
       .collect().map(_.toSeq).toSet
     assert(onDriver.size == all.map(e => (e.conv_id, e.turn_idx)).distinct.size)
     assert(onDriver == inTasks)

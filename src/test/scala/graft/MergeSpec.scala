@@ -364,9 +364,9 @@ class MergeSpec extends SparkSpecBase {
         // a MOR delta per pass, so every pass folds deltas into its rewrite
         MergeApplier.applyBatchMor(spark, table, spark.createDataset(chunk).toDF(), "m", i.toLong)
         val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
-        table.spillFoldBytes = if (spill) 0L else 2L << 30
-        try assert(failingOnce(table, victim)(pass(victim)) > 0L, name)
-        finally table.spillFoldBytes = 2L << 30
+        withSpillFoldBytes(if (spill) 0L else 2L << 30) {
+          assert(failingOnce(table, victim)(pass(victim)) > 0L, name)
+        }
         val want = Generator.oracleFold(all ++ more.take((i + 1) * 800))
           .map { case (k, e) => k -> ((e.text, e.seq)) }
         assert(finalState(table) == want, name)

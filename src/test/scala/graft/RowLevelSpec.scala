@@ -160,8 +160,20 @@ class RowLevelSpec extends SparkSpecBase {
     Seq("c3", "c7").toDF("victim").createOrReplaceTempView("victims")
 
     spark.sql("DELETE FROM sdcat.convs WHERE conv_id IN (SELECT victim FROM victims)")
-    val left = spark.sql("SELECT conv_id FROM sdcat.convs").collect().map(_.getString(0)).toSet
-    assert(left == (0 until 10).map(i => s"c$i").toSet -- Set("c3", "c7"))
+    def left() = spark.sql("SELECT conv_id FROM sdcat.convs").collect().map(_.getString(0)).toSet
+    val all = (0 until 10).map(i => s"c$i").toSet
+    assert(left() == all -- Set("c3", "c7"))
+    // a replay of the victim's original insert stays deleted; a strictly
+    // newer event still wins
+    apply(t, Seq(
+      ev("c3", 0, "t3", "2025-01-01 00:00:00", "insert", 3L),
+      ev("c7", 0, "back", "2025-01-01 00:10:00", "insert", 100L)), 1L)
+    assert(left() == all - "c3")
+    // what kept c3 deleted is the tombstone a translatable DELETE writes:
+    // the row's own ts at seq + 1
+    assert(t.readRaw(spark).filter(col("op") === Model.OpDelete)
+      .select("conv_id", "seq").collect().map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+      Seq("c3" -> 4L))
   }
 
   test("OCC: the rewrite commit lands as a real snapshot next to engine commits") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 /** `Par.withSessionConf`, the one scoped session-conf setter: every key it
   * sets gets its previous value, or its absence, back — also when the body
   * throws. The IVF build runs its training under it (AQE off), so a build
-  * must leave the caller's AQE setting as it found it.
+  * must leave the caller's AQE setting as it found it. The specs' own
+  * `SparkSpecBase.withConf` keeps the same contract.
   */
 class SessionConfSpec extends SparkSpecBase {
   import spark.implicits._
@@ -41,6 +42,13 @@ class SessionConfSpec extends SparkSpecBase {
     assert(spark.conf.get(SetKey) == "before")
     assert(!isSet(UnsetKey))
     spark.conf.unset(SetKey)
+  }
+
+  test("the specs' withConf leaves an unset registered key unset") {
+    withConf(Aqe, None) {
+      withConf(Aqe, Some("false"))(assert(spark.conf.get(Aqe) == "false"))
+      assert(!isSet(Aqe))
+    }
   }
 
   test("an IVF build leaves spark.sql.adaptive.enabled as it found it") {

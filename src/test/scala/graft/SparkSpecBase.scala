@@ -42,13 +42,22 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       StandardCopyOption.REPLACE_EXISTING))
 
   /** Run `f` with the session conf `key` set to `value` (unset for None),
-    * restoring the previous setting after.
+    * restoring the previous setting after: a key that was unset is unset
+    * again (`getAll` holds only the keys set on the session, where
+    * `getOption` would read a registered key's default back as a value).
     */
   def withConf[T](key: String, value: Option[String])(f: => T): T = {
-    val old = spark.conf.getOption(key)
+    val old = spark.conf.getAll.get(key)
     value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** Run `f` with the session's spill-fold threshold at `bytes` (0 sends
+    * every bucket to the sort fold). A fold plans its spill set when it is
+    * built, so a DataFrame built inside keeps it when it runs outside.
+    */
+  def withSpillFoldBytes[T](bytes: Long)(f: => T): T =
+    withConf(graft.operators.BucketLocal.SpillFoldBytesKey, Some(bytes.toString))(f)
 
   /** What the Spark jobs `f` started on this thread ran: the jobs, the
     * stages that ran (skipped ones do not), and the shuffle bytes those

@@ -12,9 +12,9 @@ import java.sql.Timestamp
   * stay readable, compactable and rebucketable — the hash fold's memory
   * bound is one bucket's contents, the sort fold's is O(1) rows (the
   * sorter spills to disk). These tests pin (a) exact semantic equality
-  * between the two folds through the one entry point (`spillFoldBytes` 0 vs
+  * between the two folds through the one entry point (spill threshold 0 vs
   * the default), including tombstones and null-ts edge rows, (b) the policy
-  * switch on `spillFoldBytes`, (c) the zero-exchange plan shape, and (d)
+  * switch on the threshold, (c) the zero-exchange plan shape, and (d)
   * that compaction and rebucket run end-to-end through the spill path.
   */
 class SpillFoldSpec extends SparkSpecBase {
@@ -46,10 +46,8 @@ class SpillFoldSpec extends SparkSpecBase {
     */
   private def readFolded(table: LakeTable, spillFoldBytes: Long): DataFrame = {
     val snap = table.currentSnapshot().get
-    val saved = table.spillFoldBytes
-    table.spillFoldBytes = spillFoldBytes
-    try BucketLocal.readFolded(spark, table, snap, table.resolveFiles(snap))
-    finally table.spillFoldBytes = saved
+    withSpillFoldBytes(spillFoldBytes)(
+      BucketLocal.readFolded(spark, snap, table.resolveFiles(snap)))
   }
 
   test("sort fold == hash fold == oracle on a delta-carrying table") {
@@ -86,8 +84,8 @@ class SpillFoldSpec extends SparkSpecBase {
 
   test("policy: spillFoldBytes = 0 routes read() through the sort fold, still zero shuffles") {
     val (table, oracle) = buildMor("spill-policy")
-    table.spillFoldBytes = 0L // force: every bucket "exceeds" the executor budget
-    val df = table.read(spark)
+    // force: every bucket "exceeds" the executor budget
+    val df = withSpillFoldBytes(0L)(table.read(spark))
     assert(BucketLocal.lastSpilled == (0 until 8).toSet,
       "spillFoldBytes = 0 must send every bucket to the sort fold")
     // zero-shuffle proof across the bridged inner plan: the full RDD lineage
@@ -96,8 +94,7 @@ class SpillFoldSpec extends SparkSpecBase {
     assert(!debug.contains("ShuffledRowRDD"), s"spill fold must stay zero-shuffle:\n$debug")
     assert(finalState(df) == oracle)
     // default policy on healthy small buckets: hash fold
-    table.spillFoldBytes = 2L << 30
-    table.read(spark)
+    withSpillFoldBytes(2L << 30)(table.read(spark))
     assert(BucketLocal.lastSpilled.isEmpty, "healthy buckets must keep the hash fold")
   }
 
@@ -116,8 +113,7 @@ class SpillFoldSpec extends SparkSpecBase {
     val hashT = build("spill-compact-h")
     MergeApplier.compact(spark, hashT, wm)
     val spillT = build("spill-compact-s")
-    spillT.spillFoldBytes = 0L
-    MergeApplier.compact(spark, spillT, wm)
+    withSpillFoldBytes(0L)(MergeApplier.compact(spark, spillT, wm))
     assert(!spillT.currentSnapshot().get.morDeltas)
     assert(finalState(spillT.read(spark)) == oracle)
     assert(finalState(spillT.read(spark)) == finalState(hashT.read(spark)))
@@ -141,29 +137,32 @@ class SpillFoldSpec extends SparkSpecBase {
     val rows = (0 until 200).map(i => ev(s"c${i % 7}", i, s"t$i", "2024-01-01 10:00:00", "insert", i.toLong))
     MergeApplier.applyBatch(spark, table, spark.createDataset(rows).toDF(), "t", 0L)
     assert(!table.currentSnapshot().get.morDeltas)
-    table.spillFoldBytes = 0L
-    MergeApplier.compactRetainTombstones(spark, table)
-    assert(table.read(spark).count() == 200)
+    withSpillFoldBytes(0L) {
+      MergeApplier.compactRetainTombstones(spark, table)
+      assert(table.read(spark).count() == 200)
+    }
   }
 
   test("rebucket folds an oversized table through the spill path") {
     val (table, oracle) = buildMor("spill-rebucket")
-    table.spillFoldBytes = 0L // the oversized-bucket recovery scenario
-    val resized = MergeApplier.rebucket(spark, table, 16)
-    assert(resized.currentSnapshot().get.numBuckets == 16)
-    assert(finalState(resized.read(spark)) == oracle)
+    withSpillFoldBytes(0L) { // the oversized-bucket recovery scenario
+      val resized = MergeApplier.rebucket(spark, table, 16)
+      assert(resized.currentSnapshot().get.numBuckets == 16)
+      assert(finalState(resized.read(spark)) == oracle)
+    }
   }
 
   test("point lookups agree under the spill policy") {
     val (table, oracle) = buildMor("spill-lookup")
-    table.spillFoldBytes = 0L
-    val (conv, turn) = oracle.keys.head
-    val row = table.lookupTurn(spark, conv, turn).collect()
-    assert(row.length == 1)
-    assert(row.head.getAs[String]("text") == oracle((conv, turn))._1)
-    val convRows = table.lookupConversation(spark, conv).collect()
-    assert(convRows.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).toSet ==
-      oracle.keys.filter(_._1 == conv).toSet)
+    withSpillFoldBytes(0L) {
+      val (conv, turn) = oracle.keys.head
+      val row = table.lookupTurn(spark, conv, turn).collect()
+      assert(row.length == 1)
+      assert(row.head.getAs[String]("text") == oracle((conv, turn))._1)
+      val convRows = table.lookupConversation(spark, conv).collect()
+      assert(convRows.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).toSet ==
+        oracle.keys.filter(_._1 == conv).toSet)
+    }
   }
 
   test("DSv2 read honors the spill policy: forced in-reader sort fold == hash fold == oracle") {
@@ -174,11 +173,10 @@ class SpillFoldSpec extends SparkSpecBase {
     val (table, oracle) = buildMor("spill-dsv2")
     val readLake = () => spark.read.format("lake").option("path", table.root).load()
     val defaultRows = readLake().collect().map(_.toSeq).toSet
-    spark.conf.set("graft.lake.spillFoldBytes", "1") // every bucket "oversized"
-    try {
+    withSpillFoldBytes(1L) { // every bucket "oversized"
       val spillDf = readLake()
       assert(finalState(spillDf) == oracle)
       assert(spillDf.collect().map(_.toSeq).toSet == defaultRows)
-    } finally spark.conf.unset("graft.lake.spillFoldBytes")
+    }
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.Row
 import java.sql.Timestamp
 
 /** The spill decision is made per bucket: in a MOR table where exactly one
-  * bucket's manifest bytes exceed `spillFoldBytes`, every fold path — read,
+  * bucket's manifest bytes exceed the session's spill threshold
+  * (`graft.lake.spillFoldBytes`), every fold path — read,
   * the Spark path of a lookup, the change feed, the DSv2 reader, full and
   * selective compaction — sends exactly that bucket to the sort fold, and
   * returns what the hash fold and `Generator.oracleFold` return.
@@ -17,7 +18,6 @@ import java.sql.Timestamp
 class SpillPolicySpec extends SparkSpecBase {
   import Model.changeEventEncoder
 
-  private val Default = 2L << 30
   private val HotConv = "conv_hot"
 
   private def state(rows: Iterable[Row]): Map[(String, Int), (String, Long)] =
@@ -76,8 +76,7 @@ class SpillPolicySpec extends SparkSpecBase {
     def both[T](what: String)(f: => T): T = {
       val hash = f
       assert(BucketLocal.lastSpilled.isEmpty, s"$what: the default must hash-fold every bucket")
-      table.spillFoldBytes = thr
-      val spill = try f finally table.spillFoldBytes = Default
+      val spill = withSpillFoldBytes(thr)(f)
       assert(BucketLocal.lastSpilled == Set(hot), s"$what: want only bucket $hot sorted")
       assert(spill == hash, s"$what: the sort fold differs from the hash fold")
       spill
@@ -86,15 +85,14 @@ class SpillPolicySpec extends SparkSpecBase {
     assert(state(read) == oracle(all))
     // the hot bucket really went through the sort: its winners come out in
     // key order, which the hash fold does not give
-    table.spillFoldBytes = thr
-    val hotKeys = try {
+    val hotKeys = withSpillFoldBytes(thr) {
       val s = table.currentSnapshot().get
-      BucketLocal.readFolded(spark, table, s, table.resolveFiles(s)).rdd
+      BucketLocal.readFolded(spark, s, table.resolveFiles(s)).rdd
         .mapPartitionsWithIndex { (b, rows) =>
           if (b == hot) rows.map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")))
           else Iterator.empty
         }.collect().toSeq
-    } finally table.spillFoldBytes = Default
+    }
     assert(hotKeys.size > 1 && hotKeys == hotKeys.sorted)
 
     val bound = "spark.sql.autoBroadcastJoinThreshold"
@@ -121,8 +119,7 @@ class SpillPolicySpec extends SparkSpecBase {
     def lake() = spark.read.format("lake").option("path", table.root).load().collect().toSet
     val lakeHash = lake()
     assert(BucketLocal.lastSpilled.isEmpty, "DSv2: the default must hash-fold every bucket")
-    spark.conf.set("graft.lake.spillFoldBytes", thr.toString)
-    val lakeSpill = try lake() finally spark.conf.unset("graft.lake.spillFoldBytes")
+    val lakeSpill = withSpillFoldBytes(thr)(lake())
     assert(BucketLocal.lastSpilled == Set(hot), s"DSv2: want only bucket $hot sorted")
     assert(lakeSpill == lakeHash)
     assert(state(lakeSpill) == oracle(all))
@@ -133,19 +130,18 @@ class SpillPolicySpec extends SparkSpecBase {
       val (table, chunks, _, hot) = build(s"policy-compact-$selective")
       val thr = threshold(table, hot)
       val snap = table.currentSnapshot().get
-      val hashFold = BucketLocal.readFolded(spark, table, snap, table.resolveFiles(snap))
+      val hashFold = BucketLocal.readFolded(spark, snap, table.resolveFiles(snap))
         .collect().toSet
-      table.spillFoldBytes = thr
-      try {
+      withSpillFoldBytes(thr) {
         if (selective)
           MergeApplier.compactBucketsRetainTombstones(spark, table, Set(hot, (hot + 1) % 4))
         else MergeApplier.compactRetainTombstones(spark, table)
-      } finally table.spillFoldBytes = Default
+      }
       assert(BucketLocal.lastSpilled == Set(hot), s"selective=$selective")
       // tombstones retained: the compacted table folds to the same winners
       // the hash fold gave before compaction
       val after = table.currentSnapshot().get
-      assert(BucketLocal.readFolded(spark, table, after, table.resolveFiles(after))
+      assert(BucketLocal.readFolded(spark, after, table.resolveFiles(after))
         .collect().toSet == hashFold, s"selective=$selective")
       if (!selective) assert(table.readRaw(spark).collect().toSet == hashFold)
       assert(state(table.read(spark).collect()) == oracle(chunks.flatten), s"selective=$selective")
