@@ -66,17 +66,20 @@ object SparkEntry {
     new LakeTable(gatePath(name), numBuckets = 8)
 
   /** Build gate table `name` from the changelog in `k` batches, batch i
-    * holding `seq % k = i` (writer "gate", batch id i), through the COW or
-    * the MOR apply. Returns the table and the version each batch committed.
+    * holding `seq % k = i` shaped by `shape(i, _)` (writer "gate", batch id
+    * i), through the COW or the MOR apply, running `after(t, i)` after each.
+    * Returns the table and the version each batch committed.
     */
   private def gateBuild(s: SparkSession, dir: String, name: String, k: Int,
-      mor: Boolean = false): (LakeTable, Seq[Long]) = {
+      mor: Boolean = false, shape: (Int, DataFrame) => DataFrame = (_, b) => b,
+      after: (LakeTable, Int) => Unit = (_, _) => ()): (LakeTable, Seq[Long]) = {
     val cl = changelog(s, dir)
     val t = gateTable(name)
     val versions = (0 until k).map { i =>
-      val batch = cl.filter(col("seq") % k === i)
+      val batch = shape(i, cl.filter(col("seq") % k === i))
       val r = if (mor) MergeApplier.applyBatchMor(s, t, batch, "gate", i.toLong)
         else MergeApplier.applyBatch(s, t, batch, "gate", i.toLong)
+      after(t, i)
       r.version
     }
     (t, versions)
@@ -420,14 +423,8 @@ object SparkEntry {
     // (never rewritten) by the fold and the final scan. Oracle recomputes
     // per-row scores relationally and casts to BIGINT.
     "cdc_widened_replay" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_widened_replay")
-      MergeApplier.applyBatch(s, t,
-        cl.filter(col("seq") % 2 === 0)
-          .withColumn("score", col("turn_idx").cast("int")), "gate", 0L)
-      MergeApplier.applyBatch(s, t,
-        cl.filter(col("seq") % 2 === 1)
-          .withColumn("score", col("seq") + lit(5000000000L)), "gate", 1L)
+      val (t, _) = gateBuild(s, dir, "cdc_widened_replay", 2, shape = (i, b) => b.withColumn(
+        "score", if (i == 0) col("turn_idx").cast("int") else col("seq") + lit(5000000000L)))
       t.read(s).select((TableCols :+ "score").map(col): _*)
     }),
 
@@ -518,14 +515,10 @@ object SparkEntry {
     // after each (bootstrap + 3 incremental O(Δ) cycles through the MERGE
     // engine) — its final contents must equal the same full recompute.
     "cdc_incr_agg_table" -> ((s, dir) => {
-      val cl = changelog(s, dir)
-      val t = gateTable("cdc_incr_agg_table")
       val v = gateTable("cdc_incr_agg_view")
       var from = 0L
-      (0 until 4).foreach { i =>
-        MergeApplier.applyBatch(s, t, cl.filter(col("seq") % 4 === i), "gate", i.toLong)
-        from = IncrementalAgg.refreshIntoTable(s, t, v, from)
-      }
+      gateBuild(s, dir, "cdc_incr_agg_table", 4,
+        after = (t, _) => from = IncrementalAgg.refreshIntoTable(s, t, v, from))
       v.read(s).select(("conv_id" +: IncrementalAgg.StatCols).map(col): _*)
     }),
 

@@ -13,14 +13,8 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Grel {
   def strLength(c: Column): Column = length(c)                    // :42-48
-  def toStringCol(c: Column): Column = c.cast("string")           // :54-60
-  def startsWithCol(c: Column, p: String): Column = c.startsWith(p) // :70-82
-  def endsWithCol(c: Column, p: String): Column = c.endsWith(p)   // :84-96
   def containsCol(c: Column, p: String): Column = c.contains(p)   // :98-112
-  def toLowercase(c: Column): Column = lower(c)                   // :120-131
   def toUppercase(c: Column): Column = upper(c)                   // :133-143
-  def toTitlecase(c: Column): Column = initcap(c)                 // :145-155
-  def trimCol(c: Column): Column = trim(c)                        // :165-176
 
   /** chomp — :192-204: strip one trailing occurrence of `sep`. */
   def chomp(c: Column, sep: String): Column =
@@ -45,14 +39,8 @@ object Grel {
   def replaceChars(c: Column, from: String, to: String): Column =  // :379-391
     translate(c, from, to)
 
-  /** match — :401-408: regex capture groups as array. */
-  def matchCol(c: Column, pattern: String): Column = regexp_extract_all(c, lit(pattern))
-
   /** toNumber — :415-421. */
   def toNumber(c: Column): Column = c.try_cast(DoubleType)
-
-  def splitCol(c: Column, sep: String): Column =                   // :434-446
-    split(c, java.util.regex.Pattern.quote(sep))
 
   /** partition — :511-546: (before, sep, after) around the FIRST occurrence;
     * (whole, null, null) when absent.
@@ -67,7 +55,6 @@ object Grel {
   }
 
   def md5Col(c: Column): Column = md5(c)                           // :631-640
-  def sha1Col(c: Column): Column = sha1(c)                         // :642-651
 
   /** strip — GREL alias of trim (python-style name). */
   def strip(c: Column): Column = trim(c)

@@ -45,13 +45,6 @@ object Rml {
   def normalizeUnixDate(days: Column): Column =
     date_add(to_date(lit("1970-01-01")), days.cast("int"))
 
-  /** urn:generateIRIWithReplace — RmlFunctions.java:203-218: regex-replace
-    * each element, prefix it.
-    */
-  def generateIriWithReplace(arr: Column, pattern: String, replacement: String,
-      prefix: String): Column =
-    transform(arr, x => concat(lit(prefix), regexp_replace(x, pattern, replacement)))
-
   /** urn:generateIRIWithSplit — RmlFunctions.java:231-271: split each element
     * on `sep`, trim, prefix, flatten (the reference's flatMap).
     */

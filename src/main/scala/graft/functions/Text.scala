@@ -12,15 +12,11 @@ object Text {
   /** Whitespace token count. Native codegen'd kernel
     * ([[expressions.TextExprs.tokenCountNat]]) — value-identical to
     * `when(length(trim(text)) = 0, 0).otherwise(size(split(trim(text),
-    * "\\s+")))`, the formulation [[legacyTokenCount]] preserves for the
-    * equivalence spec.
+    * "\\s+")))`, the formulation it replaced (TextNativeStatsSpec pins
+    * that formulation's values).
     */
   def tokenCount(text: Column): Column =
     expressions.TextExprs.tokenCountCol(text)
-
-  private[graft] def legacyTokenCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
 
   /** BPE-ish subword count estimate: word-boundary pieces + digit runs +
     * punctuation, the usual ~chars/4 regex proxy for tokenizer load.
@@ -28,49 +24,25 @@ object Text {
   def tokenCountBpeish(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]{1,6}|\\d{1,3}|[^\\sA-Za-z\\d]"), lit(0)))
 
-  /** Punctuation ratio ∈ [0,1] (native kernel; [[legacyPunctRatio]] is the
-    * regex twin kept for the equivalence spec).
-    */
+  /** Punctuation ratio ∈ [0,1] (native kernel). */
   def punctRatio(text: Column): Column =
     expressions.TextExprs.punctRatioCol(text)
-
-  private[graft] def legacyPunctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
 
   /** Alphabetic-character ratio ∈ [0,1] (native kernel). */
   def alphaRatio(text: Column): Column =
     expressions.TextExprs.alphaRatioCol(text)
 
-  private[graft] def legacyAlphaRatio(text: Column): Column =
-    length(regexp_replace(text, "[^A-Za-z]", "")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
   /** Mean token length in characters (native kernel). */
   def meanTokenLen(text: Column): Column =
     expressions.TextExprs.meanTokenLenCol(text)
 
-  private[graft] def legacyMeanTokenLen(text: Column): Column =
-    length(regexp_replace(text, "\\s+", "")).cast("double") /
-      greatest(legacyTokenCount(text), lit(1)).cast("double")
-
-  private val Stopwords = Seq("the", "a", "an", "of", "to", "in", "and", "is",
-    "it", "that", "for", "on", "with", "as", "at", "by", "or", "be")
-
   /** Fraction of tokens that are common English stopwords. Native kernel —
-    * the HOF formulation ([[legacyStopwordRatio]]) evaluated an interpreted
+    * the HOF formulation it replaced evaluated an interpreted
     * filter × array_contains(18) per token inside every quality-filter pass
     * (measured: quality_keep ~90 µs/row, dominated here — guide §4).
     */
   def stopwordRatio(text: Column): Column =
     expressions.TextExprs.stopwordRatioCol(text)
-
-  private[graft] def legacyStopwordRatio(text: Column): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val sw = array(Stopwords.map(lit(_)): _*)
-    size(filter(toks, t => array_contains(sw, t)))
-      .cast("double") / greatest(size(toks), lit(1)).cast("double")
-  }
 
   /** Composite quality score ∈ [0,1]: favors mid-length docs with sane
     * punctuation, some stopwords, mostly-alpha text (C4/Gopher-rule style

@@ -236,7 +236,7 @@ object BucketLocal {
       files: Map[Int, Seq[FileEntry]], fold: Boolean, filter: FilterPredicate,
       key: (UTF8String, Int) => Boolean): Seq[InternalRow] = {
     val (convI, turnI, tsI, seqI) = keyIdx(schema)
-    val rows = DriverScan.read(spark, schema, files.values.flatten.map(_.path).toSeq, filter,
+    val rows = DriverScan.read(spark, schema, files.values.flatten.map(_.path).toSeq, Some(filter),
       r => !r.isNullAt(convI) && !r.isNullAt(turnI) &&
         key(r.getUTF8String(convI), r.getInt(turnI)))
     if (fold) foldWinners(rows.iterator, convI, turnI, tsI, seqI).toSeq else rows

@@ -2,11 +2,12 @@ package graft.operators
 
 import graft.model.Model
 import graft.table.{BucketFileWriter, CommitBuilder, CommitConflictException, LakeTable, Ledger, ManifestRef, Snapshot, StagedRef, TableChange, WrittenFile}
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ScanBridge, WriteBridge}
+import org.apache.spark.sql.graftbridge.{DriverScan, ScanBridge, WriteBridge}
 import org.apache.spark.sql.types.StructType
 
 /** The engine core: apply one micro-batch of change events to a LakeTable as
@@ -16,25 +17,26 @@ import org.apache.spark.sql.types.StructType
   *   - the Redis max-version LWW dance (/root/reference SpecialCases.java:212-253)
   *   - the EC2 delete-then-import apply loop
   *     (incremental-updates-ingestion.py:29-63)
-  * — into one fold/write stage per batch (the bucket-local merge):
+  * — into one fold/write per touched bucket (the bucket-local merge):
   *
   * {{{
-  *   batch ─ batch side (see below) ───────┐   partition i == bucket i
-  *                                         ├─ zipPartitions: in-task LWW fold
-  *   target ─ bucket-aligned parquet scan ─┘   + write of the bucket's file ─ atomic commit(batchId)
+  *   batch ─ batch side: bucket i's rows ──┐
+  *                                         ├─ mergeBucket: LWW fold + write
+  *   target ─ bucket i's files ────────────┘   of bucket i's file ─ atomic commit(batchId)
   * }}}
   *
-  * The table side never shuffles — its bucket files are read directly by the
-  * task owning that bucket (ScanBridge.bucketFilesRdd), and untouched
-  * buckets' tasks open no file. The batch side ([[batchSide]]) has two
-  * forms, picked from the batch plan's size estimate and the bucket count:
-  *   - copied: a deterministic batch whose estimate × N is within
-  *     `spark.sql.autoBroadcastJoinThreshold` (a streaming tail's trigger)
-  *     is read whole by every bucket task, which keeps its own bucket's
-  *     rows — no exchange, so the apply is one job of one stage
+  * The table side never shuffles, and untouched buckets open no file.
+  * Where the fold runs follows from the batch ([[batchSide]]) and, for COW,
+  * the touched buckets' manifest bytes, against one bound,
+  * `spark.sql.autoBroadcastJoinThreshold`:
+  *   - driver: a batch within the bound (a tail trigger) is decoded and
+  *     split on the driver; with the touched bytes within it too (always for
+  *     MOR, which reads no target) each touched bucket is read
+  *     ([[DriverScan]]), folded and written on a driver thread — no job
+  *   - sliced: that split batch against larger touched buckets ships slice
+  *     i to partition i of one stage, zipped with the bucket-aligned scan
   *   - exchanged: any other batch (a full replay, -1 threshold) takes one
-  *     `repartition(N, key)` exchange — a map stage, then the fold/write
-  *     stage
+  *     `repartition(N, key)` exchange, then the fold/write stage
   * Cold start (full replay) is the same apply against an empty target.
   *
   * Correctness properties (tested in MergeSpec/StreamSpec):
@@ -48,10 +50,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale notes (10^10 rows, 1000 executors):
   *   - there is NO map-side combine: the batch side hands every raw batch
-  *     event to its bucket's task (shuffled or copied), and within-batch
-  *     duplicates collapse in that task's fold
-  *   - only the batch shuffles, and only when it is too large to copy;
-  *     write amplification is bounded by (touched buckets / total buckets)
+  *     event to its bucket's fold (shuffled or split on the driver), and
+  *     within-batch duplicates collapse in that fold
+  *   - only the batch shuffles, and only when it is too large for the
+  *     driver; write amplification is bounded by (touched / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
   *     an event-time watermark
   */
@@ -65,26 +67,27 @@ object MergeApplier {
       upserts: Long,
       deletes: Long)
 
-  /** What one fold/write task hands the driver: its bucket's new file, plus
-    * the raw batch rows and deletes it folded (the hot path's metrics).
+  /** What one bucket's fold/write hands the commit: the bucket's new file,
+    * plus the raw batch rows and deletes it folded (the hot path's metrics).
     */
   private final case class BucketMerge(file: WrittenFile, batchRows: Long, batchDeletes: Long)
 
-  /** In-task LWW merge of one bucket, written from the task: fold the batch
-    * partition's rows and the bucket's stored rows through
+  /** LWW merge of one bucket, in a task or on a driver thread: fold the
+    * bucket's batch rows and its stored rows through
     * [[BucketLocal.orderedWinners]]'s hash fold (the engine's one LWW
     * kernel: winner = max by (ts, seq), nulls lowest, ties keep the
     * incumbent), then write the winners — tombstones included — in
-    * (conv_id, turn_idx) order as the bucket's one new file. Bucket id =
-    * partition id.
+    * (conv_id, turn_idx) order as `bucket`'s one new file, named for write
+    * attempt `taskId`.
     *
     * Memory: the map holds one row per distinct key of (batch ∪ bucket) —
     * exactly the bucket's post-merge contents, which the COW contract sizes
     * to fit an executor anyway (a bucket IS the rewrite unit).
     */
-  private def mergeBucket(writers: WriteBridge.TaskWriterFactory, dir: String)(
-      batch: Iterator[InternalRow], target: Iterator[InternalRow]): Iterator[BucketMerge] = {
-    if (!batch.hasNext) return Iterator.empty // untouched bucket: no file opened
+  private def mergeBucket(writers: WriteBridge.TaskWriterFactory, dir: String, bucket: Int,
+      taskId: Long)(batch: Iterator[InternalRow], target: Iterator[InternalRow])
+      : Option[BucketMerge] = {
+    if (!batch.hasNext) return None // untouched bucket: no file opened
     val schema = writers.schema
     val opI = schema.fieldIndex("op")
     var nRows = 0L
@@ -95,22 +98,34 @@ object MergeApplier {
       r
     }
     val winners = BucketLocal.orderedWinners(schema, counted ++ target, spill = false)
-    Iterator(BucketMerge(BucketFileWriter.write(writers, dir, winners), nRows, nDel))
+    Some(BucketMerge(BucketFileWriter.write(writers, dir, bucket, taskId, winners), nRows, nDel))
   }
 
-  /** The batch side of an apply: partition i holds exactly bucket i's batch
-    * rows. A batch that [[ScanBridge.copyable]] admits for N copies (small
-    * and deterministic) is split in each bucket task with no exchange
-    * ([[ScanBridge.bucketCopies]]); any other keeps the `repartition(N, key)`
-    * exchange. Both evaluate `HashPartitioning(key, N)`'s partition id —
+  /** The batch side of an apply, bucket i's batch rows at index i: split
+    * on the driver with no job when [[ScanBridge.splitOnDriver]] admits the
+    * batch (Left: slice i), else the `repartition(N, key)` exchange (Right:
+    * partition i). Both evaluate `HashPartitioning(key, N)`'s partition id —
     * the murmur3 (seed 42) pmod the table's bucketCol is — so the alignment
-    * invariant holds on either side (MergeSpec pins both). A batch side with
-    * no partitions is an empty batch.
+    * invariant holds on either side (MergeSpec pins both).
     */
-  private[graft] def batchSide(aligned: DataFrame, numBuckets: Int): RDD[InternalRow] =
-    if (ScanBridge.copyable(aligned, numBuckets))
-      ScanBridge.bucketCopies(aligned, Model.KeyCols, numBuckets)
-    else ScanBridge.toInternalRdd(aligned.repartition(numBuckets, Model.KeyCols.map(col): _*))
+  private[graft] def batchSide(aligned: DataFrame, numBuckets: Int)
+      : Either[Array[Array[InternalRow]], RDD[InternalRow]] =
+    ScanBridge.splitOnDriver(aligned, Model.KeyCols, numBuckets).toLeft(
+      ScanBridge.toInternalRdd(aligned.repartition(numBuckets, Model.KeyCols.map(col): _*)))
+
+  /** `write(writers, taskId, bucket)` per touched bucket on driver threads,
+    * with driver writers (no broadcast) and one driver task id.
+    */
+  private def onDriver[T](spark: SparkSession, schema: StructType,
+      slices: Array[Array[InternalRow]])(
+      write: (WriteBridge.TaskWriterFactory, Long, Int) => T): Seq[T] = {
+    val writers = WriteBridge.parquetWriterFactory(spark, schema, onDriver = true)
+    val taskId = DriverScan.newTaskId()
+    Par.onDriverThreads(spark, touched(slices))(write(writers, taskId, _))
+  }
+
+  private def touched(slices: Array[Array[InternalRow]]): IndexedSeq[Int] =
+    slices.indices.filter(slices(_).nonEmpty)
 
   private def deleteDir(p: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
@@ -192,51 +207,48 @@ object MergeApplier {
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
 
-    // BUCKET-LOCAL MERGE — ZERO table-side shuffle, no probe job; a small
-    // batch is copied to the bucket tasks (one job, one stage), a large one
-    // takes one exchange (batchSide); a cold start is the same job against
-    // an empty target:
+    // BUCKET-LOCAL MERGE — ZERO table-side shuffle, no probe job:
     //
-    //   batch ─ batchSide(N) ─────────┐ partition i == bucket i
-    //                                 ├─ zipPartitions: in-task LWW fold
-    //   target ─ bucket-aligned scan ─┘ + write of bucket i's one new file
+    //   driver:    slice i ── DriverScan(bucket i) ─ mergeBucket   (threads)
+    //   sliced:    parallelize(slices, N) ─┐
+    //   exchanged: repartition(N, key) ────┼ zipPartitions ─ mergeBucket
+    //   target ─ bucket-aligned scan ──────┘ (partition i == bucket i)
     //
-    // The target scan is ScanBridge.bucketFilesRdd: partition i reads ONLY
-    // bucket i's data files through Spark's parquet reader function (schema
-    // clipping = additive-evolution nulls), lazily — a partition whose batch
-    // side is empty opens no file and writes none. MOR deltas fold correctly
-    // because the LWW rule is associative. Tombstones participate and are
-    // RETAINED, so a later stale insert still loses.
-    //
-    // Alignment invariant (pinned by MergeSpec's "alignment invariant"):
-    // both batch sides evaluate HashPartitioning's partition id, the same
-    // murmur3 (seed 42) pmod as the table's bucketCol, so partition i holds
-    // exactly bucket i's batch rows and the task's bucket is its partition id.
-    //
-    // Each task returns its file's manifest entry and counts; collect()
-    // carries successful attempts only, so retries and speculation cannot
-    // inflate them, and the commit needs no listing and no footer reads.
-    //
-    // Idle trigger (or an empty first batch): commit no orphan version;
-    // replay of an empty batch is trivially idempotent. A batch side with no
-    // partitions starts no job at all; an exchanged empty batch runs one
-    // wave of empty tasks, which open no file and write nothing.
+    // A bucket with no batch rows opens no file and writes none. MOR deltas
+    // fold correctly because the LWW rule is associative; tombstones are
+    // RETAINED, so a later stale insert still loses. Each bucket returns
+    // its file's manifest entry and counts (collect() carries successful
+    // task attempts only): no listing, no footer reads. An idle trigger
+    // (or an empty first batch) commits no orphan version.
     val idle = Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
-    val batchRdd = batchSide(aligned, table.numBuckets)
-    if (batchRdd.partitions.isEmpty) return idle
     val files = snap.map(s => BucketLocal.bucketArray(s.numBuckets, table.resolveFiles(s)))
       .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)]))
-    val targetRdd = ScanBridge.bucketFilesRdd(spark, mergedSchema, files)
-    val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
-    val merged = batchRdd.zipPartitions(targetRdd, preservesPartitioning = false)(
-      mergeBucket(writers, outDir.toString)).collect()
+    val dir = outDir.toString
+    def foldWriteJob(batchRdd: RDD[InternalRow]): Seq[BucketMerge] = {
+      val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
+      batchRdd.zipPartitions(ScanBridge.bucketFilesRdd(spark, mergedSchema, files),
+          preservesPartitioning = false) { (batch, target) =>
+        val tc = TaskContext.get()
+        mergeBucket(writers, dir, tc.partitionId(), tc.taskAttemptId())(batch, target).iterator
+      }.collect().toSeq
+    }
+    val merged = batchSide(aligned, table.numBuckets) match {
+      case Left(slices) if touched(slices).map(files(_).map(_._2).sum).sum <=
+          DriverScan.collectBound(spark) =>
+        onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
+          mergeBucket(writers, dir, b, taskId)(slices(b).iterator,
+            DriverScan.read(spark, mergedSchema, files(b).map(_._1).toSeq).iterator)).flatten
+      case Left(slices) =>
+        foldWriteJob(spark.sparkContext.parallelize(slices.toSeq, slices.length)
+          .flatMap(_.iterator))
+      case Right(exchanged) => foldWriteJob(exchanged)
+    }
     if (merged.isEmpty) return idle
     val tMeta = System.nanoTime()
     // every touched bucket emits >=1 winner (tombstones retained), so the
     // written bucket set IS the touched set. Cold start reports what it
     // wrote (winners, tombstones); the hot path its raw batch rows.
-    val written = WrittenFile.byBucket(merged.map(_.file).toSeq)
-    val touchedCount = merged.length
+    val written = WrittenFile.byBucket(merged.map(_.file))
     val (batchRows, nDeletes) =
       if (snap.isEmpty) (written.rows.values.sum, written.tombstones.values.sum)
       else (merged.map(_.batchRows).sum, merged.map(_.batchDeletes).sum)
@@ -251,13 +263,13 @@ object MergeApplier {
     val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
       Seq(ManifestRef(table.writeManifest(version, written.files), mine, delta = false)),
       replaced = mine, rows = written.rows,
-      metrics = applyMetrics(batchRows, nDeletes, touchedCount, t0, tMeta) ++
+      metrics = applyMetrics(batchRows, nDeletes, written, t0, tMeta) ++
         // contention lineage: a commit whose merge had to RE-RUN against a
         // concurrent winner records which attempt landed (rebases record
         // "rebasedFrom" instead) — makes conflict cost auditable from history()
         (if (attempt > 1) Map("rerunAttempt" -> attempt.toLong) else Map.empty))
     def landed(version: Long) = ApplyResult(skipped = false, version, batchRows,
-      touchedCount, batchRows - nDeletes, nDeletes)
+      mine.size, batchRows - nDeletes, nDeletes)
 
     stageName.foreach { n =>
       // WRITE of write-audit-publish: the full merge ran and its files +
@@ -276,12 +288,17 @@ object MergeApplier {
     publish(table, snap, change, CommitBuilder.RebaseIfUnchanged(mine), outDir, landed)
   }
 
-  private def applyMetrics(batchRows: Long, nDeletes: Long, touched: Int,
+  /** An apply's commit metrics. `outputBytes`/`outputRows` are what its
+    * files hold: a driver write has no task output metrics to show them.
+    */
+  private def applyMetrics(batchRows: Long, nDeletes: Long, written: WrittenFile.ByBucket,
       t0: Long, tMeta: Long): Map[String, Long] = Map(
     "batchRows" -> batchRows,
     "upserts" -> (batchRows - nDeletes),
     "deletes" -> nDeletes,
-    "touchedBuckets" -> touched.toLong,
+    "touchedBuckets" -> written.files.size.toLong,
+    "outputBytes" -> written.files.valuesIterator.flatten.map(_.bytes).sum,
+    "outputRows" -> written.rows.values.sum,
     "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
     "durationMs" -> (System.nanoTime() - t0) / 1000000)
 
@@ -307,7 +324,8 @@ object MergeApplier {
     * run the associative LWW fold, so COW and MOR commits interleave freely.
     *
     * Cost per batch is scan + the bucket-aligned batch side ([[batchSide]]:
-    * copied to the bucket tasks when small, else one exchange) + write —
+    * split on the driver and written from driver threads when small, else
+    * one exchange and a write per bucket task) + write —
     * strictly O(batch), the high-throughput tail mode at 10^10 scale; compaction
     * amortizes the read-side merge (exactly Iceberg's v2 merge-on-read
     * contract, built from scratch). Within-batch LWW is deliberately NOT run
@@ -326,17 +344,19 @@ object MergeApplier {
     val (aligned, mergedSchema) = evolve(snap, batch)
     val version = snap.map(_.version).getOrElse(0L) + 1
     val outDir = table.attemptDir(version, writerId, batchId)
-    // Each task appends its partition (= bucket, the alignment invariant) as
-    // one delta file through the COW path's task writer, which tracks the
-    // file's key bounds + conv bloom — the skip input that keeps point
-    // lookups O(files holding the key) on a delta-deep tail. The driver
-    // commits the collected entries: no listing, no footer reads.
-    // Same no-orphan idle contract as the COW path.
+    // Each touched bucket appends its rows as one delta file through the
+    // COW path's writer, which tracks the file's key bounds + conv bloom —
+    // the skip input that keeps point lookups O(files holding the key) on a
+    // delta-deep tail. The driver commits the collected entries: no
+    // listing, no footer reads. Same no-orphan idle contract as the COW path.
     val idle = ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
-    val batchRdd = batchSide(aligned, table.numBuckets)
-    if (batchRdd.partitions.isEmpty) return idle
-    val written = WrittenFile.byBucket(BucketFileWriter.writeAll(batchRdd,
-      WriteBridge.parquetWriterFactory(spark, mergedSchema), outDir.toString))
+    val dir = outDir.toString
+    val written = WrittenFile.byBucket(batchSide(aligned, table.numBuckets) match {
+      case Left(slices) => onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
+        BucketFileWriter.write(writers, dir, b, taskId, slices(b).iterator))
+      case Right(exchanged) => BucketFileWriter.writeAll(exchanged,
+        WriteBridge.parquetWriterFactory(spark, mergedSchema), dir)
+    })
     if (written.files.isEmpty) return idle
     val batchRows = written.rows.values.sum
     val nDeletes = written.tombstones.values.sum
@@ -350,7 +370,7 @@ object MergeApplier {
       Seq(ManifestRef(table.writeManifest(version, newBucketFiles),
         newBucketFiles.keySet, delta = true)),
       replaced = Set.empty, rows = written.rows,
-      metrics = applyMetrics(batchRows, nDeletes, newBucketFiles.size, t0, tMeta))
+      metrics = applyMetrics(batchRows, nDeletes, written, t0, tMeta))
     // Optimistic publish. A MOR delta is a pure append of not-yet-seen rows,
     // and the LWW fold is associative and order-independent — appending our
     // ref AFTER any concurrent commit (COW rewrite, another delta, a

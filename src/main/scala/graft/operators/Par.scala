@@ -71,4 +71,27 @@ object Par {
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** `f` over `items` on at most `defaultParallelism` driver threads (the
+    * caller's and daemon threads named `graft-apply`, joined before this
+    * returns), the results in `items` order. After a failure no further
+    * item starts; the first failure is rethrown as thrown.
+    */
+  def onDriverThreads[I, O](spark: org.apache.spark.sql.SparkSession,
+      items: IndexedSeq[I])(f: I => O): Seq[O] = {
+    val out = new Array[Any](items.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val work: Runnable = () => Iterator.continually(next.getAndIncrement())
+      .takeWhile(i => i < items.size && failure.get == null)
+      .foreach(i => try out(i) = f(items(i)) catch {
+        case t: Throwable => failure.compareAndSet(null, t) })
+    val helpers = Seq.fill(math.min(items.size, spark.sparkContext.defaultParallelism) - 1)(
+      new Thread(work, "graft-apply"))
+    helpers.foreach { t => t.setDaemon(true); t.start() }
+    work.run() // catches everything; an interrupt (a stopping stream) waits too
+    helpers.foreach(com.google.common.util.concurrent.Uninterruptibles.joinUninterruptibly)
+    Option(failure.get).foreach(throw _)
+    out.toSeq.asInstanceOf[Seq[O]]
+  }
 }

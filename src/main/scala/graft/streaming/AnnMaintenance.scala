@@ -145,7 +145,7 @@ object AnnMaintenance {
     if (work > 0) {
       val meta = AnnIndex.readMeta(indexRoot)
       writeLedger(indexRoot, Ledger(ledger.lastBatchId,
-        Some(Inflight(batchId, listIndexFiles(indexRoot), meta.corpusCount,
+        Some(Inflight(batchId, AnnIndex.listIndexFiles(indexRoot), meta.corpusCount,
           meta.gen))))
       if (mutations == "apply") {
         AnnIndex.applyChanges(spark, indexRoot,
@@ -202,14 +202,6 @@ object AnnMaintenance {
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 
-  /** All data files under `<root>/vectors` AND `<root>/tombstones`,
-    * root-relative — the rollback unit, shared with [[AnnIndex]]'s own
-    * bare-mutation crash safety. O(index files); see the class doc for why
-    * that is bounded.
-    */
-  private[streaming] def listIndexFiles(root: String): Set[String] =
-    AnnIndex.listIndexFiles(root)
-
   /** Undo a torn batch: delete every index file the inflight record does
     * not list (only our writes land there — the recovery owns the index
     * the same way the streaming query does), restore corpusCount and gen.
@@ -219,7 +211,7 @@ object AnnMaintenance {
     */
   private def rollback(root: String, inf: Inflight): Unit = {
     val base = Paths.get(root)
-    (listIndexFiles(root) -- inf.preFiles).foreach { rel =>
+    (AnnIndex.listIndexFiles(root) -- inf.preFiles).foreach { rel =>
       Files.deleteIfExists(base.resolve(rel))
     }
     AnnIndex.pruneEmptyTombstoneDir(root)

@@ -1,6 +1,7 @@
 package graft.table
 
 import graft.model.Model
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.WriteBridge
@@ -88,10 +89,10 @@ object WrittenFile {
   }
 }
 
-/** One bucket data file written from inside a task, through Spark's parquet
-  * writer ([[WriteBridge]]) — every lake-table data file is written by one:
-  * replay, COW merge, MOR append, compaction, rebucket and the SQL
-  * tombstone carry through [[BucketFileWriter.write]], the SQL row-level
+/** One bucket data file written from a task or a driver thread, through
+  * Spark's parquet writer ([[WriteBridge]]) — every lake-table data file is
+  * written by one: replay, COW merge, MOR append, compaction, rebucket and
+  * the SQL tombstone carry through [[BucketFileWriter.write]], the SQL row-level
   * write and the streaming sink through their per-task bucket router. The
   * name carries the partition and the task attempt, so retried and
   * speculative attempts never collide; an unused attempt's file is simply
@@ -129,22 +130,21 @@ final class BucketFileWriter(writers: WriteBridge.TaskWriterFactory, dir: String
 
 object BucketFileWriter {
 
-  /** Test seam: runs inside a task right after [[write]] opened its
-    * bucket's file, with the bucket id. Specs throw here to fail one task
-    * mid-write. No-op in production.
+  /** Test seam: runs right after [[write]] opened its bucket's file, with
+    * the bucket id, in a task or on a driver thread. Specs throw here to
+    * fail one bucket's write mid-file. No-op in production.
     */
   private[graft] var afterBucketFileOpen: Int => Unit = _ => ()
 
-  /** The one bucket-aligned task write: this task's rows become its
-    * bucket's (= partition's) one file. A failure deletes the partial file
-    * before the task fails; files of a failed job's other tasks are never
+  /** The one bucket-aligned write: `rows` become `bucket`'s one file, named
+    * for write attempt `taskId` (a task's attempt id, or a driver task id
+    * for a driver write). A failure deletes the partial file before it
+    * propagates; files of a failed apply's other buckets are never
     * referenced, and vacuum sweeps them.
     */
-  def write(writers: WriteBridge.TaskWriterFactory, dir: String,
+  def write(writers: WriteBridge.TaskWriterFactory, dir: String, bucket: Int, taskId: Long,
       rows: Iterator[InternalRow], textIndex: Boolean = false): WrittenFile = {
-    val tc = org.apache.spark.TaskContext.get()
-    val w = new BucketFileWriter(writers, dir, tc.partitionId(), tc.partitionId(),
-      tc.taskAttemptId(), textIndex)
+    val w = new BucketFileWriter(writers, dir, bucket, bucket, taskId, textIndex)
     try {
       afterBucketFileOpen(w.bucket)
       rows.foreach(w.write)
@@ -160,6 +160,9 @@ object BucketFileWriter {
   def writeAll(rows: RDD[InternalRow], writers: WriteBridge.TaskWriterFactory,
       dir: String, textIndex: Boolean = false): Seq[WrittenFile] =
     rows.mapPartitions { it =>
-      if (it.hasNext) Iterator(write(writers, dir, it, textIndex)) else Iterator.empty
+      val tc = TaskContext.get()
+      if (it.hasNext) Iterator(write(writers, dir, tc.partitionId(), tc.taskAttemptId(), it,
+        textIndex))
+      else Iterator.empty
     }.collect().toSeq
 }

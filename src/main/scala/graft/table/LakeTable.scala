@@ -834,10 +834,6 @@ final class LakeTable(val root: String, val numBuckets: Int) {
 
   // --- data ---------------------------------------------------------------
 
-  /** Data-file paths for a commit directory, keyed by bucket. */
-  def commitDir(version: Long, writerId: String, batchId: Long): Path =
-    dataDir.resolve(s"c$version-$writerId-$batchId")
-
   /** A unique staging directory for one apply ATTEMPT. Concurrent writers —
     * or a split-brain second instance of the same writerId — can race the
     * same (version, writerId, batchId) triple; a deterministic name would

@@ -9,6 +9,10 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.api.InitContext
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
@@ -23,9 +27,10 @@ import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** Driver-side parquet read for the key-addressed lookups — no job, no
-  * broadcast. A point lookup opens one or a few small files; launching a
-  * scan job for them (and broadcasting a Hadoop conf, which
+/** Driver-side reads for the key-addressed lookups and the small applies —
+  * no job, no broadcast. A point lookup opens one or a few small files, and
+  * a tail trigger's apply reads one small batch and a few bucket files;
+  * launching a job for them (and broadcasting a Hadoop conf, which
   * `ParquetFileFormat.buildReaderWithPartitionValues` does on every call)
   * costs more than the read itself.
   *
@@ -37,7 +42,8 @@ import scala.jdk.CollectionConverters._
   * predicate drops row groups whose statistics, dictionaries or bloom
   * filters exclude it; `keep` then decides each decoded row, and only kept
   * rows are copied (the reader reuses its buffers), so memory is
-  * O(kept rows), not O(file).
+  * O(kept rows), not O(file). [[compute]] runs a plan's partitions the
+  * same way: on the calling thread, as one driver-built task.
   */
 object DriverScan {
 
@@ -79,10 +85,11 @@ object DriverScan {
 
   /** Read `paths` (in order) as `schema`-shaped rows on the driver and
     * return copies of the rows `keep` admits. `filter` must hold for every
-    * row `keep` admits; it only prunes row groups.
+    * row `keep` admits; it only prunes row groups. No filter reads every row.
     */
   def read(spark: SparkSession, schema: StructType, paths: Seq[String],
-      filter: FilterPredicate, keep: InternalRow => Boolean): Seq[InternalRow] = {
+      filter: Option[FilterPredicate] = None,
+      keep: InternalRow => Boolean = _ => true): Seq[InternalRow] = {
     val sql = classic(spark).sessionState.conf
     val conf = readConf(spark, schema)
     val toUnsafe = UnsafeProjection.create(schema)
@@ -90,7 +97,7 @@ object DriverScan {
     paths.foreach { p =>
       val path = new Path(p)
       val options = HadoopReadOptions.builder(conf, path)
-        .withRecordFilter(FilterCompat.get(filter)).build()
+        .withRecordFilter(filter.fold(FilterCompat.NOOP)(FilterCompat.get)).build()
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), options)
       try {
         val meta = reader.getFooter.getFileMetaData
@@ -127,6 +134,41 @@ object DriverScan {
       } finally reader.close()
     }
     out.toSeq
+  }
+
+  // driver task ids count down from below the block manager's reserved
+  // writer ids (-1, -1024), so they never meet the scheduler's (0 up)
+  private val taskIds = new java.util.concurrent.atomic.AtomicLong(-1024L)
+
+  /** A fresh driver task id, also the attempt id of driver-written files. */
+  def newTaskId(): Long = taskIds.decrementAndGet()
+
+  /** Run `f` over every row of the narrow `rdd`'s partitions, in order, on
+    * the calling thread — no job — under a driver-built task context: a
+    * real `TaskMemoryManager`, a task id the block manager has registered (a
+    * broadcast read in a file scan locks its block for the running task),
+    * the session's SQL conf as local properties. The context completes and
+    * its locks and memory are released also on a throw. `f` sees reused
+    * buffers; copy what it keeps.
+    */
+  def compute(spark: SparkSession, rdd: RDD[InternalRow])(f: InternalRow => Unit): Unit = {
+    val env = SparkEnv.get
+    val taskId = newTaskId()
+    val memory = new TaskMemoryManager(env.memoryManager, taskId)
+    val props = new java.util.Properties()
+    classic(spark).sessionState.conf.getAllConfs.foreach { case (k, v) => props.setProperty(k, v) }
+    val ctx = new TaskContextImpl(0, 0, 0, taskId, 0, rdd.partitions.length, memory, props,
+      env.metricsSystem, TaskMetrics.empty, 1, Map.empty)
+    env.blockManager.registerTask(taskId)
+    TaskContext.setTaskContext(ctx)
+    var failure: Option[Throwable] = None
+    try rdd.partitions.foreach(p => rdd.iterator(p, ctx).foreach(f))
+    catch { case t: Throwable => failure = Some(t); ctx.markTaskFailed(t); throw t }
+    finally try ctx.markTaskCompleted(failure) finally {
+      TaskContext.unset()
+      env.blockManager.releaseAllLocksForTask(taskId)
+      memory.cleanUpAllAllocatedMemory()
+    }
   }
 
   /** `rows` as a DataFrame over a `LocalRelation`: collecting it starts no

@@ -5,11 +5,15 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.types.StructType
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Bucket-aligned parquet scan over `private[sql]` machinery — the
   * "bucket-aware target read" of the COW MERGE path.
@@ -21,12 +25,13 @@ import org.apache.spark.sql.types.StructType
   * each partition reading that bucket's data files through Spark's own
   * ParquetFileFormat reader function (schema clipping → additive evolution
   * nulls, predicate-free, row-returning). zipPartitions with the batch's
-  * bucket split (its key shuffle or, for a small batch, the in-task split
-  * of [[bucketCopies]]; both use murmur3 partition ids that equal the
-  * table's bucket function by construction) then gives a co-partitioned
-  * merge with ZERO table-side shuffle — the DSv2 `reportPartitioning`/
-  * storage-partitioned-join outcome, without standing up a full DSv2
-  * connector.
+  * bucket split (its key shuffle or, for a small batch, the driver's split
+  * [[splitOnDriver]] shipped one slice per partition; both use murmur3
+  * partition ids that equal the table's bucket function by construction)
+  * then gives a co-partitioned merge with ZERO table-side shuffle — the
+  * DSv2 `reportPartitioning`/storage-partitioned-join outcome, without
+  * standing up a full DSv2 connector. A small batch against small touched
+  * buckets needs neither RDD: it is applied on the driver ([[DriverScan]]).
   */
 object ScanBridge {
   private def classic(s: SparkSession): org.apache.spark.sql.classic.SparkSession =
@@ -35,9 +40,11 @@ object ScanBridge {
   /** Serializable per-file reader (schema clipping handles files written
     * before additive columns existed). OPTION_RETURNING_BATCH=false keeps the
     * contract Iterator[InternalRow] even when the vectorized reader runs
-    * underneath.
+    * underneath. The bucket-aligned scan reads through it, and so do the
+    * DSv2 readers' [[org.apache.spark.sql.connector.read.PartitionReader]]s
+    * outside an RDD.
     */
-  private def parquetReaderFunc(spark: SparkSession, schema: StructType)
+  def parquetReader(spark: SparkSession, schema: StructType)
       : PartitionedFile => Iterator[InternalRow] =
     new ParquetFileFormat().buildReaderWithPartitionValues(
       classic(spark),
@@ -47,16 +54,6 @@ object ScanBridge {
       filters = Nil,
       options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       hadoopConf = classic(spark).sessionState.newHadoopConf())
-
-  /** The serializable per-file parquet reader function, exposed for
-    * executor-side use outside an RDD — the DSv2 change-feed source's
-    * [[org.apache.spark.sql.connector.read.PartitionReader]]s read their
-    * bucket's files through exactly the reader the bucket-aligned merge
-    * scan uses (schema clipping → additive-evolution nulls).
-    */
-  def parquetReader(spark: SparkSession, schema: StructType)
-      : PartitionedFile => Iterator[InternalRow] =
-    parquetReaderFunc(spark, schema)
 
   /** One bucket's rows: its (path, fileSize) files read in order through
     * `reader`, lazily — the per-bucket file loop of the bucket-aligned scan
@@ -75,18 +72,18 @@ object ScanBridge {
   def bucketFilesRdd(spark: SparkSession, schema: StructType,
       filesByBucket: Array[Array[(String, Long)]]): RDD[InternalRow] =
     new BucketFilesRDD(classic(spark).sparkContext,
-      parquetReaderFunc(spark, schema), filesByBucket)
+      parquetReader(spark, schema), filesByBucket)
 
   def toInternalRdd(df: DataFrame): RDD[InternalRow] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
 
-  /** Whether `df` is cheap enough to compute once per task of a `copies`-
-    * task stage instead of shuffling it: a deterministic plan (every copy
-    * sees the same rows) whose size estimate times `copies` is within
-    * Spark's bound for a side copied to every task,
-    * `spark.sql.autoBroadcastJoinThreshold` (-1 disables). Read off the
-    * analyzed plan, so a caller that goes on to plan something else (the
-    * exchange over `df`) runs the optimizer once, not twice.
+  /** Whether `df` is small enough to split on the driver
+    * ([[splitOnDriver]]) instead of shuffling it: a deterministic plan whose
+    * size estimate times `copies` (the bucket count) is within Spark's bound
+    * for a side copied to every task, `spark.sql.autoBroadcastJoinThreshold`
+    * (-1 disables). Read off the analyzed plan, so a caller that goes on to
+    * plan something else (the exchange over `df`) runs the optimizer once,
+    * not twice.
     */
   def copyable(df: DataFrame, copies: Int): Boolean = {
     val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.analyzed
@@ -94,22 +91,35 @@ object ScanBridge {
       classic(df.sparkSession).sessionState.conf.autoBroadcastJoinThreshold
   }
 
-  /** `df` split by the hash of `keys` into `numBuckets` partitions WITHOUT
-    * an exchange: partition i's task reads every partition of the plan and
-    * keeps the rows whose `HashPartitioning(keys, numBuckets)` partition id
-    * is i — the expression `repartition(numBuckets, keys)`'s exchange
-    * evaluates, so partition i holds exactly what the exchange would put
-    * there. One narrow stage; each task recomputes the whole plan, so this
-    * is for small, deterministic plans only ([[copyable]]). A plan with no
-    * partitions (an empty batch) gives an RDD with none either.
+  /** `df`'s rows split by the hash of `keys` into `numBuckets` slices,
+    * decoded once on the driver with no job ([[DriverScan.compute]]) — or
+    * None when `df` must take the `repartition(numBuckets, keys)` exchange:
+    * it is not [[copyable]] for `numBuckets` copies, or its plan is not
+    * narrow (an exchange, adaptive plan or subquery starts jobs of its own;
+    * a shuffle in its lineage has no map output to read). Slice i holds
+    * what the exchange puts in partition i: both evaluate
+    * `HashPartitioning(keys, numBuckets)`'s partition id.
     */
-  def bucketCopies(df: DataFrame, keys: Seq[String], numBuckets: Int): RDD[InternalRow] = {
-    val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
-    val output = plan.executedPlan.output
-    val keyAttrs = keys.map(k => output.find(_.name == k).getOrElse(
-      throw new IllegalArgumentException(s"key column $k not in ${output.map(_.name)}")))
-    new BucketCopiesRDD(plan.toRdd,
-      HashPartitioning(keyAttrs, numBuckets).partitionIdExpression, output, numBuckets)
+  def splitOnDriver(df: DataFrame, keys: Seq[String],
+      numBuckets: Int): Option[Array[Array[InternalRow]]] = {
+    if (!copyable(df, numBuckets)) return None
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
+    val plan = qe.executedPlan
+    if (plan.exists(p => p.isInstanceOf[AdaptiveSparkPlanExec] || p.isInstanceOf[Exchange] ||
+        p.subqueries.nonEmpty)) return None
+    val rdd = qe.toRdd
+    def narrow(r: RDD[_]): Boolean = r.dependencies.forall {
+      case d: NarrowDependency[_] => narrow(d.rdd)
+      case _ => false
+    }
+    if (!narrow(rdd)) return None
+    val keyAttrs = keys.map(k => plan.output.find(_.name == k).getOrElse(
+      throw new IllegalArgumentException(s"key column $k not in ${plan.output.map(_.name)}")))
+    val bucketOf = UnsafeProjection.create(
+      HashPartitioning(keyAttrs, numBuckets).partitionIdExpression :: Nil, plan.output)
+    val slices = Array.fill(numBuckets)(ArrayBuffer.empty[InternalRow])
+    DriverScan.compute(df.sparkSession, rdd)(r => slices(bucketOf(r).getInt(0)) += r.copy())
+    Some(slices.map(_.toArray))
   }
 
   def internalDf(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
@@ -146,42 +156,4 @@ private class BucketFilesRDD(
 
   override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
     ScanBridge.readFiles(reader, split.asInstanceOf[BucketPartition].files)
-}
-
-/** Partition i of a [[BucketCopiesRDD]]: it carries the parent's partitions
-  * itself (as CartesianRDD's partitions do), since `prev.partitions` is not
-  * available on an executor.
-  */
-private class BucketCopyPartition(override val index: Int,
-    val parents: Array[Partition]) extends Partition
-
-private class BucketCopiesRDD(
-    private var prev: RDD[InternalRow],
-    partitionId: Expression,
-    output: Seq[Attribute],
-    numBuckets: Int)
-  extends RDD[InternalRow](prev.context, Nil) {
-
-  private val parentCount = prev.partitions.length
-
-  override def getDependencies: Seq[org.apache.spark.Dependency[_]] =
-    Seq(new NarrowDependency(prev) {
-      override def getParents(partitionId: Int): Seq[Int] = 0 until parentCount
-    })
-
-  override protected def getPartitions: Array[Partition] =
-    if (parentCount == 0) Array.empty
-    else Array.tabulate(numBuckets)(i => new BucketCopyPartition(i, prev.partitions))
-
-  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
-    val part = split.asInstanceOf[BucketCopyPartition]
-    val bucketOf = UnsafeProjection.create(partitionId :: Nil, output)
-    part.parents.iterator.flatMap(p => prev.iterator(p, context))
-      .filter(r => bucketOf(r).getInt(0) == part.index)
-  }
-
-  override def clearDependencies(): Unit = {
-    super.clearDependencies()
-    prev = null
-  }
 }

@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -30,14 +29,15 @@ object WriteBridge {
   /** Serializable per-task handle: `open(path, …)` returns an
     * [[OutputWriter]] writing `schema`-shaped [[org.apache.spark.sql.catalyst.InternalRow]]s
     * to `path`. One writer per output file; close() finalizes the footer.
-    * The Hadoop conf rides a broadcast, so it is deserialized once per
-    * executor rather than once per task.
+    * `conf` supplies the Hadoop conf: for tasks it reads a broadcast, so the
+    * conf is deserialized once per executor rather than once per task; for
+    * driver writes it holds the conf itself, and the handle cannot ship.
     */
   final class TaskWriterFactory(
       factory: OutputWriterFactory,
-      conf: Broadcast[SerializableConfiguration],
+      conf: () => Configuration,
       val schema: StructType) extends Serializable {
-    def hadoopConf: Configuration = conf.value.value
+    def hadoopConf: Configuration = conf()
     def open(path: String, partitionId: Int, taskId: Long): OutputWriter = {
       val attempt = new TaskAttemptID(
         new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt)
@@ -46,21 +46,27 @@ object WriteBridge {
   }
 
   /** Prepare a parquet writer factory for `schema` under the session's SQL
-    * conf (driver-side; the result ships to tasks). Files are created through
-    * [[graft.table.ForkFreeLocalFileSystem]].
+    * conf (driver-side). The result ships to tasks, or with `onDriver` is
+    * for driver threads only and broadcasts nothing. Files are created
+    * through [[graft.table.ForkFreeLocalFileSystem]].
     */
-  def parquetWriterFactory(spark: SparkSession, schema: StructType): TaskWriterFactory = {
+  def parquetWriterFactory(spark: SparkSession, schema: StructType,
+      onDriver: Boolean = false): TaskWriterFactory = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val job = Job.getInstance(
       classic.sessionState.newHadoopConfWithOptions(graft.table.ForkFreeLocalFileSystem.conf))
     val factory = new ParquetFileFormat().prepareWrite(classic, job, Map.empty, schema)
-    new TaskWriterFactory(factory,
-      classic.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)), schema)
+    val conf = job.getConfiguration
+    new TaskWriterFactory(factory, if (onDriver) () => conf else {
+      val shipped = classic.sparkContext.broadcast(new SerializableConfiguration(conf))
+      () => shipped.value.value
+    }, schema)
   }
 
   /** Add one written file to the running task's output metrics — the
     * counters Spark's own file writer maintains, which a direct writer
-    * bypasses (the setters are `private[spark]`).
+    * bypasses (the setters are `private[spark]`). A driver write has no
+    * task; its apply records the bytes and rows in its commit metrics.
     */
   def recordOutput(bytes: Long, rows: Long): Unit = Option(TaskContext.get()).foreach { tc =>
     val m = tc.taskMetrics().outputMetrics

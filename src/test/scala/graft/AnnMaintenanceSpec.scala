@@ -174,7 +174,7 @@ class AnnMaintenanceSpec extends SparkSpecBase {
 
   test("torn batch is rolled back on recovery, then re-applied exactly once") {
     val root = freshIndex(10)
-    val preFiles = AnnMaintenance.listIndexFiles(root)
+    val preFiles = AnnIndex.listIndexFiles(root)
     val preMeta = AnnIndex.readMeta(root)
     // the torn batch carries an UPDATE too, so the rollback must also sweep
     // the tombstone file and restore gen

@@ -3,16 +3,18 @@ package graft
 import graft.changelog.Generator
 import graft.model.{ChangeEvent, Model}
 import graft.operators.MergeApplier
-import graft.table.LakeTable
+import graft.streaming.CdcStream
+import graft.table.{BucketFileWriter, LakeTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.monotonically_increasing_id
 import org.apache.spark.sql.graftbridge.ScanBridge
 
 /** The plan of an apply's batch side (MergeApplier.batchSide). A batch whose
   * size estimate × bucket count is within `spark.sql.autoBroadcastJoinThreshold`
-  * and whose plan is deterministic is copied to the bucket tasks: the apply
-  * is one job of one stage with no shuffle. Every other batch takes the
-  * `repartition(N, key)` exchange. Both leave the oracle's state.
+  * and whose plan is deterministic and narrow is split on the driver: the
+  * apply runs no job, or one job of one stage with no shuffle when the
+  * touched buckets' bytes exceed the threshold. Every other batch takes the
+  * `repartition(N, key)` exchange. All leave the oracle's state.
   */
 class BatchSideSpec extends SparkSpecBase {
   import Model.changeEventEncoder
@@ -20,8 +22,8 @@ class BatchSideSpec extends SparkSpecBase {
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
   private val numBuckets = 4
 
-  private def events(seed: Long): Seq[ChangeEvent] =
-    Generator.events(spark, 1200, numConvs = 15, turnsPerConv = 6, seed = seed)
+  private def events(seed: Long, n: Int = 1200, numConvs: Int = 15): Seq[ChangeEvent] =
+    Generator.events(spark, n, numConvs = numConvs, turnsPerConv = 6, seed = seed)
       .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
 
   private def finalState(t: LakeTable): Map[(String, Int), (String, Long)] =
@@ -51,17 +53,87 @@ class BatchSideSpec extends SparkSpecBase {
     (t, plans.tail)
   }
 
-  private def copied(p: SparkSpecBase.JobPlan) =
+  private def sliced(p: SparkSpecBase.JobPlan) =
     p.jobs == 1 && p.stages == 1 && p.shuffleWriteBytes == 0L
   private def exchanged(p: SparkSpecBase.JobPlan) = p.stages == 2 && p.shuffleWriteBytes > 0L
 
-  test("a small batch applies in one job of one stage with no shuffle (COW and MOR)") {
+  test("a small batch applies on the driver with no job (COW, MOR and stageBatch)") {
     val all = events(71)
     Seq(false, true).foreach { mor =>
       val (t, plans) = applyAll(s"bs-small-$mor", all, mor, threshold = None)
-      assert(plans.forall(copied), s"mor=$mor: $plans")
+      assert(plans.forall(_.jobs == 0), s"mor=$mor: $plans")
       assert(finalState(t) == oracle(all), s"mor=$mor")
     }
+    val t = new LakeTable(tmpDir("bs-small-staged"), numBuckets)
+    val (first, rest) = all.splitAt(800)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(first).toDF(), "w", 0L)
+    var staged: Option[String] = None
+    val plan = jobPlan {
+      staged = MergeApplier.stageBatch(spark, t, spark.createDataset(rest).toDF(), "w", 1L)
+    }
+    assert(plan.jobs == 0, plan)
+    t.publishStaged(staged.get)
+    assert(finalState(t) == oracle(all))
+  }
+
+  test("a small batch against touched buckets above the threshold runs one job of one stage") {
+    val all = events(83, n = 3000, numConvs = 200)
+    val (preload, tail) = all.splitAt(2960)
+    val t = new LakeTable(tmpDir("bs-sliced"), numBuckets)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(preload).toDF(), "w", 0L)
+    tail.grouped(10).zipWithIndex.foreach { case (chunk, i) =>
+      val batch = spark.createDataset(chunk).toDF()
+      // the bound admits the batch for one copy per bucket, but not the
+      // bytes of the buckets it touches
+      val bound = batch.queryExecution.analyzed.stats.sizeInBytes * numBuckets
+      val touched = chunk.map(e => t.bucketFor(e.conv_id, e.turn_idx)).toSet
+      val touchedBytes = t.resolveFiles(t.currentSnapshot().get).filter(f => touched(f._1))
+        .values.flatten.map(_.bytes).sum
+      assert(touchedBytes > bound, s"batch $i: $touchedBytes touched bytes within $bound")
+      val plan = withConf(Threshold, Some(bound.toString)) {
+        assert(ScanBridge.copyable(batch, numBuckets))
+        jobPlan(MergeApplier.applyBatch(spark, t, batch, "w", i + 1L))
+      }
+      assert(sliced(plan), s"batch $i: $plan")
+    }
+    assert(finalState(t) == oracle(all))
+  }
+
+  test("a CdcStream COW tail starts no Spark job per trigger") {
+    val all = events(89)
+    val src = tmpDir("bs-stream-src")
+    all.grouped(300).zipWithIndex.foreach { case (chunk, i) =>
+      writeFlatParquet(spark.createDataset(chunk).toDF(), src, f"chunk-$i%02d.parquet")
+    }
+    val t = new LakeTable(tmpDir("bs-stream-table"), numBuckets)
+    val plan = jobPlanAnyThread {
+      CdcStream.runAvailableNow(spark, src, t, tmpDir("bs-stream-ckpt"), maxFilesPerTrigger = 1)
+    }
+    assert(t.currentSnapshot().get.version == 4L)
+    assert(plan.jobs == 0, plan)
+    assert(finalState(t) == oracle(all))
+  }
+
+  test("no driver apply thread outlives its apply") {
+    def applyThreads = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-apply")
+    }
+    val all = events(97)
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    BucketFileWriter.afterBucketFileOpen = _ => writers.add(Thread.currentThread().getName)
+    try Seq(false, true).foreach { mor =>
+      val t = new LakeTable(tmpDir(s"bs-threads-$mor"), numBuckets)
+      all.grouped(120).zipWithIndex.foreach { case (chunk, i) =>
+        val df = spark.createDataset(chunk).toDF()
+        if (mor) MergeApplier.applyBatchMor(spark, t, df, "w", i.toLong)
+        else MergeApplier.applyBatch(spark, t, df, "w", i.toLong)
+        assert(applyThreads.isEmpty, s"mor=$mor batch $i: $applyThreads")
+      }
+      assert(finalState(t) == oracle(all), s"mor=$mor")
+    } finally BucketFileWriter.afterBucketFileOpen = _ => ()
+    // the buckets were written on the apply threads as well as the caller's
+    assert(writers.contains("graft-apply") && writers.size > 1, writers)
   }
 
   test("threshold -1, or bytes × buckets above it, keeps the exchange") {

@@ -71,6 +71,16 @@ class FunctionsSpec extends SparkSpecBase {
     assert(got.getString(4) == "He001 W1r0d") // translate: l→0, o→1
   }
 
+  test("a mapping's GREL toLowerCase / trim / sha1 are Spark's null-safe builtins") {
+    // MappingCompiler's function registry maps these names straight to the
+    // builtins; GRELFunctions' null in → null out holds with no wrapper
+    val got = Seq(Some("  Hello World  "), None).toDF("s")
+      .select(lower($"s"), trim($"s"), sha1(trim($"s"))).collect()
+    assert(got(0).toSeq == Seq("  hello world  ", "Hello World",
+      "0a4d55a8d778e5022fab701977c5d840bbc486d0"))
+    assert(got(1).toSeq == Seq(null, null, null))
+  }
+
   test("GREL splitByLengths / splitByCharType / diff") {
     val df = Seq("internationalization").toDF("s")
     val parts = df.select(Grel.splitByLengths($"s", 5, 6, 3)).collect()

@@ -36,7 +36,7 @@ class LakeTableSpec extends SparkSpecBase {
         ev("c1", 0, s"v$i", f"2025-01-01 00:0$i%d:00", i.toLong))).toDF(), "w", i.toLong)
     }
     // plant an orphan (crashed half-written commit dir, never committed)
-    val orphan = table.commitDir(99, "crashed", 7)
+    val orphan = table.attemptDir(99, "crashed", 7)
     java.nio.file.Files.createDirectories(orphan)
     java.nio.file.Files.writeString(orphan.resolve("part-orphan.parquet"), "junk")
     // plant torn meta writes (crash between temp write and atomic rename)

@@ -17,10 +17,11 @@ class MergeSpec extends SparkSpecBase {
       seq: Long, tool: Option[String] = None) =
     ChangeEvent(conv, turn, "user", text, tool, ts(t), op, seq)
 
-  /** Both batch sides of an apply: the default threshold copies a spec-sized
-    * batch to the bucket tasks, -1 forces the `repartition(N, key)` exchange.
+  /** Both batch sides of an apply: the default threshold applies a
+    * spec-sized batch on the driver, -1 forces the `repartition(N, key)`
+    * exchange.
     */
-  private val batchSides = Seq("copied" -> None, "exchanged" -> Some("-1"))
+  private val batchSides = Seq("driver" -> None, "exchanged" -> Some("-1"))
   private def withBatchSide[T](threshold: Option[String])(f: => T): T =
     withConf("spark.sql.autoBroadcastJoinThreshold", threshold)(f)
 
@@ -219,7 +220,7 @@ class MergeSpec extends SparkSpecBase {
     // as bucket i = the partition id. That is sound ONLY if Spark's
     // HashPartitioning (murmur3, seed 42) equals pmod(hash(key), N) — this
     // test pins the invariant against any Spark-internals drift, for the
-    // exchange and for the copied batch side (MergeApplier.batchSide).
+    // exchange and for the driver's split (MergeApplier.batchSide).
     import org.apache.spark.sql.functions.{col, spark_partition_id}
     val table = new LakeTable(tmpDir("merge-align"), numBuckets = 8)
     val df = spark.createDataset((0 until 5000).map(i =>
@@ -236,10 +237,19 @@ class MergeSpec extends SparkSpecBase {
       withBatchSide(threshold) {
         assert(org.apache.spark.sql.graftbridge.ScanBridge.copyable(withBucket,
           table.numBuckets) == threshold.isEmpty, side)
-        val rows = MergeApplier.batchSide(withBucket, table.numBuckets)
-          .mapPartitionsWithIndex((i, it) => Iterator(it.map(r => (r.getInt(bucketI) == i, 1L))
-            .foldLeft((true, 0L)) { case ((ok, n), (o, c)) => (ok && o, n + c) }))
-          .collect()
+        // per bucket i: (every row's bucketCol is i, row count)
+        val rows = MergeApplier.batchSide(withBucket, table.numBuckets) match {
+          case Left(slices) =>
+            assert(threshold.isEmpty, side)
+            slices.zipWithIndex.map { case (sl, i) =>
+              (sl.forall(_.getInt(bucketI) == i), sl.length.toLong) }
+          case Right(exchanged) =>
+            assert(threshold.nonEmpty, side)
+            exchanged.mapPartitionsWithIndex((i, it) => Iterator(it.map(r =>
+              (r.getInt(bucketI) == i, 1L))
+              .foldLeft((true, 0L)) { case ((ok, n), (o, c)) => (ok && o, n + c) }))
+              .collect()
+        }
         assert(rows.length == table.numBuckets, side)
         assert(rows.forall(_._1), s"$side: a row sits outside its bucket's partition")
         assert(rows.map(_._2).sum == 5000L, side)
@@ -303,9 +313,10 @@ class MergeSpec extends SparkSpecBase {
           .map(_.toString).filter(_.contains("/data/")).toSet } finally s.close()
     }
     // cold start (batch 0), then the hot merge (batch 1): each fails once in
-    // one bucket's task right after that task opened its file, then re-applies;
-    // once per batch side, the copied side's table going on to the passes below
-    def failingApplies(table: LakeTable): Unit = {
+    // one bucket's write right after it opened its file, then re-applies;
+    // once per batch side, the driver side's table going on to the passes
+    // below. The driver side fails and re-runs with no Spark job.
+    def failingApplies(table: LakeTable, onDriver: Boolean): Unit = {
       all.grouped(2000).zipWithIndex.foreach { case (chunk, i) =>
         val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
         val version = table.currentSnapshot().map(_.version)
@@ -313,23 +324,34 @@ class MergeSpec extends SparkSpecBase {
         val filesBefore = dataFiles(table)
         BucketFileWriter.afterBucketFileOpen =
           b => if (b == victim) throw new IllegalStateException(s"injected failure in bucket $b")
-        val e = try intercept[Exception] {
-          MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
-        } finally BucketFileWriter.afterBucketFileOpen = _ => ()
+        val batch = spark.createDataset(chunk).toDF()
+        var e: Exception = null
+        val failed = jobPlan {
+          e = try intercept[Exception] {
+            MergeApplier.applyBatch(spark, table, batch, "w", i.toLong)
+          } finally BucketFileWriter.afterBucketFileOpen = _ => ()
+        }
         assert(e.getMessage.contains("injected failure"), e.getMessage)
+        assert((failed.jobs == 0) == onDriver, failed)
         assert(table.currentSnapshot().map(_.version) == version)
         if (version.nonEmpty) assert(finalState(table) == state)
         val left = dataFiles(table) -- filesBefore
         assert(!left.exists(_.contains(s"/bucket=$victim/")),
           s"the failed task's file (bucket $victim) was left behind: $left")
-        val r = MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+        var r: MergeApplier.ApplyResult = null
+        val rerun = jobPlan { r = MergeApplier.applyBatch(spark, table, batch, "w", i.toLong) }
         assert(!r.skipped && r.touchedBuckets > 0)
+        assert((rerun.jobs == 0) == onDriver, rerun)
+        // the re-run landed exactly once: one new version, its batch in the ledger
+        assert(table.currentSnapshot().map(_.version) == Some(version.getOrElse(0L) + 1))
+        assert(table.currentSnapshot().get.maxBatchId("w") == i.toLong)
       }
       assert(finalState(table) == oracle)
     }
     batchSides.foreach { case (side, threshold) =>
       withBatchSide(threshold)(failingApplies(
-        if (threshold.isEmpty) table else new LakeTable(tmpDir(s"merge-fail-$side"), 4)))
+        if (threshold.isEmpty) table else new LakeTable(tmpDir(s"merge-fail-$side"), 4),
+        onDriver = threshold.isEmpty))
     }
 
     // compaction (hash and spill, full and selective) and rebucket write
@@ -379,73 +401,44 @@ class MergeSpec extends SparkSpecBase {
     assert(finalState(resized) == oracleAll)
   }
 
-  /** Per stage of the jobs `body` runs: the (bytes, records) its tasks
-    * reported as output.
-    */
-  private def stageOutput[T](group: String)(body: => T): (T, Seq[(Long, Long)]) = {
-    import org.apache.spark.scheduler._
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = new java.util.concurrent.atomic.AtomicInteger()
-    val out = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          e.stageIds.foreach(stages.add(_)); jobs.add(e.jobId)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (jobs.contains(e.jobId)) ended.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics.outputMetrics
-        out.put(e.stageInfo.stageId, (m.bytesWritten, m.recordsWritten))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val result = try {
-      spark.sparkContext.setJobGroup(group, group)
-      val r = try body finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((jobs.isEmpty || ended.get < jobs.size) && System.nanoTime() < deadline) Thread.sleep(20)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    (result, stages.asScala.toSeq.flatMap(id => Option(out.get(id))))
-  }
-
   test("the apply job reports output bytes and rows equal to what the commit references") {
-    val table = new LakeTable(tmpDir("merge-outmetrics"), numBuckets = 4)
     val all = Generator.events(spark, 3000, numConvs = 15, turnsPerConv = 6, seed = 61)
       .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
-    all.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
-      val (_, reported) = stageOutput(s"merge-outmetrics-$i") {
-        MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+    // every apply's commit metrics hold what its manifest references; with
+    // -1 the fold/write stage's task output metrics do too, while a driver
+    // apply runs no stage at all
+    var table: LakeTable = null
+    batchSides.foreach { case (side, threshold) =>
+      table = new LakeTable(tmpDir(s"merge-outmetrics-$side"), numBuckets = 4)
+      all.grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
+        val plan = withBatchSide(threshold)(jobPlan(
+          MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)))
+        val snap = table.currentSnapshot().get
+        val written = table.readManifest(snap.manifests.last.path)
+        val bytes = written.values.flatten.map(_.bytes).sum
+        val rows = written.keySet.toSeq.map(snap.bucketRows).sum
+        assert(bytes > 0 && snap.metrics("outputBytes") == bytes &&
+          snap.metrics("outputRows") == rows, s"$side batch $i: ${snap.metrics} vs $written")
+        if (threshold.isEmpty) assert(plan.jobs == 0, s"$side batch $i: $plan")
+        else assert(plan.outputBytes == bytes && plan.outputRows == rows, s"$side batch $i: $plan")
       }
-      val snap = table.currentSnapshot().get
-      val files = table.readManifest(snap.manifests.last.path).values.flatten.toSeq
-      assert(files.nonEmpty && reported.map(_._1).sum == files.map(_.bytes).sum,
-        s"batch $i: stage output bytes $reported vs manifest ${files.map(_.bytes)}")
-      val touched = table.readManifest(snap.manifests.last.path).keySet
-      assert(reported.map(_._2).sum == touched.toSeq.map(snap.bucketRows).sum)
     }
     // compaction and rebucket write through the same task writer: the one
     // manifest their commit leaves holds exactly what the job reported
-    def referencesReported(name: String, t: LakeTable, reported: Seq[(Long, Long)]): Unit = {
+    def referencesReported(name: String, t: LakeTable, reported: SparkSpecBase.JobPlan): Unit = {
       val snap = t.currentSnapshot().get
       assert(snap.manifests.size == 1, name)
       val written = t.readManifest(snap.manifests.head.path)
       val files = written.values.flatten.toSeq
-      assert(files.nonEmpty && reported.map(_._1).sum == files.map(_.bytes).sum,
+      assert(files.nonEmpty && reported.outputBytes == files.map(_.bytes).sum,
         s"$name: stage output bytes $reported vs manifest ${files.map(_.bytes)}")
-      assert(reported.map(_._2).sum == written.keySet.toSeq.map(snap.bucketRows).sum, name)
+      assert(reported.outputRows == written.keySet.toSeq.map(snap.bucketRows).sum, name)
       assert(snap.bucketRows == t.footerRowCounts(written), name)
     }
-    val (_, compacted) = stageOutput("merge-outmetrics-compact") {
-      MergeApplier.compactRetainTombstones(spark, table)
-    }
+    val compacted = jobPlan(MergeApplier.compactRetainTombstones(spark, table))
     referencesReported("compact", table, compacted)
-    val (resized, rebucketed) = stageOutput("merge-outmetrics-rebucket") {
-      MergeApplier.rebucket(spark, table, 8)
-    }
+    var resized: LakeTable = null
+    val rebucketed = jobPlan { resized = MergeApplier.rebucket(spark, table, 8) }
     referencesReported("rebucket", resized, rebucketed)
   }
 }

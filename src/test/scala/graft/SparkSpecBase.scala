@@ -60,10 +60,18 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     withConf(graft.operators.BucketLocal.SpillFoldBytesKey, Some(bytes.toString))(f)
 
   /** What the Spark jobs `f` started on this thread ran: the jobs, the
-    * stages that ran (skipped ones do not), and the shuffle bytes those
-    * stages wrote. A marker job after `f` flushes the listener bus.
+    * stages that ran (skipped ones do not), and the shuffle bytes, output
+    * bytes and output rows those stages reported. A marker job after `f`
+    * flushes the listener bus.
     */
-  def jobPlan(f: => Unit): SparkSpecBase.JobPlan = {
+  def jobPlan(f: => Unit): SparkSpecBase.JobPlan = plan(anyThread = false)(f)
+
+  /** [[jobPlan]] over every job that started while `f` ran, on any thread
+    * (a stream runs its batches on its own).
+    */
+  def jobPlanAnyThread(f: => Unit): SparkSpecBase.JobPlan = plan(anyThread = true)(f)
+
+  private def plan(anyThread: Boolean)(f: => Unit): SparkSpecBase.JobPlan = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val group = s"job-plan-${System.nanoTime()}"
@@ -71,19 +79,25 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     val jobStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val stages = new java.util.concurrent.atomic.AtomicInteger()
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val outputBytes = new java.util.concurrent.atomic.AtomicLong()
+    val outputRows = new java.util.concurrent.atomic.AtomicLong()
     val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(e.jobId); e.stageIds.foreach(jobStages.add(_))
           case Some(g) if g == s"$group-marker" => markerJob.set(e.jobId)
+          case g if anyThread || g.contains(group) =>
+            jobs.add(e.jobId); e.stageIds.foreach(jobStages.add(_))
           case _ => ()
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (jobStages.contains(e.stageInfo.stageId)) {
           stages.incrementAndGet()
-          shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          val m = e.stageInfo.taskMetrics
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          outputBytes.addAndGet(m.outputMetrics.bytesWritten)
+          outputRows.addAndGet(m.outputMetrics.recordsWritten)
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob.get) flushed.countDown()
@@ -96,7 +110,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "listener never saw the marker job end")
-      SparkSpecBase.JobPlan(jobs.size, stages.get, shuffleBytes.get)
+      SparkSpecBase.JobPlan(jobs.size, stages.get, shuffleBytes.get, outputBytes.get,
+        outputRows.get)
     } finally sc.removeSparkListener(l)
   }
 
@@ -128,7 +143,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  final case class JobPlan(jobs: Int, stages: Int, shuffleWriteBytes: Long)
+  final case class JobPlan(jobs: Int, stages: Int, shuffleWriteBytes: Long,
+      outputBytes: Long, outputRows: Long)
 
   // One session for the whole forked test JVM.
   lazy val session: SparkSession = {

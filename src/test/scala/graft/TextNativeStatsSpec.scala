@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** The native text-stat kernels (TextExprs.*Nat — the r06 quality-filter
   * hot-path optimization) must be VALUE-IDENTICAL to the original Column
-  * formulations they replaced, which Text.legacy* preserves verbatim.
-  * Exercised on a corpus of hand-picked edge cases plus deterministic
-  * pseudo-random strings over a whitespace/punct/digit/unicode alphabet.
+  * formulations they replaced. Those formulations' values on the corpus
+  * below are pinned in `text_stats_expected.tsv` (one line per corpus row:
+  * tokenCount, meanTokenLen, punctRatio, alphaRatio, stopwordRatio; doubles
+  * as `Double.toString`, which reads back exactly). The corpus is
+  * hand-picked edge cases plus deterministic pseudo-random strings over a
+  * whitespace/punct/digit/unicode alphabet.
   */
 class TextNativeStatsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -30,33 +33,40 @@ class TextNativeStatsSpec extends SparkSpecBase {
     edges ++ rand
   }
 
+  /** The pinned values per corpus row (the row's index first); None for a
+    * null.
+    */
+  private def expected: Seq[Seq[Option[String]]] = {
+    val src = scala.io.Source.fromResource("text_stats_expected.tsv", getClass.getClassLoader)
+    try src.getLines().filterNot(_.startsWith("#")).map(_.split("\t").toSeq)
+      .map(_.map(v => if (v == "null") None else Some(v))).toSeq
+    finally src.close()
+  }
+
   test("native kernels equal the legacy Column formulations on every row") {
-    val df = corpus.toDF("text")
-    val cmp = df.select(
-      col("text"),
-      Text.tokenCount(col("text")).as("n_tok"),
-      Text.legacyTokenCount(col("text")).as("n_tok_l"),
-      Text.meanTokenLen(col("text")).as("mtl"),
-      Text.legacyMeanTokenLen(col("text")).as("mtl_l"),
-      Text.punctRatio(col("text")).as("pr"),
-      Text.legacyPunctRatio(col("text")).as("pr_l"),
-      Text.alphaRatio(col("text")).as("ar"),
-      Text.legacyAlphaRatio(col("text")).as("ar_l"),
-      Text.stopwordRatio(col("text")).as("sr"),
-      Text.legacyStopwordRatio(col("text")).as("sr_l"))
-    val rows = cmp.collect()
-    assert(rows.length == corpus.length)
-    rows.foreach { r =>
-      val t: String = if (r.isNullAt(0)) "null" else s"'${r.getString(0)}'"
-      assert(r.isNullAt(1) == r.isNullAt(2), s"text=$t null-int")
-      if (!r.isNullAt(1)) assert(r.getInt(1) == r.getInt(2), s"text=$t tokenCount")
-      Seq((3, 4), (5, 6), (7, 8), (9, 10)).foreach { case (a, b) =>
-        assert(r.isNullAt(a) == r.isNullAt(b), s"text=$t col#$a nullability")
+    val df = corpus.zipWithIndex.toDF("text", "i")
+    val rows = df.select(
+      col("i"),
+      Text.tokenCount(col("text")),
+      Text.meanTokenLen(col("text")),
+      Text.punctRatio(col("text")),
+      Text.alphaRatio(col("text")),
+      Text.stopwordRatio(col("text"))).collect().sortBy(_.getInt(0))
+    val want = expected
+    assert(rows.length == corpus.length && want.length == corpus.length)
+    rows.zip(want).foreach { case (r, pinned) =>
+      assert(pinned.head.contains(r.getInt(0).toString), s"row ${r.getInt(0)} vs $pinned")
+      val w = pinned.tail
+      val t: String = corpus(r.getInt(0)) match { case null => "null"; case x => s"'$x'" }
+      assert(r.isNullAt(1) == w.head.isEmpty, s"text=$t null-int")
+      w.head.foreach(n => assert(r.getInt(1) == n.toInt, s"text=$t tokenCount"))
+      (2 to 5).foreach { a =>
+        assert(r.isNullAt(a) == w(a - 1).isEmpty, s"text=$t col#$a nullability")
         // exact double equality: both sides must be the SAME IEEE value,
         // or the hash-matched oracle gates would drift
-        if (!r.isNullAt(a)) {
-          assert(java.lang.Double.compare(r.getDouble(a), r.getDouble(b)) == 0,
-            s"text=$t col#$a ${r.getDouble(a)} != col#$b ${r.getDouble(b)}")
+        w(a - 1).foreach { v =>
+          assert(java.lang.Double.compare(r.getDouble(a), v.toDouble) == 0,
+            s"text=$t col#$a ${r.getDouble(a)} != pinned $v")
         }
       }
     }
