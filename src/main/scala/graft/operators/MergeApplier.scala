@@ -29,14 +29,15 @@ import org.apache.spark.sql.types.StructType
   * Where the fold runs follows from the batch ([[batchSide]]) and, for COW,
   * the touched buckets' manifest bytes, against one bound,
   * `spark.sql.autoBroadcastJoinThreshold`:
-  *   - driver: a batch within the bound (a tail trigger) is decoded and
-  *     split on the driver; with the touched bytes within it too (always for
-  *     MOR, which reads no target) each touched bucket is read
-  *     ([[DriverScan]]), folded and written on a driver thread — no job
+  *   - driver: a batch within the bound (a tail trigger, a small replay) is
+  *     decoded and split on driver threads; with the touched bytes within
+  *     it too (always for MOR and an empty table's replay, which read no
+  *     target) each touched bucket is read ([[DriverScan]]), folded and
+  *     written on a driver thread — no job
   *   - sliced: that split batch against larger touched buckets ships slice
   *     i to partition i of one stage, zipped with the bucket-aligned scan
-  *   - exchanged: any other batch (a full replay, -1 threshold) takes one
-  *     `repartition(N, key)` exchange, then the fold/write stage
+  *   - exchanged: any other batch (past the bound, not narrow, -1
+  *     threshold) takes one `repartition(N, key)` exchange, then fold/write
   * Cold start (full replay) is the same apply against an empty target.
   *
   * Correctness properties (tested in MergeSpec/StreamSpec):
@@ -52,8 +53,8 @@ import org.apache.spark.sql.types.StructType
   *   - there is NO map-side combine: the batch side hands every raw batch
   *     event to its bucket's fold (shuffled or split on the driver), and
   *     within-batch duplicates collapse in that fold
-  *   - only the batch shuffles, and only when it is too large for the
-  *     driver; write amplification is bounded by (touched / total buckets)
+  *   - only the batch shuffles, and only past the bound (a large replay);
+  *     write amplification is bounded by (touched / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
   *     an event-time watermark
   */
@@ -209,7 +210,7 @@ object MergeApplier {
 
     // BUCKET-LOCAL MERGE — ZERO table-side shuffle, no probe job:
     //
-    //   driver:    slice i ── DriverScan(bucket i) ─ mergeBucket   (threads)
+    //   driver:    slice i ── DriverScan(bucket i, none on replay) ─ mergeBucket
     //   sliced:    parallelize(slices, N) ─┐
     //   exchanged: repartition(N, key) ────┼ zipPartitions ─ mergeBucket
     //   target ─ bucket-aligned scan ──────┘ (partition i == bucket i)
@@ -232,7 +233,10 @@ object MergeApplier {
         mergeBucket(writers, dir, tc.partitionId(), tc.taskAttemptId())(batch, target).iterator
       }.collect().toSeq
     }
-    val merged = batchSide(aligned, table.numBuckets) match {
+    val tBatch = System.nanoTime()
+    val side = batchSide(aligned, table.numBuckets)
+    val tFold = System.nanoTime()
+    val merged = side match {
       case Left(slices) if touched(slices).map(files(_).map(_._2).sum).sum <=
           DriverScan.collectBound(spark) =>
         onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
@@ -263,7 +267,7 @@ object MergeApplier {
     val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
       Seq(ManifestRef(table.writeManifest(version, written.files), mine, delta = false)),
       replaced = mine, rows = written.rows,
-      metrics = applyMetrics(batchRows, nDeletes, written, t0, tMeta) ++
+      metrics = applyMetrics(batchRows, nDeletes, written, t0, tBatch, tFold, tMeta) ++
         // contention lineage: a commit whose merge had to RE-RUN against a
         // concurrent winner records which attempt landed (rebases record
         // "rebasedFrom" instead) — makes conflict cost auditable from history()
@@ -290,15 +294,20 @@ object MergeApplier {
 
   /** An apply's commit metrics. `outputBytes`/`outputRows` are what its
     * files hold: a driver write has no task output metrics to show them.
+    * Disjoint spans of `durationMs`: `batchSideMs` (the driver's decode and
+    * split, or building the exchange's RDD, which runs its map stage under
+    * adaptive execution), `foldWriteMs` and `metaMs` (manifest and commit).
     */
   private def applyMetrics(batchRows: Long, nDeletes: Long, written: WrittenFile.ByBucket,
-      t0: Long, tMeta: Long): Map[String, Long] = Map(
+      t0: Long, tBatch: Long, tFold: Long, tMeta: Long): Map[String, Long] = Map(
     "batchRows" -> batchRows,
     "upserts" -> (batchRows - nDeletes),
     "deletes" -> nDeletes,
     "touchedBuckets" -> written.files.size.toLong,
     "outputBytes" -> written.files.valuesIterator.flatten.map(_.bytes).sum,
     "outputRows" -> written.rows.values.sum,
+    "batchSideMs" -> (tFold - tBatch) / 1000000,
+    "foldWriteMs" -> (tMeta - tFold) / 1000000,
     "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
     "durationMs" -> (System.nanoTime() - t0) / 1000000)
 
@@ -351,7 +360,10 @@ object MergeApplier {
     // listing, no footer reads. Same no-orphan idle contract as the COW path.
     val idle = ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
     val dir = outDir.toString
-    val written = WrittenFile.byBucket(batchSide(aligned, table.numBuckets) match {
+    val tBatch = System.nanoTime()
+    val side = batchSide(aligned, table.numBuckets)
+    val tFold = System.nanoTime()
+    val written = WrittenFile.byBucket(side match {
       case Left(slices) => onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
         BucketFileWriter.write(writers, dir, b, taskId, slices(b).iterator))
       case Right(exchanged) => BucketFileWriter.writeAll(exchanged,
@@ -370,7 +382,7 @@ object MergeApplier {
       Seq(ManifestRef(table.writeManifest(version, newBucketFiles),
         newBucketFiles.keySet, delta = true)),
       replaced = Set.empty, rows = written.rows,
-      metrics = applyMetrics(batchRows, nDeletes, written, t0, tMeta))
+      metrics = applyMetrics(batchRows, nDeletes, written, t0, tBatch, tFold, tMeta))
     // Optimistic publish. A MOR delta is a pure append of not-yet-seen rows,
     // and the LWW fold is associative and order-independent — appending our
     // ref AFTER any concurrent commit (COW rewrite, another delta, a

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** Driver-side reads for the key-addressed lookups and the small applies —
-  * no job, no broadcast. A point lookup opens one or a few small files, and
-  * a tail trigger's apply reads one small batch and a few bucket files;
+/** Driver-side reads for the key-addressed lookups and the applies within
+  * the bound — no job, no broadcast. A point lookup opens one or a few small
+  * files; a tail trigger's apply reads one small batch and a few bucket
+  * files, a cold replay a changelog of a few MB and no bucket file at all;
   * launching a job for them (and broadcasting a Hadoop conf, which
   * `ParquetFileFormat.buildReaderWithPartitionValues` does on every call)
   * costs more than the read itself.
@@ -42,8 +43,8 @@ import scala.jdk.CollectionConverters._
   * predicate drops row groups whose statistics, dictionaries or bloom
   * filters exclude it; `keep` then decides each decoded row, and only kept
   * rows are copied (the reader reuses its buffers), so memory is
-  * O(kept rows), not O(file). [[compute]] runs a plan's partitions the
-  * same way: on the calling thread, as one driver-built task.
+  * O(kept rows), not O(file). [[compute]] runs a plan's partitions with no
+  * job too: on driver threads, each partition as its own driver-built task.
   */
 object DriverScan {
 
@@ -143,31 +144,39 @@ object DriverScan {
   /** A fresh driver task id, also the attempt id of driver-written files. */
   def newTaskId(): Long = taskIds.decrementAndGet()
 
-  /** Run `f` over every row of the narrow `rdd`'s partitions, in order, on
-    * the calling thread — no job — under a driver-built task context: a
-    * real `TaskMemoryManager`, a task id the block manager has registered (a
-    * broadcast read in a file scan locks its block for the running task),
-    * the session's SQL conf as local properties. The context completes and
-    * its locks and memory are released also on a throw. `f` sees reused
-    * buffers; copy what it keeps.
+  /** `f` over each partition of the narrow `rdd` on driver threads
+    * ([[graft.operators.Par.onDriverThreads]]), no job, in partition order.
+    * Partition i runs under its own driver-built task context (partition id
+    * i, a real `TaskMemoryManager`, a task id the block manager registered:
+    * a file scan's broadcast read locks its block for the task; the session
+    * SQL conf as local properties), completed and its locks and memory freed
+    * also on a throw, and, as on an executor, on its own deserialized copy
+    * of `rdd` after the first (a plan's expressions may keep per-task state,
+    * e.g. a Scala UDF's encoders). `f` sees reused buffers; copy what it keeps.
     */
-  def compute(spark: SparkSession, rdd: RDD[InternalRow])(f: InternalRow => Unit): Unit = {
+  def compute[T, O](spark: SparkSession, rdd: RDD[T])(f: Iterator[T] => O): Seq[O] = {
     val env = SparkEnv.get
-    val taskId = newTaskId()
-    val memory = new TaskMemoryManager(env.memoryManager, taskId)
     val props = new java.util.Properties()
     classic(spark).sessionState.conf.getAllConfs.foreach { case (k, v) => props.setProperty(k, v) }
-    val ctx = new TaskContextImpl(0, 0, 0, taskId, 0, rdd.partitions.length, memory, props,
-      env.metricsSystem, TaskMetrics.empty, 1, Map.empty)
-    env.blockManager.registerTask(taskId)
-    TaskContext.setTaskContext(ctx)
-    var failure: Option[Throwable] = None
-    try rdd.partitions.foreach(p => rdd.iterator(p, ctx).foreach(f))
-    catch { case t: Throwable => failure = Some(t); ctx.markTaskFailed(t); throw t }
-    finally try ctx.markTaskCompleted(failure) finally {
-      TaskContext.unset()
-      env.blockManager.releaseAllLocksForTask(taskId)
-      memory.cleanUpAllAllocatedMemory()
+    val bytes = if (rdd.partitions.length < 2) null
+      else env.closureSerializer.newInstance().serialize(rdd)
+    graft.operators.Par.onDriverThreads(spark, rdd.partitions.toIndexedSeq) { p =>
+      val mine = if (p.index == 0) rdd else env.closureSerializer.newInstance()
+        .deserialize[RDD[T]](bytes.duplicate(), Thread.currentThread().getContextClassLoader)
+      val taskId = newTaskId()
+      val memory = new TaskMemoryManager(env.memoryManager, taskId)
+      val ctx = new TaskContextImpl(0, 0, p.index, taskId, 0, rdd.partitions.length, memory,
+        props, env.metricsSystem, TaskMetrics.empty, 1, Map.empty)
+      env.blockManager.registerTask(taskId)
+      TaskContext.setTaskContext(ctx)
+      var failure: Option[Throwable] = None
+      try f(mine.iterator(p, ctx))
+      catch { case t: Throwable => failure = Some(t); ctx.markTaskFailed(t); throw t }
+      finally try ctx.markTaskCompleted(failure) finally {
+        TaskContext.unset()
+        env.blockManager.releaseAllLocksForTask(taskId)
+        memory.cleanUpAllAllocatedMemory()
+      }
     }
   }
 

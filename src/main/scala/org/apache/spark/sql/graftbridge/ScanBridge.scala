@@ -79,30 +79,31 @@ object ScanBridge {
 
   /** Whether `df` is small enough to split on the driver
     * ([[splitOnDriver]]) instead of shuffling it: a deterministic plan whose
-    * size estimate times `copies` (the bucket count) is within Spark's bound
-    * for a side copied to every task, `spark.sql.autoBroadcastJoinThreshold`
-    * (-1 disables). Read off the analyzed plan, so a caller that goes on to
+    * own size estimate is within Spark's bound for collecting a side on the
+    * driver, `spark.sql.autoBroadcastJoinThreshold` (-1 disables) — the
+    * lookups' rule. Read off the analyzed plan, so a caller that goes on to
     * plan something else (the exchange over `df`) runs the optimizer once,
     * not twice.
     */
-  def copyable(df: DataFrame, copies: Int): Boolean = {
+  def copyable(df: DataFrame): Boolean = {
     val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.analyzed
-    plan.deterministic && plan.stats.sizeInBytes * copies <=
+    plan.deterministic && plan.stats.sizeInBytes <=
       classic(df.sparkSession).sessionState.conf.autoBroadcastJoinThreshold
   }
 
   /** `df`'s rows split by the hash of `keys` into `numBuckets` slices,
-    * decoded once on the driver with no job ([[DriverScan.compute]]) — or
-    * None when `df` must take the `repartition(numBuckets, keys)` exchange:
-    * it is not [[copyable]] for `numBuckets` copies, or its plan is not
-    * narrow (an exchange, adaptive plan or subquery starts jobs of its own;
-    * a shuffle in its lineage has no map output to read). Slice i holds
-    * what the exchange puts in partition i: both evaluate
-    * `HashPartitioning(keys, numBuckets)`'s partition id.
+    * decoded on the driver with no job — or None when `df` must take the
+    * `repartition(numBuckets, keys)` exchange: it is not [[copyable]], or
+    * its plan is not narrow (an exchange, adaptive plan or subquery starts
+    * jobs of its own; a shuffle in its lineage has no map output to read).
+    * Each scan partition is split on a driver thread ([[DriverScan.compute]])
+    * and slice i joins their bucket-i rows in partition order: row for row
+    * the sequential split, and the exchange's partition i (both evaluate
+    * `HashPartitioning(keys, numBuckets)`'s partition id).
     */
   def splitOnDriver(df: DataFrame, keys: Seq[String],
       numBuckets: Int): Option[Array[Array[InternalRow]]] = {
-    if (!copyable(df, numBuckets)) return None
+    if (!copyable(df)) return None
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
     val plan = qe.executedPlan
     if (plan.exists(p => p.isInstanceOf[AdaptiveSparkPlanExec] || p.isInstanceOf[Exchange] ||
@@ -115,11 +116,14 @@ object ScanBridge {
     if (!narrow(rdd)) return None
     val keyAttrs = keys.map(k => plan.output.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"key column $k not in ${plan.output.map(_.name)}")))
-    val bucketOf = UnsafeProjection.create(
-      HashPartitioning(keyAttrs, numBuckets).partitionIdExpression :: Nil, plan.output)
-    val slices = Array.fill(numBuckets)(ArrayBuffer.empty[InternalRow])
-    DriverScan.compute(df.sparkSession, rdd)(r => slices(bucketOf(r).getInt(0)) += r.copy())
-    Some(slices.map(_.toArray))
+    val bucketId = HashPartitioning(keyAttrs, numBuckets).partitionIdExpression
+    val parts = DriverScan.compute(df.sparkSession, rdd) { rows =>
+      val bucketOf = UnsafeProjection.create(bucketId :: Nil, plan.output) // one per thread
+      val slices = Array.fill(numBuckets)(ArrayBuffer.empty[InternalRow])
+      rows.foreach(r => slices(bucketOf(r).getInt(0)) += r.copy())
+      slices
+    }
+    Some(Array.tabulate(numBuckets)(b => parts.iterator.flatMap(_(b)).toArray))
   }
 
   def internalDf(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =

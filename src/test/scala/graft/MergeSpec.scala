@@ -235,8 +235,8 @@ class MergeSpec extends SparkSpecBase {
     val bucketI = withBucket.schema.fieldIndex("__bucket")
     batchSides.foreach { case (side, threshold) =>
       withBatchSide(threshold) {
-        assert(org.apache.spark.sql.graftbridge.ScanBridge.copyable(withBucket,
-          table.numBuckets) == threshold.isEmpty, side)
+        assert(org.apache.spark.sql.graftbridge.ScanBridge.copyable(withBucket) ==
+          threshold.isEmpty, side)
         // per bucket i: (every row's bucketCol is i, row count)
         val rows = MergeApplier.batchSide(withBucket, table.numBuckets) match {
           case Left(slices) =>
@@ -299,6 +299,32 @@ class MergeSpec extends SparkSpecBase {
     assert(s.bucketRows.values.sum == s.totalRows)
     assert(s.metrics("deletes") == 0L)
     assert(s.metrics("batchRows") > 0L)
+  }
+
+  test("commit metrics split every apply into batch side, fold/write and commit") {
+    val all = Generator.events(spark, 3000, numConvs = 15, turnsPerConv = 6, seed = 67)
+      .as[ChangeEvent].collect().toSeq.sortBy(_.seq)
+    val (first, second) = all.splitAt(1500)
+    def df(events: Seq[ChangeEvent]) = spark.createDataset(events).toDF()
+    val phases = Seq("batchSideMs", "foldWriteMs", "metaMs", "durationMs")
+    batchSides.foreach { case (side, threshold) =>
+      val cow = new LakeTable(tmpDir(s"merge-phases-cow-$side"), numBuckets = 4)
+      val mor = new LakeTable(tmpDir(s"merge-phases-mor-$side"), numBuckets = 4)
+      // a cold COW replay, a staged then published COW merge, a MOR append
+      val plans = withBatchSide(threshold)(Seq(
+        jobPlan(MergeApplier.applyBatch(spark, cow, df(first), "w", 0L)),
+        jobPlan(cow.publishStaged(MergeApplier.stageBatch(spark, cow, df(second), "w", 1L).get)),
+        jobPlan(MergeApplier.applyBatchMor(spark, mor, df(all), "m", 0L))))
+      assert(plans.forall(p => (p.jobs == 0) == threshold.isEmpty), s"$side: $plans")
+      val history = Seq(cow, mor).flatMap(_.history(spark).collect())
+        .map(r => r.getAs[Long]("version") -> r.getMap[String, Long](8).toMap)
+      assert(history.size == 3, s"$side: $history")
+      history.foreach { case (v, m) =>
+        assert(phases.forall(k => m.get(k).exists(_ >= 0L)), s"$side v$v: $m")
+        assert(m("batchSideMs") + m("foldWriteMs") + m("metaMs") <= m("durationMs"),
+          s"$side v$v: $m")
+      }
+    }
   }
 
   test("a fold/write task failing mid-file leaves the table as it was and no file of its own") {

@@ -19,8 +19,11 @@ verdict of the rule for claiming a gain: the change wins at least
 9 of 10 pairs and the medians differ, in the better direction, by more than
 the distance between the parent's quartiles. For the end-to-end metrics it
 also flags a change median worse than the parent's by more than the bound
-BENCHMARK.json fixes. The direction (higher or lower is better) and the
-bounds come from the change checkout's BENCHMARK.json.
+BENCHMARK.json fixes, and marks the metric "unresolved" when the parent's
+quartile spread alone exceeds bound x median: the pairs then cannot tell a
+change within the bound from one beyond it, unless every change run beats
+every parent run. The direction (higher or lower is better) and the bounds
+come from the change checkout's BENCHMARK.json.
 """
 import argparse
 import json
@@ -105,6 +108,9 @@ def summarize(records, dirs):
                 verdict = "GAIN" if gain else "no claim"
                 if bound is not None and pmed != 0 and -gap > bound * abs(pmed):
                     verdict += f"; WORSE beyond bound {bound:g}"
+                separated = min(sign * b for b in chg) > max(sign * a for a in par)
+                if bound is not None and pq3 - pq1 > bound * abs(pmed) and not separated:
+                    verdict += f"; unresolved (parent IQR {pq3 - pq1:.4g} > {bound:g} x median)"
             print(f"{m:40} {fmt(pmed, pq1, pq3):>30} {fmt(cmed, cq1, cq3):>30} "
                   f"{wins:>6}  {verdict}")
 
