@@ -351,8 +351,7 @@ object Bench {
             try (0 until mwChunks).foreach { j =>
               val df = spark.read.schema(graft.model.Model.changeEventSchema)
                 .parquet(s"$mwDir/owner=$i/chunk=$j")
-              if (mode == "cow") MergeApplier.applyBatch(spark, t, df, s"w$i", j.toLong)
-              else MergeApplier.applyBatchMor(spark, t, df, s"w$i", j.toLong)
+              MergeApplier.applyBatch(spark, t, df, s"w$i", j.toLong, mode)
             } catch { case e: Throwable => failures.add(e) }
           })
           th.start(); th

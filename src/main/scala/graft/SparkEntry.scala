@@ -67,18 +67,17 @@ object SparkEntry {
 
   /** Build gate table `name` from the changelog in `k` batches, batch i
     * holding `seq % k = i` shaped by `shape(i, _)` (writer "gate", batch id
-    * i), through the COW or the MOR apply, running `after(t, i)` after each.
+    * i), applied in write `mode` (cow or mor), running `after(t, i)` after each.
     * Returns the table and the version each batch committed.
     */
   private def gateBuild(s: SparkSession, dir: String, name: String, k: Int,
-      mor: Boolean = false, shape: (Int, DataFrame) => DataFrame = (_, b) => b,
+      mode: String = "cow", shape: (Int, DataFrame) => DataFrame = (_, b) => b,
       after: (LakeTable, Int) => Unit = (_, _) => ()): (LakeTable, Seq[Long]) = {
     val cl = changelog(s, dir)
     val t = gateTable(name)
     val versions = (0 until k).map { i =>
       val batch = shape(i, cl.filter(col("seq") % k === i))
-      val r = if (mor) MergeApplier.applyBatchMor(s, t, batch, "gate", i.toLong)
-        else MergeApplier.applyBatch(s, t, batch, "gate", i.toLong)
+      val r = MergeApplier.applyBatch(s, t, batch, "gate", i.toLong, mode)
       after(t, i)
       r.version
     }
@@ -443,7 +442,7 @@ object SparkEntry {
     // C8/S14: the same four batches as MOR delta appends, read WITHOUT
     // compaction — gates the zero-shuffle read-time delta fold.
     "cdc_table_mor_read" -> ((s, dir) => {
-      val (t, _) = gateBuild(s, dir, "cdc_table_mor_read", 4, mor = true)
+      val (t, _) = gateBuild(s, dir, "cdc_table_mor_read", 4, mode = "mor")
       t.read(s).select(TableCols.map(col): _*)
     }),
 
@@ -452,7 +451,7 @@ object SparkEntry {
     // spill set inside the scope) — the disk-backed fold for a bucket that
     // outgrew its executor must produce bit-identical winners.
     "cdc_spill_fold" -> ((s, dir) => {
-      val (t, _) = gateBuild(s, dir, "cdc_spill_fold", 4, mor = true)
+      val (t, _) = gateBuild(s, dir, "cdc_spill_fold", 4, mode = "mor")
       Par.withSessionConf(s, Map(BucketLocal.SpillFoldBytesKey -> "0")) {
         t.read(s).select(TableCols.map(col): _*)
       }
@@ -461,7 +460,7 @@ object SparkEntry {
     // C8: MOR appends + a full compaction — gates the bucket-local
     // fold-and-rewrite (and its key-clustered output) against the oracle.
     "cdc_table_mor_compact" -> ((s, dir) => {
-      val (t, _) = gateBuild(s, dir, "cdc_table_mor_compact", 4, mor = true)
+      val (t, _) = gateBuild(s, dir, "cdc_table_mor_compact", 4, mode = "mor")
       MergeApplier.compactRetainTombstones(s, t)
       t.read(s).select(TableCols.map(col): _*)
     }),
@@ -470,7 +469,7 @@ object SparkEntry {
     // a text-INDEXED compaction, then an exact-token search that reads only
     // admitting buckets — must equal the relational fold + token filter.
     "cdc_text_search" -> ((s, dir) => {
-      val (t, _) = gateBuild(s, dir, "cdc_text_search", 3, mor = true)
+      val (t, _) = gateBuild(s, dir, "cdc_text_search", 3, mode = "mor")
       MergeApplier.compactRetainTombstones(s, t, textIndex = true)
       t.searchText(s, "purchase").select(TableCols.map(col): _*)
     }),

@@ -17,18 +17,21 @@ import org.apache.spark.sql.types.StructType
   *   - the Redis max-version LWW dance (/root/reference SpecialCases.java:212-253)
   *   - the EC2 delete-then-import apply loop
   *     (incremental-updates-ingestion.py:29-63)
-  * — into one fold/write per touched bucket (the bucket-local merge):
+  * — into one apply attempt ([[attempt]]) per batch, whatever its write mode:
   *
   * {{{
   *   batch ─ batch side: bucket i's rows ──┐
-  *                                         ├─ mergeBucket: LWW fold + write
-  *   target ─ bucket i's files ────────────┘   of bucket i's file ─ atomic commit(batchId)
+  *                                         ├─ mergeBucket: COW fold or MOR raw rows,
+  *   target ─ bucket i's files (COW) ──────┘   bucket i's file ─ atomic commit(batchId)
   * }}}
   *
-  * The table side never shuffles, and untouched buckets open no file.
-  * Where the fold runs follows from the batch ([[batchSide]]) and, for COW,
-  * the touched buckets' manifest bytes, against one bound,
-  * `spark.sql.autoBroadcastJoinThreshold`:
+  * The mode ([[isMor]]) picks only the per-bucket kernel (COW: LWW fold of
+  * batch and target; MOR: the batch rows raw), whether target files are
+  * read (MOR reads none) and the commit (COW replaces its buckets, MOR
+  * appends a delta ref). The table side never shuffles, and untouched
+  * buckets open no file. Where the kernel runs follows from the batch
+  * ([[batchSide]]) and the touched buckets' target bytes, against one
+  * bound ([[DriverScan.withinBound]]):
   *   - driver: a batch within the bound (a tail trigger, a small replay) is
   *     decoded and split on driver threads; with the touched bytes within
   *     it too (always for MOR and an empty table's replay, which read no
@@ -37,10 +40,10 @@ import org.apache.spark.sql.types.StructType
   *   - sliced: that split batch against larger touched buckets ships slice
   *     i to partition i of one stage, zipped with the bucket-aligned scan
   *   - exchanged: any other batch (past the bound, not narrow, -1
-  *     threshold) takes one `repartition(N, key)` exchange, then fold/write
-  * Cold start (full replay) is the same apply against an empty target.
+  *     threshold) takes one `repartition(N, key)` exchange, then the kernel
+  * Cold start (full replay) is the same COW apply against an empty target.
   *
-  * Correctness properties (tested in MergeSpec/StreamSpec):
+  * Correctness properties (tested in MergeSpec/MorSpec/StreamSpec):
   *   - idempotent: a replayed batchId is a no-op (ledger check before work)
   *   - cross-batch LWW: a later batch carrying an OLDER (ts, seq) for a key
   *     loses against the table row — including tombstones, so a stale insert
@@ -51,8 +54,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale notes (10^10 rows, 1000 executors):
   *   - there is NO map-side combine: the batch side hands every raw batch
-  *     event to its bucket's fold (shuffled or split on the driver), and
-  *     within-batch duplicates collapse in that fold
+  *     event to its bucket's kernel (shuffled or split on the driver), and
+  *     within-batch duplicates collapse in the COW fold
   *   - only the batch shuffles, and only past the bound (a large replay);
   *     write amplification is bounded by (touched / total buckets)
   *   - tombstones are retained for LWW and dropped by [[compact]] once below
@@ -68,25 +71,51 @@ object MergeApplier {
       upserts: Long,
       deletes: Long)
 
-  /** What one bucket's fold/write hands the commit: the bucket's new file,
-    * plus the raw batch rows and deletes it folded (the hot path's metrics).
+  /** The table write mode of an apply, `"cow"` or `"mor"` (true), with the
+    * one unknown-mode error.
+    *
+    * Copy-on-write rewrites each touched bucket as the LWW fold of its batch
+    * rows and stored rows: the read-optimized steady state.
+    *
+    * Merge-on-read appends the batch's events as DELTA files to each touched
+    * bucket — NO target read, NO rewrite, NO aggregation (the LSM "L0
+    * append"); the read path (LakeTable.read) and the next [[compact]] run
+    * the associative LWW fold, so COW and MOR commits interleave freely.
+    * Cost per batch is scan + batch side + write — strictly O(batch), the
+    * high-throughput tail mode at 10^10 scale; compaction amortizes the
+    * read-side merge (exactly Iceberg's v2 merge-on-read contract, built
+    * from scratch). Within-batch LWW is deliberately NOT run: it collapses
+    * only the batch's own duplicate keys (~10% at the measured skew) but
+    * costs a sort-aggregate over the whole batch — the read/compact fold
+    * subsumes it for the same final state. Each delta file still carries
+    * the writer's key bounds + conv bloom, the skip input that keeps point
+    * lookups O(files holding the key) on a delta-deep tail.
+    */
+  def isMor(mode: String): Boolean = mode match {
+    case "cow" => false
+    case "mor" => true
+    case other => throw new IllegalArgumentException(s"unknown write mode '$other' (cow|mor)")
+  }
+
+  /** What one bucket's kernel hands the commit: the bucket's new file,
+    * plus the raw batch rows and deletes it took (the hot path's metrics).
     */
   private final case class BucketMerge(file: WrittenFile, batchRows: Long, batchDeletes: Long)
 
-  /** LWW merge of one bucket, in a task or on a driver thread: fold the
-    * bucket's batch rows and its stored rows through
+  /** One bucket's apply, in a task or on a driver thread, written as
+    * `bucket`'s one new file, named for write attempt `taskId`. COW folds
+    * the bucket's batch rows and its stored rows through
     * [[BucketLocal.orderedWinners]]'s hash fold (the engine's one LWW
     * kernel: winner = max by (ts, seq), nulls lowest, ties keep the
-    * incumbent), then write the winners — tombstones included — in
-    * (conv_id, turn_idx) order as `bucket`'s one new file, named for write
-    * attempt `taskId`.
+    * incumbent) and writes the winners — tombstones included — in
+    * (conv_id, turn_idx) order; MOR writes the batch rows as they come.
     *
-    * Memory: the map holds one row per distinct key of (batch ∪ bucket) —
-    * exactly the bucket's post-merge contents, which the COW contract sizes
-    * to fit an executor anyway (a bucket IS the rewrite unit).
+    * Memory (COW): the map holds one row per distinct key of (batch ∪
+    * bucket) — exactly the bucket's post-merge contents, which the COW
+    * contract sizes to fit an executor anyway (a bucket IS the rewrite unit).
     */
   private def mergeBucket(writers: WriteBridge.TaskWriterFactory, dir: String, bucket: Int,
-      taskId: Long)(batch: Iterator[InternalRow], target: Iterator[InternalRow])
+      taskId: Long, mor: Boolean)(batch: Iterator[InternalRow], target: Iterator[InternalRow])
       : Option[BucketMerge] = {
     if (!batch.hasNext) return None // untouched bucket: no file opened
     val schema = writers.schema
@@ -98,8 +127,9 @@ object MergeApplier {
       if (Model.isDelete(r, opI)) nDel += 1
       r
     }
-    val winners = BucketLocal.orderedWinners(schema, counted ++ target, spill = false)
-    Some(BucketMerge(BucketFileWriter.write(writers, dir, bucket, taskId, winners), nRows, nDel))
+    val rows = if (mor) counted
+      else BucketLocal.orderedWinners(schema, counted ++ target, spill = false)
+    Some(BucketMerge(BucketFileWriter.write(writers, dir, bucket, taskId, rows), nRows, nDel))
   }
 
   /** The batch side of an apply, bucket i's batch rows at index i: split
@@ -114,20 +144,6 @@ object MergeApplier {
     ScanBridge.splitOnDriver(aligned, Model.KeyCols, numBuckets).toLeft(
       ScanBridge.toInternalRdd(aligned.repartition(numBuckets, Model.KeyCols.map(col): _*)))
 
-  /** `write(writers, taskId, bucket)` per touched bucket on driver threads,
-    * with driver writers (no broadcast) and one driver task id.
-    */
-  private def onDriver[T](spark: SparkSession, schema: StructType,
-      slices: Array[Array[InternalRow]])(
-      write: (WriteBridge.TaskWriterFactory, Long, Int) => T): Seq[T] = {
-    val writers = WriteBridge.parquetWriterFactory(spark, schema, onDriver = true)
-    val taskId = DriverScan.newTaskId()
-    Par.onDriverThreads(spark, touched(slices))(write(writers, taskId, _))
-  }
-
-  private def touched(slices: Array[Array[InternalRow]]): IndexedSeq[Int] =
-    slices.indices.filter(slices(_).nonEmpty)
-
   private def deleteDir(p: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
 
@@ -139,18 +155,21 @@ object MergeApplier {
     (Model.alignToSchema(batch, merged), merged)
   }
 
-  /** Copy-on-write apply with OPTIMISTIC CONCURRENCY (Iceberg's multi-writer
-    * contract, from scratch): the merge folds against a base snapshot; the
-    * commit is a CAS on the snapshot version. A lost CAS is resolved by
-    * [[CommitBuilder.RebaseIfUnchanged]] — rebase the metadata when the winner
-    * left our touched buckets alone (disjoint writers, the common sharded-
-    * ingest case: pure O(1) driver-side retry, no recompute), re-run the
-    * whole merge when it rewrote or delta-appended any of them (our in-task
-    * fold is stale — correctness over speed). LWW is order-independent, so
-    * any interleaving of committed batches converges to the same state.
+  /** Apply `batch` as `writerId`'s batch `batchId` in write `mode`
+    * ([[isMor]]) with OPTIMISTIC CONCURRENCY (Iceberg's multi-writer
+    * contract, from scratch): the attempt folds against a base snapshot; the
+    * commit is a CAS on the snapshot version. A MOR delta always rebases. A
+    * COW attempt's lost CAS is resolved by [[CommitBuilder.RebaseIfUnchanged]]
+    * — rebase the metadata when the winner left our touched buckets alone
+    * (disjoint writers, the common sharded-ingest case: pure O(1)
+    * driver-side retry, no recompute), re-run the whole attempt when it
+    * rewrote or delta-appended any of them (our fold is stale — correctness
+    * over speed). LWW is order-independent, so any interleaving of committed
+    * batches converges to the same state.
     */
   def applyBatch(spark: SparkSession, table: LakeTable, batch: DataFrame,
-      writerId: String, batchId: Long): ApplyResult = {
+      writerId: String, batchId: Long, mode: String = "cow"): ApplyResult = {
+    val mor = isMor(mode)
     var attempts = 0
     while (attempts < 8) {
       attempts += 1
@@ -160,16 +179,16 @@ object MergeApplier {
       // rivals park at the commit gate while we fold, so the locked attempt
       // can lose at most once more (to a rival already past the gate when
       // we acquired), never twice. See LakeTable.withCommitLock.
-      val attempt =
-        if (attempts <= 4) cowAttempt(spark, table, batch, writerId, batchId, attempts)
-        else table.withCommitLock(cowAttempt(spark, table, batch, writerId, batchId, attempts))
-      attempt match {
+      val landed =
+        if (attempts <= 4) attempt(spark, table, batch, writerId, batchId, mor, attempts)
+        else table.withCommitLock(attempt(spark, table, batch, writerId, batchId, mor, attempts))
+      landed match {
         case Some(r) => return r
         case None => () // stale fold: merge re-runs against the new snapshot
       }
     }
     throw new IllegalStateException(
-      s"COW apply $writerId/$batchId lost the commit race $attempts times " +
+      s"apply $writerId/$batchId lost the commit race $attempts times " +
       "even under the exclusive commit lock — this indicates a lock breach " +
       "(stale-expiry misconfiguration), not ordinary contention")
   }
@@ -188,32 +207,33 @@ object MergeApplier {
   def stageBatch(spark: SparkSession, table: LakeTable, batch: DataFrame,
       writerId: String, batchId: Long): Option[String] = {
     val name = s"$writerId-$batchId"
-    cowAttempt(spark, table, batch, writerId, batchId, stageName = Some(name))
+    attempt(spark, table, batch, writerId, batchId, mor = false, stageName = Some(name))
       .filter(r => !r.skipped && r.touchedBuckets > 0).map(_ => name)
   }
 
-  private def cowAttempt(spark: SparkSession, table: LakeTable, batch: DataFrame,
-      writerId: String, batchId: Long, attempt: Int = 1,
+  /** One apply attempt; None when its commit went stale (the merge re-runs). */
+  private def attempt(spark: SparkSession, table: LakeTable, batch: DataFrame,
+      writerId: String, batchId: Long, mor: Boolean, attemptNo: Int = 1,
       stageName: Option[String] = None): Option[ApplyResult] = {
     val t0 = System.nanoTime()
     val snap = table.currentSnapshot()
-    if (snap.exists(_.maxBatchId(writerId) >= batchId)) {
-      // Exactly-once: this batch already landed in a published snapshot
-      // (the streaming checkpoint replayed it after a crash). No-op.
-      return Some(ApplyResult(skipped = true, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
-    }
+    val base = snap.map(_.version).getOrElse(0L)
+    // Exactly-once: this batch already landed in a published snapshot
+    // (the streaming checkpoint replayed it after a crash). No-op.
+    if (snap.exists(_.applied(writerId, batchId)))
+      return Some(ApplyResult(skipped = true, base, 0, 0, 0, 0))
 
     snap.foreach(table.checkBuckets)
     val (aligned, mergedSchema) = evolve(snap, batch)
-    val version = snap.map(_.version).getOrElse(0L) + 1
-    val outDir = table.attemptDir(version, writerId, batchId)
+    val outDir = table.attemptDir(base + 1, writerId, batchId)
 
-    // BUCKET-LOCAL MERGE — ZERO table-side shuffle, no probe job:
+    // BUCKET-LOCAL APPLY — ZERO table-side shuffle, no probe job:
     //
-    //   driver:    slice i ── DriverScan(bucket i, none on replay) ─ mergeBucket
+    //   driver:    slice i ── DriverScan(bucket i, none on replay/MOR) ─ mergeBucket
     //   sliced:    parallelize(slices, N) ─┐
     //   exchanged: repartition(N, key) ────┼ zipPartitions ─ mergeBucket
-    //   target ─ bucket-aligned scan ──────┘ (partition i == bucket i)
+    //   target ─ bucket-aligned scan ──────┘ (partition i == bucket i; only
+    //                                         when some bucket has files)
     //
     // A bucket with no batch rows opens no file and writes none. MOR deltas
     // fold correctly because the LWW rule is associative; tombstones are
@@ -221,35 +241,41 @@ object MergeApplier {
     // its file's manifest entry and counts (collect() carries successful
     // task attempts only): no listing, no footer reads. An idle trigger
     // (or an empty first batch) commits no orphan version.
-    val idle = Some(ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0))
-    val files = snap.map(s => BucketLocal.bucketArray(s.numBuckets, table.resolveFiles(s)))
+    val files = snap.filterNot(_ => mor)
+      .map(s => BucketLocal.bucketArray(s.numBuckets, table.resolveFiles(s)))
       .getOrElse(Array.fill(table.numBuckets)(Array.empty[(String, Long)]))
     val dir = outDir.toString
     def foldWriteJob(batchRdd: RDD[InternalRow]): Seq[BucketMerge] = {
       val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema)
-      batchRdd.zipPartitions(ScanBridge.bucketFilesRdd(spark, mergedSchema, files),
-          preservesPartitioning = false) { (batch, target) =>
+      val run = (batch: Iterator[InternalRow], target: Iterator[InternalRow]) => {
         val tc = TaskContext.get()
-        mergeBucket(writers, dir, tc.partitionId(), tc.taskAttemptId())(batch, target).iterator
-      }.collect().toSeq
+        mergeBucket(writers, dir, tc.partitionId(), tc.taskAttemptId(), mor)(batch, target)
+          .iterator
+      }
+      (if (files.exists(_.nonEmpty)) batchRdd.zipPartitions(
+        ScanBridge.bucketFilesRdd(spark, mergedSchema, files), preservesPartitioning = false)(run)
+      else batchRdd.mapPartitions(run(_, Iterator.empty))).collect().toSeq
     }
     val tBatch = System.nanoTime()
     val side = batchSide(aligned, table.numBuckets)
     val tFold = System.nanoTime()
     val merged = side match {
-      case Left(slices) if touched(slices).map(files(_).map(_._2).sum).sum <=
-          DriverScan.collectBound(spark) =>
-        onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
-          mergeBucket(writers, dir, b, taskId)(slices(b).iterator,
-            DriverScan.read(spark, mergedSchema, files(b).map(_._1).toSeq).iterator)).flatten
       case Left(slices) =>
-        foldWriteJob(spark.sparkContext.parallelize(slices.toSeq, slices.length)
+        val touched = slices.indices.filter(slices(_).nonEmpty)
+        if (DriverScan.withinBound(spark, touched.map(files(_).map(_._2).sum).sum)) {
+          // driver writers (no broadcast) and one driver task id
+          val writers = WriteBridge.parquetWriterFactory(spark, mergedSchema, onDriver = true)
+          val taskId = DriverScan.newTaskId()
+          Par.onDriverThreads(spark, touched)(b =>
+            mergeBucket(writers, dir, b, taskId, mor)(slices(b).iterator,
+              DriverScan.read(spark, mergedSchema, files(b).map(_._1).toSeq).iterator)).flatten
+        } else foldWriteJob(spark.sparkContext.parallelize(slices.toSeq, slices.length)
           .flatMap(_.iterator))
       case Right(exchanged) => foldWriteJob(exchanged)
     }
-    if (merged.isEmpty) return idle
+    if (merged.isEmpty) return Some(ApplyResult(skipped = false, base, 0, 0, 0, 0))
     val tMeta = System.nanoTime()
-    // every touched bucket emits >=1 winner (tombstones retained), so the
+    // every touched bucket emits >=1 row (tombstones retained), so the
     // written bucket set IS the touched set. Cold start reports what it
     // wrote (winners, tombstones); the hot path its raw batch rows.
     val written = WrittenFile.byBucket(merged.map(_.file))
@@ -257,21 +283,24 @@ object MergeApplier {
       if (snap.isEmpty) (written.rows.values.sum, written.tombstones.values.sum)
       else (merged.map(_.batchRows).sum, merged.map(_.batchDeletes).sum)
 
-    // Manifest-list commit: ONE new manifest file for the touched buckets;
-    // prior refs keep their (untouched) buckets via mask subtraction — no
-    // file list is ever rewritten, so commit metadata I/O is O(touched),
-    // independent of how many data files the table holds. A COW rewrite of a
-    // bucket also masks that bucket's MOR delta refs: the rewrite read and
-    // folded them (the bucket-aligned scan reads base + deltas).
+    // Manifest-list commit: ONE new manifest file for the touched buckets.
+    // COW: prior refs keep their (untouched) buckets via mask subtraction —
+    // no file list is ever rewritten, so commit metadata I/O is O(touched),
+    // independent of how many data files the table holds; the rewrite of a
+    // bucket also masks that bucket's MOR delta refs (the bucket-aligned
+    // scan read base + deltas). MOR: one delta ref, no prior ref touched;
+    // readers concatenate base + deltas per bucket in manifest-list order,
+    // and bucketRows counts STORED rows (incl. superseded versions until
+    // compact).
     val mine = written.files.keySet
     val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
-      Seq(ManifestRef(table.writeManifest(version, written.files), mine, delta = false)),
-      replaced = mine, rows = written.rows,
+      Seq(ManifestRef(table.writeManifest(base + 1, written.files), mine, delta = mor)),
+      replaced = if (mor) Set.empty else mine, rows = written.rows,
       metrics = applyMetrics(batchRows, nDeletes, written, t0, tBatch, tFold, tMeta) ++
         // contention lineage: a commit whose merge had to RE-RUN against a
         // concurrent winner records which attempt landed (rebases record
         // "rebasedFrom" instead) — makes conflict cost auditable from history()
-        (if (attempt > 1) Map("rerunAttempt" -> attempt.toLong) else Map.empty))
+        (if (attemptNo > 1) Map("rerunAttempt" -> attemptNo.toLong) else Map.empty))
     def landed(version: Long) = ApplyResult(skipped = false, version, batchRows,
       mine.size, batchRows - nDeletes, nDeletes)
 
@@ -280,16 +309,34 @@ object MergeApplier {
       // manifest exist, but nothing is published — readers see the old head
       // until LakeTable.publishStaged CASes the staged ref in (O(metadata))
       // after LakeTable.readStaged's audit passes
-      table.writeStaged(StagedRef(n, snap.map(_.version).getOrElse(0L), change))
-      return Some(landed(snap.map(_.version).getOrElse(0L)))
+      table.writeStaged(StagedRef(n, base, change))
+      return Some(landed(base))
     }
-    // Optimistic publish. On a lost CAS: a concurrent commit that left OUR
-    // buckets' resolved file lists exactly as the base snapshot had them
-    // cannot have folded or superseded any row we merged — rebase is pure
-    // metadata. Any change to our buckets (COW rewrite, MOR delta,
-    // compaction, resize) means our in-task fold is stale: drop the
-    // attempt's files and re-run the merge (None → applyBatch loops).
-    publish(table, snap, change, CommitBuilder.RebaseIfUnchanged(mine), outDir, landed)
+    // Optimistic publish. COW: a concurrent commit that left OUR buckets'
+    // resolved file lists exactly as the base snapshot had them cannot have
+    // folded or superseded any row we merged — rebase is pure metadata. Any
+    // change to our buckets (COW rewrite, MOR delta, compaction, resize)
+    // means our fold is stale: drop the attempt's files and re-run the
+    // merge (None → applyBatch loops). MOR: a delta is a pure append of
+    // not-yet-seen rows, and the LWW fold is associative and
+    // order-independent — appending our ref AFTER any concurrent commit
+    // folds to the same winners as any other order — so a lost CAS always
+    // rebases. (The one ordering caveat: concurrent compact(watermark) may
+    // expire a tombstone our delta's late stale insert would have lost to;
+    // the watermark contract — no in-flight source older than the watermark
+    // — already forbids that input, exactly as in the sequential schedule.)
+    CommitBuilder.commit(table, snap, change,
+        if (mor) CommitBuilder.Rebase else CommitBuilder.RebaseIfUnchanged(mine)) match {
+      case CommitBuilder.Committed(s) => Some(landed(s.version))
+      case CommitBuilder.AlreadyApplied(head) =>
+        // split brain: another instance of this writer already landed the
+        // batch — exactly-once holds, our attempt is redundant
+        deleteDir(outDir)
+        Some(ApplyResult(skipped = true, head.version, 0, 0, 0, 0))
+      case CommitBuilder.Stale(_) =>
+        deleteDir(outDir)
+        None
+    }
   }
 
   /** An apply's commit metrics. `outputBytes`/`outputRows` are what its
@@ -310,91 +357,6 @@ object MergeApplier {
     "foldWriteMs" -> (tMeta - tFold) / 1000000,
     "metaMs" -> (System.nanoTime() - tMeta) / 1000000,
     "durationMs" -> (System.nanoTime() - t0) / 1000000)
-
-  /** Commit an apply's change; None when it went stale (the merge re-runs). */
-  private def publish(table: LakeTable, snap: Option[Snapshot],
-      change: TableChange, onConflict: CommitBuilder.OnConflict,
-      outDir: java.nio.file.Path, landed: Long => ApplyResult): Option[ApplyResult] =
-    CommitBuilder.commit(table, snap, change, onConflict) match {
-      case CommitBuilder.Committed(s) => Some(landed(s.version))
-      case CommitBuilder.AlreadyApplied(head) =>
-        // split brain: another instance of this writer already landed the
-        // batch — exactly-once holds, our attempt is redundant
-        deleteDir(outDir)
-        Some(ApplyResult(skipped = true, head.version, 0, 0, 0, 0))
-      case CommitBuilder.Stale(_) =>
-        deleteDir(outDir)
-        None
-    }
-
-  /** Merge-on-read apply: append the batch's events as DELTA files to each
-    * touched bucket — NO target read, NO rewrite, NO aggregation (the LSM
-    * "L0 append"); the read path (LakeTable.read) and the next [[compact]]
-    * run the associative LWW fold, so COW and MOR commits interleave freely.
-    *
-    * Cost per batch is scan + the bucket-aligned batch side ([[batchSide]]:
-    * split on the driver and written from driver threads when small, else
-    * one exchange and a write per bucket task) + write —
-    * strictly O(batch), the high-throughput tail mode at 10^10 scale; compaction
-    * amortizes the read-side merge (exactly Iceberg's v2 merge-on-read
-    * contract, built from scratch). Within-batch LWW is deliberately NOT run
-    * here: it collapses only the batch's own duplicate keys (~10% at the
-    * measured skew) but costs a sort-aggregate over the whole batch — the
-    * read/compact fold subsumes it for the same final state.
-    */
-  def applyBatchMor(spark: SparkSession, table: LakeTable, batch: DataFrame,
-      writerId: String, batchId: Long): ApplyResult = {
-    val t0 = System.nanoTime()
-    val snap = table.currentSnapshot()
-    if (batchId <= snap.map(_.maxBatchId(writerId)).getOrElse(-1L)) {
-      return ApplyResult(skipped = true, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
-    }
-    snap.foreach(table.checkBuckets)
-    val (aligned, mergedSchema) = evolve(snap, batch)
-    val version = snap.map(_.version).getOrElse(0L) + 1
-    val outDir = table.attemptDir(version, writerId, batchId)
-    // Each touched bucket appends its rows as one delta file through the
-    // COW path's writer, which tracks the file's key bounds + conv bloom —
-    // the skip input that keeps point lookups O(files holding the key) on a
-    // delta-deep tail. The driver commits the collected entries: no
-    // listing, no footer reads. Same no-orphan idle contract as the COW path.
-    val idle = ApplyResult(skipped = false, snap.map(_.version).getOrElse(0L), 0, 0, 0, 0)
-    val dir = outDir.toString
-    val tBatch = System.nanoTime()
-    val side = batchSide(aligned, table.numBuckets)
-    val tFold = System.nanoTime()
-    val written = WrittenFile.byBucket(side match {
-      case Left(slices) => onDriver(spark, mergedSchema, slices)((writers, taskId, b) =>
-        BucketFileWriter.write(writers, dir, b, taskId, slices(b).iterator))
-      case Right(exchanged) => BucketFileWriter.writeAll(exchanged,
-        WriteBridge.parquetWriterFactory(spark, mergedSchema), dir)
-    })
-    if (written.files.isEmpty) return idle
-    val batchRows = written.rows.values.sum
-    val nDeletes = written.tombstones.values.sum
-    val tMeta = System.nanoTime()
-    val newBucketFiles = written.files
-    // Delta commit: append ONE delta manifest ref; no prior ref is touched.
-    // Readers concatenate base + deltas per bucket in manifest-list order.
-    // bucketRows counts STORED rows (incl. superseded versions until
-    // compact), straight from the tasks' results.
-    val change = TableChange(Ledger.Batch(writerId, batchId), mergedSchema.json,
-      Seq(ManifestRef(table.writeManifest(version, newBucketFiles),
-        newBucketFiles.keySet, delta = true)),
-      replaced = Set.empty, rows = written.rows,
-      metrics = applyMetrics(batchRows, nDeletes, written, t0, tBatch, tFold, tMeta))
-    // Optimistic publish. A MOR delta is a pure append of not-yet-seen rows,
-    // and the LWW fold is associative and order-independent — appending our
-    // ref AFTER any concurrent commit (COW rewrite, another delta, a
-    // compaction) folds to the same winners as any other order — so a lost
-    // CAS always rebases as pure metadata: no conflict case re-runs the job.
-    // (The one ordering caveat: concurrent compact(watermark) may expire a
-    // tombstone our delta's late stale insert would have lost to; the
-    // watermark contract — no in-flight source older than the watermark —
-    // already forbids that input, exactly as in the sequential schedule.)
-    publish(table, snap, change, CommitBuilder.Rebase, outDir, v => ApplyResult(
-      skipped = false, v, batchRows, newBucketFiles.size, batchRows - nDeletes, nDeletes)).get
-  }
 
   /** Cold start (§3.1): single-pass full replay — read the whole changelog,
     * one global LWW, write every bucket, one commit. Replaces the reference's

@@ -49,13 +49,11 @@ object CdcStream {
       trigger: Trigger = Trigger.AvailableNow(),
       mode: String = "cow",
       autoCompactEvery: Int = 0): StreamingQuery = {
-    // cow: copy-on-write MERGE (read-optimized steady state);
-    // mor: merge-on-read delta appends (write-optimized tail; compact later).
-    val apply: (DataFrame, Long) => MergeApplier.ApplyResult = mode match {
-      case "cow" => MergeApplier.applyBatch(spark, table, _, writerId, _)
-      case "mor" => MergeApplier.applyBatchMor(spark, table, _, writerId, _)
-      case other => throw new IllegalArgumentException(s"unknown mode: $other")
-    }
+    // the table write mode of every batch (MergeApplier.isMor): cow rewrites
+    // the touched buckets (read-optimized steady state), mor appends deltas
+    // (write-optimized tail; compact later). An unknown mode fails here,
+    // before the stream starts.
+    MergeApplier.isMor(mode)
     ForkFreeCheckpointFileManager.install(spark)
     source(spark, sourceDir, schema, maxFilesPerTrigger)
       .writeStream
@@ -63,7 +61,7 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        apply(batch, batchId)
+        MergeApplier.applyBatch(spark, table, batch, writerId, batchId, mode)
         // LSM maintenance policy: once a BUCKET's delta depth reaches
         // `autoCompactEvery`, fold that bucket down — selective compaction
         // rewrites O(deep buckets), not O(table), which is the unit that

@@ -56,11 +56,7 @@ object Replicate {
       maxVersionsPerTrigger: Long = 16,
       trigger: Trigger = Trigger.AvailableNow(),
       mode: String = "cow"): StreamingQuery = {
-    val apply: (DataFrame, Long) => MergeApplier.ApplyResult = mode match {
-      case "cow" => MergeApplier.applyBatch(spark, dest, _, writerId, _)
-      case "mor" => MergeApplier.applyBatchMor(spark, dest, _, writerId, _)
-      case other => throw new IllegalArgumentException(s"unknown mode: $other")
-    }
+    MergeApplier.isMor(mode) // an unknown mode fails before the stream starts
     ForkFreeCheckpointFileManager.install(spark)
     spark.readStream.format("lake-cdf")
       .option("path", sourceRoot)
@@ -71,7 +67,9 @@ object Replicate {
       .queryName(s"lake-replica-$writerId")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) => apply(batch, batchId); () }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        MergeApplier.applyBatch(spark, dest, batch, writerId, batchId, mode); ()
+      }
       .start()
   }
 

@@ -113,7 +113,7 @@ object CommitBuilder {
     def attempt(on: Option[Snapshot], rebasedFrom: Option[Long]): Result =
       table.currentSnapshot() match {
         case Some(head) if !on.exists(_.version == head.version) =>
-          if (change.ledger.isInstanceOf[Ledger.Batch] && head.maxBatchId(writerId) >= batchId)
+          if (change.ledger.isInstanceOf[Ledger.Batch] && head.applied(writerId, batchId))
             AlreadyApplied(head)
           else {
             require(head.numBuckets == baseBuckets, s"table was rebucketed to " +

@@ -169,13 +169,8 @@ private object LakeSource {
     * lock-free-progress bounded by the number of concurrent inserters.
     */
   def sqlAppend(root: String, data: DataFrame, options: CaseInsensitiveStringMap): Unit = {
-    val mor = Option(options.get("mode")).map(_.toLowerCase) match {
-      case Some("mor") => true
-      case None | Some("cow") => false
-      case Some(m) => throw new IllegalArgumentException(s"unknown lake write mode '$m' (cow|mor)")
-    }
-    applyEvents(data.sparkSession, LakeTable.open(root),
-      data.withColumn("op", lit(Model.OpInsert)), mor, options)
+    applyEvents(data.sparkSession, LakeTable.open(root), data.withColumn("op",
+      lit(Model.OpInsert)), Option(options.get("mode")).fold("cow")(_.toLowerCase), options)
   }
 
   /** Driver-side body of SQL `DELETE FROM` ([[LakeSourceTable.deleteWhere]]).
@@ -203,7 +198,7 @@ private object LakeSource {
         case other => lit(null).cast(f.dataType).as(other)
       }
     }: _*).withColumn("op", lit(Model.OpDelete))
-    applyEvents(spark, table, tombstones, mor = false, CaseInsensitiveStringMap.empty())
+    applyEvents(spark, table, tombstones, "cow", CaseInsensitiveStringMap.empty())
   }
 
   /** V1 pushed-filter → Column, for the predicate subset `canDeleteWhere`
@@ -244,12 +239,9 @@ private object LakeSource {
     * auto-assign maxBatchId(writerId)+1 and re-apply on an id race.
     */
   private def applyEvents(spark: SparkSession, table: LakeTable, events: DataFrame,
-      mor: Boolean, options: CaseInsensitiveStringMap): Unit = {
-    def apply1(writerId: String, batchId: Long): Boolean = {
-      val r = if (mor) MergeApplier.applyBatchMor(spark, table, events, writerId, batchId)
-              else MergeApplier.applyBatch(spark, table, events, writerId, batchId)
-      r.skipped
-    }
+      mode: String, options: CaseInsensitiveStringMap): Unit = {
+    def apply1(writerId: String, batchId: Long): Boolean =
+      MergeApplier.applyBatch(spark, table, events, writerId, batchId, mode).skipped
     (Option(options.get("writerId")), Option(options.get("batchId")).map(_.toLong)) match {
       case (Some(w), Some(b)) => apply1(w, b) // skipped = exactly-once replay no-op
       case (None, Some(_)) => throw new IllegalArgumentException(

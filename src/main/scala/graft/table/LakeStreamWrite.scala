@@ -103,7 +103,7 @@ private[table] final class LakeStreamingWrite(
     val newFiles = written.files
     if (newFiles.isEmpty) return // idle trigger: no orphan version
     val base = table.currentSnapshot()
-    if (epochId <= base.map(_.maxBatchId(writerId)).getOrElse(-1L)) {
+    if (base.exists(_.applied(writerId, epochId))) {
       // checkpoint replay after resume: the ledger already carries this
       // epoch — exactly-once means this attempt's files must die
       abort(epochId, messages)

@@ -248,6 +248,8 @@ final case class Snapshot(
     morDeltas: Boolean = false) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   def maxBatchId(writerId: String): Long = committed.getOrElse(writerId, -1L)
+  /** Whether `writerId` already landed its batch `batchId` (the ledger). */
+  def applied(writerId: String, batchId: Long): Boolean = maxBatchId(writerId) >= batchId
   def totalRows: Long = bucketRows.values.sum
 }
 
@@ -1039,8 +1041,7 @@ final class LakeTable(val root: String, val numBuckets: Int) {
   private def readPrunedKeys(spark: SparkSession, s: Snapshot,
       pruned: Map[Int, Seq[FileEntry]], filter: FilterPredicate,
       key: (UTF8String, Int) => Boolean): DataFrame = {
-    val bound = DriverScan.collectBound(spark)
-    if (bound >= 0 && pruned.valuesIterator.flatten.map(_.bytes).sum <= bound)
+    if (DriverScan.withinBound(spark, pruned.valuesIterator.flatten.map(_.bytes).sum))
       DriverScan.localDf(spark, s.schema, graft.operators.BucketLocal.foldFilesOnDriver(
         spark, s.schema, pruned, s.morDeltas, filter, key))
     else readPrunedFiles(spark, s, pruned)

@@ -56,11 +56,15 @@ object DriverScan {
   private def classic(s: SparkSession): org.apache.spark.sql.classic.SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  /** Spark's own bound for "small enough to collect on the driver"
-    * (`spark.sql.autoBroadcastJoinThreshold`, in bytes; -1 disables).
+  /** Whether `bytes` are small enough to read on the driver: within Spark's
+    * own bound for collecting a side there, `spark.sql.autoBroadcastJoinThreshold`
+    * (-1 disables). The one admission rule of the driver-side lookups and
+    * applies.
     */
-  def collectBound(spark: SparkSession): Long =
-    classic(spark).sessionState.conf.autoBroadcastJoinThreshold
+  def withinBound(spark: SparkSession, bytes: BigInt): Boolean = {
+    val bound = classic(spark).sessionState.conf.autoBroadcastJoinThreshold
+    bound >= 0 && bytes <= bound
+  }
 
   /** The session's Hadoop conf with the keys Spark's parquet scan sets for
     * `ParquetReadSupport` and its schema converter (mirrors
@@ -91,6 +95,7 @@ object DriverScan {
   def read(spark: SparkSession, schema: StructType, paths: Seq[String],
       filter: Option[FilterPredicate] = None,
       keep: InternalRow => Boolean = _ => true): Seq[InternalRow] = {
+    if (paths.isEmpty) return Seq.empty // a MOR or empty bucket: no conf to build
     val sql = classic(spark).sessionState.conf
     val conf = readConf(spark, schema)
     val toUnsafe = UnsafeProjection.create(schema)

@@ -79,16 +79,14 @@ object ScanBridge {
 
   /** Whether `df` is small enough to split on the driver
     * ([[splitOnDriver]]) instead of shuffling it: a deterministic plan whose
-    * own size estimate is within Spark's bound for collecting a side on the
-    * driver, `spark.sql.autoBroadcastJoinThreshold` (-1 disables) — the
-    * lookups' rule. Read off the analyzed plan, so a caller that goes on to
+    * own size estimate is within [[DriverScan.withinBound]] — the lookups'
+    * rule. Read off the analyzed plan, so a caller that goes on to
     * plan something else (the exchange over `df`) runs the optimizer once,
     * not twice.
     */
   def copyable(df: DataFrame): Boolean = {
     val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.analyzed
-    plan.deterministic && plan.stats.sizeInBytes <=
-      classic(df.sparkSession).sessionState.conf.autoBroadcastJoinThreshold
+    plan.deterministic && DriverScan.withinBound(df.sparkSession, plan.stats.sizeInBytes)
   }
 
   /** `df`'s rows split by the hash of `keys` into `numBuckets` slices,

@@ -34,7 +34,7 @@ class AggPushdownPropertySpec extends SparkSpecBase {
         }
         val df = spark.createDataset(evs).toDF()
         if (rnd.nextBoolean()) MergeApplier.applyBatch(spark, t, df, "w", b.toLong)
-        else MergeApplier.applyBatchMor(spark, t, df, "w", b.toLong)
+        else MergeApplier.applyBatch(spark, t, df, "w", b.toLong, mode = "mor")
         rnd.nextInt(4) match {
           case 0 => MergeApplier.compactRetainTombstones(spark, t)
           case 1 => MergeApplier.compact(spark, t,

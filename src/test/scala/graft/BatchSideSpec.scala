@@ -50,7 +50,7 @@ class BatchSideSpec extends SparkSpecBase {
       all.grouped(400).zipWithIndex.toSeq.map { case (chunk, i) =>
         val df = shape(spark.createDataset(chunk).toDF())
         jobPlan {
-          if (mor) MergeApplier.applyBatchMor(spark, t, df, "w", i.toLong)
+          if (mor) MergeApplier.applyBatch(spark, t, df, "w", i.toLong, mode = "mor")
           else MergeApplier.applyBatch(spark, t, df, "w", i.toLong)
         }
       }
@@ -127,7 +127,7 @@ class BatchSideSpec extends SparkSpecBase {
       val t = new LakeTable(tmpDir(s"bs-threads-$mor"), numBuckets)
       all.grouped(120).zipWithIndex.foreach { case (chunk, i) =>
         val df = spark.createDataset(chunk).toDF()
-        if (mor) MergeApplier.applyBatchMor(spark, t, df, "w", i.toLong)
+        if (mor) MergeApplier.applyBatch(spark, t, df, "w", i.toLong, mode = "mor")
         else MergeApplier.applyBatch(spark, t, df, "w", i.toLong)
         assert(applyThreads.isEmpty, s"mor=$mor batch $i: $applyThreads")
       }

@@ -20,7 +20,7 @@ class ChangeFeedSpec extends SparkSpecBase {
   private def apply(table: LakeTable, batch: Seq[ChangeEvent], id: Long,
       mor: Boolean = false): Long = {
     val df = spark.createDataset(batch).toDF()
-    if (mor) MergeApplier.applyBatchMor(spark, table, df, "w", id)
+    if (mor) MergeApplier.applyBatch(spark, table, df, "w", id, mode = "mor")
     else MergeApplier.applyBatch(spark, table, df, "w", id)
     table.currentSnapshot().get.version
   }

@@ -28,7 +28,7 @@ class ConcurrencySpec extends SparkSpecBase {
     MergeApplier.applyBatch(spark, table, spark.createDataset(events).toDF(), w, b)
 
   private def applyMor1(table: LakeTable, events: Seq[ChangeEvent], w: String, b: Long) =
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(events).toDF(), w, b)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(events).toDF(), w, b, mode = "mor")
 
   private def finalState(table: LakeTable): Map[(String, Int), (String, Long)] =
     table.read(spark).collect()

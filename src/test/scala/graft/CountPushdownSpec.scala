@@ -20,13 +20,13 @@ class CountPushdownSpec extends SparkSpecBase {
 
   private def build(root: String): LakeTable = {
     val t = new LakeTable(root, numBuckets = 4)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(
+    MergeApplier.applyBatch(spark, t, spark.createDataset(
       (0 until 30).map(i => ev(s"c$i", i % 3, s"v$i", "2025-01-01 10:00:00", i.toLong))).toDF(),
-      "w", 0L)
+      "w", 0L, mode = "mor")
     // delete 5 keys (tombstones retained by the maintenance compaction)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(
+    MergeApplier.applyBatch(spark, t, spark.createDataset(
       (0 until 5).map(i => ev(s"c$i", i % 3, null, "2025-01-02 10:00:00", 100L + i,
-        op = "delete"))).toDF(), "w", 1L)
+        op = "delete"))).toDF(), "w", 1L, mode = "mor")
     t
   }
 
@@ -60,8 +60,8 @@ class CountPushdownSpec extends SparkSpecBase {
       .contains("LakeAggScan"))
     // compaction turns pushdown on; a subsequent MOR append turns it off
     MergeApplier.compactRetainTombstones(spark, t)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
-      ev("c999", 0, "new", "2025-01-03 10:00:00", 500L))).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
+      ev("c999", 0, "new", "2025-01-03 10:00:00", 500L))).toDF(), "w", 2L, mode = "mor")
     val df1 = spark.read.format("lake").option("path", root).load()
     assert(df1.count() == 26L)
     assert(!df1.groupBy().count().queryExecution.executedPlan.toString

@@ -34,8 +34,8 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("MOR delta commits carry exact key bounds in the manifest") {
     val t = new LakeTable(tmpDir("fs-mor"), numBuckets = 1) // one bucket: skipping is purely file-level
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("a", 5, 0)).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("b", 5, 100)).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 5, 0)).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("b", 5, 100)).toDF(), "w", 1L, mode = "mor")
     val entries = allEntries(t)
     assert(entries.nonEmpty && entries.forall(_.stats.nonEmpty),
       s"every delta file must carry bounds: $entries")
@@ -75,9 +75,9 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("physical skip: lookupTurn answers with the other deltas deleted from disk") {
     val t = new LakeTable(tmpDir("fs-skip"), numBuckets = 1)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("a", 5, 0)).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("b", 5, 100)).toDF(), "w", 1L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("c", 5, 200)).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 5, 0)).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("b", 5, 100)).toDF(), "w", 1L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("c", 5, 200)).toDF(), "w", 2L, mode = "mor")
     // delete every file whose bounds exclude the probe key — if the lookup
     // opened any of them it would crash
     val (keep, skip) = allEntries(t).partition(_.stats.get.mightContain("a2", 3))
@@ -92,8 +92,8 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("physical skip: lookupConversation prunes by conv bounds alone") {
     val t = new LakeTable(tmpDir("fs-skip-conv"), numBuckets = 2)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("a", 4, 0)).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("b", 4, 100)).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 4, 0)).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("b", 4, 100)).toDF(), "w", 1L, mode = "mor")
     allEntries(t).filter(f => !f.stats.get.mightContainConv("a1"))
       .foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(f.path)))
     val got = t.lookupConversation(spark, "a1").collect()
@@ -116,11 +116,11 @@ class FileStatsSpec extends SparkSpecBase {
       t.commit(s.copy(version = s.version + 1, parentVersion = s.version,
         manifests = s.manifests.map(_.copy(path = legacy))))
     }
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(
-      batch("a", 6, 100) ++ batch("z", 3, 400)).toDF(), "w", 1L) // stats
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, t, spark.createDataset(
+      batch("a", 6, 100) ++ batch("z", 3, 400)).toDF(), "w", 1L, mode = "mor") // stats
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
       ev("a3", 1, "newer", "2025-01-02 10:00:00", 999),
-      ev("a4", 2, "", "2025-01-02 10:00:00", 1000, op = "delete"))).toDF(), "w", 2L)
+      ev("a4", 2, "", "2025-01-02 10:00:00", 1000, op = "delete"))).toDF(), "w", 2L, mode = "mor")
     assert(allEntries(t).exists(_.stats.isEmpty) && allEntries(t).exists(_.stats.nonEmpty))
     val full = t.read(spark).collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx")) -> r.getAs[String]("text")).toMap
@@ -167,9 +167,9 @@ class FileStatsSpec extends SparkSpecBase {
       ev("a0", 0, s"a0@$seq0", "2025-01-01 10:00:00", seq0),
       ev(mid, 0, s"$mid@$seq0", "2025-01-01 10:00:00", seq0 + 1),
       ev("z9", 0, s"z9@$seq0", "2025-01-01 10:00:00", seq0 + 2))
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(span("m1", 0)).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(span("m2", 10)).toDF(), "w", 1L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(span("m3", 20)).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(span("m1", 0)).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(span("m2", 10)).toDF(), "w", 1L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(span("m3", 20)).toDF(), "w", 2L, mode = "mor")
     val entries = allEntries(t)
     assert(entries.size == 3)
     // bounds alone keep ALL files (every range is [a0, z9] ⊇ "m2")...
@@ -195,7 +195,7 @@ class FileStatsSpec extends SparkSpecBase {
       ev(c, 0, s"odd$i", "2025-01-01 10:00:00", 1000 + i) }
     MergeApplier.applyBatch(spark, t, spark.createDataset(batch("cold", 2, 500)).toDF(), "w", 0L)
     MergeApplier.applyBatch(spark, t, spark.createDataset(evs).toDF(), "w", 1L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("tail", 3, 2000)).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("tail", 3, 2000)).toDF(), "w", 2L, mode = "mor")
     val live = t.read(spark).select("conv_id", "turn_idx").collect()
       .map(r => (r.getString(0), r.getInt(1)))
     assert(live.length == (8 + 2 + 3) * 4 + odd.size)
@@ -237,9 +237,9 @@ class FileStatsSpec extends SparkSpecBase {
 
   test("files carry event-time bounds; the manifest round-trips them") {
     val t = new LakeTable(tmpDir("fs-ts"), numBuckets = 1)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
       ev("a0", 0, "x", "2025-01-01 10:00:00", 0),
-      ev("a1", 0, "y", "2025-03-01 10:00:00", 1))).toDF(), "w", 0L)
+      ev("a1", 0, "y", "2025-03-01 10:00:00", 1))).toDF(), "w", 0L, mode = "mor")
     val st = allEntries(t).head.stats.get
     val lo = org.apache.spark.sql.catalyst.util.DateTimeUtils
       .fromJavaTimestamp(Timestamp.valueOf("2025-01-01 10:00:00"))
@@ -266,7 +266,7 @@ class FileStatsSpec extends SparkSpecBase {
     }
     assert(evs.exists(e => t.bucketFor(e.conv_id, e.turn_idx) == 0) &&
       evs.exists(e => t.bucketFor(e.conv_id, e.turn_idx) == 1))
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(evs).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(evs).toDF(), "w", 0L, mode = "mor")
     val cut = Timestamp.valueOf("2025-06-01 00:00:00")
     val expected = evs.filter(e => !e.ts.before(cut)).map(e => (e.conv_id, e.turn_idx)).toSet
     // delete bucket 0's delta from disk — a scan that opened it would crash
@@ -292,7 +292,7 @@ class FileStatsSpec extends SparkSpecBase {
       val old = t.bucketFor(c, turn) == 0
       ev(c, turn, s"$c-t$turn", if (old) "2025-01-05 00:00:00" else "2025-06-05 00:00:00", i.toLong)
     }
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(evs).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(evs).toDF(), "w", 0L, mode = "mor")
     MergeApplier.compactRetainTombstones(spark, t) // compaction stats carry ts bounds
     assert(!t.currentSnapshot().get.morDeltas)
     assert(allEntries(t).forall(_.stats.exists(_.minTsUs.nonEmpty)))
@@ -313,7 +313,7 @@ class FileStatsSpec extends SparkSpecBase {
     val root = s"${tmpDir("fs-sink")}/t"
     val ckpt = tmpDir("fs-sink-ckpt")
     val t = new LakeTable(root, numBuckets = 1)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(batch("a", 3, 0)).toDF(), "seed", 0L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(batch("a", 3, 0)).toDF(), "seed", 0L, mode = "mor")
     writeFlatParquet(spark.createDataset(batch("q", 3, 100)).toDF().drop("op"), src, "e0.parquet")
     spark.readStream
       .schema(org.apache.spark.sql.types.StructType(

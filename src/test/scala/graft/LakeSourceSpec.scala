@@ -334,10 +334,10 @@ class LakeSourceSpec extends SparkSpecBase {
     apply(table, Seq(
       ev("c", 0, "x", "2025-01-01 00:00:00", "insert", 1),
       ev("c", 1, "y", "2025-01-01 00:00:01", "insert", 2)), 0L)
-    MergeApplier.applyBatchMor(spark, table,
+    MergeApplier.applyBatch(spark, table,
       spark.createDataset(Seq(
         ev("c", 0, "x'", "2025-01-01 00:01:00", "update", 3),
-        ev("c", 1, null, "2025-01-01 00:01:01", "delete", 4))).toDF(), "w", 1L)
+        ev("c", 1, null, "2025-01-01 00:01:01", "delete", 4))).toDF(), "w", 1L, mode = "mor")
     assert(table.currentSnapshot().get.morDeltas)
 
     val pruned = lake(root).select("conv_id", "text")

@@ -134,7 +134,7 @@ class LookupSpec extends SparkSpecBase {
     val batches = all.grouped(200).toSeq
     MergeApplier.applyBatch(spark, t, spark.createDataset(batches.head).toDF(), "w", 0L)
     batches.zipWithIndex.drop(1).foreach { case (b, i) =>
-      MergeApplier.applyBatchMor(spark, t, spark.createDataset(b).toDF(), "w", i.toLong) }
+      MergeApplier.applyBatch(spark, t, spark.createDataset(b).toDF(), "w", i.toLong, mode = "mor") }
     val s = t.currentSnapshot().get
     assert(s.morDeltas && t.deltaDepths(s).values.max >= 4)
     checkOracle(t, all)
@@ -155,7 +155,7 @@ class LookupSpec extends SparkSpecBase {
         manifests = s.manifests.map(_.copy(path = legacy))))
     }
     batches.zipWithIndex.drop(1).foreach { case (b, i) =>
-      MergeApplier.applyBatchMor(spark, t, spark.createDataset(b).toDF(), "w", i.toLong) }
+      MergeApplier.applyBatch(spark, t, spark.createDataset(b).toDF(), "w", i.toLong, mode = "mor") }
     val entries = t.resolveFiles(t.currentSnapshot().get).values.flatten
     assert(entries.exists(_.stats.isEmpty) && entries.exists(_.stats.nonEmpty))
     checkOracle(t, all)
@@ -175,7 +175,7 @@ class LookupSpec extends SparkSpecBase {
       ev("c1", 0, "new1", "2025-01-01 00:01:00", 10, tool = Some("search")),
       ev("c2", 0, null, "2025-01-01 00:01:01", 11, op = "delete"),
       ev("c7", 1, "fresh", "2025-01-01 00:01:02", 12, op = "insert", tool = Some("calc")))
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(v2).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(v2).toDF(), "w", 1L, mode = "mor")
     val all = v1 ++ v2
     checkOracle(t, all)
     checkSparkPath(t, all)
@@ -191,7 +191,7 @@ class LookupSpec extends SparkSpecBase {
     val t = new LakeTable(tmpDir("lk-jobs"), numBuckets = 4)
     val all = events(600, seed = 64)
     MergeApplier.applyBatch(spark, t, spark.createDataset(all.take(300)).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(all.drop(300)).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(all.drop(300)).toDF(), "w", 1L, mode = "mor")
     val (c, turn) = Generator.oracleFold(all).keys.head
     t.lookupTurn(spark, c, turn).collect() // warm
     var got = 0
@@ -229,7 +229,7 @@ class LookupSpec extends SparkSpecBase {
     val batches = all.grouped(250).toSeq
     MergeApplier.applyBatch(spark, t, spark.createDataset(batches.head).toDF(), "w", 0L)
     batches.zipWithIndex.drop(1).foreach { case (b, i) =>
-      MergeApplier.applyBatchMor(spark, t, spark.createDataset(b).toDF(), "w", i.toLong) }
+      MergeApplier.applyBatch(spark, t, spark.createDataset(b).toDF(), "w", i.toLong, mode = "mor") }
     val s = t.currentSnapshot().get
     val files = t.resolveFiles(s)
     val anyConv = FilterApi.notEq(FilterApi.binaryColumn("conv_id"), null: Binary)

@@ -99,7 +99,7 @@ class LwwPropertySpec extends SparkSpecBase {
           if (modes(i % modes.size) == "cow")
             MergeApplier.applyBatch(spark, table, df, "w", batchId)
           else
-            MergeApplier.applyBatchMor(spark, table, df, "w", batchId)
+            MergeApplier.applyBatch(spark, table, df, "w", batchId, mode = "mor")
           batchId += 1
           if (maint(i % maint.size)) {
             // idle batch: must commit no version...

@@ -36,8 +36,8 @@ class ManifestSpec extends SparkSpecBase {
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "a", "2025-01-01 00:00:00", 1),
       ev("c2", 0, "b", "2025-01-01 00:00:01", 2))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "a2", "2025-01-01 00:00:02", 3))).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "a2", "2025-01-01 00:00:02", 3))).toDF(), "w", 1L, mode = "mor")
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c3", 0, "c", "2025-01-01 00:00:03", 4))).toDF(), "w", 2L)
 
@@ -80,8 +80,8 @@ class ManifestSpec extends SparkSpecBase {
     val manifestsBefore = metaFiles(table, "man-").map(p =>
       p.toString -> Files.getLastModifiedTime(p)).toMap
 
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c9", 3, "tiny", "2025-01-01 00:00:00", 99))).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c9", 3, "tiny", "2025-01-01 00:00:00", 99))).toDF(), "w", 1L, mode = "mor")
 
     val snapPath = metaFiles(table, "snap-").maxBy(_.getFileName.toString)
     assert(Files.size(snapPath) < 16 * 1024,

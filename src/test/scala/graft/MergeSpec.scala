@@ -73,8 +73,8 @@ class MergeSpec extends SparkSpecBase {
     // same contract on the MOR path
     var rm: MergeApplier.ApplyResult = null
     val planMor = jobPlan {
-      rm = MergeApplier.applyBatchMor(spark, table,
-        spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L)
+      rm = MergeApplier.applyBatch(spark, table,
+        spark.createDataset(Seq.empty[ChangeEvent]).toDF(), "w", 1L, mode = "mor")
     }
     assert(planMor.jobs == 0, planMor)
     assert(!rm.skipped && rm.batchRows == 0)
@@ -314,7 +314,7 @@ class MergeSpec extends SparkSpecBase {
       val plans = withBatchSide(threshold)(Seq(
         jobPlan(MergeApplier.applyBatch(spark, cow, df(first), "w", 0L)),
         jobPlan(cow.publishStaged(MergeApplier.stageBatch(spark, cow, df(second), "w", 1L).get)),
-        jobPlan(MergeApplier.applyBatchMor(spark, mor, df(all), "m", 0L))))
+        jobPlan(MergeApplier.applyBatch(spark, mor, df(all), "m", 0L, mode = "mor"))))
       assert(plans.forall(p => (p.jobs == 0) == threshold.isEmpty), s"$side: $plans")
       val history = Seq(cow, mor).flatMap(_.history(spark).collect())
         .map(r => r.getAs[Long]("version") -> r.getMap[String, Long](8).toMap)
@@ -410,7 +410,7 @@ class MergeSpec extends SparkSpecBase {
     more.grouped(800).toSeq.zip(passes).zipWithIndex.foreach {
       case ((chunk, (name, spill, pass)), i) =>
         // a MOR delta per pass, so every pass folds deltas into its rewrite
-        MergeApplier.applyBatchMor(spark, table, spark.createDataset(chunk).toDF(), "m", i.toLong)
+        MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "m", i.toLong, mode = "mor")
         val victim = table.bucketFor(chunk.head.conv_id, chunk.head.turn_idx)
         withSpillFoldBytes(if (spill) 0L else 2L << 30) {
           assert(failingOnce(table, victim)(pass(victim)) > 0L, name)

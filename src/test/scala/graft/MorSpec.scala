@@ -26,8 +26,8 @@ class MorSpec extends SparkSpecBase {
 
     val table = new LakeTable(tmpDir("mor-golden"), numBuckets = 8)
     all.sortBy(_.seq).grouped(1500).zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatchMor(spark, table,
-        spark.createDataset(chunk).toDF(), "t", i.toLong)
+      MergeApplier.applyBatch(spark, table,
+        spark.createDataset(chunk).toDF(), "t", i.toLong, mode = "mor")
     }
     assert(table.currentSnapshot().get.morDeltas)
     // stored rows > live keys: deltas keep superseded versions until compact
@@ -43,34 +43,78 @@ class MorSpec extends SparkSpecBase {
   test("MOR lineage: write-side per-bucket counts match the delta files (no footer reads)") {
     // stored-row lineage now comes off the write's accumulator; it must agree
     // exactly with what actually landed in the parquet files
+    // — on both batch sides (the default threshold applies these chunks on
+    // the driver, -1 forces the exchange and the fold/write job), and each
+    // commit stores exactly its chunk's rows: raw, unfolded
     val all = Generator.events(spark, 3000, numConvs = 10, turnsPerConv = 6, seed = 13)
       .as[ChangeEvent].collect().toSeq
-    val table = new LakeTable(tmpDir("mor-lineage"), numBuckets = 4)
-    all.sortBy(_.seq).grouped(1000).zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatchMor(spark, table,
-        spark.createDataset(chunk).toDF(), "w", i.toLong)
-      val s = table.currentSnapshot().get
-      assert(s.bucketRows == table.footerRowCounts(table.resolveFiles(s)),
-        s"lineage drifted from files at commit ${i + 1}")
-      assert(s.metrics("batchRows") == chunk.size.toLong)
-      assert(s.metrics("deletes") == chunk.count(_.op == Model.OpDelete).toLong)
+    Seq("driver" -> None, "exchanged" -> Some("-1")).foreach { case (side, threshold) =>
+      val table = new LakeTable(tmpDir(s"mor-lineage-$side"), numBuckets = 4)
+      var stored = 0L
+      all.sortBy(_.seq).grouped(1000).zipWithIndex.foreach { case (chunk, i) =>
+        withConf("spark.sql.autoBroadcastJoinThreshold", threshold)(
+          MergeApplier.applyBatch(spark, table,
+            spark.createDataset(chunk).toDF(), "w", i.toLong, mode = "mor"))
+        val s = table.currentSnapshot().get
+        assert(s.bucketRows == table.footerRowCounts(table.resolveFiles(s)),
+          s"$side: lineage drifted from files at commit ${i + 1}")
+        assert(s.metrics("batchRows") == chunk.size.toLong)
+        assert(s.metrics("deletes") == chunk.count(_.op == Model.OpDelete).toLong)
+        assert(s.totalRows - stored == chunk.size.toLong,
+          s"$side: commit ${i + 1} stored ${s.totalRows - stored} rows for a ${chunk.size}-row chunk")
+        stored = s.totalRows
+      }
     }
+  }
+
+  test("one unknown-mode error from every apply entry point; nothing lands") {
+    val base = tmpDir("mode-unknown")
+    val root = s"$base/convs"
+    val table = new LakeTable(root, numBuckets = 4)
+    def batch(turn: Int) = spark.createDataset(Seq(
+      ev("c", turn, "a", "2025-01-01 00:00:00", "insert", 1))).toDF()
+    MergeApplier.applyBatch(spark, table, batch(0), "w", 0L)
+    spark.conf.set("spark.sql.catalog.modecat", classOf[graft.table.LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.modecat.base", base)
+    val dataDirs = java.nio.file.Files.list(java.nio.file.Paths.get(root, "data"))
+      .toArray.toSet
+    val src = tmpDir("mode-unknown-src") + "/events"
+    batch(1).write.parquet(src)
+    val errors = Seq(
+      intercept[IllegalArgumentException](
+        MergeApplier.applyBatch(spark, table, batch(1), "w", 1L, mode = "x")),
+      intercept[IllegalArgumentException](
+        CdcStream.start(spark, src, table, tmpDir("mode-unknown-ck1"), mode = "x")),
+      intercept[IllegalArgumentException](
+        graft.streaming.Replicate.start(spark, root, table, tmpDir("mode-unknown-ck2"),
+          mode = "x")),
+      intercept[IllegalArgumentException](
+        batch(1).drop("op").writeTo("modecat.convs").option("mode", "x").append()))
+    assert(errors.map(_.getMessage).distinct == Seq("unknown write mode 'x' (cow|mor)"),
+      errors.map(_.getMessage))
+    assert(table.versions() == Seq(1L))
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(root, "data")).toArray.toSet ==
+      dataDirs)
+
+    // the SQL/DSv2 path lowercases its mode option, as before
+    batch(1).drop("op").writeTo("modecat.convs").option("mode", "MOR").append()
+    assert(table.currentSnapshot().get.morDeltas)
   }
 
   test("MOR tombstone: stale insert after delete stays dead across deltas") {
     val table = new LakeTable(tmpDir("mor-tomb"), numBuckets = 4)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "v1", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, null, "2025-01-01 00:00:10", "delete", 2))).toDF(), "w", 1L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "stale", "2025-01-01 00:00:05", "insert", 3))).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "v1", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, null, "2025-01-01 00:00:10", "delete", 2))).toDF(), "w", 1L, mode = "mor")
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "stale", "2025-01-01 00:00:05", "insert", 3))).toDF(), "w", 2L, mode = "mor")
     assert(table.read(spark).count() == 0)
     // compaction with a watermark BEFORE the delete keeps the tombstone
     MergeApplier.compact(spark, table, Timestamp.valueOf("2025-01-01 00:00:01"))
     assert(table.read(spark).count() == 0)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "fresh", "2025-01-01 00:00:20", "insert", 4))).toDF(), "w", 3L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "fresh", "2025-01-01 00:00:20", "insert", 4))).toDF(), "w", 3L, mode = "mor")
     assert(finalState(table) == Map(("c1", 0) -> (("fresh", 4L))))
   }
 
@@ -78,9 +122,9 @@ class MorSpec extends SparkSpecBase {
     val table = new LakeTable(tmpDir("mor-mix"), numBuckets = 4)
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "cow1", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "mor2", "2025-01-01 00:00:01", "insert", 2),
-      ev("c2", 0, "x", "2025-01-01 00:00:02", "insert", 3))).toDF(), "w", 1L)
+      ev("c2", 0, "x", "2025-01-01 00:00:02", "insert", 3))).toDF(), "w", 1L, mode = "mor")
     // a COW merge over a MOR-delta table must fold the deltas too
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c2", 0, "y", "2025-01-01 00:00:03", "insert", 4))).toDF(), "w", 2L)
@@ -92,11 +136,11 @@ class MorSpec extends SparkSpecBase {
 
   test("MOR delta-carrying read plans ZERO exchanges (bucket-local fold)") {
     val table = new LakeTable(tmpDir("mor-plan"), numBuckets = 4)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "a", "2025-01-01 00:00:00", "insert", 1),
-      ev("c2", 1, "b", "2025-01-01 00:00:01", "insert", 2))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "a2", "2025-01-01 00:00:02", "update", 3))).toDF(), "w", 1L)
+      ev("c2", 1, "b", "2025-01-01 00:00:01", "insert", 2))).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "a2", "2025-01-01 00:00:02", "update", 3))).toDF(), "w", 1L, mode = "mor")
     assert(table.currentSnapshot().get.morDeltas)
     val plan = table.read(spark).queryExecution.executedPlan.toString
     // the read-side LWW fold runs inside each bucket's own scan task
@@ -107,8 +151,8 @@ class MorSpec extends SparkSpecBase {
 
   test("time travel to a nonexistent version throws on a delta-carrying table too") {
     val table = new LakeTable(tmpDir("mor-tt"), numBuckets = 4)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "a", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "a", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L, mode = "mor")
     assert(table.currentSnapshot().get.morDeltas)
     // must NOT silently fall back to the current snapshot
     intercept[IllegalArgumentException](table.read(spark, Some(99L)))
@@ -160,8 +204,8 @@ class MorSpec extends SparkSpecBase {
     assert(table.readRaw(spark).filter(org.apache.spark.sql.functions.col("op") === "delete")
       .count() == 1, "auto-compaction must not expire tombstones")
     // stale insert (older ts than the delete) for the deleted key loses
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("k", 0, "stale", "1850-01-01 12:00:00", "insert", 99))).toDF(), "late", 0L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("k", 0, "stale", "1850-01-01 12:00:00", "insert", 99))).toDF(), "late", 0L, mode = "mor")
     assert(finalState(table) == Map(("x", 1) -> (("other", 3L))))
   }
 
@@ -195,7 +239,7 @@ class MorSpec extends SparkSpecBase {
     val v1 = table.currentSnapshot().get.version
     // one key: the MOR delta lands in one bucket, which the COW batch rewrites
     val delta = Seq(ev("c1", 0, "mor", "2025-01-01 00:01:00", "update", 100))
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(delta).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(delta).toDF(), "w", 1L, mode = "mor")
     assert(table.currentSnapshot().get.morDeltas)
     val cow = Seq(ev("c1", 0, "cow", "2025-01-01 00:02:00", "update", 101))
     applyCow(cow, 2L)

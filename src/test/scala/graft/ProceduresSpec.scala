@@ -31,8 +31,8 @@ class ProceduresSpec extends SparkSpecBase {
     val table = new LakeTable(root, numBuckets = 4)
     MergeApplier.applyBatch(spark, table, spark.createDataset(
       (0 until 40).map(i => ev(s"c$i", 0, s"v$i", "2025-01-01 00:00:00", "insert", i.toLong))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(
-      (0 until 40).map(i => ev(s"c$i", 0, s"v$i'", "2025-01-01 00:01:00", "update", 100L + i))).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(
+      (0 until 40).map(i => ev(s"c$i", 0, s"v$i'", "2025-01-01 00:01:00", "update", 100L + i))).toDF(), "w", 1L, mode = "mor")
     val before = rows(table.read(spark))
     assert(table.currentSnapshot().get.morDeltas, "fixture must carry deltas")
     catalogFor(base, "pc1")
@@ -58,9 +58,9 @@ class ProceduresSpec extends SparkSpecBase {
   test("compact with text_index => true builds token blooms; searchText uses them") {
     val base = tmpDir("proc-tidx")
     val table = new LakeTable(s"$base/t", numBuckets = 2)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("a", 0, "alpha beta", "2025-01-01 00:00:00", "insert", 1L),
-      ev("b", 1, "gamma delta", "2025-01-01 00:00:00", "insert", 2L))).toDF(), "w", 0L)
+      ev("b", 1, "gamma delta", "2025-01-01 00:00:00", "insert", 2L))).toDF(), "w", 0L, mode = "mor")
     catalogFor(base, "pcti")
     val r = spark.sql("CALL pcti.system.compact('t', text_index => true)").collect().head
     assert(r.getAs[Long]("rows_written") == 2 && !r.getAs[Boolean]("yielded"))

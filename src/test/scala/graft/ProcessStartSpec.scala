@@ -120,13 +120,13 @@ class ProcessStartSpec extends SparkSpecBase {
     // warm: each operation once, uncounted
     MergeApplier.applyBatch(spark, table, batches(0), "w", 0L)
     MergeApplier.applyBatch(spark, table, batches(1), "w", 1L)
-    MergeApplier.applyBatchMor(spark, table, batches(2), "w", 2L)
+    MergeApplier.applyBatch(spark, table, batches(2), "w", 2L, mode = "mor")
     MergeApplier.compactRetainTombstones(spark, table)
     val warm = MergeApplier.rebucket(spark, table, 8)
     var resized: LakeTable = null
     val starts = Seq(
       "COW apply" -> processStarts { MergeApplier.applyBatch(spark, warm, batches(3), "w", 3L) },
-      "MOR apply" -> processStarts { MergeApplier.applyBatchMor(spark, warm, batches(4), "w", 4L) },
+      "MOR apply" -> processStarts { MergeApplier.applyBatch(spark, warm, batches(4), "w", 4L, mode = "mor") },
       "compaction" -> processStarts { MergeApplier.compactRetainTombstones(spark, warm) },
       "rebucket" -> processStarts { resized = MergeApplier.rebucket(spark, warm, 4) })
     starts.foreach { case (what, s) =>

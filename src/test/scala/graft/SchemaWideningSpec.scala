@@ -86,9 +86,9 @@ class SchemaWideningSpec extends SparkSpecBase {
         ev("c", 0, "x", "2025-01-01 00:00:00", "insert", 1),
         ev("c", 1, "y", "2025-01-01 00:00:01", "insert", 2)))
         .withColumn("conf", lit(0.5f)), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table,
+    MergeApplier.applyBatch(spark, table,
       batchDf(Seq(ev("c", 0, "x'", "2025-01-01 00:01:00", "update", 3)))
-        .withColumn("conf", lit(0.25d)), "w", 1L)
+        .withColumn("conf", lit(0.25d)), "w", 1L, mode = "mor")
     assert(table.currentSnapshot().get.schema("conf").dataType == DoubleType)
     def state() = table.read(spark).collect()
       .map(r => r.getAs[Int]("turn_idx") -> r.getAs[Double]("conf")).toMap

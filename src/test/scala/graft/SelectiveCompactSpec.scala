@@ -38,7 +38,7 @@ class SelectiveCompactSpec extends SparkSpecBase {
     val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
     val table = new LakeTable(tmpDir("selc"), numBuckets = 8)
     all.sortBy(_.seq).grouped(1000).zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatchMor(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong)
+      MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "w", i.toLong, mode = "mor")
     }
     val before = filesOf(table)
     val snap0 = table.currentSnapshot().get
@@ -76,19 +76,19 @@ class SelectiveCompactSpec extends SparkSpecBase {
     // find two keys landing in different buckets
     val k0 = (0 until 64).map(i => ("c" + i, 0)).find(k => table.bucketFor(k._1, k._2) == 0).get
     val k1 = (0 until 64).map(i => ("c" + i, 0)).find(k => table.bucketFor(k._1, k._2) == 1).get
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev(k0._1, 0, "dead", "2020-01-01 00:00:00", "insert", 1),
-      ev(k1._1, 0, "alive", "2020-01-01 00:00:00", "insert", 2))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev(k0._1, 0, null, "2020-01-02 00:00:00", "delete", 3))).toDF(), "w", 1L)
+      ev(k1._1, 0, "alive", "2020-01-01 00:00:00", "insert", 2))).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev(k0._1, 0, null, "2020-01-02 00:00:00", "delete", 3))).toDF(), "w", 1L, mode = "mor")
     // expire the tombstone during the partial pass (explicit watermark path)
     val written = MergeApplier.compact(spark, table,
       Timestamp.valueOf("2021-01-01 00:00:00"))
     // full compact here folds both buckets; now do the PARTIAL variant on a
     // fresh delta landing only in bucket 0 and assert bucket 1 is untouched
     val before = filesOf(table)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev(k0._1, 0, "back", "2020-02-01 00:00:00", "insert", 4))).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev(k0._1, 0, "back", "2020-02-01 00:00:00", "insert", 4))).toDF(), "w", 2L, mode = "mor")
     MergeApplier.compactBucketsRetainTombstones(spark, table, Set(0))
     val after = filesOf(table)
     assert(after(1) == before(1), "bucket 1 rewritten by a bucket-0 pass")
@@ -100,9 +100,9 @@ class SelectiveCompactSpec extends SparkSpecBase {
   test("a full-covering target set takes the list-resetting branch") {
     val table = new LakeTable(tmpDir("selc-full"), numBuckets = 4)
     (0 until 3).foreach { i =>
-      MergeApplier.applyBatchMor(spark, table, spark.createDataset(
+      MergeApplier.applyBatch(spark, table, spark.createDataset(
         (0 until 16).map(j => ev(s"c$j", 0, s"v$i", "2020-01-01 00:00:00", "insert",
-          i * 100L + j))).toDF(), "w", i.toLong)
+          i * 100L + j))).toDF(), "w", i.toLong, mode = "mor")
     }
     MergeApplier.compactBucketsRetainTombstones(spark, table, (0 until 4).toSet)
     val snap = table.currentSnapshot().get
@@ -112,8 +112,8 @@ class SelectiveCompactSpec extends SparkSpecBase {
 
   test("targets without files are a no-op (no orphan version)") {
     val table = new LakeTable(tmpDir("selc-noop"), numBuckets = 4)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("only", 0, "v", "2020-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("only", 0, "v", "2020-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L, mode = "mor")
     val b = table.bucketFor("only", 0)
     val v = table.currentSnapshot().get.version
     val empty = (0 until 4).toSet - b

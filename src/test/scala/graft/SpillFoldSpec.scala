@@ -34,8 +34,8 @@ class SpillFoldSpec extends SparkSpecBase {
     val oracle = Generator.oracleFold(all).map { case (k, e) => k -> ((e.text, e.seq)) }
     val table = new LakeTable(tmpDir(name), numBuckets = buckets)
     all.sortBy(_.seq).grouped(1250).zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatchMor(spark, table,
-        spark.createDataset(chunk).toDF(), "t", i.toLong)
+      MergeApplier.applyBatch(spark, table,
+        spark.createDataset(chunk).toDF(), "t", i.toLong, mode = "mor")
     }
     assert(table.currentSnapshot().get.morDeltas)
     (table, oracle)
@@ -72,7 +72,7 @@ class SpillFoldSpec extends SparkSpecBase {
       // null-ts tombstone: UNKNOWN event time, ver() maps to Long.MinValue
       ChangeEvent("c3", 0, "user", "gone", None, null, "delete", 4),
       ev("c3", 0, "stale", "2024-01-01 10:00:00", "insert", 0))
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(rows).toDF(), "t", 0L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(rows).toDF(), "t", 0L, mode = "mor")
     val h = readFolded(table, 2L << 30).collect().map(_.toSeq).toSet
     val s = readFolded(table, 0L).collect().map(_.toSeq).toSet
     assert(h == s)
@@ -105,7 +105,7 @@ class SpillFoldSpec extends SparkSpecBase {
     def build(name: String): LakeTable = {
       val t = new LakeTable(tmpDir(name), numBuckets = 4)
       all.sortBy(_.seq).grouped(1000).zipWithIndex.foreach { case (chunk, i) =>
-        MergeApplier.applyBatchMor(spark, t, spark.createDataset(chunk).toDF(), "t", i.toLong)
+        MergeApplier.applyBatch(spark, t, spark.createDataset(chunk).toDF(), "t", i.toLong, mode = "mor")
       }
       t
     }

@@ -50,7 +50,7 @@ class SpillPolicySpec extends SparkSpecBase {
       .map { case (bg, h) => bg ++ h }
     var mid = 0L
     chunks.zipWithIndex.foreach { case (chunk, i) =>
-      MergeApplier.applyBatchMor(spark, table, spark.createDataset(chunk).toDF(), "t", i.toLong)
+      MergeApplier.applyBatch(spark, table, spark.createDataset(chunk).toDF(), "t", i.toLong, mode = "mor")
       if (i == 1) mid = table.currentSnapshot().get.version
     }
     assert(table.currentSnapshot().get.morDeltas)

@@ -175,9 +175,9 @@ class TableOpsSpec extends SparkSpecBase {
     val base = (0 until 32).map(i =>
       ev(s"c$i", 0, s"t$i", "2025-01-01 00:00:00", "insert", i.toLong))
     MergeApplier.applyBatch(spark, table, spark.createDataset(base).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c5", 0, "fresh", "2025-01-01 00:01:00", "update", 100),
-      ev("c6", 0, null, "2025-01-01 00:01:01", "delete", 101))).toDF(), "w", 1L)
+      ev("c6", 0, null, "2025-01-01 00:01:01", "delete", 101))).toDF(), "w", 1L, mode = "mor")
     assert(table.currentSnapshot().get.morDeltas)
     val got = table.lookupTurn(spark, "c5", 0).collect()
     assert(got.map(_.getAs[String]("text")).toSeq == Seq("fresh"))
@@ -194,9 +194,9 @@ class TableOpsSpec extends SparkSpecBase {
     val base = for (c <- 0 until 8; t <- 0 until 6)
       yield ev(s"c$c", t, s"c$c-t$t", "2025-01-01 00:00:00", "insert", (c * 10 + t).toLong)
     MergeApplier.applyBatch(spark, table, spark.createDataset(base).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c3", 2, "updated", "2025-01-01 00:01:00", "update", 100),
-      ev("c3", 5, null, "2025-01-01 00:01:01", "delete", 101))).toDF(), "w", 1L)
+      ev("c3", 5, null, "2025-01-01 00:01:01", "delete", 101))).toDF(), "w", 1L, mode = "mor")
 
     def convMap(c: String, bound: Int = 4096) =
       table.lookupConversation(spark, c, bound).collect()
@@ -274,8 +274,8 @@ class TableOpsSpec extends SparkSpecBase {
     val t = new LakeTable(dir, numBuckets = 2)
     MergeApplier.applyBatch(spark, t, spark.createDataset((0 until 40).map(i =>
       ev(s"c$i", 0, s"a$i", "2025-01-01 00:00:00", "insert", i.toLong))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
-      ev("c1", 0, "newer", "2025-01-01 00:01:00", "update", 100))).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
+      ev("c1", 0, "newer", "2025-01-01 00:01:00", "update", 100))).toDF(), "w", 1L, mode = "mor")
     assert(t.currentSnapshot().get.morDeltas)
     val before = state(t)
     val t8 = MergeApplier.rebucket(spark, t, 8)
@@ -289,8 +289,8 @@ class TableOpsSpec extends SparkSpecBase {
     val table = new LakeTable(tmpDir("ops-history"), numBuckets = 2)
     MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
       ev("c1", 0, "a", "2025-01-01 00:00:00", "insert", 1))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(Seq(
-      ev("c1", 0, "b", "2025-01-01 00:01:00", "update", 2))).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(Seq(
+      ev("c1", 0, "b", "2025-01-01 00:01:00", "update", 2))).toDF(), "w", 1L, mode = "mor")
     table.rollback(1L)
     val h = table.history(spark).orderBy("version").collect()
     assert(h.map(_.getAs[Long]("version")).toSeq == Seq(1L, 2L, 3L))
@@ -310,7 +310,7 @@ class TableOpsSpec extends SparkSpecBase {
     val b1 = (0 until 200).map(i =>
       ev(s"c${i % 50}", 5 + i % 3, s"b$i", "2025-01-01 00:01:00", "insert", 1000L + i))
     MergeApplier.applyBatch(spark, table, spark.createDataset(b0).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, table, spark.createDataset(b1).toDF(), "w", 1L)
+    MergeApplier.applyBatch(spark, table, spark.createDataset(b1).toDF(), "w", 1L, mode = "mor")
     val before = state(table)
     MergeApplier.compactRetainTombstones(spark, table)
     assert(state(table) == before)

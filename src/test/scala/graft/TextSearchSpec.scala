@@ -37,7 +37,7 @@ class TextSearchSpec extends SparkSpecBase {
     val rows = (0 until 40).map(i =>
       ev(s"c$i", i % 4, s"alpha token$i shared", "2025-01-01 10:00:00", i.toLong)) :+
       ev("needleconv", 0, "the rare needle word", "2025-01-01 11:00:00", 1000L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(rows).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(rows).toDF(), "w", 0L, mode = "mor")
     MergeApplier.compactRetainTombstones(spark, t, textIndex = true)
     val entries = allEntries(t)
     assert(entries.nonEmpty && entries.forall(_.stats.exists(_.textBloom.nonEmpty)),
@@ -63,7 +63,7 @@ class TextSearchSpec extends SparkSpecBase {
     val rows = (0 until 80).map(i =>
       ev(s"c$i", i % 4, s"common w$i", "2025-01-01 10:00:00", i.toLong)) :+
       ev("nc", 1, "xyzzy alone", "2025-01-01 11:00:00", 2000L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(rows).toDF(), "w", 0L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(rows).toDF(), "w", 0L, mode = "mor")
     MergeApplier.compactRetainTombstones(spark, t, textIndex = true)
     val (admit, skip) = allEntries(t)
       .partition(_.stats.exists(_.mightContainToken("xyzzy")))
@@ -78,17 +78,17 @@ class TextSearchSpec extends SparkSpecBase {
     // v1 of the key contains the needle; v2 (newer, in a later delta that
     // does NOT admit the token) replaces it — a file-granular skip on the
     // delta-carrying snapshot would drop the delta and wrongly resurrect v1
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
       ev("k", 0, "needle early", "2025-01-01 10:00:00", 1L),
-      ev("other", 1, "plain text", "2025-01-01 10:00:00", 2L))).toDF(), "w", 0L)
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
-      ev("k", 0, "replaced clean", "2025-01-02 10:00:00", 3L))).toDF(), "w", 1L)
+      ev("other", 1, "plain text", "2025-01-01 10:00:00", 2L))).toDF(), "w", 0L, mode = "mor")
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
+      ev("k", 0, "replaced clean", "2025-01-02 10:00:00", 3L))).toDF(), "w", 1L, mode = "mor")
     assert(t.currentSnapshot().get.morDeltas)
     assert(searched(t, "needle").isEmpty, "superseded version must not match")
     assert(searched(t, "replaced") == Set(("k", 0)))
     // deleted rows never match either
-    MergeApplier.applyBatchMor(spark, t, spark.createDataset(Seq(
-      ev("other", 1, null, "2025-01-03 10:00:00", 4L, op = "delete"))).toDF(), "w", 2L)
+    MergeApplier.applyBatch(spark, t, spark.createDataset(Seq(
+      ev("other", 1, null, "2025-01-03 10:00:00", 4L, op = "delete"))).toDF(), "w", 2L, mode = "mor")
     assert(searched(t, "plain").isEmpty, "tombstoned row must not match")
   }
 

@@ -23,7 +23,9 @@ BENCHMARK.json fixes, and marks the metric "unresolved" when the parent's
 quartile spread alone exceeds bound x median: the pairs then cannot tell a
 change within the bound from one beyond it, unless every change run beats
 every parent run. The direction (higher or lower is better) and the bounds
-come from the change checkout's BENCHMARK.json.
+come from the change checkout's BENCHMARK.json. Above the verdicts it prints
+each checkout's main-source Scala line count (`find src/main -name '*.scala' |
+xargs cat | wc -l`), the code-size scoreboard.
 """
 import argparse
 import json
@@ -64,6 +66,17 @@ def directions(bench_json):
     out = {m["name"]: (m["better"], m.get("bound")) for m in spec.get("per_layer", [])}
     out.update({m["name"]: (m["better"], m.get("bound")) for m in spec["end_to_end"]})
     return out
+
+
+def scala_lines(checkout):
+    """Lines of every .scala file under the checkout's src/main."""
+    n = 0
+    for d, _, files in os.walk(os.path.join(checkout, "src", "main")):
+        for name in files:
+            if name.endswith(".scala"):
+                with open(os.path.join(d, name), "rb") as f:
+                    n += f.read().count(b"\n")
+    return n
 
 
 def summarize(records, dirs):
@@ -158,6 +171,9 @@ def main():
                 print(f"pair {i} seed {seed} {workload} {side}: "
                       f"{res.get('error') or value(m.get('events_per_s'))} events/s",
                       file=sys.stderr, flush=True)
+    lines = {side: scala_lines(c) for side, c in (("parent", a.parent), ("change", a.change))}
+    print(f"main-source Scala lines: parent {lines['parent']}, change {lines['change']} "
+          f"({lines['change'] - lines['parent']:+d})")
     summarize(records, dirs)
     return 0
 
