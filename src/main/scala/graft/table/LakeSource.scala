@@ -6,9 +6,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RequiresDistributionAndOrdering, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.ScanBridge
@@ -304,15 +305,22 @@ private[table] final class LakeSourceTable(root: String,
   override def capabilities(): java.util.Set[TableCapability] =
     // TRUNCATE is declared ONLY so `INSERT OVERWRITE` reaches our insert()
     // and gets the clear CDC-semantics rejection there, instead of Spark's
-    // opaque capability error (the overwrite itself is always refused)
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE)
+    // opaque capability error (the overwrite itself is always refused).
+    // BATCH_WRITE is declared so a path write (`df.write.format("lake")
+    // .option("path", …).mode("append").save()`) takes the V2 append instead
+    // of the V1 create-table fallback; Spark still plans the V1Write below,
+    // because V1_BATCH_WRITE is declared too
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
+      TableCapability.STREAMING_WRITE)
 
   /** SQL append = CDC upsert apply. `INSERT INTO lake.t …` (and
-    * `df.writeTo("lake.t").append()`) routes each inserted row through the
-    * SAME engine path as the streaming tail — [[MergeApplier.applyBatch]]
-    * with `op = insert` — so LWW versioning, bucket-local merge, schema
-    * alignment, OCC commit and lineage all hold for SQL-driven writes; an
+    * `df.writeTo("lake.t").append()`, and a path append
+    * `df.write.format("lake").option("path", root).mode("append").save()`)
+    * routes each inserted row through the SAME engine path as the streaming
+    * tail — [[MergeApplier.applyBatch]] with `op = insert` — so LWW
+    * versioning, bucket-local merge, schema alignment, OCC commit and
+    * lineage all hold for SQL-driven writes; an
     * INSERT whose (key, ts, seq) loses to a stored row is an upsert no-op,
     * exactly like the equivalent change event. Deletes and conditional
     * updates are MERGE INTO's job, not INSERT's.
@@ -359,34 +367,22 @@ private[table] final class LakeSourceTable(root: String,
           * file-count/fold-cost knob for a wide unordered source (thousands
           * of source partitions would otherwise each open a writer per
           * bucket they happen to hit); the default stays the zero-shuffle
-          * hot path, which auto-compaction already bounds. Resolving the
-          * bucket transform needs the function catalog, so this option is
-          * for `toTable("cat.tbl")` sinks (a bare path sink has no catalog
-          * to resolve `bucket` against — Spark fails that loudly).
+          * hot path (an unspecified distribution with no partition count,
+          * which plans no exchange), which auto-compaction already bounds.
+          * Resolving the bucket transform needs the function catalog, so
+          * this option is for `toTable("cat.tbl")` sinks (a bare path sink
+          * has no catalog to resolve `bucket` against — Spark fails that
+          * loudly).
           */
         val distribute = "bucket".equalsIgnoreCase(
           String.valueOf(info.options().get("distribute")))
-        if (distribute)
-          new V1Write with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              org.apache.spark.sql.connector.distributions.Distributions.clustered(
-                Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-                  snap.numBuckets, "conv_id", "turn_idx")))
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] = Array.empty
-            override def requiredNumPartitions(): Int = snap.numBuckets
-            override def toInsertableRelation: InsertableRelation = new InsertableRelation {
-              override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-                require(!overwrite,
-                  "INSERT OVERWRITE is unsupported: lake rows change via CDC upserts/deletes")
-                LakeSource.sqlAppend(root, data, info.options())
-              }
-            }
-            override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-              new LakeStreamingWrite(root, info)
-          }
-        else new V1Write {
+        new V1Write with RequiresDistributionAndOrdering {
+          override def requiredDistribution(): Distribution =
+            if (distribute) Distributions.clustered(Array(
+              Expressions.bucket(snap.numBuckets, "conv_id", "turn_idx")))
+            else Distributions.unspecified()
+          override def requiredOrdering(): Array[SortOrder] = Array.empty
+          override def requiredNumPartitions(): Int = if (distribute) snap.numBuckets else 0
           override def toInsertableRelation: InsertableRelation = new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit = {
               require(!overwrite,

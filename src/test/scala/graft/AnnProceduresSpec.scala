@@ -53,6 +53,7 @@ class AnnProceduresSpec extends SparkSpecBase {
         |  variant => 'ivf', n_lists => 4, iters => 3)""".stripMargin).collect().head
     assert(built.getAs[String]("variant") == "ivf")
     assert(built.getAs[Int]("dim") == 16 && built.getAs[Long]("corpus_count") == 100L)
+    assert(built.schema.toDDL == ProcedureSurface.results("ann_build"))
     // the index landed under the catalog base, table-style resolution
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, "idx/v/meta.json")))
 
@@ -60,6 +61,9 @@ class AnnProceduresSpec extends SparkSpecBase {
       """CALL apc1.system.ann_topk(index => 'idx/v', queries => 'apc1_queries',
         |  k => 5, n_probe => 4)""".stripMargin).collect().map(key).toSet
     assert(got == bruteKeys(queries))
+    assert(spark.sql(
+      "CALL apc1.system.ann_topk(index => 'idx/v', queries => 'apc1_queries')"
+    ).schema.toDDL == ProcedureSurface.results("ann_topk"))
   }
 
   test("CALL ann_append admits new vectors; ivfpq search needs corpus and re-ranks exactly") {
@@ -78,6 +82,7 @@ class AnnProceduresSpec extends SparkSpecBase {
       """CALL apc2.system.ann_append(index => 'idx/pq', view => 'apc2_late')"""
     ).collect().head
     assert(appended.getAs[Long]("corpus_count") == 100L)
+    assert(appended.schema.toDDL == ProcedureSurface.results("ann_append"))
 
     // an ivfpq index without corpus => loud failure, not a silent code-only answer
     val noCorpus = intercept[Exception] {
@@ -170,6 +175,7 @@ class AnnProceduresSpec extends SparkSpecBase {
       s"""CALL apc4.system.ann_maintain(index => 'idx/m', table => 'convs',
          |  starting_version => '$v0')""".stripMargin).collect().head
     assert(caught.getAs[Long]("corpus_count") == 32L)
+    assert(caught.schema.toDDL == ProcedureSurface.results("ann_maintain"))
     assert(caught.getAs[Long]("table_version") ==
       table.currentSnapshot().get.version)
 

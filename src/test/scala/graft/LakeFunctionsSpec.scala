@@ -115,6 +115,9 @@ class LakeFunctionsSpec extends SparkSpecBase {
       "CALL fns4.system.bm25(view => 'bm25_docs', terms => 'table,query,merge', k => 2)")
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(top2 == viaOp.take(2))
+    assert(spark.sql(
+      "CALL fns4.system.bm25(view => 'bm25_docs', terms => 'table,query,merge', k => 2)"
+    ).schema.toDDL == ProcedureSurface.results("bm25"))
     // unbounded k rejected
     val e = intercept[Exception] {
       spark.sql("CALL fns4.system.bm25(view => 'bm25_docs', terms => 'x', k => 1000001)")

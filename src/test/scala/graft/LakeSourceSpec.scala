@@ -283,11 +283,40 @@ class LakeSourceSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("INSERT OVERWRITE") || e.getMessage.contains("unsupported"),
       s"unexpected error: ${e.getMessage}")
-    // a time-travel handle is read-only
-    intercept[Exception] {
+    // a time-travel handle is read-only: newWriteBuilder refuses the write
+    // and no version lands
+    val headBefore = t.currentSnapshot().get.version
+    val tt = intercept[Exception] {
       batch.write.format("lake").option("path", s"$base/convs")
         .option("asOfVersion", "1").mode("append").save()
     }
+    assert(tt.getMessage.contains("cannot write to a time-travel handle"),
+      s"unexpected error: ${tt.getMessage}")
+    assert(t.currentSnapshot().get.version == headBefore)
+  }
+
+  test("path append lands through the CDC merge once; a replay with the same ids is a no-op") {
+    val base = tmpDir("lake-path-append")
+    val root = s"$base/convs"
+    val t = new LakeTable(root, numBuckets = 4)
+    apply(t, Seq(ev("c", 0, "old", "2025-01-01 00:00:00", "insert", 1)), 0L)
+    import spark.implicits._
+    val batch = Seq(("c", 1, "user", "turn1", null: String, ts("2025-01-01 00:03:00"), 11L),
+      ("d", 0, "user", "other", null: String, ts("2025-01-01 00:03:00"), 12L))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "seq")
+    def append(): Unit = batch.write.format("lake").option("path", root)
+      .option("writerId", "pw").option("batchId", "0").mode("append").save()
+    def stored() = lake(root).select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
+    val v0 = t.currentSnapshot().get.version
+
+    append()
+    val once = stored()
+    assert(t.currentSnapshot().get.version == v0 + 1)
+    assert(once == Seq(("c", 0, "old"), ("c", 1, "turn1"), ("d", 0, "other")))
+    append()
+    assert(t.currentSnapshot().get.version == v0 + 1, "replay must no-op")
+    assert(stored() == once)
   }
 
   test("SQL DELETE = snapshot tombstones: key delete, predicate delete, LWW survival of newer writes") {

@@ -24,8 +24,9 @@ quartile spread alone exceeds bound x median: the pairs then cannot tell a
 change within the bound from one beyond it, unless every change run beats
 every parent run. The direction (higher or lower is better) and the bounds
 come from the change checkout's BENCHMARK.json. Above the verdicts it prints
-each checkout's main-source Scala line count (`find src/main -name '*.scala' |
-xargs cat | wc -l`), the code-size scoreboard.
+each checkout's main-source Scala lines split into code, comment and blank
+lines (the rule is in `line_kinds`), then the change in code lines: the
+code-size scoreboard.
 """
 import argparse
 import json
@@ -68,15 +69,46 @@ def directions(bench_json):
     return out
 
 
+def line_kinds(text):
+    """(code, comment, blank) line counts of one Scala source.
+
+    A blank line holds only whitespace. A comment line starts, after its
+    indentation, with `//` or `/*`, or lies inside a block comment: from a
+    line that starts with `/*` through the first line that contains `*/`.
+    Every other line is code, also when it ends in a trailing comment. So
+    deleting a comment or a blank line never changes the code count, and
+    joining two code lines lowers it by one.
+    """
+    code = comment = blank = 0
+    in_block = False
+    for line in text.splitlines():
+        s = line.strip()
+        if in_block:
+            comment += 1
+            in_block = "*/" not in s
+        elif not s:
+            blank += 1
+        elif s.startswith("//"):
+            comment += 1
+        elif s.startswith("/*"):
+            comment += 1
+            in_block = "*/" not in s[2:]
+        else:
+            code += 1
+    return code, comment, blank
+
+
 def scala_lines(checkout):
-    """Lines of every .scala file under the checkout's src/main."""
-    n = 0
+    """(code, comment, blank) lines of every .scala file under the checkout's
+    src/main, split by `line_kinds`."""
+    total = [0, 0, 0]
     for d, _, files in os.walk(os.path.join(checkout, "src", "main")):
         for name in files:
             if name.endswith(".scala"):
-                with open(os.path.join(d, name), "rb") as f:
-                    n += f.read().count(b"\n")
-    return n
+                with open(os.path.join(d, name), encoding="utf-8") as f:
+                    for i, n in enumerate(line_kinds(f.read())):
+                        total[i] += n
+    return tuple(total)
 
 
 def summarize(records, dirs):
@@ -172,8 +204,11 @@ def main():
                       f"{res.get('error') or value(m.get('events_per_s'))} events/s",
                       file=sys.stderr, flush=True)
     lines = {side: scala_lines(c) for side, c in (("parent", a.parent), ("change", a.change))}
-    print(f"main-source Scala lines: parent {lines['parent']}, change {lines['change']} "
-          f"({lines['change'] - lines['parent']:+d})")
+    for side in ("parent", "change"):
+        code, comment, blank = lines[side]
+        print(f"main-source Scala lines, {side}: {code} code, {comment} comment, "
+              f"{blank} blank ({code + comment + blank} total)")
+    print(f"main-source code lines: {lines['change'][0] - lines['parent'][0]:+d}")
     summarize(records, dirs)
     return 0
 
