@@ -838,7 +838,7 @@ object Bench {
       rmDir(annIdxDir)
       // incremental admission, measured: a CDC batch (one third of the
       // corpus) appended against the STORED model vs the full rebuild that
-      // is the only alternative without appendIvf. The rebuild column is
+      // is the only alternative without append. The rebuild column is
       // annIdxBuildSec's cost class — train + full-corpus encode — so the
       // ratio is what a daily ingest pays per index refresh at scale.
       progress("timing: IVF index append (1/3 corpus) vs full rebuild")
@@ -848,7 +848,7 @@ object Bench {
           embDf.filter(col("vec_id") % 3 =!= 0), annApDir, nLists = 8, iters = 3)
       }
       val (apMeta, annAppendSec) = timed {
-        graft.operators.AnnIndex.appendIvf(spark, annApDir,
+        graft.operators.AnnIndex.append(spark, annApDir,
           embDf.filter(col("vec_id") % 3 === 0))
       }
       require(apMeta.corpusCount > apBase.corpusCount,
@@ -857,8 +857,8 @@ object Bench {
       // streaming maintenance, measured: the index FOLLOWS a lake table —
       // commit the late third as CDC inserts and time the change-feed
       // catch-up (AnnMaintenance.runAvailableNow: cdf diff → stored-model
-      // assign → list append → ledger commit). The append-third leg above
-      // is the floor (same quantize+append minus the feed/ledger plumbing);
+      // assign → list append → meta commit). The append-third leg above
+      // is the floor (same quantize+append minus the feed plumbing);
       // annApBuildSec is the rebuild this replaces per ingest cycle.
       progress("timing: streaming index maintenance (cdf catch-up, 1/3 corpus)")
       val annMtTbl = tmp("bench-annm-tbl"); val annMtIdx = tmp("bench-annm-idx")

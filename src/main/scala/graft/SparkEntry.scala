@@ -1085,7 +1085,7 @@ object SparkEntry {
     }),
     // INCREMENTAL index lifecycle (the CDC shape): build on two-thirds of
     // the corpus, APPEND the late third quantized against the STORED model
-    // (no retraining pass — appendIvf/appendIvfPq), search the union.
+    // (no retraining pass — AnnIndex.append), search the union.
     // Exhaustive probe (+ refine) makes assignment/encode quality
     // irrelevant to the answer, so the gates isolate exactly what append
     // adds — stored-model assignment, file append into the list dirs,
@@ -1095,7 +1095,7 @@ object SparkEntry {
       val root = gatePath("ann_ivf_appended")
       AnnIndex.buildIvf(emb.filter(col("vec_id") % 3 =!= 0), root,
         nLists = 8, iters = 3)
-      AnnIndex.appendIvf(s, root, emb.filter(col("vec_id") % 3 === 0))
+      AnnIndex.append(s, root, emb.filter(col("vec_id") % 3 === 0))
       AnnIndex.searchIvf(s, root, emb.filter(col("vec_id") < 8), k = 5,
         nProbe = 8)
     }),
@@ -1104,7 +1104,7 @@ object SparkEntry {
       val root = gatePath("ann_ivfpq_appended")
       AnnIndex.buildIvfPq(emb.filter(col("vec_id") % 3 =!= 0), root,
         nLists = 8, m = 8, codes = 16, iters = 2)
-      AnnIndex.appendIvfPq(s, root, emb.filter(col("vec_id") % 3 === 0))
+      AnnIndex.append(s, root, emb.filter(col("vec_id") % 3 === 0))
       AnnIndex.searchIvfPq(s, root, emb, emb.filter(col("vec_id") < 8), k = 5,
         nProbe = 8, refine = Int.MaxValue)
     }),

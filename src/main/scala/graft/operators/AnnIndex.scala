@@ -1,11 +1,11 @@
 package graft.operators
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** PERSISTED ANN index — the index lifecycle [[Similarity]]'s in-memory
@@ -18,11 +18,16 @@ import scala.jdk.CollectionConverters._
   *   build:  train once, assign/encode every vector, write the index as a
   *           list-partitioned parquet dataset
   *             <root>/meta.json                    (variant, dim, nLists, m,
-  *                                                  codes, corpusCount)
+  *                                                  codes, corpusCount, gen,
+  *                                                  lastBatchId, schemaJson,
+  *                                                  centroidsSchemaJson,
+  *                                                  codebooksSchemaJson)
   *             <root>/centroids/                   (coarse quantizer, tiny)
   *             <root>/codebooks/                   (PQ codebooks, tiny)
   *             <root>/vectors/list=<id>/part-….parquet
-  *                                 (IVF: vec_id, cv; IVF-PQ: vec_id, nv, codes)
+  *                                 (IVF: vec_id, cv, gen; IVF-PQ: vec_id, nv,
+  *                                  codes, gen)
+  *             <root>/tombstones/part-….parquet    (vec_id, gen; mutations)
   *   search: compute each query's probed lists from the (tiny, broadcast)
   *           centroids, then read <root>/vectors with `list IN (probed)` —
   *           Hive-style PARTITION PRUNING opens only the probed lists'
@@ -36,13 +41,12 @@ import scala.jdk.CollectionConverters._
   * write, so each list's rows land in one task → one file per list per
   * build/append. A list too large for one file gets a salt column in the
   * repartition (directory-level pruning is unaffected). The LIFECYCLE is
-  * build → append → periodic rebuild: [[appendIvf]]/[[appendIvfPq]] admit
-  * newly-arrived vectors by quantizing them against the STORED model (the
-  * CDC shape — no retraining pass, appended files land inside the list
-  * directories so pruning is untouched), and the periodic rebuild absorbs
-  * quantizer drift, which is how IVF indexes are actually operated
-  * (centroids drift ⇒ periodic retrain anyway; see Jégou/Douze/Schmid,
-  * IEEE TPAMI 2011).
+  * build → [[append]] → periodic rebuild: `append` admits newly-arrived
+  * vectors by quantizing them against the STORED model (the CDC shape — no
+  * retraining pass, appended files land inside the list directories so
+  * pruning is untouched), and the periodic rebuild absorbs quantizer drift,
+  * which is how IVF indexes are actually operated (centroids drift ⇒
+  * periodic retrain anyway; see Jégou/Douze/Schmid, IEEE TPAMI 2011).
   *
   * Id-level UPDATES and DELETES are supported WITHOUT the rebuild via
   * GENERATION-TAGGED tombstones ([[applyChanges]]) — the LSM shape, not the
@@ -57,6 +61,19 @@ import scala.jdk.CollectionConverters._
   * pruning is untouched because tombstones live outside the list dirs.
   * The periodic rebuild compacts tombstones away exactly like an LSM major
   * compaction.
+  *
+  * ONE COMMIT for every write after the build ([[append]], [[applyChanges]];
+  * see [[commit]]): recover, read the meta, validate the batch, journal the
+  * pre-write generation and file listing to `<root>/apply_inflight.json`,
+  * write the files stamped `gen + 1`, then publish the meta — the new `gen`
+  * and `corpusCount`, plus `lastBatchId` when the caller names a batch — in
+  * one atomic rename. That rename is the commit point; the journal is
+  * deleted after it. [[recover]] (run first by every write and by
+  * [[graft.streaming.AnnMaintenance]]) deletes the files the journal does not
+  * list only while the meta still holds the journal's generation, so a
+  * write killed anywhere is either wholly absent or wholly committed.
+  * `lastBatchId` is the maintenance stream's exactly-once ledger: it commits
+  * with the batch's data, in the same meta write.
   */
 object AnnIndex {
 
@@ -65,10 +82,12 @@ object AnnIndex {
     * the index touches exactly meta + centroids + the probed lists' files.
     * `gen` is the index's current generation — the batch counter that stamps
     * appended rows and tombstones (see the class doc's LWW rule).
+    * `lastBatchId` is the last maintenance batch the index holds (−1: none).
     */
   final case class Meta(variant: String, dim: Int, nLists: Int, m: Int,
       codes: Int, corpusCount: Long, schemaJson: String, gen: Long = 0L,
-      centroidsSchemaJson: String = "", codebooksSchemaJson: String = "") {
+      centroidsSchemaJson: String = "", codebooksSchemaJson: String = "",
+      lastBatchId: Long = -1L) {
     def schema: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.DataType.fromJson(schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -98,9 +117,21 @@ object AnnIndex {
       case None => spark.read.parquet(path)
     }
 
+  /** Write `node` to `<root>/<name>` through the sibling `.tmp-<name>` and
+    * one atomic rename (as [[graft.table.LakeTable.writeManifest]] does): a
+    * kill mid-write leaves the previous file whole and at worst a torn temp
+    * file, which the next write of `name` replaces.
+    */
+  private def writeAtomically(root: String, name: String, node: JsonNode): Unit = {
+    val tmp = Paths.get(root, s".tmp-$name")
+    Files.createDirectories(tmp.getParent)
+    Files.write(tmp, new ObjectMapper().writerWithDefaultPrettyPrinter()
+      .writeValueAsBytes(node))
+    Files.move(tmp, Paths.get(root, name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
   private def writeMeta(root: String, meta: Meta): Unit = {
-    val om = new ObjectMapper()
-    val node = om.createObjectNode()
+    val node = new ObjectMapper().createObjectNode()
     node.put("variant", meta.variant)
     node.put("dim", meta.dim)
     node.put("nLists", meta.nLists)
@@ -108,18 +139,16 @@ object AnnIndex {
     node.put("codes", meta.codes)
     node.put("corpusCount", meta.corpusCount)
     node.put("gen", meta.gen)
+    node.put("lastBatchId", meta.lastBatchId)
     node.put("schemaJson", meta.schemaJson)
     node.put("centroidsSchemaJson", meta.centroidsSchemaJson)
     node.put("codebooksSchemaJson", meta.codebooksSchemaJson)
-    Files.createDirectories(Paths.get(root))
-    Files.write(Paths.get(root, "meta.json"),
-      om.writerWithDefaultPrettyPrinter().writeValueAsBytes(node),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    writeAtomically(root, "meta.json", node)
   }
 
-  /** Re-write the meta file (crash-recovery hook for
-    * [[graft.streaming.AnnMaintenance]]'s torn-append rollback, which must
-    * restore `corpusCount`). Not a public mutation surface.
+  /** Publish a meta with no file write — [[graft.streaming.AnnMaintenance]]
+    * records a batch with no index work by its `lastBatchId` alone. One
+    * atomic write, so it needs no journal. Not a public mutation surface.
     */
   private[graft] def writeMetaFor(root: String, meta: Meta): Unit =
     writeMeta(root, meta)
@@ -132,7 +161,8 @@ object AnnIndex {
       n.get("schemaJson").asText(),
       Option(n.get("gen")).map(_.asLong()).getOrElse(0L),
       Option(n.get("centroidsSchemaJson")).map(_.asText()).getOrElse(""),
-      Option(n.get("codebooksSchemaJson")).map(_.asText()).getOrElse(""))
+      Option(n.get("codebooksSchemaJson")).map(_.asText()).getOrElse(""),
+      Option(n.get("lastBatchId")).map(_.asLong()).getOrElse(-1L))
   }
 
   // --- IVF-flat ------------------------------------------------------------
@@ -164,84 +194,96 @@ object AnnIndex {
       // empty — stale rows whose tombstones clearTombstones is about to drop
       .write.option("partitionOverwriteMode", "static")
       .mode("overwrite").partitionBy("list").parquet(s"$root/vectors")
-    clearTombstones(root) // they number the OLD generations; poison after gen→0
-    Files.deleteIfExists(inflightPath(root)) // rebuild supersedes any torn batch
-    val meta = Meta("ivf", dim, nLists, 0, 0, corpusCount, indexed.schema.json,
-      centroidsSchemaJson = centroids.schema.json)
-    writeMeta(root, meta)
-    meta
+    publishBuild(root, Meta("ivf", dim, nLists, 0, 0, corpusCount,
+      indexed.schema.json, centroidsSchemaJson = centroids.schema.json))
   }
 
-  /** Incrementally APPEND new vectors to a persisted IVF index — the CDC
-    * shape: documents keep arriving between periodic retrains, and
-    * re-training + re-encoding 10^10 stored vectors to admit a day's worth
-    * of new ones is the wrong cost class. New vectors are assigned to lists
-    * by the STORED centroids (no training pass) and their files land inside
-    * the existing `list=<id>` directories, so probe-time partition pruning
-    * is untouched; `corpusCount` (which sizes IVF-PQ's auto-refine) is
-    * updated last — a reader that races the append sees the old complete
-    * index, never a torn one (parquet part-files appear atomically per
-    * task, and search never lists files it hasn't been told about via the
-    * directory scan... the honest caveat: a CONCURRENT search's directory
-    * listing may see a partial append; serialize appends against reads, or
-    * front the index with the lake table when that matters).
+  /** The build's commit: the tombstones die with the generations they
+    * numbered ([[clearTombstones]]), the rebuild supersedes any torn write's
+    * journal, and the maintenance stream's `lastBatchId` carries over, so a
+    * replayed batch the rebuilt corpus already holds stays a no-op.
+    */
+  private def publishBuild(root: String, meta: Meta): Meta = {
+    val built = meta.copy(lastBatchId =
+      if (Files.exists(Paths.get(root, "meta.json"))) readMeta(root).lastBatchId
+      else -1L)
+    clearTombstones(root)
+    Files.deleteIfExists(Paths.get(root, Journal))
+    writeMeta(root, built)
+    built
+  }
+
+  // --- append: both variants ----------------------------------------------
+
+  /** Incrementally APPEND new vectors to a persisted index — the CDC shape:
+    * documents keep arriving between periodic retrains, and re-training +
+    * re-encoding 10^10 stored vectors to admit a day's worth of new ones is
+    * the wrong cost class. The variant comes from the meta: IVF assigns the
+    * new vectors to lists by the STORED centroids, IVF-PQ residual-encodes
+    * them against the STORED coarse quantizer + codebooks
+    * ([[Similarity.encodePq]], the exact encoder the build used) — no
+    * training pass either way — and their files land inside the existing
+    * `list=<id>` directories, so probe-time partition pruning is untouched.
+    * `corpusCount` (which sizes IVF-PQ's auto-refine,
+    * [[Similarity.effectiveRefine]]) moves in the meta write that commits
+    * the batch — a reader that races the append sees the old complete meta
+    * (the honest caveat: a CONCURRENT search's directory listing may see a
+    * partial append's files; serialize appends against reads, or front the
+    * index with the lake table when that matters). `batchId` ≥ 0 is
+    * recorded as the meta's `lastBatchId` in the same write.
     *
     * Append-ONLY by contract: the caller appends NEW vec_ids. Replacing an
-    * existing id needs the rebuild (or the full lake-table treatment —
-    * snapshots + LWW); a duplicated id would simply appear twice. Centroid
-    * DRIFT is the appender's operating limit — vectors from a distribution
-    * the training never saw still land in their nearest stored list
-    * (search stays CORRECT at any probe count; exhaustive probe stays
-    * exact), but lists grow lopsided and partial-probe recall decays ⇒
-    * periodic rebuild, which is how IVF indexes are actually operated.
+    * existing id needs [[applyChanges]] or the rebuild; a duplicated id
+    * would simply appear twice. Centroid DRIFT is the appender's operating
+    * limit — vectors from a distribution the training never saw still land
+    * in their nearest stored list (search stays CORRECT at any probe count;
+    * exhaustive probe stays exact), but lists grow lopsided and partial-
+    * probe recall decays ⇒ periodic rebuild, which is how IVF indexes are
+    * actually operated. On IVF-PQ drift also costs CODE fidelity, since the
+    * codebooks never saw the new residual distribution, so the refine
+    * window is the appended vectors' safety net until the next rebuild.
+    *
+    * Every vector must match the index's dimension BEFORE any file is
+    * written — a silently-appended wrong-width vector would poison every
+    * later search that probes its list. The check and the row count ride
+    * the batch's checkpoint job via observe(), so they cost no job of their
+    * own.
     */
-  def appendIvf(spark: SparkSession, root: String, newVectors: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Meta = {
-    recoverInflight(root)
+  def append(spark: SparkSession, root: String, vectors: DataFrame,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      batchId: Long = -1L): Meta = {
+    recover(root)
     val meta = readMeta(root)
-    require(meta.variant == "ivf", s"index at $root is ${meta.variant}")
-    val (c, n) = checkpointDimChecked(newVectors, idCol, vecCol, meta.dim)
-    beginInflight(root, meta)
-    appendRowsIvf(spark, root, meta, c, meta.gen + 1)
-    val updated = meta.copy(corpusCount = meta.corpusCount + n,
-      gen = meta.gen + 1)
-    writeMeta(root, updated)
-    commitInflight(root)
-    updated
-  }
-
-  /** Assign `c` (vec_id, cv) to lists by the stored centroids and append the
-    * rows stamped with `gen` — the write half shared by [[appendIvf]] and
-    * [[applyChanges]].
-    */
-  private def appendRowsIvf(spark: SparkSession, root: String, meta: Meta,
-      c: DataFrame, gen: Long): Unit = {
-    val centroids = readWithSchema(spark, s"$root/centroids", meta.centroidsSchema)
-    Similarity.assignListsCos(c, centroids, "vec_id", "cv")
-      .withColumn("gen", lit(gen))
-      .repartition(col("list"))
-      .write.mode("append").partitionBy("list").parquet(s"$root/vectors")
-  }
-
-  /** Checkpoint an append batch with the dimension check + row count RIDING
-    * the checkpoint job via observe(): every vector must match the index's
-    * dimension BEFORE any file is written — a silently-appended wrong-width
-    * vector would poison every later search that probes its list — and the
-    * observation completes with the checkpoint, so the check costs no job of
-    * its own. Returns (checkpointed batch, row count).
-    */
-  private def checkpointDimChecked(newVectors: DataFrame, idCol: String,
-      vecCol: String, dim: Int): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
-    val c = Par.spread(newVectors)
+    val c = Par.spread(vectors)
       .select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-      .observe(obs, count(when(size(col("cv")) =!= dim, 1)).as("bad"),
+      .observe(obs, count(when(size(col("cv")) =!= meta.dim, 1)).as("bad"),
         count(lit(1)).as("n"))
       .localCheckpoint(true)
     val bad = obs.get("bad").asInstanceOf[Long]
     require(bad == 0L,
-      s"append batch has $bad vector(s) whose dimension != the index's $dim")
-    (c, obs.get("n").asInstanceOf[Long])
+      s"append batch has $bad vector(s) whose dimension != the index's ${meta.dim}")
+    commit(root, meta, batchId) { gen =>
+      appendRows(spark, root, meta, c, gen)
+      meta.corpusCount + obs.get("n").asInstanceOf[Long]
+    }
+  }
+
+  /** Quantize `c` (vec_id, cv) against the stored model — IVF: assign lists
+    * by the centroids; IVF-PQ: residual-encode — and append the rows stamped
+    * with `gen`. The write half shared by [[append]] and [[applyChanges]].
+    */
+  private def appendRows(spark: SparkSession, root: String, meta: Meta,
+      c: DataFrame, gen: Long): Unit = {
+    val centroids = readWithSchema(spark, s"$root/centroids", meta.centroidsSchema)
+    val rows =
+      if (meta.variant == "ivf") Similarity.assignListsCos(c, centroids, "vec_id", "cv")
+      else Similarity.encodePq(centroids,
+        readWithSchema(spark, s"$root/codebooks", meta.codebooksSchema), c,
+        meta.m, meta.dim / meta.m)
+    rows.withColumn("gen", lit(gen))
+      .repartition(col("list"))
+      .write.mode("append").partitionBy("list").parquet(s"$root/vectors")
   }
 
   // --- mutations: generation-tagged tombstones (the LSM shape) --------------
@@ -266,12 +308,11 @@ object AnnIndex {
     * vector per conv_id over a (conv_id, turn_idx)-keyed table) must be
     * collapsed to one change per id by the caller first.
     * An update whose vector is null degrades to a delete (tombstone, no
-    * append). CRASH-SAFE on its own: the pre-batch file listing + counters
-    * are journaled to `<root>/apply_inflight.json` before any write, and a
-    * retry first rolls a torn attempt back — so a crash anywhere inside the
-    * batch can never leave two live versions or double-admit a row (the
-    * same rollback unit [[graft.streaming.AnnMaintenance]]'s ledger uses;
-    * its cost is O(index files), bounded by the periodic rebuild).
+    * append). CRASH-SAFE on its own: the batch goes through the one
+    * [[commit]], so a crash anywhere inside it can never leave two live
+    * versions or double-admit a row (the journal's listing costs O(index
+    * files), bounded by the periodic rebuild). `batchId` ≥ 0 is recorded as
+    * the meta's `lastBatchId` in the commit.
     * `corpusCount` (auto-refine sizing) tracks appended − deleted rows
     * (null-vector inserts are no-ops and not counted), approximate under
     * deletes of absent ids; the periodic rebuild re-exacts it and compacts
@@ -279,10 +320,9 @@ object AnnIndex {
     */
   def applyChanges(spark: SparkSession, root: String, changes: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      typeCol: String = "change_type"): Meta = {
-    recoverInflight(root)
+      typeCol: String = "change_type", batchId: Long = -1L): Meta = {
+    recover(root)
     val meta = readMeta(root)
-    val gen = meta.gen + 1
     // every per-row count — including the dimension check — rides the
     // batch's checkpoint job via observe(); only the distinct-id tie check
     // (observe cannot carry DISTINCT aggregates) stays a second (single) job
@@ -325,30 +365,20 @@ object AnnIndex {
     // validated BEFORE the first write (the observation completes with the
     // checkpoint): a failure after the tombstones land would leave a
     // half-applied generation that hides the mutated ids from every search
-    // (searches never run recoverInflight) until the next mutation call
-    // rolls it back
+    // (searches never run recover) until the next write rolls it back
     require(nBadDim == 0L,
       s"append batch has $nBadDim vector(s) whose dimension != the index's ${meta.dim}")
-    beginInflight(root, meta)
-    if (nUpd + nDel > 0)
-      ch.filter(col("ct").isin("update", "delete"))
-        .select(col("vec_id"), lit(gen).as("gen"))
-        .coalesce(1) // tombstones are tiny; one file per batch
-        .write.mode("append").parquet(s"$root/tombstones")
-    if (nInsLive + (nUpd - nUpdNull) > 0) {
-      meta.variant match {
-        case "ivf" => appendRowsIvf(spark, root, meta, adds, gen)
-        case _ => appendRowsIvfPq(spark, root, meta, adds, gen)
-      }
+    commit(root, meta, batchId) { gen =>
+      if (nUpd + nDel > 0)
+        ch.filter(col("ct").isin("update", "delete"))
+          .select(col("vec_id"), lit(gen).as("gen"))
+          .coalesce(1) // tombstones are tiny; one file per batch
+          .write.mode("append").parquet(s"$root/tombstones")
+      if (nInsLive + (nUpd - nUpdNull) > 0) appendRows(spark, root, meta, adds, gen)
+      // appended − deleted rows: null-vector inserts never land, a null-vector
+      // update removes its row (tombstone with no replacement)
+      math.max(0L, meta.corpusCount + nInsLive - nDel - nUpdNull)
     }
-    // appended − deleted rows: null-vector inserts never land, a null-vector
-    // update removes its row (tombstone with no replacement)
-    val updated = meta.copy(
-      corpusCount = math.max(0L, meta.corpusCount + nInsLive - nDel - nUpdNull),
-      gen = gen)
-    writeMeta(root, updated)
-    commitInflight(root)
-    updated
   }
 
   /** An in-place rebuild is the LSM major compaction: the new index re-
@@ -365,12 +395,12 @@ object AnnIndex {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  /** Drop `<root>/tombstones` if a rollback emptied it: [[liveRows]] keys
+  /** Drop `<root>/tombstones` if [[recover]] emptied it: [[liveRows]] keys
     * its fast path on the DIRECTORY existing, so an empty husk left by a
     * torn first-ever mutation batch would tax every future search on an
     * otherwise append-only index with a pointless scan + join.
     */
-  private[graft] def pruneEmptyTombstoneDir(root: String): Unit = {
+  private def pruneEmptyTombstoneDir(root: String): Unit = {
     val dir = Paths.get(root, "tombstones")
     if (!Files.exists(dir)) return
     val s = Files.walk(dir)
@@ -381,8 +411,7 @@ object AnnIndex {
   }
 
   /** All data files under `<root>/vectors` and `<root>/tombstones`, root-
-    * relative — the rollback unit shared with
-    * [[graft.streaming.AnnMaintenance]]'s ledger. O(index files), which the
+    * relative — the listing the journal records. O(index files), which the
     * periodic rebuild bounds the same way compaction bounds a manifest.
     */
   private[graft] def listIndexFiles(root: String): Set[String] = {
@@ -397,47 +426,56 @@ object AnnIndex {
     walk("vectors") ++ walk("tombstones")
   }
 
-  // --- bare-mutation crash safety --------------------------------------------
-  //
-  // appendIvf / appendIvfPq / applyChanges journal the pre-batch state to
-  // <root>/apply_inflight.json BEFORE writing anything; the next mutation
-  // (or an explicit retry of the same one) first rolls a torn attempt back
-  // — files not in the pre-listing deleted, corpusCount/gen restored — so a
-  // crash anywhere in the batch can never double-admit a row or leave a
-  // half-applied generation, with or without the streaming ledger above it.
+  // --- the one commit: journal, files, meta -----------------------------------
 
-  private def inflightPath(root: String): java.nio.file.Path =
-    Paths.get(root, "apply_inflight.json")
+  private val Journal = "apply_inflight.json"
 
-  private def beginInflight(root: String, meta: Meta): Unit = {
-    val om = new ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("preCorpusCount", meta.corpusCount)
-    node.put("preGen", meta.gen)
+  /** Journal a write's pre-write generation and file listing. Package-
+    * visible so specs can re-arm the journal a killed write leaves.
+    */
+  private[graft] def writeJournal(root: String, preGen: Long,
+      preFiles: Set[String]): Unit = {
+    val node = new ObjectMapper().createObjectNode()
+    node.put("preGen", preGen)
     val arr = node.putArray("preFiles")
-    listIndexFiles(root).toSeq.sorted.foreach(arr.add)
-    Files.write(inflightPath(root),
-      om.writerWithDefaultPrettyPrinter().writeValueAsBytes(node),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    preFiles.toSeq.sorted.foreach(arr.add)
+    writeAtomically(root, Journal, node)
   }
 
-  private def commitInflight(root: String): Unit =
-    Files.deleteIfExists(inflightPath(root))
+  /** The commit of every write after the build, on the `meta` its caller
+    * read after [[recover]] and validated its batch against: journal
+    * (`meta.gen`, the file listing), `write(gen)` the batch's files stamped
+    * `gen = meta.gen + 1` (it returns the new corpusCount), publish the meta
+    * with the new `gen`, `corpusCount` and — for `batchId` ≥ 0 —
+    * `lastBatchId` in one atomic write (THE commit point), then drop the
+    * journal.
+    */
+  private def commit(root: String, meta: Meta, batchId: Long)(
+      write: Long => Long): Meta = {
+    writeJournal(root, meta.gen, listIndexFiles(root))
+    val gen = meta.gen + 1
+    val updated = meta.copy(corpusCount = write(gen), gen = gen,
+      lastBatchId = math.max(meta.lastBatchId, batchId))
+    writeMeta(root, updated)
+    Files.delete(Paths.get(root, Journal))
+    updated
+  }
 
-  private def recoverInflight(root: String): Unit = {
-    val p = inflightPath(root)
+  /** Settle the write a kill interrupted. While the meta still holds the
+    * journal's `preGen` the write never committed: delete every index file
+    * the journal does not list (only index writes land there) and an
+    * emptied tombstones dir. Past it the meta write committed, and the files
+    * stay. The meta is never rewritten; the journal is always dropped.
+    */
+  private[graft] def recover(root: String): Unit = {
+    val p = Paths.get(root, Journal)
     if (!Files.exists(p)) return
     val n = new ObjectMapper().readTree(Files.readAllBytes(p))
-    val pre = n.get("preFiles").elements().asScala.map(_.asText()).toSet
-    val base = Paths.get(root)
-    (listIndexFiles(root) -- pre).foreach { rel =>
-      Files.deleteIfExists(base.resolve(rel))
+    if (readMeta(root).gen == n.get("preGen").asLong()) {
+      val pre = n.get("preFiles").elements().asScala.map(_.asText()).toSet
+      (listIndexFiles(root) -- pre).foreach(rel => Files.deleteIfExists(Paths.get(root, rel)))
+      pruneEmptyTombstoneDir(root)
     }
-    pruneEmptyTombstoneDir(root)
-    val meta = readMeta(root)
-    val (cc, g) = (n.get("preCorpusCount").asLong(), n.get("preGen").asLong())
-    if (meta.corpusCount != cc || meta.gen != g)
-      writeMeta(root, meta.copy(corpusCount = cc, gen = g))
     Files.delete(p)
   }
 
@@ -507,53 +545,10 @@ object AnnIndex {
       // lists the new assignment leaves empty, resurrecting dead rows
       .write.option("partitionOverwriteMode", "static")
       .mode("overwrite").partitionBy("list").parquet(s"$root/vectors")
-    clearTombstones(root) // they number the OLD generations; poison after gen→0
-    Files.deleteIfExists(inflightPath(root)) // rebuild supersedes any torn batch
-    val meta = Meta("ivfpq", model.dim, nLists, m, codes, model.corpusCount,
-      wide.schema.json,
+    publishBuild(root, Meta("ivfpq", model.dim, nLists, m, codes,
+      model.corpusCount, wide.schema.json,
       centroidsSchemaJson = model.coarse.schema.json,
-      codebooksSchemaJson = model.cbs.schema.json)
-    writeMeta(root, meta)
-    meta
-  }
-
-  /** Incrementally APPEND new vectors to a persisted IVF-PQ index: residual-
-    * encode them against the STORED coarse quantizer + codebooks (no
-    * training pass — [[Similarity.encodePq]], the exact encoder the build
-    * used) and append the code files into the existing list directories.
-    * Same contract and caveats as [[appendIvf]] (append-only ids, serialize
-    * appends against reads, quantizer drift ⇒ periodic rebuild — here drift
-    * also costs CODE fidelity, since the codebooks never saw the new
-    * residual distribution, so the refine window is the appended vectors'
-    * safety net until the next rebuild). `corpusCount` is updated so
-    * [[Similarity.effectiveRefine]]'s auto sizing tracks the real index.
-    */
-  def appendIvfPq(spark: SparkSession, root: String, newVectors: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Meta = {
-    recoverInflight(root)
-    val meta = readMeta(root)
-    require(meta.variant == "ivfpq", s"index at $root is ${meta.variant}")
-    val (c, n) = checkpointDimChecked(newVectors, idCol, vecCol, meta.dim)
-    beginInflight(root, meta)
-    appendRowsIvfPq(spark, root, meta, c, meta.gen + 1)
-    val updated = meta.copy(corpusCount = meta.corpusCount + n,
-      gen = meta.gen + 1)
-    writeMeta(root, updated)
-    commitInflight(root)
-    updated
-  }
-
-  /** Residual-encode `c` against the stored model and append the code rows
-    * stamped with `gen` — shared by [[appendIvfPq]] and [[applyChanges]].
-    */
-  private def appendRowsIvfPq(spark: SparkSession, root: String, meta: Meta,
-      c: DataFrame, gen: Long): Unit = {
-    val coarse = readWithSchema(spark, s"$root/centroids", meta.centroidsSchema)
-    val cbs = readWithSchema(spark, s"$root/codebooks", meta.codebooksSchema)
-    Similarity.encodePq(coarse, cbs, c, meta.m, meta.dim / meta.m)
-      .withColumn("gen", lit(gen))
-      .repartition(col("list"))
-      .write.mode("append").partitionBy("list").parquet(s"$root/vectors")
+      codebooksSchemaJson = model.cbs.schema.json))
   }
 
   /** Search a persisted IVF-PQ index: ADC scoring over the probed lists'

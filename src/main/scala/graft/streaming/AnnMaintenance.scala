@@ -1,15 +1,12 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.AnnIndex
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 /** STREAMING maintenance of a persisted ANN index: tail a lake table's
   * change feed (`lake-cdf`) and keep the index fresh — the CDC closure of
@@ -41,16 +38,14 @@ import scala.jdk.CollectionConverters._
   *     applyChanges REJECTS that loudly (same-gen ties would corrupt LWW);
   *     collapse to one net change per id upstream, or key the index by the
   *     full table key.
-  *   - EXACTLY-ONCE across restarts via a write-ahead ledger
-  *     (`<indexRoot>/stream_ledger.json`): a replayed foreachBatch id is
-  *     skipped; a batch that CRASHED mid-apply is ROLLED BACK on recovery
-  *     (the ledger records the pre-batch file listing — vectors AND
-  *     tombstones — plus corpusCount and gen; files not in the listing are
-  *     deleted, the counters restored) and re-applied — a torn batch can
-  *     never double-admit a vector or leave a half-applied generation. The
-  *     pre-batch listing is O(index files); batches add ≤ nLists + 1 files
-  *     and the periodic rebuild collapses them, which bounds the ledger the
-  *     same way compaction bounds the manifest list.
+  *   - EXACTLY-ONCE across restarts: the ledger is the index meta's
+  *     `lastBatchId`, which commits in the same atomic meta write as the
+  *     batch's data ([[AnnIndex.append]]/[[AnnIndex.applyChanges]] with the
+  *     batch id). A replayed foreachBatch id at or below it is skipped; a
+  *     batch that CRASHED mid-apply is settled by [[AnnIndex.recover]]
+  *     (uncommitted files deleted) and re-applied — a torn batch can never
+  *     double-admit a vector or leave a half-applied generation. A rebuild
+  *     keeps `lastBatchId`, so a replay after it stays a no-op.
   *   - Centroid drift is the appender's limit (search stays CORRECT at any
   *     probe count — exhaustive probe stays exact — but partial-probe
   *     recall decays as lists grow lopsided): schedule rebuilds like
@@ -103,21 +98,18 @@ object AnnMaintenance {
     try q.awaitTermination() finally if (q.isActive) q.stop()
   }
 
-  /** One micro-batch against the index, with the ledger protocol. Package-
-    * visible so the spec can drive replay/crash shapes deterministically.
+  /** One micro-batch against the index, exactly once by the meta's
+    * `lastBatchId`. Package-visible so the spec can drive replay/crash
+    * shapes deterministically.
     */
   private[streaming] def applyBatch(spark: SparkSession, indexRoot: String,
       batch: DataFrame, batchId: Long, idCol: String, vecCol: String,
       mutations: String): Unit = {
     require(Modes(mutations),
       s"mutations must be one of ${Modes.mkString("|")}, got '$mutations'")
-    val ledger = readLedger(indexRoot)
-    if (batchId <= ledger.lastBatchId) return // checkpoint replay: already applied
-    // crash recovery: a ledger with an inflight batch means the previous
-    // attempt died between file writes and ledger-commit — roll its files
-    // back (they may be partial OR complete; either way re-applying from
-    // scratch is the only state we can prove) before touching anything
-    ledger.inflight.foreach(inf => rollback(indexRoot, inf))
+    AnnIndex.recover(indexRoot)
+    val meta = AnnIndex.readMeta(indexRoot)
+    if (batchId <= meta.lastBatchId) return // checkpoint replay: already applied
 
     // one pass over the batch: the change-class counts ride the feed's
     // checkpoint job via observe() (pre-images are metadata for OTHER
@@ -138,87 +130,16 @@ object AnnMaintenance {
         "for the tombstone-based LWW closure, mutations=\"skip\" to drop them " +
         "(index serves stale vectors until rebuild), or rebuild to absorb them")
 
-    val work = mutations match {
-      case "apply" => ins + mut
-      case _ => ins
-    }
-    if (work > 0) {
-      val meta = AnnIndex.readMeta(indexRoot)
-      writeLedger(indexRoot, Ledger(ledger.lastBatchId,
-        Some(Inflight(batchId, AnnIndex.listIndexFiles(indexRoot), meta.corpusCount,
-          meta.gen))))
-      if (mutations == "apply") {
-        AnnIndex.applyChanges(spark, indexRoot,
-          b.filter(col("change_type").isin("insert", "update", "delete")),
-          idCol, vecCol)
-      } else {
-        val inserts = b.filter(col("change_type") === "insert")
-          .filter(col(vecCol).isNotNull)
-          .select(col(idCol), col(vecCol))
-        meta.variant match {
-          case "ivf" => AnnIndex.appendIvf(spark, indexRoot, inserts, idCol, vecCol)
-          case _ => AnnIndex.appendIvfPq(spark, indexRoot, inserts, idCol, vecCol)
-        }
-      }
-    }
-    writeLedger(indexRoot, Ledger(batchId, None))
-  }
-
-  // --- write-ahead ledger ----------------------------------------------------
-
-  private[streaming] final case class Inflight(batchId: Long,
-      preFiles: Set[String], preCorpusCount: Long, preGen: Long)
-  private[streaming] final case class Ledger(lastBatchId: Long,
-      inflight: Option[Inflight])
-
-  private def ledgerPath(root: String): Path = Paths.get(root, "stream_ledger.json")
-
-  private[streaming] def readLedger(root: String): Ledger = {
-    val p = ledgerPath(root)
-    if (!Files.exists(p)) return Ledger(-1L, None)
-    val n = new ObjectMapper().readTree(Files.readAllBytes(p))
-    val inflight = Option(n.get("inflightBatchId")).map { b =>
-      Inflight(b.asLong(),
-        n.get("preFiles").elements().asScala.map(_.asText()).toSet,
-        n.get("preCorpusCount").asLong(),
-        Option(n.get("preGen")).map(_.asLong()).getOrElse(0L))
-    }
-    Ledger(n.get("lastBatchId").asLong(), inflight)
-  }
-
-  private[streaming] def writeLedger(root: String, l: Ledger): Unit = {
-    val om = new ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("lastBatchId", l.lastBatchId)
-    l.inflight.foreach { inf =>
-      node.put("inflightBatchId", inf.batchId)
-      node.put("preCorpusCount", inf.preCorpusCount)
-      node.put("preGen", inf.preGen)
-      val arr = node.putArray("preFiles")
-      inf.preFiles.toSeq.sorted.foreach(arr.add)
-    }
-    Files.write(ledgerPath(root),
-      om.writerWithDefaultPrettyPrinter().writeValueAsBytes(node),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
-
-  /** Undo a torn batch: delete every index file the inflight record does
-    * not list (only our writes land there — the recovery owns the index
-    * the same way the streaming query does), restore corpusCount and gen.
-    * A tombstones/ directory the rollback emptied is dropped too, or its
-    * husk would defeat [[AnnIndex]]'s no-tombstone-dir search fast path
-    * forever on an otherwise append-only index.
-    */
-  private def rollback(root: String, inf: Inflight): Unit = {
-    val base = Paths.get(root)
-    (AnnIndex.listIndexFiles(root) -- inf.preFiles).foreach { rel =>
-      Files.deleteIfExists(base.resolve(rel))
-    }
-    AnnIndex.pruneEmptyTombstoneDir(root)
-    val meta = AnnIndex.readMeta(root)
-    if (meta.corpusCount != inf.preCorpusCount || meta.gen != inf.preGen)
-      AnnIndex.writeMetaFor(root,
-        meta.copy(corpusCount = inf.preCorpusCount, gen = inf.preGen))
-    writeLedger(root, Ledger(inf.batchId - 1, None))
+    val work = if (mutations == "apply") ins + mut else ins
+    if (work == 0) AnnIndex.writeMetaFor(indexRoot, meta.copy(lastBatchId = batchId))
+    else if (mutations == "apply")
+      AnnIndex.applyChanges(spark, indexRoot,
+        b.filter(col("change_type").isin("insert", "update", "delete")),
+        idCol, vecCol, batchId = batchId)
+    else
+      AnnIndex.append(spark, indexRoot,
+        b.filter(col("change_type") === "insert").filter(col(vecCol).isNotNull)
+          .select(col(idCol), col(vecCol)),
+        idCol, vecCol, batchId)
   }
 }

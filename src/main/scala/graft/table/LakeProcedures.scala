@@ -251,10 +251,10 @@ object LakeProcedures {
 
     /** `CALL cat.system.ann_append(index => 'idx/docs', view => 'new_vectors')`
       * — admit newly-arrived vectors by quantizing them against the STORED
-      * model (no retraining pass — [[graft.operators.AnnIndex.appendIvf]]/
-      * [[graft.operators.AnnIndex.appendIvfPq]]); the CDC half of the index
+      * model of whichever variant the index holds (no retraining pass —
+      * [[graft.operators.AnnIndex.append]]); the CDC half of the index
       * lifecycle, from SQL. Append-only ids; quantizer drift ⇒ periodic
-      * `ann_build` rebuild (the operators' documented contract).
+      * `ann_build` rebuild (the operator's documented contract).
       */
     Proc("ann_append",
       "ann_append(index, view, id_col => 'vec_id', vec_col => 'embedding'): quantize " +
@@ -262,13 +262,9 @@ object LakeProcedures {
       Seq(p("index", StringType), p("view", StringType),
         pDefault("id_col", StringType, "'vec_id'"), pDefault("vec_col", StringType, "'embedding'")),
       cols(nullable = false, "variant" -> StringType, "corpus_count" -> LongType)) { a =>
-      val root = a.index
-      val batch = a.spark.table(a.required(1, "view argument"))
-      val (idCol, vecCol) = (a.str(2, "vec_id"), a.str(3, "embedding"))
-      val meta = AnnIndex.readMeta(root).variant match {
-        case "ivf" => AnnIndex.appendIvf(a.spark, root, batch, idCol, vecCol)
-        case _ => AnnIndex.appendIvfPq(a.spark, root, batch, idCol, vecCol)
-      }
+      val meta = AnnIndex.append(a.spark, a.index,
+        a.spark.table(a.required(1, "view argument")), a.str(2, "vec_id"),
+        a.str(3, "embedding"))
       Seq(Row(meta.variant, meta.corpusCount))
     },
 
@@ -341,12 +337,12 @@ object LakeProcedures {
       * .AvailableNow run, from SQL — the scheduler-friendly shape (cron calls
       * `ann_maintain` the way it calls `compact`; a long-lived tail uses the
       * Scala `AnnMaintenance.start` surface). Exactly-once is the stream's
-      * (feed offsets = table versions in the checkpoint × the index's
-      * write-ahead ledger), so a re-CALL with no new commits is a no-op. The
+      * (feed offsets = table versions in the checkpoint × the index meta's
+      * `lastBatchId`), so a re-CALL with no new commits is a no-op. The
       * checkpoint defaults to `<indexRoot>/checkpoint` — keep it if you
       * override: a NEW checkpoint with `starting_version => 'earliest'`
       * re-bootstraps the whole table as inserts into an index that already
-      * holds it (the ledger only dedups batch ids within one checkpoint
+      * holds it (`lastBatchId` only dedups batch ids within one checkpoint
       * lineage).
       */
     Proc("ann_maintain",

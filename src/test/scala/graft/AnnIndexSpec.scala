@@ -138,7 +138,7 @@ class AnnIndexSpec extends SparkSpecBase {
     val base = clustered.filter($"vec_id" % 3 =!= 0)
     val late = clustered.filter($"vec_id" % 3 === 0)
     val built = AnnIndex.buildIvf(base, root, nLists = 4, iters = 3)
-    val appended = AnnIndex.appendIvf(spark, root, late)
+    val appended = AnnIndex.append(spark, root, late)
     assert(built.corpusCount + late.count() == appended.corpusCount)
     assert(AnnIndex.readMeta(root).corpusCount == appended.corpusCount)
     // exhaustive probe ⇒ exact over base ∪ appended, regardless of how well
@@ -155,7 +155,7 @@ class AnnIndexSpec extends SparkSpecBase {
     val root = tmpDir("ann-ivf-append-prune")
     AnnIndex.buildIvf(clustered.filter($"vec_id" % 3 =!= 0), root,
       nLists = 4, iters = 3)
-    AnnIndex.appendIvf(spark, root, clustered.filter($"vec_id" % 3 === 0))
+    AnnIndex.append(spark, root, clustered.filter($"vec_id" % 3 === 0))
     val queries = clustered.filter($"vec_id" === 0L)
     // k=20 > the 16 non-appended cluster-0 candidates, so a correct append
     // FORCES appended ids into the result — the searchability proof can't
@@ -192,7 +192,7 @@ class AnnIndexSpec extends SparkSpecBase {
     val late = clustered.filter($"vec_id" % 3 === 0)
     val built = AnnIndex.buildIvfPq(base, root, nLists = 4, m = 8,
       codes = 16, iters = 2)
-    val appended = AnnIndex.appendIvfPq(spark, root, late)
+    val appended = AnnIndex.append(spark, root, late)
     assert(built.corpusCount + late.count() == appended.corpusCount)
     val queries = clustered.filter($"vec_id" % 25 === 0)
     val got = AnnIndex.searchIvfPq(spark, root, clustered, queries, k = 5,
@@ -202,19 +202,15 @@ class AnnIndexSpec extends SparkSpecBase {
     assert(got == bf)
   }
 
-  test("append refuses dimension and variant mismatches loudly") {
+  test("append refuses dimension mismatches loudly") {
     val root = tmpDir("ann-append-guards")
     AnnIndex.buildIvf(clustered, root, nLists = 4, iters = 3)
     val wrongDim = Seq((1000L, Array.fill(8)(0.5f)))
       .toDF("vec_id", "embedding")
     val eDim = intercept[IllegalArgumentException] {
-      AnnIndex.appendIvf(spark, root, wrongDim)
+      AnnIndex.append(spark, root, wrongDim)
     }
     assert(eDim.getMessage.contains("dimension"))
-    val eVar = intercept[IllegalArgumentException] {
-      AnnIndex.appendIvfPq(spark, root, clustered.limit(1))
-    }
-    assert(eVar.getMessage.contains("ivf"))
   }
 
   test("effectiveRefine: explicit wins; auto sized to candidates; capped with a floor of 4k") {
@@ -498,6 +494,62 @@ class AnnIndexSpec extends SparkSpecBase {
       corpus.filter($"vec_id" === 0L), k = 1000, nProbe = 4).collect()
     assert(everyone.count(_.getAs[Long]("vec_id") == 26L) == 1)
     assert(everyone.count(_.getAs[Long]("vec_id") == 200L) == 1)
+  }
+
+  test("a bare applyChanges killed after its meta write stays committed; the next call drops the journal") {
+    val root = tmpDir("ann-torn-committed")
+    AnnIndex.buildIvf(clustered, root, nLists = 4, iters = 3)
+    val preFiles = AnnIndex.listIndexFiles(root)
+    val pre = AnnIndex.readMeta(root)
+    // the kill lands between the meta write (the commit point) and the
+    // journal delete: the batch is committed and its journal still armed
+    val m1 = AnnIndex.applyChanges(spark, root,
+      Seq((1L, vecOf(51), "update"), (200L, vecOf(50), "insert"))
+        .toDF("vec_id", "embedding", "change_type"))
+    writeInflightByHand(root, preFiles, pre.corpusCount, pre.gen)
+    val m2 = AnnIndex.applyChanges(spark, root,
+      Seq((201L, vecOf(52), "insert")).toDF("vec_id", "embedding", "change_type"))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "apply_inflight.json")))
+    assert(m1.gen == pre.gen + 1 && m1.corpusCount == pre.corpusCount + 1)
+    assert(m2.gen == pre.gen + 2 && m2.corpusCount == pre.corpusCount + 2)
+    assert(AnnIndex.readMeta(root) == m2)
+    val stored = spark.read.schema(m2.schema).parquet(s"$root/vectors")
+    assert(stored.filter($"vec_id" === 1L).count() == 2L) // gen-0 dead + its replacement
+    assert(stored.filter($"vec_id".isin(200L, 201L)).count() == 2L)
+    assert(spark.read.parquet(s"$root/tombstones").filter($"vec_id" === 1L).count() == 1L)
+    val surviving = clustered.filter($"vec_id" =!= 1L)
+      .unionByName(Seq((1L, vecOf(51)), (200L, vecOf(50)), (201L, vecOf(52)))
+        .toDF("vec_id", "embedding")).localCheckpoint(true)
+    val everyone = AnnIndex.searchIvf(spark, root,
+      surviving.filter($"vec_id" === 0L), k = 1000, nProbe = 4).collect()
+    assert(everyone.length == surviving.count() - 1)
+    assert(everyone.count(r => Set(1L, 200L, 201L)(r.getAs[Long]("vec_id"))) == 3)
+  }
+
+  test("a torn meta temp file next to a good meta.json: readMeta, search and append succeed") {
+    val root = tmpDir("ann-torn-meta-tmp")
+    val built = AnnIndex.buildIvf(clustered.filter($"vec_id" % 3 =!= 0), root,
+      nLists = 4, iters = 3)
+    // a kill in the middle of a meta write leaves a truncated temp file
+    // beside the previous, whole meta.json
+    val tmp = java.nio.file.Paths.get(root, ".tmp-meta.json")
+    val good = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, "meta.json"))
+    java.nio.file.Files.write(tmp, java.util.Arrays.copyOf(good, good.length / 2))
+    assert(AnnIndex.readMeta(root) == built)
+    val queries = clustered.filter($"vec_id" % 25 === 0)
+    val base = AnnIndex.searchIvf(spark, root, queries, k = 5, nProbe = 4)
+      .collect().map(key).toSet
+    assert(base == Similarity.bruteForceTopK(clustered.filter($"vec_id" % 3 =!= 0),
+      queries, k = 5).collect().map(key).toSet)
+    val m = AnnIndex.append(spark, root, clustered.filter($"vec_id" % 3 === 0))
+    assert(m.corpusCount == 100L && m.gen == built.gen + 1)
+    assert(AnnIndex.readMeta(root) == m)
+    assert(!java.nio.file.Files.exists(tmp), "the append's meta write replaces the temp file")
+    val got = AnnIndex.searchIvf(spark, root, queries, k = 5, nProbe = 4)
+      .collect().map(key).toSet
+    assert(got == Similarity.bruteForceTopK(clustered, queries, k = 5)
+      .collect().map(key).toSet)
   }
 
   test("rebuild is stale-proof under a dynamic partitionOverwriteMode session") {

@@ -182,18 +182,18 @@ class AnnMaintenanceSpec extends SparkSpecBase {
       .unionByName(feedBatch(Seq(3), changeType = "update", salt = 5))
 
     // simulate the crash window: the apply's files LANDED (vectors AND a
-    // tombstone; corpusCount/gen moved) but the ledger still says the batch
-    // is inflight — exactly the state a kill before the ledger commit leaves
+    // tombstone) but the meta never moved and the journal is still armed —
+    // exactly the state a kill before the meta write (the commit point)
+    // leaves
     AnnIndex.applyChanges(spark, root,
       batch.select(col("conv_id"), col("embedding"), col("change_type")),
       idCol = "conv_id")
-    AnnMaintenance.writeLedger(root, AnnMaintenance.Ledger(-1L,
-      Some(AnnMaintenance.Inflight(0L, preFiles, preMeta.corpusCount,
-        preMeta.gen))))
-    assert(AnnIndex.readMeta(root).corpusCount == 16L) // torn state visible
+    assert(AnnIndex.readMeta(root).corpusCount == 16L) // the batch landed
     assert(AnnIndex.readMeta(root).gen == 1L)
+    AnnIndex.writeMetaFor(root, preMeta)
+    AnnIndex.writeJournal(root, preMeta.gen, preFiles)
 
-    // recovery: roll back the torn files, restore the counters, re-apply
+    // recovery: delete the uncommitted files, re-apply
     AnnMaintenance.applyBatch(spark, root, batch, 0L, "conv_id", "embedding",
       mutations = "apply")
     assert(AnnIndex.readMeta(root).corpusCount == 16L)
@@ -213,6 +213,50 @@ class AnnMaintenanceSpec extends SparkSpecBase {
     val bf = Similarity.bruteForceTopK(full, queries, k = 3, idCol = "conv_id")
       .collect().map(key).toSet
     assert(got == bf)
+  }
+
+  test("a batch committed before its journal delete replays as a no-op") {
+    val root = freshIndex(10)
+    val preFiles = AnnIndex.listIndexFiles(root)
+    val preMeta = AnnIndex.readMeta(root)
+    val batch = feedBatch(10 until 14)
+    AnnMaintenance.applyBatch(spark, root, batch, 0L, "conv_id", "embedding",
+      mutations = "fail")
+    // the kill lands after the meta write (lastBatchId = 0, the commit
+    // point) and before the journal delete
+    assert(AnnIndex.readMeta(root).lastBatchId == 0L)
+    AnnIndex.writeJournal(root, preMeta.gen, preFiles)
+    AnnMaintenance.applyBatch(spark, root, batch, 0L, "conv_id", "embedding",
+      mutations = "fail")
+    assert(indexRows(root) == 14L, "a committed batch must never be re-admitted")
+    val m = AnnIndex.readMeta(root)
+    assert(m.corpusCount == 14L && m.gen == preMeta.gen + 1 && m.lastBatchId == 0L)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "apply_inflight.json")))
+  }
+
+  test("a rebuild between maintenance batches keeps lastBatchId: the replay stays a no-op") {
+    val root = freshIndex(10)
+    AnnMaintenance.applyBatch(spark, root, feedBatch(10 until 14), 0L, "conv_id",
+      "embedding", mutations = "fail")
+    // the periodic rebuild absorbs batch 0 and renumbers the index gen 0
+    val rebuilt = AnnIndex.buildIvf(
+      withEmbedding((0 until 14).map(i => f"c$i%04d").toDF("conv_id")),
+      root, nLists = 2, iters = 2, idCol = "conv_id")
+    assert(rebuilt.lastBatchId == 0L && rebuilt.gen == 0L)
+    assert(AnnIndex.readMeta(root).lastBatchId == 0L)
+    AnnMaintenance.applyBatch(spark, root, feedBatch(10 until 14), 0L, "conv_id",
+      "embedding", mutations = "fail")
+    assert(indexRows(root) == 14L && AnnIndex.readMeta(root).corpusCount == 14L)
+    // the next batch lands; a batch with no index work records only its id
+    AnnMaintenance.applyBatch(spark, root, feedBatch(14 until 16), 1L, "conv_id",
+      "embedding", mutations = "fail")
+    AnnMaintenance.applyBatch(spark, root,
+      feedBatch(Seq(3), changeType = "update", salt = 5), 2L, "conv_id",
+      "embedding", mutations = "skip")
+    val m = AnnIndex.readMeta(root)
+    assert(indexRows(root) == 16L && m.corpusCount == 16L)
+    assert(m.gen == 1L && m.lastBatchId == 2L)
   }
 
   test("non-insert changes fail loudly; skip drops them; null vectors dropped") {

@@ -319,6 +319,35 @@ class LakeSourceSpec extends SparkSpecBase {
     assert(stored() == once)
   }
 
+  test("path writes in ErrorIfExists, Ignore and Overwrite mode, or to no table, fail and land no version") {
+    val base = tmpDir("lake-path-modes")
+    val root = s"$base/convs"
+    val t = new LakeTable(root, numBuckets = 4)
+    apply(t, Seq(ev("c", 0, "old", "2025-01-01 00:00:00", "insert", 1)), 0L)
+    import spark.implicits._
+    val batch = Seq(("c", 1, "user", "turn1", null: String, ts("2025-01-01 00:03:00"), 11L))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "seq")
+    def failure(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]): String =
+      intercept[Exception](w.save()).getMessage
+    def to(path: String) = batch.write.format("lake").option("path", path)
+    val v0 = t.currentSnapshot().get.version
+
+    // the default mode is ErrorIfExists
+    for ((mode, w) <- Seq("default" -> to(root), "ignore" -> to(root).mode("ignore"))) {
+      val msg = failure(w)
+      assert(msg.contains("UNSUPPORTED_DATA_SOURCE_SAVE_MODE"), s"$mode: $msg")
+    }
+    val overwrite = failure(to(root).mode("overwrite"))
+    assert(overwrite.contains("INSERT OVERWRITE is unsupported"), overwrite)
+    assert(t.currentSnapshot().get.version == v0)
+    assert(lake(root).count() == 1L)
+
+    val bare = s"$base/bare"
+    val noTable = failure(to(bare).mode("append"))
+    assert(noTable.contains("has no committed snapshot"), noTable)
+    assert(new LakeTable(bare, numBuckets = 4).currentSnapshot().isEmpty)
+  }
+
   test("SQL DELETE = snapshot tombstones: key delete, predicate delete, LWW survival of newer writes") {
     val base = tmpDir("lake-del")
     val t = new LakeTable(s"$base/convs", numBuckets = 4)

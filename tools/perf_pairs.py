@@ -25,8 +25,9 @@ change within the bound from one beyond it, unless every change run beats
 every parent run. The direction (higher or lower is better) and the bounds
 come from the change checkout's BENCHMARK.json. Above the verdicts it prints
 each checkout's main-source Scala lines split into code, comment and blank
-lines (the rule is in `line_kinds`), then the change in code lines: the
-code-size scoreboard.
+lines (the rule is in `line_kinds`), then the change in code lines and,
+under it, the code-line change of each main-source file whose code count
+changed, largest loss first: the code-size scoreboard.
 """
 import argparse
 import json
@@ -99,16 +100,26 @@ def line_kinds(text):
 
 
 def scala_lines(checkout):
-    """(code, comment, blank) lines of every .scala file under the checkout's
-    src/main, split by `line_kinds`."""
-    total = [0, 0, 0]
-    for d, _, files in os.walk(os.path.join(checkout, "src", "main")):
+    """{checkout-relative path: (code, comment, blank)} for every .scala file
+    under the checkout's src/main, split by `line_kinds`."""
+    base = os.path.join(checkout, "src", "main")
+    out = {}
+    for d, _, files in os.walk(base):
         for name in files:
             if name.endswith(".scala"):
-                with open(os.path.join(d, name), encoding="utf-8") as f:
-                    for i, n in enumerate(line_kinds(f.read())):
-                        total[i] += n
-    return tuple(total)
+                path = os.path.join(d, name)
+                with open(path, encoding="utf-8") as f:
+                    out[os.path.relpath(path, checkout)] = line_kinds(f.read())
+    return out
+
+
+def code_deltas(parent, change):
+    """[(code-line change, path)] of every file whose code count differs
+    between two `scala_lines` maps (a missing file counts 0), largest loss
+    first."""
+    deltas = [(change.get(p, (0,))[0] - parent.get(p, (0,))[0], p)
+              for p in set(parent) | set(change)]
+    return sorted(d for d in deltas if d[0] != 0)
 
 
 def summarize(records, dirs):
@@ -203,12 +214,16 @@ def main():
                 print(f"pair {i} seed {seed} {workload} {side}: "
                       f"{res.get('error') or value(m.get('events_per_s'))} events/s",
                       file=sys.stderr, flush=True)
-    lines = {side: scala_lines(c) for side, c in (("parent", a.parent), ("change", a.change))}
+    files = {side: scala_lines(c) for side, c in (("parent", a.parent), ("change", a.change))}
+    lines = {side: [sum(k[i] for k in files[side].values()) for i in range(3)]
+             for side in files}
     for side in ("parent", "change"):
         code, comment, blank = lines[side]
         print(f"main-source Scala lines, {side}: {code} code, {comment} comment, "
               f"{blank} blank ({code + comment + blank} total)")
     print(f"main-source code lines: {lines['change'][0] - lines['parent'][0]:+d}")
+    for delta, path in code_deltas(files["parent"], files["change"]):
+        print(f"  {delta:+6d}  {path}")
     summarize(records, dirs)
     return 0
 
